@@ -591,7 +591,7 @@ def run_dedup_ingest_throughput(
 
     from pyspark.sql import functions as F
 
-    from nginx_analytics_spark.operators.dedup import read_lsh_index_rows
+    from nginx_analytics_spark.operators.index_fs import banded_index_read
     from nginx_analytics_spark.session import get_spark
     from nginx_analytics_spark.sources import load_table
     from nginx_analytics_spark.streaming.dedup_ingest import start_dedup_ingest
@@ -640,7 +640,7 @@ def run_dedup_ingest_throughput(
             )
             variants.write.mode("overwrite").parquet(f"{work}/corpus")
             _dedup.write_lsh_index(variants, f"{work}/idx", fs=fs)
-            idx_rows_start = read_lsh_index_rows(
+            idx_rows_start = banded_index_read(
                 spark, f"{work}/idx", fs=fs
             ).count()
         for k in range(n_batches):
@@ -709,7 +709,7 @@ def run_dedup_ingest_throughput(
         ends = [t0] + [m[0] for m in marks]
         batch_walls = [round(ends[i + 1] - ends[i], 3) for i in range(len(marks))]
         admitted = sum(m[2] for m in marks)
-        idx_rows = read_lsh_index_rows(spark, f"{work}/idx", fs=fs).count()
+        idx_rows = banded_index_read(spark, f"{work}/idx", fs=fs).count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()
@@ -810,11 +810,14 @@ def run_embedding_ingest_throughput(
 
     from pyspark.sql import functions as F
 
-    from nginx_analytics_spark.operators.similarity import read_srp_index_rows
+    from dataclasses import replace
+
+    from nginx_analytics_spark.operators.index_fs import banded_index_read
     from nginx_analytics_spark.session import get_spark
     from nginx_analytics_spark.sources import load_table
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        start_embedding_dedup_ingest,
+    from nginx_analytics_spark.streaming.dedup_ingest import (
+        EMBEDDING,
+        start_dedup_ingest,
     )
 
     spark = get_spark(
@@ -867,13 +870,15 @@ def run_embedding_ingest_throughput(
             marks.append((mark_t, n_in, n_novel, lock_wait, files))
 
         t0 = time.monotonic()
-        q = start_embedding_dedup_ingest(
+        q = start_dedup_ingest(
             stream,
             f"{work}/corpus",
             f"{work}/idx",
             f"{work}/ckpt",
+            modality=replace(
+                EMBEDDING, sign={**EMBEDDING.sign, "n_planes": n_planes}
+            ),
             threshold=threshold,
-            n_planes=n_planes,
             trigger={"availableNow": True},
             compact_every=compact_every,
             max_files_per_band=max_files_per_band,
@@ -886,7 +891,7 @@ def run_embedding_ingest_throughput(
             round(ends[i + 1] - ends[i], 3) for i in range(len(marks))
         ]
         admitted = sum(m[2] for m in marks)
-        idx_rows = read_srp_index_rows(spark, f"{work}/idx").count()
+        idx_rows = banded_index_read(spark, f"{work}/idx").count()
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()
@@ -1004,7 +1009,7 @@ def run_prefix_probe_sustained(
     batches, each probed EXACTLY against the indexed corpus
     (``incremental_jaccard_prefix_probe``), appended to the corpus
     store, signed into the index (``append_prefix_index``), with
-    ``compact_prefix_index`` every compact_every batches — the X82
+    ``banded_index_compact`` every compact_every batches — the X82
     cadence inside the loop that owns the appends. Expected: flat
     per-batch walls (the probe signs only the batch and band-joins the
     directory-pruned index; the corpus text scan is semi-join-pruned
@@ -1016,6 +1021,7 @@ def run_prefix_probe_sustained(
     from pyspark.sql import functions as F
 
     from nginx_analytics_spark.operators import dedup
+    from nginx_analytics_spark.operators.index_fs import banded_index_compact
     from nginx_analytics_spark.session import get_spark
     from nginx_analytics_spark.sources import load_table
 
@@ -1062,7 +1068,7 @@ def run_prefix_probe_sustained(
             batch.write.mode("append").parquet(corpus_dir)
             dedup.append_prefix_index(batch, idx)
             if (k + 1) % compact_every == 0:
-                dedup.compact_prefix_index(
+                banded_index_compact(
                     spark, idx, max_files_per_band=max_files_per_band
                 )
             walls.append(round(time.monotonic() - tb, 3))

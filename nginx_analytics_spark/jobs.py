@@ -333,33 +333,8 @@ def _build_parser():
         ),
     )
     di.add_argument("--source", required=True, help="documents parquet stream dir")
-    di.add_argument("--corpus", required=True, help="admitted-corpus output dir")
     di.add_argument("--index", required=True, help="at-rest LSH index path")
-    di.add_argument("--checkpoint", required=True, help="stream checkpoint dir")
-    di.add_argument("--trigger", default="available-now")
     di.add_argument("--threshold", type=float, default=0.6)
-    di.add_argument("--max-files-per-trigger", type=int, default=None)
-    di.add_argument(
-        "--compact-every",
-        type=int,
-        default=None,
-        help=(
-            "run X82 per-band index compaction after every Nth batch, "
-            "bounding per-band file growth from the loop's own writer "
-            "thread (default: never — compact via the API offline)"
-        ),
-    )
-    from nginx_analytics_spark.operators import dedup as _dedup
-
-    di.add_argument(
-        "--max-files-per-band",
-        type=int,
-        default=_dedup.COMPACT_MAX_FILES_PER_BAND,
-        help=(
-            "per-band parquet file threshold above which --compact-every "
-            "rewrites a band (X82)"
-        ),
-    )
     di.add_argument(
         "--quality-survivor",
         action="store_true",
@@ -371,36 +346,12 @@ def _build_parser():
             "admitted docs are not re-litigated)"
         ),
     )
-    di.add_argument(
-        "--lock-timeout",
-        type=float,
-        default=0.0,
-        help=(
-            "seconds to wait for the index mutex before failing (0 = "
-            "refuse immediately). The CLI loop holds the mutex for the "
-            "stream's whole lifetime, so here the wait applies to that "
-            "STARTUP acquisition — e.g. riding out an offline "
-            "compactor finishing up — and the wait is printed; "
-            "library callers without a lifetime hold get the same "
-            "bounded wait per micro-batch, surfaced as lock_wait in "
-            "the telemetry line"
-        ),
-    )
-    di.add_argument(
-        "--exactly-once",
-        action="store_true",
-        help=(
-            "X73 composition: admissions land under ingest_batch=<id> "
-            "with overwrite semantics, so a retried batch replaces its "
-            "own corpus output; read back via dedup_ingest.read_corpus"
-        ),
-    )
 
     ei = sub.add_parser(
         "embedding-dedup-ingest",
         help=(
             "streaming embedding ingest with incremental SEMANTIC "
-            "near-dedup (X85, the X80 twin for the embedding modality): "
+            "near-dedup (X85, the X80 loop for the embedding modality): "
             "per micro-batch, exact+near dedup within the batch, probe "
             "the at-rest SRP index (X84), append admissions to corpus "
             "and index"
@@ -409,10 +360,7 @@ def _build_parser():
     ei.add_argument(
         "--source", required=True, help="embedding rows parquet stream dir"
     )
-    ei.add_argument("--corpus", required=True, help="admitted-corpus output dir")
     ei.add_argument("--index", required=True, help="at-rest SRP index path")
-    ei.add_argument("--checkpoint", required=True, help="stream checkpoint dir")
-    ei.add_argument("--trigger", default="available-now")
     ei.add_argument(
         "--threshold",
         type=float,
@@ -420,12 +368,12 @@ def _build_parser():
         help=(
             "cosine admission threshold (default 0.85 — the regime "
             "embedding dup detection operates in; see "
-            "embedding_ingest.dedup_embedding_batch_against_corpus)"
+            "dedup_ingest.dedup_embedding_batch_against_corpus)"
         ),
     )
-    # SRP signing parameters — pinned by the index's _srp_meta.json
-    # sidecar after the first batch; a mismatch on a later deployment
-    # fails loudly in the probe/append instead of silently losing recall
+    # SRP signing parameters — pinned by the index's sidecar after the
+    # first batch; a mismatch on a later deployment fails loudly in the
+    # probe/append instead of silently losing recall
     ei.add_argument(
         "--n-planes",
         type=int,
@@ -441,41 +389,63 @@ def _build_parser():
     ei.add_argument("--bands", type=int, default=8)
     ei.add_argument("--dim", type=int, default=64)
     ei.add_argument("--seed", type=int, default=42)
-    ei.add_argument("--max-files-per-trigger", type=int, default=None)
-    ei.add_argument(
-        "--compact-every",
-        type=int,
-        default=None,
-        help=(
-            "run X82 per-band index compaction after every Nth batch "
-            "(similarity.compact_srp_index shares the text compactor)"
-        ),
-    )
-    ei.add_argument(
-        "--max-files-per-band",
-        type=int,
-        default=_dedup.COMPACT_MAX_FILES_PER_BAND,
-        help="per-band parquet file threshold for --compact-every",
-    )
-    ei.add_argument(
-        "--lock-timeout",
-        type=float,
-        default=0.0,
-        help=(
-            "seconds to wait for the index mutex at startup (the CLI "
-            "holds it for the stream's lifetime, exactly like "
-            "dedup-ingest --lock-timeout)"
-        ),
-    )
-    ei.add_argument(
-        "--exactly-once",
-        action="store_true",
-        help=(
-            "X73 composition: admissions land under ingest_batch=<id> "
-            "with overwrite semantics; read back via "
-            "dedup_ingest.read_corpus"
-        ),
-    )
+
+    from nginx_analytics_spark.operators import index_fs as _index_fs
+
+    # the one ingest loop's options, the same for both modalities
+    for loop in (di, ei):
+        loop.add_argument(
+            "--corpus", required=True, help="admitted-corpus output dir"
+        )
+        loop.add_argument(
+            "--checkpoint", required=True, help="stream checkpoint dir"
+        )
+        loop.add_argument("--trigger", default="available-now")
+        loop.add_argument("--max-files-per-trigger", type=int, default=None)
+        loop.add_argument(
+            "--compact-every",
+            type=int,
+            default=None,
+            help=(
+                "run X82 per-band index compaction after every Nth batch, "
+                "bounding per-band file growth from the loop's own writer "
+                "thread (default: never — compact via the API offline)"
+            ),
+        )
+        loop.add_argument(
+            "--max-files-per-band",
+            type=int,
+            default=_index_fs.COMPACT_MAX_FILES_PER_BAND,
+            help=(
+                "per-band parquet file threshold above which "
+                "--compact-every rewrites a band (X82)"
+            ),
+        )
+        loop.add_argument(
+            "--lock-timeout",
+            type=float,
+            default=0.0,
+            help=(
+                "seconds to wait for the index mutex before failing (0 = "
+                "refuse immediately). The CLI loop holds the mutex for "
+                "the stream's whole lifetime, so here the wait applies to "
+                "that STARTUP acquisition — e.g. riding out an offline "
+                "compactor finishing up — and the wait is printed; "
+                "library callers without a lifetime hold get the same "
+                "bounded wait per micro-batch, surfaced as lock_wait in "
+                "the telemetry line"
+            ),
+        )
+        loop.add_argument(
+            "--exactly-once",
+            action="store_true",
+            help=(
+                "X73 composition: admissions land under "
+                "ingest_batch=<id> with overwrite semantics, so a retried "
+                "batch replaces its own corpus output; read back via "
+                "dedup_ingest.read_corpus"
+            ),
+        )
 
     ci = sub.add_parser(
         "compact-index",
@@ -502,19 +472,19 @@ def _build_parser():
     ci.add_argument(
         "--max-files-per-band",
         type=int,
-        default=_dedup.COMPACT_MAX_FILES_PER_BAND,
+        default=_index_fs.COMPACT_MAX_FILES_PER_BAND,
         help="rewrite only bands with more parquet files than this",
     )
     ci.add_argument(
         "--target-files",
         type=int,
-        default=_dedup.COMPACT_TARGET_FILES,
+        default=_index_fs.COMPACT_TARGET_FILES,
         help="minimum output files per rewritten band",
     )
     ci.add_argument(
         "--target-file-bytes",
         type=int,
-        default=_dedup.COMPACT_TARGET_FILE_BYTES,
+        default=_index_fs.COMPACT_TARGET_FILE_BYTES,
         help=(
             "split a rewritten band into ceil(band_bytes / this) sorted "
             "range files (bounds compacted file sizes)"
@@ -523,7 +493,7 @@ def _build_parser():
     ci.add_argument(
         "--max-concurrency",
         type=int,
-        default=_dedup.COMPACT_MAX_CONCURRENCY,
+        default=_index_fs.COMPACT_MAX_CONCURRENCY,
         help=(
             "compact up to this many oversized bands concurrently "
             "(driver threads, one Spark job each; the pause tracks the "
@@ -766,24 +736,40 @@ def main(argv: list[str] | None = None) -> int:
     # unconditionally valid for every branch that reaches it (a
     # hasattr-guarded None would fail deep inside the next
     # warehouse-less subcommand instead of at the obvious spot)
-    if args.command == "dedup-ingest":
-        from nginx_analytics_spark.operators import dedup
-        from nginx_analytics_spark.operators.index_fs import LOCAL_FS
+    if args.command in ("dedup-ingest", "embedding-dedup-ingest"):
+        from dataclasses import replace
+
+        from nginx_analytics_spark.operators.index_fs import (
+            LOCAL_FS,
+            acquire_lock_wait,
+            writer_lock_path,
+        )
         from nginx_analytics_spark.streaming.dedup_ingest import (
+            EMBEDDING,
+            TEXT,
             start_dedup_ingest,
         )
 
-        reader = spark.readStream.schema("doc_id long, text string")
+        if args.command == "dedup-ingest":
+            modality, schema = TEXT, "doc_id long, text string"
+        else:
+            modality = replace(
+                EMBEDDING,
+                sign={"n_planes": args.n_planes, "bands": args.bands,
+                      "dim": args.dim, "seed": args.seed},
+            )
+            schema = "vec_id long, embedding array<float>"
+        reader = spark.readStream.schema(schema)
         if args.max_files_per_trigger:
             reader = reader.option(
                 "maxFilesPerTrigger", str(args.max_files_per_trigger)
             )
         _quality_fn = None
-        if args.quality_survivor:
+        if args.command == "dedup-ingest" and args.quality_survivor:
             from nginx_analytics_spark.operators.text import quality_score
 
             _quality_fn = quality_score
-        # Hold the index's single-compactor mutex for the STREAM's
+        # Hold the index's single-writer mutex for the STREAM's
         # whole lifetime, not just each micro-batch (r8 review): an
         # offline `jobs compact-index` racing this loop then loses even
         # between micro-batches — the maintenance tool fails loudly,
@@ -793,18 +779,14 @@ def main(argv: list[str] | None = None) -> int:
         # acquisition that CAN contend is this startup one, so
         # --lock-timeout applies HERE (r9 review): the loop rides out
         # a finishing offline compactor instead of dying instantly.
-        from nginx_analytics_spark.operators.index_fs import (
-            acquire_lock_wait,
-        )
-
         # acquire_lock_wait is un-entered until the `with` (r9 ADVICE
         # low: acquiring before the with left the mutex held with no
         # release path if anything failed in between — the print sat
         # exactly in that window)
         with acquire_lock_wait(
             LOCAL_FS,
-            dedup._lsh_compact_lock_path(args.index),
-            "a dedup-ingest loop owns this index for its lifetime; "
+            writer_lock_path(args.index),
+            f"the {args.command} loop owns this index for its lifetime; "
             "stop the loop before compacting offline",
             timeout_s=args.lock_timeout,
         ) as waited:
@@ -818,6 +800,7 @@ def main(argv: list[str] | None = None) -> int:
                 args.corpus,
                 args.index,
                 args.checkpoint,
+                modality=modality,
                 threshold=args.threshold,
                 trigger=_parse_trigger(args.trigger),
                 exactly_once=args.exactly_once,
@@ -825,65 +808,6 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_band=args.max_files_per_band,
                 lock_timeout_s=args.lock_timeout,
                 quality_fn=_quality_fn,
-                on_batch=lambda bid, n_in, n_novel, lock_wait: print(
-                    f"batch {bid}: {n_in} in, {n_novel} admitted, "
-                    f"lock_wait={lock_wait:.3f}s",
-                    flush=True,
-                ),
-                lock_held=True,
-            )
-            q.awaitTermination()
-        return 0
-
-    if args.command == "embedding-dedup-ingest":
-        from nginx_analytics_spark.operators import dedup
-        from nginx_analytics_spark.operators.index_fs import (
-            LOCAL_FS,
-            acquire_lock_wait,
-        )
-        from nginx_analytics_spark.streaming.embedding_ingest import (
-            start_embedding_dedup_ingest,
-        )
-
-        reader = spark.readStream.schema(
-            "vec_id long, embedding array<float>"
-        )
-        if args.max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(args.max_files_per_trigger)
-            )
-        # Same lifetime mutex hold as dedup-ingest (the two loops share
-        # _enter_index_mutex and the rationale documented there): an
-        # offline compactor racing this loop loses loudly, never the
-        # production stream; --lock-timeout applies to THIS startup
-        # acquisition, the only one that can contend.
-        with acquire_lock_wait(
-            LOCAL_FS,
-            dedup._lsh_compact_lock_path(args.index),
-            "an embedding-dedup-ingest loop owns this index for its "
-            "lifetime; stop the loop before compacting offline",
-            timeout_s=args.lock_timeout,
-        ) as waited:
-            if waited >= 0.05:
-                print(
-                    f"index mutex acquired after {waited:.3f}s wait",
-                    flush=True,
-                )
-            q = start_embedding_dedup_ingest(
-                reader.parquet(args.source),
-                args.corpus,
-                args.index,
-                args.checkpoint,
-                threshold=args.threshold,
-                n_planes=args.n_planes,
-                bands=args.bands,
-                dim=args.dim,
-                seed=args.seed,
-                trigger=_parse_trigger(args.trigger),
-                exactly_once=args.exactly_once,
-                compact_every=args.compact_every,
-                max_files_per_band=args.max_files_per_band,
-                lock_timeout_s=args.lock_timeout,
                 on_batch=lambda bid, n_in, n_novel, lock_wait: print(
                     f"batch {bid}: {n_in} in, {n_novel} admitted, "
                     f"lock_wait={lock_wait:.3f}s",
@@ -914,12 +838,17 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "verify-index":
-        from nginx_analytics_spark.operators import dedup, similarity
+        from nginx_analytics_spark.operators import similarity
         from nginx_analytics_spark.operators.index_fs import (
+            BANDED_KINDS,
             LOCAL_FS,
             LockHeldError,
+            MissingSidecarError,
             acquire_lock_wait,
             banded_index_read,
+            index_kind,
+            read_sidecar,
+            writer_lock_path,
         )
 
         p = args.index
@@ -932,8 +861,7 @@ def main(argv: list[str] | None = None) -> int:
         # cron alert distinguishes "re-check when quiesced" from
         # "rebuild now". --lock-timeout bounds the wait for a
         # between-appends window (0 = one attempt). This ONE sibling
-        # covers every kind since r14: dedup._lsh_compact_lock_path and
-        # similarity.index_writer_lock_path are the same path, and all
+        # (index_fs.writer_lock_path) covers every kind since r14: all
         # four PQ/IVF writers (pq_append_index / ivf_append_bucketed /
         # rebuild_pq / recluster_ivf) acquire it first (r13 ADVICE
         # medium: they used to be lock-free or lock distinct siblings,
@@ -941,7 +869,7 @@ def main(argv: list[str] | None = None) -> int:
         # semantics).
         lock = acquire_lock_wait(
             LOCAL_FS,
-            dedup._lsh_compact_lock_path(p),
+            writer_lock_path(p),
             "verify-index counts rows only while no writer holds the "
             "index",
             timeout_s=args.lock_timeout,
@@ -958,30 +886,17 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 3
         try:
-            if LOCAL_FS.isfile(similarity.pq_index_meta_path(p)):
-                check = similarity.pq_index_verify(spark, p)
-                kind = "pq"
-            elif LOCAL_FS.isfile(similarity.ivf_index_meta_path(p)):
-                check = similarity.ivf_index_verify(spark, p)
-                kind = "ivf"
-            elif (
-                LOCAL_FS.isfile(similarity.srp_index_meta_path(p))
-                or LOCAL_FS.isfile(dedup.lsh_index_meta_path(p))
-                or LOCAL_FS.isfile(dedup.prefix_index_meta_path(p))
-            ):
+            try:
+                kind = index_kind(p, kinds=(*BANDED_KINDS, "pq", "ivf"))
+            except MissingSidecarError as e:
+                print(f"{e} — not an at-rest index")
+                return 1
+            if kind in BANDED_KINDS:
                 # banded indexes carry no row_count commit (appends are
                 # at-least-once by design — duplicate band rows collapse in
                 # the probe's candidate distinct); health = sidecar valid +
                 # readable rows, reported for operator eyes
-                if LOCAL_FS.isfile(similarity.srp_index_meta_path(p)):
-                    similarity.read_srp_index_meta(p)
-                    kind = "srp"
-                elif LOCAL_FS.isfile(dedup.prefix_index_meta_path(p)):
-                    dedup.read_prefix_index_meta(p)
-                    kind = "prefix"
-                else:
-                    dedup.read_lsh_index_meta(p)
-                    kind = "lsh"
+                read_sidecar(p, kind)
                 rows = banded_index_read(spark, p)
                 n = rows.count()
                 bands = rows.select("band_idx").distinct().count()
@@ -990,13 +905,12 @@ def main(argv: list[str] | None = None) -> int:
                     f"rows across {bands} bands"
                 )
                 return 0
-            else:
-                print(
-                    f"no index sidecar found at {p!r} (_pq_meta/_ivf_meta/"
-                    "_srp_meta/_lsh_meta/_prefix_meta.json) — not an "
-                    "at-rest index"
-                )
-                return 1
+            verify = (
+                similarity.pq_index_verify
+                if kind == "pq"
+                else similarity.ivf_index_verify
+            )
+            check = verify(spark, p)
             state = (
                 "UNKNOWN (pre-commit-protocol sidecar; next append upgrades it)"
                 if check["torn"] is None
@@ -1133,48 +1047,32 @@ def main(argv: list[str] | None = None) -> int:
         return 1
 
     if args.command == "compact-index":
-        from nginx_analytics_spark.operators import dedup, similarity
-        from nginx_analytics_spark.operators.index_fs import LOCAL_FS
+        from nginx_analytics_spark.operators.index_fs import (
+            BANDED_KINDS,
+            banded_index_compact,
+            index_kind,
+            read_sidecar,
+        )
 
-        # One CLI, both signing modalities (r12): the at-rest format is
-        # shared, so the right compactor is whichever parameter sidecar
-        # the index carries — an SRP (X84) index dispatches to
-        # compact_srp_index, a MinHash (X69) one to compact_lsh_index;
-        # each still validates its own sidecar loudly.
+        # One CLI, every banded kind (lsh, prefix, srp): the at-rest
+        # format and its compactor are shared; the sidecar names the
+        # kind, and a non-index dir fails loudly.
+        kind = index_kind(args.index, kinds=BANDED_KINDS)
         kwargs = dict(
             max_files_per_band=args.max_files_per_band,
             target_files=args.target_files,
             target_file_bytes=args.target_file_bytes,
             max_concurrency=args.max_concurrency,
         )
-        if LOCAL_FS.isfile(similarity.srp_index_meta_path(args.index)):
-            kind = "srp"
-            meta_reader, compactor = (
-                similarity.read_srp_index_meta,
-                similarity.compact_srp_index,
-            )
-        elif LOCAL_FS.isfile(dedup.prefix_index_meta_path(args.index)):
-            kind = "prefix"
-            meta_reader, compactor = (
-                dedup.read_prefix_index_meta,
-                dedup.compact_prefix_index,
-            )
-        else:
-            kind = "lsh"
-            meta_reader, compactor = (
-                dedup.read_lsh_index_meta,
-                dedup.compact_lsh_index,
-            )
         if args.prune_to_corpus:
             from nginx_analytics_spark.streaming.dedup_ingest import (
                 read_corpus,
             )
 
-            meta = meta_reader(args.index)
             kwargs["prune_ids"] = read_corpus(
                 spark, args.prune_to_corpus
-            ).select(meta["id_col"])
-        stats = compactor(spark, args.index, **kwargs)
+            ).select(read_sidecar(args.index, kind)["id_col"])
+        stats = banded_index_compact(spark, args.index, **kwargs)
         print(
             f"index compacted: {stats['bands_compacted']} of "
             f"{stats['bands_seen']} bands, {stats['files_before']} -> "

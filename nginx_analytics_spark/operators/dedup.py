@@ -33,6 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nginx_analytics_spark.functions.rounding import half_up
+from nginx_analytics_spark.operators.index_fs import (
+    banded_index_read,
+    banded_index_write,
+    check_sidecar,
+    read_sidecar,
+    write_sidecar,
+)
 
 # MinHash defaults: 32 permutations banded 16x2. Candidate probability at
 # similarity s is 1-(1-s^2)^16: ~0.1% miss rate at the 0.6 output threshold,
@@ -869,14 +876,13 @@ def jaccard_pairs_prefix_cross(
 #
 # Storage is the shared banded layout verbatim — (id, band_idx,
 # band_hash) with band_hash = xxhash64(shingle) and band_idx its
-# bucket — so index_fs.banded_index_write/read, the X82 compactor's
-# locked body, and X91 reconciliation all apply unchanged (one storage
-# contract, three signing modalities). Candidates are exact-verified,
+# bucket — so index_fs's banded write / read / compaction / recovery
+# and X91 reconciliation all apply unchanged (one storage contract,
+# three signing modalities). Candidates are exact-verified,
 # so a 64-bit shingle-hash collision can only ADD a candidate, never
 # lose one; doc sizes are not stored (the banded schema is fixed) —
 # the length filter runs at verify where both arrays are in hand.
 
-PREFIX_INDEX_META = "_prefix_meta.json"
 PREFIX_INDEX_BANDS = 16
 # Prefixes are cut at threshold - PREFIX_ROUND_SLACK so a probe that
 # rounds its output (round_to >= 6) keeps knife-edge recall; coarser
@@ -896,17 +902,21 @@ PREFIX_FREQ_TOP_K = 8192
 PREFIX_FREQ_MIN_DF = 8
 
 
-def prefix_index_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{PREFIX_INDEX_META}"
-
-
-def read_prefix_index_meta(path: str, fs=None) -> dict:
-    """Load the prefix index's parameter sidecar (FileNotFoundError on a
-    pre-sidecar/foreign dir — probing with unknown shingling or a
-    higher build threshold silently loses recall)."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    return read_json_sidecar(path, PREFIX_INDEX_META, fs=fs)
+def _prefix_meta(
+    id_col: str, shingle_n: int, threshold=None, freq=None
+) -> dict:
+    """The prefix sidecar's parameters. Probes and appends pass
+    ``threshold``/``freq`` as None: both are the index's geometry (its
+    build threshold and frozen frequency tail), adopted from the
+    sidecar, never the caller's choice."""
+    return {
+        "id_col": id_col,
+        "shingle_n": shingle_n,
+        "threshold": threshold,
+        "order": "frozen-df-v2",
+        "bands": PREFIX_INDEX_BANDS,
+        "freq": freq,
+    }
 
 
 def _prefix_freq_table(
@@ -1016,7 +1026,7 @@ def write_prefix_index(
 ) -> None:
     """Materialize the corpus's EXACT prefix index at rest (module note
     above): hash-ordered prefix rows in the shared banded layout, plus
-    a ``_prefix_meta.json`` sidecar pinning (id_col, shingle_n,
+    a ``prefix`` sidecar pinning (id_col, shingle_n,
     threshold, order). ``threshold`` is the MINIMUM probe threshold the
     index supports: prefixes shrink as t grows, so an index cut at t0
     contains every prefix any probe at t >= t0 needs (a lower-t probe
@@ -1024,51 +1034,18 @@ def write_prefix_index(
     The corpus-side ordering window is paid HERE, once, not per batch."""
     if threshold <= 0.0:
         raise ValueError("prefix index needs threshold > 0")
-    from nginx_analytics_spark.operators.index_fs import (
-        banded_index_write,
-        write_json_sidecar,
-    )
-
     freq = _prefix_freq_table(docs, id_col, text_col, shingle_n)
     keys = _prefix_keys(
         docs, id_col, text_col, shingle_n, threshold - PREFIX_ROUND_SLACK,
         _prefix_freq_frame(docs.sparkSession, freq),
     )
     banded_index_write(keys, path, fs=fs, bands=PREFIX_INDEX_BANDS)
-    write_json_sidecar(
+    write_sidecar(
         path,
-        PREFIX_INDEX_META,
-        {
-            "id_col": id_col,
-            "shingle_n": shingle_n,
-            "threshold": float(threshold),
-            "order": "frozen-df-v2",
-            "bands": PREFIX_INDEX_BANDS,
-            "freq": freq,
-        },
+        "prefix",
+        _prefix_meta(id_col, shingle_n, float(threshold), freq),
         fs=fs,
     )
-
-
-def _check_prefix_index_meta(index_path: str, want: dict, fs=None) -> dict:
-    try:
-        have = read_prefix_index_meta(index_path, fs=fs)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"prefix index at {index_path!r} has no {PREFIX_INDEX_META} "
-            "sidecar — rebuild it with write_prefix_index (probing an "
-            "index of unknown shingling/threshold silently loses recall)"
-        ) from e
-    if {k: have.get(k) for k in want} != want or set(have) != (
-        set(want) | {"threshold", "freq"}
-    ):
-        shown = {k: v for k, v in have.items() if k != "freq"}
-        raise ValueError(
-            f"prefix index at {index_path!r} was built under different "
-            f"parameters: sidecar {shown} (+frozen freq table), caller "
-            f"{want} — probe with the index's parameters or rebuild"
-        )
-    return have
 
 
 def append_prefix_index(
@@ -1092,19 +1069,10 @@ def append_prefix_index(
     when the probe's candidate volume says so. Build threshold and
     frozen tail come from the sidecar (the index's geometry, not the
     caller's choice). Reclaim file population with
-    :func:`compact_prefix_index`."""
-    have = _check_prefix_index_meta(
-        path,
-        {
-            "id_col": id_col,
-            "shingle_n": shingle_n,
-            "order": "frozen-df-v2",
-            "bands": PREFIX_INDEX_BANDS,
-        },
-        fs=fs,
+    ``index_fs.banded_index_compact``."""
+    have = check_sidecar(
+        path, "prefix", _prefix_meta(id_col, shingle_n), fs=fs
     )
-    from nginx_analytics_spark.operators.index_fs import banded_index_write
-
     keys = _prefix_keys(
         docs, id_col, text_col, shingle_n,
         float(have["threshold"]) - PREFIX_ROUND_SLACK,
@@ -1113,41 +1081,6 @@ def append_prefix_index(
     banded_index_write(
         keys, path, fs=fs, mode="append", bands=PREFIX_INDEX_BANDS
     )
-
-
-def compact_prefix_index(
-    spark: SparkSession,
-    path: str,
-    max_files_per_band: int | None = None,
-    target_files: int | None = None,
-    target_file_bytes: int | None = None,
-    max_concurrency: int | None = None,
-    fs=None,
-    prune_ids: DataFrame | None = None,
-) -> dict:
-    """X82 per-band compaction for the prefix index — the same locked
-    body as the LSH/SRP indexes, because all three share one at-rest
-    format by construction: validates THIS index's sidecar, then enters
-    ``_compact_lsh_index_locked`` (band-dir rewrites, crash-recovery
-    swap discipline, ``prune_ids`` orphan reclamation) verbatim."""
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
-    fs = fs or LOCAL_FS
-    read_prefix_index_meta(path, fs=fs)  # loud on a non-index dir
-    kwargs = dict(
-        max_files_per_band=max_files_per_band,
-        target_files=target_files,
-        target_file_bytes=target_file_bytes,
-        max_concurrency=max_concurrency,
-        prune_ids=prune_ids,
-    )
-    kwargs = {k: v for k, v in kwargs.items() if v is not None}
-    with fs.exclusive_lock(
-        _lsh_compact_lock_path(path),
-        "X82 is single-compactor by design (interleaved band swaps "
-        "would corrupt the two-rename discipline)",
-    ):
-        return _compact_lsh_index_locked(spark, path, fs=fs, **kwargs)
 
 
 def incremental_jaccard_prefix_probe(
@@ -1183,15 +1116,8 @@ def incremental_jaccard_prefix_probe(
     MinHash probe (:func:`incremental_near_dups`), the output is exact
     by construction, so the registered query hash-matches the same
     brute-force cross oracle WITHOUT an exact_net union."""
-    have = _check_prefix_index_meta(
-        index_path,
-        {
-            "id_col": id_col,
-            "shingle_n": shingle_n,
-            "order": "frozen-df-v2",
-            "bands": PREFIX_INDEX_BANDS,
-        },
-        fs=fs,
+    have = check_sidecar(
+        index_path, "prefix", _prefix_meta(id_col, shingle_n), fs=fs
     )
     t_cand = float(threshold)
     if round_to is not None:
@@ -1217,7 +1143,7 @@ def incremental_jaccard_prefix_probe(
         F.col("n").alias("n_new"), F.col("pos").alias("pos_new"),
     )
     idx = (
-        read_lsh_index_rows(spark, index_path, fs=fs)
+        banded_index_read(spark, index_path, fs=fs)
         .withColumnRenamed(have["id_col"], "old_id")
         .withColumnRenamed("n", "n_old")
         .withColumnRenamed("pos", "pos_old")
@@ -1520,41 +1446,6 @@ def paragraph_dedup(
     )
 
 
-PARASEEN_META = "_paraseen_meta.json"
-
-
-def paraseen_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{PARASEEN_META}"
-
-
-def read_paraseen_meta(path: str, fs=None) -> dict:
-    """Load the seen-paragraph store's parameter sidecar
-    (FileNotFoundError on a pre-sidecar/foreign dir)."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    return read_json_sidecar(path, PARASEEN_META, fs=fs)
-
-
-def _paraseen_check(path: str, want: dict, fs=None) -> None:
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    try:
-        have = read_json_sidecar(path, PARASEEN_META, fs=fs)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"seen-paragraph store at {path!r} has no {PARASEEN_META} "
-            "sidecar — create it with write_paraseen_store (probing a "
-            "store of unknown segmentation silently loses recall)"
-        ) from e
-    if have != want:
-        raise ValueError(
-            f"seen-paragraph store at {path!r} was built under different "
-            f"parameters: sidecar {have}, caller {want} — a mismatched "
-            "separator/min_chars segments differently and the anti-join "
-            "silently stops deduping"
-        )
-
-
 def _paras_of(
     docs: DataFrame, id_col: str, text_col: str, sep: str, min_chars: int
 ) -> DataFrame:
@@ -1591,10 +1482,8 @@ def write_paraseen_store(
     equivalent (Dolma's paragraph dedup keys a Bloom filter, which
     false-positives by design; a 64-bit hash collision needs ~2^32
     distinct paragraphs before the first expected dup). A
-    ``_paraseen_meta.json`` sidecar pins (sep, min_chars) — a store
+    ``paraseen`` sidecar pins (sep, min_chars) — a store
     segmented differently would silently stop deduping."""
-    from nginx_analytics_spark.operators.index_fs import write_json_sidecar
-
     (
         _paras_of(docs, id_col, text_col, sep, min_chars)
         .select(F.xxhash64("para").alias("h"))
@@ -1602,8 +1491,8 @@ def write_paraseen_store(
         .write.mode("overwrite")
         .parquet(path)
     )
-    write_json_sidecar(
-        path, PARASEEN_META, {"sep": sep, "min_chars": int(min_chars)}, fs=fs
+    write_sidecar(
+        path, "paraseen", {"sep": sep, "min_chars": int(min_chars)}, fs=fs
     )
 
 
@@ -1623,9 +1512,7 @@ def reconcile_paraseen_store(
     longer in any corpus doc) are harmless — they can only dedup text
     that genuinely occurred before — and are left in place (the set is
     monotone by design, like the exact-dup ledger)."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    meta = read_json_sidecar(path, PARASEEN_META, fs=fs)
+    meta = read_sidecar(path, "paraseen", fs=fs)
     have = spark.read.parquet(path)
     missing = (
         _paras_of(corpus, id_col, text_col, meta["sep"], meta["min_chars"])
@@ -1667,8 +1554,8 @@ def incremental_paragraph_dedup(
     at-least-once replay are harmless (the store is a set; the
     anti-join ignores multiplicity). Returns X95's row contract:
     (id, clean_text, n_kept, n_removed), one row per input doc."""
-    _paraseen_check(
-        path, {"sep": sep, "min_chars": int(min_chars)}, fs=fs
+    check_sidecar(
+        path, "paraseen", {"sep": sep, "min_chars": int(min_chars)}, fs=fs
     )
     paras = _paras_of(new_docs, id_col, text_col, sep, min_chars).withColumn(
         "h", F.xxhash64("para")
@@ -1892,41 +1779,6 @@ def _cut_spans(
     )
 
 
-WINSEEN_META = "_winseen_meta.json"
-
-
-def winseen_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{WINSEEN_META}"
-
-
-def read_winseen_meta(path: str, fs=None) -> dict:
-    """Load the seen-window store's parameter sidecar
-    (FileNotFoundError on a pre-sidecar/foreign dir)."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    return read_json_sidecar(path, WINSEEN_META, fs=fs)
-
-
-def _winseen_check(path: str, want: dict, fs=None) -> None:
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    try:
-        have = read_json_sidecar(path, WINSEEN_META, fs=fs)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"seen-window store at {path!r} has no {WINSEEN_META} "
-            "sidecar — create it with write_winseen_store (probing a "
-            "store of unknown window width silently loses recall)"
-        ) from e
-    if have != want:
-        raise ValueError(
-            f"seen-window store at {path!r} was built under different "
-            f"parameters: sidecar {have}, caller {want} — a mismatched "
-            "window width slides different windows and the semi-join "
-            "silently stops cutting"
-        )
-
-
 def write_winseen_store(
     docs: DataFrame,
     path: str,
@@ -1942,10 +1794,8 @@ def write_winseen_store(
     form X96 already defaults to), so the store is O(corpus tokens) ×
     8 bytes bounded above — the honest at-rest price of span-exact
     incremental dedup, and the same 64-bit-key trust X97's paragraph
-    store carries. A ``_winseen_meta.json`` sidecar pins window_tokens
+    store carries. A ``winseen`` sidecar pins window_tokens
     — a store slid at a different W would silently stop cutting."""
-    from nginx_analytics_spark.operators.index_fs import write_json_sidecar
-
     W = int(window_tokens)
     if W < 2:
         raise ValueError("window_tokens must be >= 2")
@@ -1959,9 +1809,7 @@ def write_winseen_store(
         .write.mode("overwrite")
         .parquet(path)
     )
-    write_json_sidecar(
-        path, WINSEEN_META, {"window_tokens": W}, fs=fs
-    )
+    write_sidecar(path, "winseen", {"window_tokens": W}, fs=fs)
 
 
 def reconcile_winseen_store(
@@ -1979,9 +1827,7 @@ def reconcile_winseen_store(
     Orphan keys are harmless (they only cut text that genuinely
     occurred before) and are left in place — the set is monotone by
     design, like X97's."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    meta = read_json_sidecar(path, WINSEEN_META, fs=fs)
+    meta = read_sidecar(path, "winseen", fs=fs)
     W = int(meta["window_tokens"])
     have = spark.read.parquet(path)
     toks = corpus.select(
@@ -2037,7 +1883,7 @@ def incremental_exact_substring_dedup(
     row contract: (id, clean_text, n_tokens_kept, n_tokens_removed),
     one row per batch doc."""
     W = int(window_tokens)
-    _winseen_check(path, {"window_tokens": W}, fs=fs)
+    check_sidecar(path, "winseen", {"window_tokens": W}, fs=fs)
     toks = new_docs.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
     ).localCheckpoint(eager=True)  # windows + reassembly + sizes
@@ -2480,8 +2326,6 @@ def banded_signature_keys(
     )
 
 
-LSH_INDEX_META = "_lsh_meta.json"
-
 # At-rest row format of the text LSH index. banded-v2 (r16) adds the
 # doc's shingle-set size ``n`` to every (id, band_idx, band_hash) row
 # (+8 bytes/row) so probes apply the Jaccard length bound AT THE BAND
@@ -2492,22 +2336,36 @@ LSH_INDEX_META = "_lsh_meta.json"
 LSH_INDEX_FORMAT = "banded-v2"
 
 
-def lsh_index_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{LSH_INDEX_META}"
+def _lsh_meta(
+    id_col: str, shingle_n: int, num_hashes: int, rows_per_band: int
+) -> dict:
+    """The LSH sidecar's parameters: everything the signing depends on,
+    plus the row format."""
+    return {
+        "id_col": id_col,
+        "shingle_n": shingle_n,
+        "num_hashes": num_hashes,
+        "rows_per_band": rows_per_band,
+        "format": LSH_INDEX_FORMAT,
+    }
 
 
-def read_lsh_index_meta(path: str, fs=None) -> dict:
-    """Load the index's parameter sidecar. Raises FileNotFoundError for a
-    pre-sidecar (or foreign) index — probing such an index would silently
-    band-join against unknown hash parameters, so callers fail loudly.
-
-    ``fs`` (here and on every index-maintenance entry point below)
-    is the driver-side filesystem seam — defaults to local disk; an
-    HDFS deployment swaps in its own
-    :mod:`~nginx_analytics_spark.operators.index_fs` implementation."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    return read_json_sidecar(path, LSH_INDEX_META, fs=fs)
+def _lsh_keys(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    rows_per_band: int,
+) -> DataFrame:
+    sh = docs.select(
+        F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles")
+    )
+    return banded_signature_keys(
+        signatures_from_shingles(sh, id_col, "shingles", num_hashes),
+        id_col,
+        rows_per_band=rows_per_band,
+    )
 
 
 def write_lsh_index(
@@ -2530,7 +2388,7 @@ def write_lsh_index(
     near-dup checks touch this table and the candidates' text, never
     the corpus text at large.
 
-    A ``_lsh_meta.json`` sidecar pins (shingle_n, num_hashes,
+    An ``lsh`` sidecar pins (shingle_n, num_hashes,
     rows_per_band, id_col) with the data; ``incremental_near_dups``
     validates it, because a probe signed with different parameters
     band-joins against incompatible hashes and silently drops recall to
@@ -2551,51 +2409,17 @@ def write_lsh_index(
     pass it so the bootstrap write does not sign a second time. Caller
     contract: built with THIS call's declared parameters (which the
     sidecar then records)."""
-    from nginx_analytics_spark.operators.index_fs import (
-        banded_index_write,
-        write_json_sidecar,
-    )
-
     if keys is None:
-        sh = docs.select(
-            F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles")
-        )
-        keys = banded_signature_keys(
-            signatures_from_shingles(sh, id_col, "shingles", num_hashes),
-            id_col,
-            rows_per_band=rows_per_band,
+        keys = _lsh_keys(
+            docs, id_col, text_col, shingle_n, num_hashes, rows_per_band
         )
     banded_index_write(keys, path, fs=fs, bands=num_hashes // rows_per_band)
-    meta = {
-        "id_col": id_col,
-        "shingle_n": shingle_n,
-        "num_hashes": num_hashes,
-        "rows_per_band": rows_per_band,
-        "format": LSH_INDEX_FORMAT,
-    }
-    write_json_sidecar(path, LSH_INDEX_META, meta, fs=fs)
-
-
-def _check_lsh_index_meta(index_path: str, want: dict, fs=None) -> None:
-    """Fail loudly when an index's sidecar is missing or disagrees with
-    the caller's signing parameters (r5 ADVICE: a silent mismatch
-    band-joins incompatible hashes and drops recall to ~0)."""
-    try:
-        have = read_lsh_index_meta(index_path, fs=fs)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"LSH index at {index_path!r} has no {LSH_INDEX_META} sidecar — "
-            "rebuild it with write_lsh_index (probing an index of unknown "
-            "parameters silently loses recall)"
-        ) from e
-    if have != want:
-        raise ValueError(
-            f"LSH index parameter mismatch at {index_path!r}: index was "
-            f"built with {have}, probe called with {want} — signatures are "
-            "incompatible and the band join would silently miss near-dups. "
-            "(A missing/differing 'format' means the index predates the "
-            "banded-v2 row layout — rebuild it with write_lsh_index.)"
-        )
+    write_sidecar(
+        path,
+        "lsh",
+        _lsh_meta(id_col, shingle_n, num_hashes, rows_per_band),
+        fs=fs,
+    )
 
 
 def append_lsh_index(
@@ -2619,11 +2443,11 @@ def append_lsh_index(
     append adds one sorted file per touched band directory, so
     directory pruning is unchanged and row-group min/max pruning holds
     per file. Cost scales with the batch, never the index. After many
-    small appends, :func:`compact_lsh_index` rewrites ONLY the bands
-    whose file count grew past a threshold — the log-structured
+    small appends, ``index_fs.banded_index_compact`` rewrites ONLY the
+    bands whose file count grew past a threshold — the log-structured
     maintenance half, costing the oversized bands, never the corpus.
 
-    The ``_lsh_meta.json`` sidecar is validated FIRST: appending keys
+    The ``lsh`` sidecar is validated FIRST: appending keys
     signed with different parameters would silently poison the index.
     Content invariant (property-tested): write(A) then append(B) holds
     exactly the same rows as write(A ∪ B) — only file layout differs.
@@ -2635,420 +2459,20 @@ def append_lsh_index(
     declared parameters; the caller owns the keys-match-params
     contract (property-tested: append with precomputed keys holds the
     same rows as append without)."""
-    _check_lsh_index_meta(
+    check_sidecar(
         path,
-        {
-            "id_col": id_col,
-            "shingle_n": shingle_n,
-            "num_hashes": num_hashes,
-            "rows_per_band": rows_per_band,
-            "format": LSH_INDEX_FORMAT,
-        },
+        "lsh",
+        _lsh_meta(id_col, shingle_n, num_hashes, rows_per_band),
         fs=fs,
     )
     if keys is None:
-        sh = docs.select(
-            F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles")
+        keys = _lsh_keys(
+            docs, id_col, text_col, shingle_n, num_hashes, rows_per_band
         )
-        keys = banded_signature_keys(
-            signatures_from_shingles(sh, id_col, "shingles", num_hashes),
-            id_col,
-            rows_per_band=rows_per_band,
-        )
-    from nginx_analytics_spark.operators.index_fs import banded_index_write
-
     banded_index_write(
         keys, path, fs=fs, mode="append",
         bands=num_hashes // rows_per_band,
     )
-
-
-def read_lsh_index_rows(spark: SparkSession, path: str, fs=None) -> DataFrame:
-    """The index's logical row view (id, band_idx, band_hash),
-    whatever the storage layout: the local partitioned directory tree
-    (one whole-root partition-discovered read) or a ``store_*`` seam's
-    own resolution (the manifest-pointer layout reads each unit's live
-    band directories through the manifest — the Iceberg-style "readers
-    resolve data through the commit pointer" contract an object store
-    without atomic rename needs). Probes and tests read through THIS,
-    never ``spark.read.parquet(path)`` directly, so the layout stays
-    swappable."""
-    from nginx_analytics_spark.operators.index_fs import banded_index_read
-
-    return banded_index_read(spark, path, fs=fs)
-
-
-# X82 compaction defaults, shared by the public entry and the
-# already-locked body the X80 loop enters (r8 review: duplicated
-# literals in the two signatures could silently drift apart)
-COMPACT_MAX_FILES_PER_BAND = 8
-COMPACT_TARGET_FILES = 1
-COMPACT_TARGET_FILE_BYTES = 128 << 20
-COMPACT_MAX_CONCURRENCY = 4
-
-
-def compact_lsh_index(
-    spark: SparkSession,
-    path: str,
-    max_files_per_band: int = COMPACT_MAX_FILES_PER_BAND,
-    target_files: int = COMPACT_TARGET_FILES,
-    target_file_bytes: int = COMPACT_TARGET_FILE_BYTES,
-    max_concurrency: int = COMPACT_MAX_CONCURRENCY,
-    fs=None,
-    prune_ids: DataFrame | None = None,
-) -> dict:
-    """X82: per-band compaction of an append-heavy LSH index — the
-    log-structured maintenance half of X79 (r6 verdict item 4: before
-    this, reclaiming file count cost a full O(corpus)
-    :func:`write_lsh_index` rebuild). Each :func:`append_lsh_index`
-    call adds one file per touched ``band_idx=`` directory; after many
-    small appends a probe pays per-file open/footer cost across an
-    unbounded file population. This job rewrites ONLY the bands whose
-    parquet file count exceeds ``max_files_per_band`` — each into
-    range-partitioned, band_hash-sorted files (non-overlapping
-    min/max, so row-group pruning is at its best-case after
-    compaction) — and leaves every healthy band's files byte-untouched.
-    Cost scales with the OVERSIZED bands' rows, never the corpus or
-    the healthy bands.
-
-    Output sizing (r7 ADVICE): a band is rewritten into
-    ``max(target_files, ceil(band_bytes / target_file_bytes))`` files,
-    so a band that has grown past one healthy file's worth of rows is
-    split across several sorted ranges instead of funneling into a
-    single task — the rewrite parallelism scales with the band, and
-    the compacted files stay row-group-pruning-sized. Oversized bands
-    are compacted CONCURRENTLY (up to ``max_concurrency`` driver
-    threads, each submitting an independent Spark job on its own band
-    dir), so the in-loop pause tracks the largest band, not the sum of
-    all oversized bands. Bands are disjoint directories and the swap
-    below is per-band, so concurrency does not change crash semantics.
-
-    Content invariant (property-tested like X79's): compaction changes
-    file layout only — the (id, band_idx, band_hash) row multiset and
-    the ``_lsh_meta.json`` sidecar are exactly preserved, so probes
-    before and after return identical pairs.
-
-    Swap discipline (crash-safe, r7 review): the compacted files are
-    fully written to a ``.compact-…`` scratch dir, then swapped in via
-    two single atomic renames — band dir → ``.old-…``, scratch → band
-    dir — and only then is ``.old-…`` deleted. A crash at ANY point
-    leaves the band's rows intact in exactly one of (band dir, .old),
-    and :func:`_recover_lsh_compaction` — run on entry here — rolls an
-    interrupted swap BACK (restore .old, discard scratch) and reaps
-    completed swaps' leftovers from any pid, so no crash can silently
-    lose a band's recall. ``.old`` names carry a monotonic per-band
-    sequence (``.old-<band>-<seq>-<pid>``, seq = one above any
-    surviving leftover's — clock-step-immune, r8 review) so that if a
-    completed swap's leftover ever survives a failed delete AND a
-    later compaction of the same band crashes mid-swap, recovery
-    restores the NEWEST detached content — never an older leftover
-    that would silently drop rows appended between the two compactions
-    (r7 ADVICE). (All driver-side metadata I/O here goes through the
-    ``fs`` seam — :mod:`~nginx_analytics_spark.operators.index_fs` —
-    local disk by default; HDFS maps the swap onto its own atomic
-    rename, and the module docstring spells out why an S3 port must
-    replace the swap with a manifest flip rather than shim rename.)
-    The rename window is still not atomic for concurrent
-    READERS — run compaction from the maintenance side of the X80
-    loop (between micro-batches, same thread as the appends), which
-    is where a log-structured store always runs it; a probe racing a
-    compaction can observe a detached band and silently lose that
-    band's candidates for the probe (negative-tested in
-    tests/test_dataops.py). Compaction itself IS guarded: an exclusive
-    ``flock`` on the sibling ``<path>.compact.lock`` (r7 verdict item
-    6; moved out of the index dir in r8 so the bootstrap overwrite
-    cannot unlink it) makes a
-    second concurrent compactor — another thread or another process —
-    fail LOUDLY instead of interleaving renames on the same bands;
-    the lock dies with its holder, so no stale-lock recovery is
-    needed. (flock is driver-local like the rest of the swap; an
-    HDFS/S3 deployment substitutes a lease or job-scheduler mutex.)
-
-    ``prune_ids`` (r13 verdict item 4): optional one-column frame of
-    the ids that still exist — rewritten bands drop orphan rows (ids
-    absent from the set) instead of copying them forever; see
-    :func:`_compact_lsh_index_locked` for semantics, cost, and the
-    force-full-rewrite recipe (``max_files_per_band=0``).
-
-    Returns ``{"bands_seen", "bands_compacted", "files_before",
-    "files_after"}`` for the caller's telemetry."""
-    import os
-
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
-    fs = fs or LOCAL_FS
-    read_lsh_index_meta(path, fs=fs)  # loud on a non-index dir
-    with fs.exclusive_lock(
-        _lsh_compact_lock_path(path),
-        "X82 is single-compactor by design (interleaved band swaps "
-        "would corrupt the two-rename discipline); run compaction "
-        "from the X80 loop's one writer thread",
-    ):
-        return _compact_lsh_index_locked(
-            spark, path, max_files_per_band, target_files,
-            target_file_bytes, max_concurrency, fs,
-            prune_ids=prune_ids,
-        )
-
-
-def _lsh_compact_lock_path(path: str) -> str:
-    """SIBLING of the index dir, not inside it (r8 review): the
-    bootstrap ``write_lsh_index`` is ``mode("overwrite")`` and would
-    delete an in-dir lock file out from under its holder's flock,
-    silently voiding the mutex; a sibling also lets the X80 loop take
-    the lock BEFORE the index first exists.
-
-    Upgrade note: pre-r8 builds locked ``<path>/.compact.lock`` INSIDE
-    the dir — the two lock locations do not exclude each other, so do
-    not run an old loop and a new compactor (or vice versa) against
-    the same index across the upgrade; drain loops first. The stale
-    in-dir file is inert afterwards (dot-prefixed, skipped by parquet
-    readers and by every ``band_idx=``/``.old-``/``.compact-`` scan)."""
-    return path.rstrip("/") + ".compact.lock"
-
-
-def _compact_lsh_index_locked(
-    spark: SparkSession,
-    path: str,
-    max_files_per_band: int = COMPACT_MAX_FILES_PER_BAND,
-    target_files: int = COMPACT_TARGET_FILES,
-    target_file_bytes: int = COMPACT_TARGET_FILE_BYTES,
-    max_concurrency: int = COMPACT_MAX_CONCURRENCY,
-    fs=None,
-    prune_ids: DataFrame | None = None,
-) -> dict:
-    """Compaction body, caller already holds the single-compactor
-    mutex — the X80 loop enters here directly because it takes the
-    mutex once per micro-batch (r8 review); everyone else goes through
-    :func:`compact_lsh_index`. Defaults are the shared module
-    constants above.
-
-    MODALITY-AGNOSTIC by construction (r11 verdict item 1): the body
-    touches only ``band_idx=`` directories through the ``fs`` seam —
-    it never reads a signature or a sidecar — so it serves every index
-    in the shared ``index_fs.banded_index_write`` at-rest format. The
-    SRP embedding index's :func:`similarity.compact_srp_index` enters
-    here under the same sibling lock after validating ITS sidecar,
-    exactly as :func:`compact_lsh_index` does for the text index.
-
-    ``prune_ids`` (r13 verdict item 4 — orphan reclamation through the
-    maintenance pass): a one-column frame of the ids that still EXIST
-    (the corpus store's id column); band rows whose id is absent are
-    dropped during the rewrite instead of being copied forever. X91's
-    ``reconcile_index`` reports orphans but cannot remove them (benign
-    for correctness — the probe's exact-verify join drops them — but
-    they waste candidate volume); with pruning, the compaction the
-    operator already runs reclaims them for every band it rewrites, no
-    full rebuild. Only REWRITTEN (oversized) bands are pruned — pass
-    ``max_files_per_band=0`` to force-rewrite every band when the goal
-    is a full reclaim. Cost: the per-band rewrite gains one semi-join
-    against the id set (ids only, never payloads; the set is
-    checkpointed once and reused by every band job) — still scales
-    with the oversized bands' rows plus one id-column scan, never the
-    corpus payloads. The content invariant weakens exactly as stated:
-    surviving rows are byte-identical, pruned rows are gone."""
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
-    fs = fs or LOCAL_FS
-    import math
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    _recover_lsh_compaction_locked(path, fs)
-    if hasattr(fs, "store_compact"):
-        # layout-owning seam (manifest-pointer): compaction is a
-        # write-new-unit + single manifest flip, not a rename swap
-        if prune_ids is not None:
-            raise ValueError(
-                "prune_ids is not supported on a layout-owning "
-                "(store_compact) seam — its compaction is a manifest "
-                "flip that never rewrites rows; rebuild the index from "
-                "the corpus store to reclaim orphans there"
-            )
-        return fs.store_compact(
-            spark, path, max_files_per_band, target_files,
-            target_file_bytes, max_concurrency,
-        )
-    if prune_ids is not None:
-        if len(prune_ids.columns) != 1:
-            raise ValueError(
-                "prune_ids must be a ONE-column frame of surviving ids "
-                f"(got columns {prune_ids.columns}) — pass "
-                "read_corpus(...).select(id_col)"
-            )
-        # checkpointed once: every concurrent band job semi-joins the
-        # same materialized id set instead of re-running its lineage.
-        # Broadcast only when the set is demonstrably small (the count
-        # is footer-cheap on the checkpoint) — a 100 TB corpus's id set
-        # must shuffle-join, not OOM every executor.
-        prune_ids = prune_ids.distinct().localCheckpoint(eager=True)
-        prune_broadcastable = prune_ids.count() < 1_000_000
-
-    def parquet_files(d: str) -> list[str]:
-        return [f for f in fs.listdir(d) if f.endswith(".parquet")]
-
-    stats = {"bands_seen": 0, "bands_compacted": 0,
-             "files_before": 0, "files_after": 0}
-    oversized: list[tuple[str, int]] = []  # (band, band_target_files)
-    for band in sorted(d for d in fs.listdir(path) if d.startswith("band_idx=")):
-        bdir = os.path.join(path, band)
-        files = parquet_files(bdir)
-        stats["bands_seen"] += 1
-        stats["files_before"] += len(files)
-        if len(files) <= max_files_per_band:
-            stats["files_after"] += len(files)
-            continue
-        band_bytes = sum(
-            fs.getsize(os.path.join(bdir, f)) for f in files
-        )
-        oversized.append(
-            (band, max(target_files, math.ceil(band_bytes / target_file_bytes)))
-        )
-
-    def compact_band(job: tuple[str, int]) -> int:
-        band, n_target = job
-        bdir = os.path.join(path, band)
-        # read the band leaf (partition column is implied by the dir),
-        # range-partition on the hash so the compacted files carry
-        # non-overlapping sorted hash ranges
-        rows = spark.read.parquet(bdir)
-        if prune_ids is not None:
-            # the band leaf's non-hash column IS the id column (the
-            # body never reads a sidecar); orphan rows anti-match the
-            # surviving-id set and are dropped by the rewrite
-            id_name = next(c for c in rows.columns if c != "band_hash")
-            keep = prune_ids.toDF(id_name)
-            rows = rows.join(
-                F.broadcast(keep) if prune_broadcastable else keep,
-                id_name,
-                "left_semi",
-            )
-        # no stale scratch can exist here: recovery-on-entry reaped
-        # every .compact-*, and the write below is mode("overwrite")
-        scratch = os.path.join(path, f".compact-{band}-{os.getpid()}")
-        (
-            rows.repartitionByRange(n_target, "band_hash")
-            .sortWithinPartitions("band_hash")
-            .write.mode("overwrite")
-            .parquet(scratch)
-        )
-        n_after = len(parquet_files(scratch))
-        # monotonic per-band sequence: one above any surviving leftover
-        # (r8 review: wall-clock ns could step BACKWARDS under an NTP
-        # correction, letting a stale completed-swap leftover outrank a
-        # fresh mid-swap one in recovery; a counter seeded from the
-        # existing leftovers cannot — and it lands above legacy
-        # time_ns-named leftovers too, preserving cross-version order)
-        seq = max(
-            (
-                s
-                for d in fs.listdir(path)
-                if d.startswith(".old-")
-                for b, s in [_parse_old_leftover(d)]
-                if b == band
-            ),
-            default=0,
-        ) + 1
-        old = os.path.join(path, f".old-{band}-{seq}-{os.getpid()}")
-        fs.rename(bdir, old)
-        # the scratch dir becomes the band dir whole — its _SUCCESS /
-        # .crc droppings are _-prefixed/hidden, which parquet readers
-        # skip — so the swap is one rename, never a per-file window
-        fs.rename(scratch, bdir)
-        fs.rmtree(old)
-        return n_after
-
-    if oversized:
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(max_concurrency, len(oversized)))
-        ) as pool:
-            for n_after in pool.map(compact_band, oversized):
-                stats["bands_compacted"] += 1
-                stats["files_after"] += n_after
-    return stats
-
-
-def _parse_old_leftover(name: str) -> tuple[str, int]:
-    """``.old-<band>-<seq>-<pid>`` (current) or ``.old-<band>-<pid>``
-    (pre-r8 legacy, seq 0) -> (band, seq). Band dirs are
-    ``band_idx=<int>`` — no ``-`` — so splitting on ``-`` is exact."""
-    parts = name[len(".old-"):].split("-")
-    return parts[0], (int(parts[1]) if len(parts) >= 3 else 0)
-
-
-def _recover_lsh_compaction(path: str, fs=None) -> bool:
-    """Heal an index whose last compaction crashed mid-swap — under the
-    same single-compactor mutex compaction itself holds (r8 review: an
-    UNLOCKED heal racing a LIVE out-of-band compactor would reap its
-    in-progress ``.compact-*`` scratch mid-write and swap a truncated
-    band in). If another holder owns the lock, there is a live
-    compactor, not a crashed one — nothing to heal; returns False and
-    does nothing. Returns True after an (possibly no-op) heal.
-
-    For each band with ``.old-<band>-<seq>-<pid>`` leftovers: the band
-    dir existing means the swap completed (or never detached) — reap
-    them; the band dir missing means the crash hit between the two
-    renames — ROLL BACK by restoring the NEWEST leftover (max seq) as
-    the band dir (the compaction simply didn't happen; content is
-    exactly the pre-compaction rows — and if an older completed-swap
-    leftover had survived a failed delete, its content is a stale
-    subset that must NOT win, r7 ADVICE) and reaping the rest. Then
-    every ``.compact-*`` scratch is stale by construction (its band
-    dir exists again) and is reaped, any pid's alike.
-
-    Only :class:`~nginx_analytics_spark.operators.index_fs.LockHeldError`
-    means "live compactor, back off" — any other error from the fs seam
-    propagates (r8 ADVICE: a custom seam's unrelated RuntimeError must
-    not silently suppress recovery)."""
-    from contextlib import ExitStack
-
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS, LockHeldError
-
-    fs = fs or LOCAL_FS
-    stack = ExitStack()
-    try:
-        stack.enter_context(
-            fs.exclusive_lock(
-                _lsh_compact_lock_path(path),
-                "a live compaction owns the index; recovery heals "
-                "CRASHED compactions only",
-            )
-        )
-    except LockHeldError:
-        return False
-    with stack:
-        _recover_lsh_compaction_locked(path, fs)
-    return True
-
-
-def _recover_lsh_compaction_locked(path: str, fs) -> None:
-    import os
-
-    if hasattr(fs, "store_recover"):
-        # layout-owning seam: its flip-last protocol leaves only
-        # orphan (never-referenced) unit dirs behind a crash — no
-        # rollback state exists, reaping is the whole heal
-        fs.store_recover(path)
-        return
-    entries = fs.listdir(path)
-    by_band: dict[str, list[tuple[int, str]]] = {}
-    for d in entries:
-        if d.startswith(".old-"):
-            band, seq = _parse_old_leftover(d)
-            by_band.setdefault(band, []).append((seq, d))
-    for band, olds in by_band.items():
-        bdir = os.path.join(path, band)
-        if not fs.isdir(bdir):
-            # restore the newest detached content; ties (legacy names,
-            # same-ns clocks) break on the full name for determinism
-            newest = max(olds)[1]
-            fs.rename(os.path.join(path, newest), bdir)
-            olds = [o for o in olds if o[1] != newest]
-        for _, d in olds:
-            fs.rmtree(os.path.join(path, d))
-    for d in entries:
-        if d.startswith(".compact-"):
-            fs.rmtree(os.path.join(path, d))
 
 
 def _relational_jaccard_cross(
@@ -3143,7 +2567,7 @@ def incremental_near_dups(
     oracle — the same contract as minhash_dedup_pairs. The at-rest
     probe path still executes end-to-end.
 
-    The index's ``_lsh_meta.json`` sidecar (write_lsh_index) is
+    The index's ``lsh`` sidecar (write_lsh_index) is
     validated against this call's signing parameters FIRST: a probe
     with mismatched (shingle_n, num_hashes, rows_per_band, id_col)
     hashes into disjoint buckets and would return an empty/near-empty
@@ -3156,15 +2580,10 @@ def incremental_near_dups(
     the contract that they were built with THIS call's declared
     (shingle_n, num_hashes, rows_per_band) — the sidecar validation
     above still guards the declared params against the index."""
-    _check_lsh_index_meta(
+    check_sidecar(
         index_path,
-        {
-            "id_col": id_col,
-            "shingle_n": shingle_n,
-            "num_hashes": num_hashes,
-            "rows_per_band": rows_per_band,
-            "format": LSH_INDEX_FORMAT,
-        },
+        "lsh",
+        _lsh_meta(id_col, shingle_n, num_hashes, rows_per_band),
         fs=fs,
     )
     if new_shingles is not None:
@@ -3183,7 +2602,7 @@ def incremental_near_dups(
         "n", "new_n"
     )
     idx = (
-        read_lsh_index_rows(spark, index_path, fs=fs)
+        banded_index_read(spark, index_path, fs=fs)
         .withColumnRenamed(id_col, "old_id")
         .withColumnRenamed("n", "old_n")
     )

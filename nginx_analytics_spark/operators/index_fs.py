@@ -1,7 +1,28 @@
-"""Filesystem seam for the at-rest LSH index's maintenance path.
+"""The at-rest store layer: one sidecar table, one writer mutex, and one
+banded-index lifecycle for every store kind.
 
-The X79 append / X82 compaction / recovery algorithms (operators/dedup.py)
-do a small amount of driver-side metadata I/O around the Spark jobs that
+**Kinds.** Seven at-rest stores pair with a corpus: the banded dedup
+indexes (``lsh`` MinHash text, ``prefix`` X94 exact-Jaccard prefixes,
+``srp`` embedding hyperplanes), the seen-key stores (``paraseen``
+paragraphs, ``winseen`` token windows) and the ANN serving indexes
+(``pq``, ``ivf``). Each carries one JSON parameter sidecar, and
+:data:`SIDECARS` maps every sidecar file name to its kind — nothing
+outside this module spells a sidecar name. :func:`index_kind` answers
+"what store is this directory" from that table; :func:`check_sidecar`
+is the one validation rule (every parameter a caller names must equal
+the sidecar's, a caller's ``None`` adopts the sidecar's value, and the
+key sets must match), so a store signed or segmented under other
+parameters fails loudly instead of silently losing recall.
+
+**Banded lifecycle.** The three banded kinds share one row layout —
+``(id, band_idx, band_hash[, payload])`` partitioned by ``band_idx`` —
+so write, read, per-band compaction (X82) and crash recovery are
+written once here (``banded_index_*``); the kind-specific modules only
+sign keys and stamp their sidecar. Every writer of every kind
+serializes on the sibling :func:`writer_lock_path` mutex.
+
+**Filesystem seam.** The maintenance algorithms below do a small
+amount of driver-side metadata I/O around the Spark jobs that
 move the actual rows: list a band directory, atomically rename a
 directory or sidecar into place, delete a leftover tree, hold a
 single-compactor mutex. In this repo the index lives on local disk, so
@@ -54,8 +75,8 @@ object), let readers resolve bands through the manifest — which is the
 Iceberg/Delta commit pattern, not a ``rename`` shim. That port EXISTS
 in this module (r8 verdict item 2): :class:`ManifestIndexFS` implements
 the ``store_write`` / ``store_append`` / ``store_read`` /
-``store_compact`` / ``store_recover`` family, which the maintenance
-path in ``operators/dedup.py`` delegates layout to wholesale when
+``store_compact`` / ``store_recover`` family, which the
+``banded_index_*`` functions below delegate layout to wholesale when
 present; ``tests/test_index_fs.py`` runs the append / compaction /
 recovery / mutex battery over BOTH layouts and asserts identical rows,
 probe pairs, and loop admissions. This seam keeps the whole decision in
@@ -256,13 +277,7 @@ class ManifestIndexFS(LocalIndexFS):
         values it covers (from the partition dirs Spark created).
         Orphan-safe: nothing references the unit until a flip does."""
         udir = os.path.join(path, unit)
-        (
-            keys.repartition("band_idx")
-            .sortWithinPartitions("band_hash")
-            .write.mode("overwrite")
-            .partitionBy("band_idx")
-            .parquet(udir)
-        )
+        _write_bands(keys, udir, "overwrite")
         return sorted(
             int(d.split("=", 1)[1])
             for d in self.listdir(udir)
@@ -322,7 +337,7 @@ class ManifestIndexFS(LocalIndexFS):
         target_file_bytes: int,
         max_concurrency: int = 1,
     ) -> dict:
-        """Caller (compact_lsh_index / the X80 loop) already holds the
+        """Caller (banded_index_compact) already holds the
         single-compactor mutex and has run recovery."""
         import math
 
@@ -498,18 +513,157 @@ def acquire_lock_wait(fs, path: str, purpose: str, timeout_s: float = 0.0):
         lock.__exit__(None, None, None)
 
 
-#: Default seam used by operators/dedup.py when the caller passes no
-#: ``fs``. A deployment whose index lives on HDFS swaps in its own
-#: implementation per the table above.
+#: Default seam used when the caller passes no ``fs``. A deployment
+#: whose index lives on HDFS swaps in its own implementation per the
+#: table above.
 LOCAL_FS = LocalIndexFS()
 
 
 # ---------------------------------------------------------------------------
-# Shared banded-index persistence (r11: factored out of the duplicated
-# write/append/read + sidecar blocks in operators/dedup.py's MinHash index
-# and operators/similarity.py's SRP index — one storage contract, two
-# signing modalities)
+# The sidecar table: every at-rest store kind and its parameter sidecar
 # ---------------------------------------------------------------------------
+
+#: Sidecar file name -> store kind, for all seven at-rest kinds. Probe
+#: order for :func:`index_kind` is table order (a directory carries one).
+SIDECARS = {
+    "_lsh_meta.json": "lsh",
+    "_prefix_meta.json": "prefix",
+    "_srp_meta.json": "srp",
+    "_paraseen_meta.json": "paraseen",
+    "_winseen_meta.json": "winseen",
+    "_pq_meta.json": "pq",
+    "_ivf_meta.json": "ivf",
+}
+_SIDECAR_OF = {kind: name for name, kind in SIDECARS.items()}
+
+#: The kinds stored in the shared banded layout (``banded_index_*``).
+BANDED_KINDS = ("lsh", "prefix", "srp")
+
+
+class MissingSidecarError(FileNotFoundError, ValueError):
+    """A directory carries no sidecar of the kind a caller needs. Both a
+    missing file and a refused argument: callers that probe for a store
+    catch ``FileNotFoundError``, callers that validate input catch
+    ``ValueError``."""
+
+
+def sidecar_path(path: str, kind: str) -> str:
+    return f"{path.rstrip('/')}/{_SIDECAR_OF[kind]}"
+
+
+def read_sidecar(path: str, kind: str, fs=None) -> dict:
+    """Load a store's parameter sidecar; FileNotFoundError propagates
+    for a pre-sidecar (or foreign) directory so callers fail loudly.
+
+    ``fs`` (here and on every entry point below) is the driver-side
+    filesystem seam — local disk by default; an HDFS deployment swaps
+    in its own implementation."""
+    import json
+
+    return json.loads((fs or LOCAL_FS).read_text(sidecar_path(path, kind)))
+
+
+def write_sidecar(path: str, kind: str, meta: dict, fs=None) -> None:
+    import json
+
+    (fs or LOCAL_FS).write_text_atomic(sidecar_path(path, kind), json.dumps(meta))
+
+
+def check_sidecar(path: str, kind: str, want: dict, fs=None) -> dict:
+    """THE sidecar rule, for every kind: each parameter the caller names
+    in ``want`` must equal the sidecar's value, a ``None`` in ``want``
+    adopts the sidecar's value (the store is the authority on how its
+    keys were signed, so a standing loop survives library-default
+    changes), and the key sets must match (a sidecar carrying extra or
+    renamed parameters is as foreign as a mismatched value — e.g. a
+    pre-banded-v2 LSH index without ``format``). Returns the sidecar.
+
+    A store probed or appended under other parameters hashes into
+    disjoint buckets (or segments differently) and silently loses
+    recall; this makes it loud."""
+    try:
+        have = read_sidecar(path, kind, fs=fs)
+    except FileNotFoundError as e:
+        raise MissingSidecarError(
+            f"{kind} store at {path!r} has no {_SIDECAR_OF[kind]} sidecar "
+            "— rebuild it (a store of unknown parameters silently loses "
+            "recall)"
+        ) from e
+    if set(have) != set(want) or any(
+        v is not None and have[k] != v for k, v in want.items()
+    ):
+        # list-valued entries (the prefix index's frozen frequency tail)
+        # are elided: they are data, not parameters a caller sets
+        shown = {k: v for k, v in have.items() if not isinstance(v, list)}
+        asked = {k: v for k, v in want.items() if v is not None}
+        raise ValueError(
+            f"{kind} store at {path!r}: parameter mismatch — built under "
+            f"different parameters: sidecar {shown}, caller {asked} — "
+            "use the store's parameters or rebuild it"
+        )
+    return have
+
+
+def index_kind(path: str, fs=None, kinds=None) -> str:
+    """The kind of at-rest store at ``path``, read off its sidecar.
+    ``kinds`` restricts the answer to the kinds a caller can handle.
+    Raises :class:`MissingSidecarError` naming the sidecars it looked
+    for when none is present."""
+    fs = fs or LOCAL_FS
+    kinds = tuple(SIDECARS.values()) if kinds is None else tuple(kinds)
+    for kind in kinds:
+        if fs.isfile(sidecar_path(path, kind)):
+            return kind
+    raise MissingSidecarError(
+        f"no at-rest store sidecar at {path!r} (looked for "
+        f"{', '.join(_SIDECAR_OF[k] for k in kinds)})"
+    )
+
+
+def writer_lock_path(path: str) -> str:
+    """Every store's single-WRITER mutex: the SIBLING
+    ``<path>.compact.lock``, not a file inside the store (r8 review):
+    a bootstrap ``mode("overwrite")`` write would delete an in-dir lock
+    file out from under its holder's flock, silently voiding the
+    mutex; a sibling also lets an ingest loop take the lock BEFORE the
+    index first exists. Ingest loops, appenders, compactors, rebuilders,
+    ``reconcile_index`` and ``jobs verify-index`` all serialize on this
+    one name, whatever the kind (r13 ADVICE: distinct per-kind siblings
+    left verify racing the PQ/IVF row_count commits).
+
+    Upgrade note: pre-r8 builds locked ``<path>/.compact.lock`` INSIDE
+    the dir — the two lock locations do not exclude each other, so do
+    not run an old loop and a new compactor (or vice versa) against
+    the same index across the upgrade; drain loops first. The stale
+    in-dir file is inert afterwards (dot-prefixed, skipped by parquet
+    readers and by every ``band_idx=``/``.old-``/``.compact-`` scan)."""
+    return path.rstrip("/") + ".compact.lock"
+
+
+# ---------------------------------------------------------------------------
+# The banded-index lifecycle: write, read, compact, recover — one body for
+# the lsh, prefix and srp kinds
+# ---------------------------------------------------------------------------
+
+
+def _write_bands(keys, path: str, mode: str, bands: int | None = None) -> None:
+    """The local banded layout: one file per touched band per write,
+    rows sorted by ``band_hash`` within it. The sort leads with the
+    partition column on purpose: Spark's planned writes sort on
+    ``band_idx`` in front of ``partitionBy`` and drop a preceding sort
+    that does not start with it, leaving the files unsorted
+    (tests/test_index_fs.py reads the order back from the files)."""
+    parted = (
+        keys.repartition(bands, "band_idx")
+        if bands
+        else keys.repartition("band_idx")
+    )
+    (
+        parted.sortWithinPartitions("band_idx", "band_hash")
+        .write.mode(mode)
+        .partitionBy("band_idx")
+        .parquet(path)
+    )
 
 
 def banded_index_write(
@@ -546,24 +700,16 @@ def banded_index_write(
     if mode == "append" and hasattr(fs, "store_append"):
         fs.store_append(keys, path)
         return
-    parted = (
-        keys.repartition(bands, "band_idx")
-        if bands
-        else keys.repartition("band_idx")
-    )
-    (
-        parted.sortWithinPartitions("band_hash")
-        .write.mode(mode)
-        .partitionBy("band_idx")
-        .parquet(path)
-    )
+    _write_bands(keys, path, mode, bands)
 
 
 def banded_index_read(spark, path: str, fs=None):
     """The banded index's logical row view, whatever the storage
     layout: the local partitioned tree (one whole-root
     partition-discovered read) or the seam's own resolution (the
-    manifest layout reads live band dirs through the commit pointer).
+    manifest layout reads live band dirs through the commit pointer —
+    the Iceberg-style "readers resolve data through the commit
+    pointer" contract an object store without atomic rename needs).
     Probes read through THIS, never ``spark.read.parquet`` directly,
     so the layout stays swappable."""
     fs = fs or LOCAL_FS
@@ -572,17 +718,308 @@ def banded_index_read(spark, path: str, fs=None):
     return spark.read.parquet(path)
 
 
-def read_json_sidecar(path: str, name: str, fs=None) -> dict:
-    """Load an index's parameter sidecar; FileNotFoundError propagates
-    for a pre-sidecar (or foreign) directory so callers fail loudly."""
-    import json
+# X82 compaction defaults, shared by every entry that compacts (r8
+# review: duplicated literals in several signatures could silently
+# drift apart)
+COMPACT_MAX_FILES_PER_BAND = 8
+COMPACT_TARGET_FILES = 1
+COMPACT_TARGET_FILE_BYTES = 128 << 20
+COMPACT_MAX_CONCURRENCY = 4
 
-    return json.loads((fs or LOCAL_FS).read_text(f"{path.rstrip('/')}/{name}"))
 
+def banded_index_compact(
+    spark,
+    path: str,
+    max_files_per_band: int = COMPACT_MAX_FILES_PER_BAND,
+    target_files: int = COMPACT_TARGET_FILES,
+    target_file_bytes: int = COMPACT_TARGET_FILE_BYTES,
+    max_concurrency: int = COMPACT_MAX_CONCURRENCY,
+    fs=None,
+    prune_ids=None,
+    lock_held: bool = False,
+) -> dict:
+    """X82: per-band compaction of an append-heavy banded index (any
+    of the lsh, prefix and srp kinds — the body touches only
+    ``band_idx=`` directories and never reads a signature, so one
+    compactor serves them all). Each append adds one file per touched
+    ``band_idx=`` directory; after many small appends a probe pays
+    per-file open/footer cost across an unbounded file population.
+    This job rewrites ONLY the bands whose parquet file count exceeds
+    ``max_files_per_band`` — each into range-partitioned,
+    band_hash-sorted files (non-overlapping min/max, so row-group
+    pruning is at its best-case after compaction) — and leaves every
+    healthy band's files byte-untouched. Cost scales with the
+    OVERSIZED bands' rows, never the corpus or the healthy bands.
 
-def write_json_sidecar(path: str, name: str, meta: dict, fs=None) -> None:
-    import json
+    Output sizing (r7 ADVICE): a band is rewritten into
+    ``max(target_files, ceil(band_bytes / target_file_bytes))`` files,
+    so a band that has grown past one healthy file's worth of rows is
+    split across several sorted ranges instead of funneling into a
+    single task. Oversized bands are compacted CONCURRENTLY (up to
+    ``max_concurrency`` driver threads, each submitting an independent
+    Spark job on its own band dir), so the in-loop pause tracks the
+    largest band, not the sum of all oversized bands. Bands are
+    disjoint directories and the swap below is per-band, so
+    concurrency does not change crash semantics.
 
-    (fs or LOCAL_FS).write_text_atomic(
-        f"{path.rstrip('/')}/{name}", json.dumps(meta)
+    Content invariant (property-tested like X79's): compaction changes
+    file layout only — the row multiset and the sidecar are exactly
+    preserved, so probes before and after return identical pairs.
+
+    Swap discipline (crash-safe, r7 review): the compacted files are
+    fully written to a ``.compact-…`` scratch dir, then swapped in via
+    two single atomic renames — band dir → ``.old-…``, scratch → band
+    dir — and only then is ``.old-…`` deleted. A crash at ANY point
+    leaves the band's rows intact in exactly one of (band dir, .old),
+    and :func:`banded_index_recover` — run on entry here — rolls an
+    interrupted swap BACK. ``.old`` names carry a monotonic per-band
+    sequence (``.old-<band>-<seq>-<pid>``, seq = one above any
+    surviving leftover's — clock-step-immune, r8 review) so recovery
+    always restores the NEWEST detached content (r7 ADVICE). The
+    rename window is still not atomic for concurrent READERS — run
+    compaction from the maintenance side of the ingest loop (between
+    micro-batches, same thread as the appends); a probe racing a
+    compaction can observe a detached band and silently lose that
+    band's candidates (negative-tested in tests/test_index_fs.py). A
+    seam exposing ``store_compact`` (the manifest layout) replaces the
+    swap with a new-unit write plus one manifest flip.
+
+    Compaction is single-writer: it takes :func:`writer_lock_path`
+    (``lock_held=True`` declares the caller already holds it — the
+    ingest loop, per micro-batch), so a second concurrent compactor
+    fails LOUDLY instead of interleaving renames on the same bands.
+
+    ``prune_ids`` (r13 verdict item 4 — orphan reclamation through the
+    maintenance pass): a one-column frame of the ids that still EXIST
+    (the corpus store's id column); band rows whose id is absent are
+    dropped during the rewrite instead of being copied forever.
+    ``reconcile_index`` reports orphans but cannot remove them (benign
+    for correctness — the probe's exact-verify join drops them — but
+    they waste candidate volume). Only REWRITTEN (oversized) bands are
+    pruned — pass ``max_files_per_band=0`` to force-rewrite every band
+    when the goal is a full reclaim. Cost: the per-band rewrite gains
+    one semi-join against the id set (ids only, checkpointed once and
+    reused by every band job). Surviving rows are byte-identical,
+    pruned rows are gone.
+
+    Returns ``{"bands_seen", "bands_compacted", "files_before",
+    "files_after"}`` for the caller's telemetry."""
+    fs = fs or LOCAL_FS
+    index_kind(path, fs, BANDED_KINDS)  # loud on a non-index dir
+    lock = (
+        contextlib.nullcontext()
+        if lock_held
+        else fs.exclusive_lock(
+            writer_lock_path(path),
+            "X82 is single-compactor by design (interleaved band swaps "
+            "would corrupt the two-rename discipline); run compaction "
+            "from the ingest loop's one writer thread",
+        )
     )
+    with lock:
+        return _compact_locked(
+            spark, path, max_files_per_band, target_files,
+            target_file_bytes, max_concurrency, fs, prune_ids,
+        )
+
+
+def _compact_locked(
+    spark, path, max_files_per_band, target_files, target_file_bytes,
+    max_concurrency, fs, prune_ids,
+) -> dict:
+    import math
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    _recover_locked(path, fs)
+    if hasattr(fs, "store_compact"):
+        # layout-owning seam (manifest-pointer): compaction is a
+        # write-new-unit + single manifest flip, not a rename swap
+        if prune_ids is not None:
+            raise ValueError(
+                "prune_ids is not supported on a layout-owning "
+                "(store_compact) seam — its compaction is a manifest "
+                "flip that never rewrites rows; rebuild the index from "
+                "the corpus store to reclaim orphans there"
+            )
+        return fs.store_compact(
+            spark, path, max_files_per_band, target_files,
+            target_file_bytes, max_concurrency,
+        )
+    if prune_ids is not None:
+        if len(prune_ids.columns) != 1:
+            raise ValueError(
+                "prune_ids must be a ONE-column frame of surviving ids "
+                f"(got columns {prune_ids.columns}) — pass "
+                "read_corpus(...).select(id_col)"
+            )
+        # checkpointed once: every concurrent band job semi-joins the
+        # same materialized id set instead of re-running its lineage.
+        # Broadcast only when the set is demonstrably small (the count
+        # is footer-cheap on the checkpoint) — a 100 TB corpus's id set
+        # must shuffle-join, not OOM every executor.
+        prune_ids = prune_ids.distinct().localCheckpoint(eager=True)
+        prune_broadcastable = prune_ids.count() < 1_000_000
+
+    def parquet_files(d: str) -> list[str]:
+        return [f for f in fs.listdir(d) if f.endswith(".parquet")]
+
+    stats = {"bands_seen": 0, "bands_compacted": 0,
+             "files_before": 0, "files_after": 0}
+    oversized: list[tuple[str, int]] = []  # (band, band_target_files)
+    for band in sorted(d for d in fs.listdir(path) if d.startswith("band_idx=")):
+        bdir = os.path.join(path, band)
+        files = parquet_files(bdir)
+        stats["bands_seen"] += 1
+        stats["files_before"] += len(files)
+        if len(files) <= max_files_per_band:
+            stats["files_after"] += len(files)
+            continue
+        band_bytes = sum(
+            fs.getsize(os.path.join(bdir, f)) for f in files
+        )
+        oversized.append(
+            (band, max(target_files, math.ceil(band_bytes / target_file_bytes)))
+        )
+
+    def compact_band(job: tuple[str, int]) -> int:
+        band, n_target = job
+        bdir = os.path.join(path, band)
+        # read the band leaf (partition column is implied by the dir),
+        # range-partition on the hash so the compacted files carry
+        # non-overlapping sorted hash ranges
+        rows = spark.read.parquet(bdir)
+        if prune_ids is not None:
+            # the band leaf's non-hash column IS the id column (the
+            # body never reads a sidecar); orphan rows anti-match the
+            # surviving-id set and are dropped by the rewrite
+            id_name = next(c for c in rows.columns if c != "band_hash")
+            keep = prune_ids.toDF(id_name)
+            rows = rows.join(
+                F.broadcast(keep) if prune_broadcastable else keep,
+                id_name,
+                "left_semi",
+            )
+        # no stale scratch can exist here: recovery-on-entry reaped
+        # every .compact-*, and the write below is mode("overwrite")
+        scratch = os.path.join(path, f".compact-{band}-{os.getpid()}")
+        (
+            rows.repartitionByRange(n_target, "band_hash")
+            .sortWithinPartitions("band_hash")
+            .write.mode("overwrite")
+            .parquet(scratch)
+        )
+        n_after = len(parquet_files(scratch))
+        # monotonic per-band sequence: one above any surviving leftover
+        # (r8 review: wall-clock ns could step BACKWARDS under an NTP
+        # correction, letting a stale completed-swap leftover outrank a
+        # fresh mid-swap one in recovery; a counter seeded from the
+        # existing leftovers cannot — and it lands above legacy
+        # time_ns-named leftovers too, preserving cross-version order)
+        seq = max(
+            (
+                s
+                for d in fs.listdir(path)
+                if d.startswith(".old-")
+                for b, s in [_parse_old_leftover(d)]
+                if b == band
+            ),
+            default=0,
+        ) + 1
+        old = os.path.join(path, f".old-{band}-{seq}-{os.getpid()}")
+        fs.rename(bdir, old)
+        # the scratch dir becomes the band dir whole — its _SUCCESS /
+        # .crc droppings are _-prefixed/hidden, which parquet readers
+        # skip — so the swap is one rename, never a per-file window
+        fs.rename(scratch, bdir)
+        fs.rmtree(old)
+        return n_after
+
+    if oversized:
+        with ThreadPoolExecutor(
+            max_workers=max(1, min(max_concurrency, len(oversized)))
+        ) as pool:
+            for n_after in pool.map(compact_band, oversized):
+                stats["bands_compacted"] += 1
+                stats["files_after"] += n_after
+    return stats
+
+
+def _parse_old_leftover(name: str) -> tuple[str, int]:
+    """``.old-<band>-<seq>-<pid>`` (current) or ``.old-<band>-<pid>``
+    (pre-r8 legacy, seq 0) -> (band, seq). Band dirs are
+    ``band_idx=<int>`` — no ``-`` — so splitting on ``-`` is exact."""
+    parts = name[len(".old-"):].split("-")
+    return parts[0], (int(parts[1]) if len(parts) >= 3 else 0)
+
+
+def banded_index_recover(path: str, fs=None, lock_held: bool = False) -> bool:
+    """Heal a banded index whose last compaction crashed mid-swap —
+    under the same writer mutex compaction itself holds (r8 review: an
+    UNLOCKED heal racing a LIVE out-of-band compactor would reap its
+    in-progress ``.compact-*`` scratch mid-write and swap a truncated
+    band in). If another holder owns the lock, there is a live
+    compactor, not a crashed one — nothing to heal; returns False and
+    does nothing. ``lock_held=True`` declares the caller holds the
+    mutex (the ingest loop heals under its per-batch hold). Returns
+    True after an (possibly no-op) heal.
+
+    For each band with ``.old-<band>-<seq>-<pid>`` leftovers: the band
+    dir existing means the swap completed (or never detached) — reap
+    them; the band dir missing means the crash hit between the two
+    renames — ROLL BACK by restoring the NEWEST leftover (max seq) as
+    the band dir (the compaction simply didn't happen; an older
+    completed-swap leftover holds a stale subset that must NOT win, r7
+    ADVICE) and reaping the rest. Then every ``.compact-*`` scratch is
+    stale by construction and is reaped, any pid's alike. A seam
+    exposing ``store_recover`` (manifest layout, flip-last protocol)
+    only ever leaves orphans behind a crash, so reaping is its whole
+    heal.
+
+    Only :class:`LockHeldError` means "live compactor, back off" — any
+    other error from the fs seam propagates (r8 ADVICE: a custom seam's
+    unrelated RuntimeError must not silently suppress recovery)."""
+    fs = fs or LOCAL_FS
+    if lock_held:
+        _recover_locked(path, fs)
+        return True
+    stack = contextlib.ExitStack()
+    try:
+        stack.enter_context(
+            fs.exclusive_lock(
+                writer_lock_path(path),
+                "a live compaction owns the index; recovery heals "
+                "CRASHED compactions only",
+            )
+        )
+    except LockHeldError:
+        return False
+    with stack:
+        _recover_locked(path, fs)
+    return True
+
+
+def _recover_locked(path: str, fs) -> None:
+    if hasattr(fs, "store_recover"):
+        fs.store_recover(path)
+        return
+    entries = fs.listdir(path)
+    by_band: dict[str, list[tuple[int, str]]] = {}
+    for d in entries:
+        if d.startswith(".old-"):
+            band, seq = _parse_old_leftover(d)
+            by_band.setdefault(band, []).append((seq, d))
+    for band, olds in by_band.items():
+        bdir = os.path.join(path, band)
+        if not fs.isdir(bdir):
+            # restore the newest detached content; ties (legacy names,
+            # same-ns clocks) break on the full name for determinism
+            newest = max(olds)[1]
+            fs.rename(os.path.join(path, newest), bdir)
+            olds = [o for o in olds if o[1] != newest]
+        for _, d in olds:
+            fs.rmtree(os.path.join(path, d))
+    for d in entries:
+        if d.startswith(".compact-"):
+            fs.rmtree(os.path.join(path, d))

@@ -35,6 +35,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nginx_analytics_spark.functions.rounding import half_up
+from nginx_analytics_spark.operators.index_fs import (
+    LOCAL_FS,
+    banded_index_read,
+    banded_index_write,
+    check_sidecar,
+    index_kind,
+    read_sidecar,
+    write_sidecar,
+    writer_lock_path,
+)
 
 
 def as_double(vec: Column | str) -> Column:
@@ -414,30 +424,40 @@ def hyperplane_lsh_pairs(
     # most one bucket across Arrow-batch boundaries — the standing
     # "one bucket fits one executor" contract, unchanged). Each bucket
     # hits the IDENTICAL kernel on identical operands, so every pair's
-    # cosine is bit-identical to the applyInPandas formulation.
+    # cosine is bit-identical to the applyInPandas formulation. The open
+    # bucket's chunks are kept in a list and concatenated once, when it
+    # closes, so a bucket spanning k Arrow batches costs O(k) copying,
+    # not O(k^2).
+    def scored(chunks: list[pd.DataFrame]):
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        out = verify(pdf)
+        if len(out):
+            yield out
+
     def verify_stream(batches):
-        pending: pd.DataFrame | None = None
+        pending: list[pd.DataFrame] = []  # chunks of the one open bucket
         for pdf in batches:
             if not len(pdf):
                 continue
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
             bi = pdf["band_idx"].to_numpy()
             bv = pdf["band_val"].to_numpy()
-            change = (
-                np.flatnonzero((bi[1:] != bi[:-1]) | (bv[1:] != bv[:-1])) + 1
-            )
-            bounds = [0, *change.tolist(), len(pdf)]
-            for s, e in zip(bounds[:-2], bounds[1:-1]):
-                out = verify(pdf.iloc[s:e])
-                if len(out):
-                    yield out
-            pending = pdf.iloc[bounds[-2] :]
-        if pending is not None:
-            out = verify(pending)
-            if len(out):
-                yield out
+            if pending and (
+                pending[-1]["band_idx"].iat[-1] != bi[0]
+                or pending[-1]["band_val"].iat[-1] != bv[0]
+            ):
+                yield from scored(pending)
+                pending = []
+            change = np.flatnonzero((bi[1:] != bi[:-1]) | (bv[1:] != bv[:-1]))
+            starts = [0, *(change + 1).tolist()]
+            # every run but the last closes a bucket (the first may
+            # close the open one); the last may continue next batch
+            for s, e in zip(starts, starts[1:]):
+                pending.append(pdf.iloc[s:e])
+                yield from scored(pending)
+                pending = []
+            pending.append(pdf.iloc[starts[-1] :])
+        if pending:
+            yield from scored(pending)
 
     hits = (
         banded.repartition("band_idx", "band_val")
@@ -552,42 +572,25 @@ def hyperplane_lsh_topk(
 # mirroring operators/dedup.py's MinHash-LSH index for text
 # --------------------------------------------------------------------------
 
-SRP_INDEX_META = "_srp_meta.json"
+def _srp_meta(
+    id_col: str,
+    n_planes: int | None,
+    bands: int | None,
+    dim: int | None,
+    seed: int | None,
+) -> dict:
+    """The SRP sidecar's parameters (the planes derive from them)."""
+    return {
+        "id_col": id_col,
+        "n_planes": n_planes,
+        "bands": bands,
+        "dim": dim,
+        "seed": seed,
+    }
 
 
-def srp_index_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{SRP_INDEX_META}"
-
-
-def read_srp_index_meta(path: str, fs=None) -> dict:
-    """Load the SRP index's parameter sidecar. Raises FileNotFoundError
-    for a pre-sidecar (or foreign) directory — a probe signed under
-    different (n_planes, bands, dim, seed) hashes into disjoint buckets
-    and silently returns ~nothing, the same failure mode
-    ``_lsh_meta.json`` guards for the text index."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    return read_json_sidecar(path, SRP_INDEX_META, fs=fs)
-
-
-def _check_srp_index_meta(index_path: str, want: dict, fs=None) -> None:
-    try:
-        have = read_srp_index_meta(index_path, fs=fs)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"SRP index at {index_path!r} has no {SRP_INDEX_META} sidecar — "
-            "rebuild it with write_srp_index (probing an index of unknown "
-            "signing parameters silently loses recall)"
-        ) from e
-    # full-dict comparison, matching the text twin's _check_lsh_index_meta:
-    # a sidecar carrying extra/renamed parameters is just as foreign as a
-    # mismatched value (r11 review — the twins must not drift)
-    if have != want:
-        raise ValueError(
-            f"SRP index at {index_path!r} was built under different "
-            f"parameters: sidecar {have}, caller {want} — "
-            "probe with the index's parameters or rebuild"
-        )
+def _srp_params(have: dict) -> tuple[int, int, int, int]:
+    return tuple(int(have[k]) for k in ("n_planes", "bands", "dim", "seed"))
 
 
 def srp_band_keys(
@@ -674,73 +677,21 @@ def write_srp_index(
     partitions and row groups, never the corpus's vectors. The index is
     bands x corpus rows of three longs (vector payloads stay in the
     corpus table), so per-batch near-dup checks touch this table plus
-    only the CANDIDATES' vectors. A ``_srp_meta.json`` sidecar pins
+    only the CANDIDATES' vectors. An ``srp`` sidecar pins
     (id_col, n_planes, bands, dim, seed); probes validate it first.
 
     Storage layout is the fs seam's to own, exactly like the text
     index: the shared index_fs.banded_index_write (a seam exposing
     ``store_write`` — ManifestIndexFS — gets the writes delegated
     wholesale)."""
-    from nginx_analytics_spark.operators.index_fs import (
-        banded_index_write,
-        write_json_sidecar,
-    )
-
     if keys is None:
         keys = srp_band_keys(
             emb, id_col, vec_col, n_planes, bands, dim, seed, strict=strict
         )
     banded_index_write(keys, path, fs=fs, bands=bands)
-    meta = {
-        "id_col": id_col,
-        "n_planes": n_planes,
-        "bands": bands,
-        "dim": dim,
-        "seed": seed,
-    }
-    write_json_sidecar(path, SRP_INDEX_META, meta, fs=fs)
-
-
-def _resolve_srp_params(
-    index_path: str,
-    id_col: str,
-    n_planes: int | None,
-    bands: int | None,
-    dim: int | None,
-    seed: int | None,
-    fs=None,
-) -> tuple[int, int, int, int]:
-    """Resolve signing parameters against an EXISTING index's sidecar:
-    ``None`` adopts the sidecar's recorded value (r14 ADVICE — a
-    standing ingest loop keeps working across library default changes,
-    e.g. the r14 32→64-plane bump, because the index itself is the
-    authority on how its keys were signed); explicit values are
-    validated against the sidecar as before (a mismatch is loud,
-    never a silent poisoning). Returns (n_planes, bands, dim, seed)."""
-    try:
-        have = read_srp_index_meta(index_path, fs=fs)
-    except FileNotFoundError as e:
-        raise ValueError(
-            f"SRP index at {index_path!r} has no {SRP_INDEX_META} "
-            "sidecar — rebuild it with write_srp_index (probing an "
-            "index of unknown signing parameters silently loses recall)"
-        ) from e
-    n_planes = int(have["n_planes"] if n_planes is None else n_planes)
-    bands = int(have["bands"] if bands is None else bands)
-    dim = int(have["dim"] if dim is None else dim)
-    seed = int(have["seed"] if seed is None else seed)
-    _check_srp_index_meta(
-        index_path,
-        {
-            "id_col": id_col,
-            "n_planes": n_planes,
-            "bands": bands,
-            "dim": dim,
-            "seed": seed,
-        },
-        fs=fs,
+    write_sidecar(
+        path, "srp", _srp_meta(id_col, n_planes, bands, dim, seed), fs=fs
     )
-    return n_planes, bands, dim, seed
 
 
 def append_srp_index(
@@ -773,96 +724,25 @@ def append_srp_index(
 
     Each append adds one file per touched band; a long-running
     embedding ingest loop reclaims the file population with
-    :func:`compact_srp_index` (the X82 per-band compaction, shared
-    with the text index), exactly as ``append_lsh_index`` points at
-    ``compact_lsh_index``.
+    ``index_fs.banded_index_compact`` (the X82 per-band compaction,
+    shared by every banded index kind).
 
     ``keys`` (r16): an already-signed (id, band_idx, band_hash) frame
     for exactly these rows — the X85 loop signs each batch once and
     hands the novel subset here, skipping a second signing matmul.
     The sidecar resolution/validation above still runs; the caller
     owns the keys-match-sidecar contract."""
-    n_planes, bands, dim, seed = _resolve_srp_params(
-        path, id_col, n_planes, bands, dim, seed, fs=fs
+    n_planes, bands, dim, seed = _srp_params(
+        check_sidecar(
+            path, "srp", _srp_meta(id_col, n_planes, bands, dim, seed), fs=fs
+        )
     )
-    from nginx_analytics_spark.operators.index_fs import banded_index_write
-
     if keys is None:
         keys = srp_band_keys(
             new_emb, id_col, vec_col, n_planes, bands, dim, seed,
             strict=strict,
         )
     banded_index_write(keys, path, fs=fs, mode="append", bands=bands)
-
-
-def compact_srp_index(
-    spark,
-    path: str,
-    max_files_per_band: int | None = None,
-    target_files: int | None = None,
-    target_file_bytes: int | None = None,
-    max_concurrency: int | None = None,
-    fs=None,
-    prune_ids: DataFrame | None = None,
-) -> dict:
-    """X82 per-band compaction for the SRP embedding index — the same
-    maintenance half :func:`dedup.compact_lsh_index` gives the text
-    index, because the two indexes share one at-rest format by
-    construction (``(id, band_idx, band_hash)`` rows through
-    ``index_fs.banded_index_write``): only bands whose parquet file
-    count exceeds ``max_files_per_band`` are rewritten (range-
-    partitioned, band_hash-sorted, non-overlapping min/max — best-case
-    row-group pruning), healthy bands stay byte-untouched, and the
-    ``_srp_meta.json`` sidecar is untouched so probes keep validating
-    against the same signing parameters.
-
-    The implementation IS the text index's: this validates the SRP
-    sidecar (loud on a non-index dir), takes the same sibling
-    ``<path>.compact.lock`` single-compactor mutex, and enters the
-    modality-agnostic locked body ``dedup._compact_lsh_index_locked``
-    — which touches only ``band_idx=`` dirs through the ``fs`` seam
-    and never reads a signature, so its crash-recovery swap
-    discipline, concurrency bound, per-band output sizing, and
-    manifest-layout (``store_compact``) dispatch all apply verbatim
-    (r11 verdict item 1: one storage contract, one compactor, two
-    signing modalities). Defaults are the shared X82 module constants.
-    Returns the same stats dict for caller telemetry.
-
-    ``prune_ids`` (r13 verdict item 4): optional one-column frame of
-    surviving corpus ids — rewritten bands drop orphan band rows
-    during the rewrite (see ``dedup._compact_lsh_index_locked``), so a
-    heavy orphan load X91's ``reconcile_index`` reports is reclaimed
-    by the maintenance pass already running, without a full rebuild;
-    ``max_files_per_band=0`` force-rewrites every band for a full
-    reclaim."""
-    from nginx_analytics_spark.operators import dedup
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
-    fs = fs or LOCAL_FS
-    read_srp_index_meta(path, fs=fs)  # loud on a non-index dir
-    kwargs = dict(
-        max_files_per_band=max_files_per_band,
-        target_files=target_files,
-        target_file_bytes=target_file_bytes,
-        max_concurrency=max_concurrency,
-        prune_ids=prune_ids,
-    )
-    kwargs = {k: v for k, v in kwargs.items() if v is not None}
-    with fs.exclusive_lock(
-        dedup._lsh_compact_lock_path(path),
-        "X82 is single-compactor by design (interleaved band swaps "
-        "would corrupt the two-rename discipline); run compaction "
-        "from the embedding ingest loop's one writer thread",
-    ):
-        return dedup._compact_lsh_index_locked(spark, path, fs=fs, **kwargs)
-
-
-def read_srp_index_rows(spark, path: str, fs=None) -> DataFrame:
-    """The SRP index's logical row view (id, band_idx, band_hash),
-    whatever the storage layout — the dedup.read_lsh_index_rows twin."""
-    from nginx_analytics_spark.operators.index_fs import banded_index_read
-
-    return banded_index_read(spark, path, fs=fs)
 
 
 def incremental_embedding_near_dups(
@@ -915,8 +795,13 @@ def incremental_embedding_near_dups(
     (id_col, band_idx, band_hash) frame and the probe skips the signing
     matmul. Caller contract: built by :func:`srp_band_keys` under this
     index's sidecar parameters."""
-    n_planes, bands, dim, seed = _resolve_srp_params(
-        index_path, id_col, n_planes, bands, dim, seed, fs=fs
+    n_planes, bands, dim, seed = _srp_params(
+        check_sidecar(
+            index_path,
+            "srp",
+            _srp_meta(id_col, n_planes, bands, dim, seed),
+            fs=fs,
+        )
     )
     new_v = new_emb.select(
         F.col(id_col).alias("new_id"), as_double(vec_col).alias("nv")
@@ -934,7 +819,7 @@ def incremental_embedding_near_dups(
         )
     else:
         new_keys = new_keys.withColumnRenamed(id_col, "new_id")
-    idx = read_srp_index_rows(spark, index_path, fs=fs).withColumnRenamed(
+    idx = banded_index_read(spark, index_path, fs=fs).withColumnRenamed(
         id_col, "old_id"
     )
     cands = (
@@ -1245,13 +1130,6 @@ def _ivf_score_topk(
     )
 
 
-IVF_INDEX_META = "_ivf_meta.json"
-
-
-def ivf_index_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{IVF_INDEX_META}"
-
-
 def read_ivf_index_meta(path: str, fs=None) -> dict:
     """Load the at-rest IVF index's sidecar — the fitted centroids plus
     the layout parameters they were fitted under — with ``centroids``
@@ -1261,11 +1139,9 @@ def read_ivf_index_meta(path: str, fs=None) -> dict:
     and ValueError for a corrupt one: probing with centroids that are
     not the ones the corpus was PARTITIONED BY assigns queries to cells
     the data doesn't live in and silently zeroes recall instead of
-    erroring — the same failure mode ``_lsh_meta.json`` guards against
-    for the LSH index (dedup.read_lsh_index_meta)."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    meta = read_json_sidecar(path, IVF_INDEX_META, fs=fs)
+    erroring — the same failure mode the ``lsh`` sidecar guards against
+    for the LSH index."""
+    meta = read_sidecar(path, "ivf", fs=fs)
     cents = np.asarray(meta.get("centroids"), dtype=np.float64)
     if cents.ndim != 2 or cents.shape != (meta.get("n_cells"), meta.get("dim")):
         raise ValueError(
@@ -1291,7 +1167,7 @@ def ivf_write_bucketed(
 ) -> np.ndarray:
     """Materialize the IVF index AT REST: the corpus written to Parquet
     partitioned by ``cell`` (one directory per inverted list), with the
-    fitted centroids in a ``_ivf_meta.json`` sidecar (they ARE the
+    fitted centroids in an ``ivf`` sidecar (they ARE the
     index's metadata — ~n_cells x dim floats; json float repr
     round-trips float64 exactly, so the sidecar is bit-faithful). The
     sidecar is written atomically AFTER the data and carries the
@@ -1324,8 +1200,6 @@ def ivf_write_bucketed(
     scanning ~nprobe/n_cells of the corpus and scanning all of it;
     re-cluster periodically as the corpus drifts, like any IVF index.
     The registered probe is ``registry_dataops.ann_ivf_indexed``."""
-    from nginx_analytics_spark.operators.index_fs import write_json_sidecar
-
     centroids = ivf_centroids(
         corpus, n_cells, vec_col, seed, max_iter, id_col, sample_cap
     )
@@ -1368,28 +1242,8 @@ def ivf_write_bucketed(
         },
         "centroids": centroids.tolist(),
     }
-    write_json_sidecar(path, IVF_INDEX_META, meta, fs=fs)
+    write_sidecar(path, "ivf", meta, fs=fs)
     return centroids
-
-
-def index_writer_lock_path(path: str) -> str:
-    """The at-rest ANN index's single-WRITER mutex: the sibling
-    ``<path>.compact.lock`` — deliberately the SAME sibling
-    :func:`dedup._lsh_compact_lock_path` uses for the banded dedup
-    indexes, so ``jobs verify-index`` holds ONE lock name and is
-    serialized against every writer of every index kind (r13 ADVICE
-    medium: the busy-guard took only the compact sibling while
-    ``pq_append_index``/``ivf_append_bucketed`` were lock-free and
-    ``rebuild_pq``/``recluster_ivf`` locked their own distinct
-    siblings, leaving the transient-false-TORN / vanished-sidecar race
-    open for exactly the kinds with row_count semantics). All four PQ/
-    IVF writers now take this mutex FIRST (``lock_held=True`` skips
-    re-acquisition for the appenders' inline actuator calls, which
-    already hold it); the rebuilders' ``.rebuild.lock`` /
-    ``.recluster.lock`` siblings remain as the inner recovery-
-    discipline locks, always acquired AFTER this one — a fixed order,
-    so no deadlock."""
-    return path.rstrip("/") + ".compact.lock"
 
 
 def ivf_index_verify(spark, path: str, fs=None) -> dict:
@@ -1473,17 +1327,15 @@ def ivf_append_bucketed(
     stats AND the write.
 
     Single-writer mutex (r13 ADVICE): the append runs under
-    :func:`index_writer_lock_path` — the sibling ``jobs verify-index``
+    ``index_fs.writer_lock_path`` — the sibling ``jobs verify-index``
     and every other writer of this index serialize on — so a verify
     can never observe the data-write→sidecar-flip window as a
     transient false TORN. ``lock_held=True`` skips acquisition for a
     caller that already owns the mutex (an ingest loop's writer
     thread)."""
     if not lock_held:
-        from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
         with (fs or LOCAL_FS).exclusive_lock(
-            index_writer_lock_path(path),
+            writer_lock_path(path),
             "IVF appends are single-writer: a concurrent writer or "
             "verifier racing the data-write→sidecar-flip window would "
             "read a transient false TORN",
@@ -1528,14 +1380,12 @@ def ivf_append_bucketed(
     # THE COMMIT: flip the sidecar's row_count after the rows are all
     # down. Everything else in the sidecar (centroids, build-time mean)
     # is append-invariant by design.
-    from nginx_analytics_spark.operators.index_fs import write_json_sidecar
-
     committed = {
         **{k: v for k, v in meta.items() if k != "centroids"},
         "row_count": int(check["actual"]) + int(n),
         "centroids": meta["centroids"].tolist(),
     }
-    write_json_sidecar(path, IVF_INDEX_META, committed, fs=fs)
+    write_sidecar(path, "ivf", committed, fs=fs)
     build_mean = meta.get("mean_assign_dist")
     # The drift reference is the build-time mean OF THE CELLS THE BATCH
     # LANDS IN (batch-count-weighted), falling back to the global build
@@ -1649,7 +1499,7 @@ def recluster_ivf(
     monitor's reference, which is what re-arms the trigger at ~1.
 
     Locking (r13 ADVICE): the GLOBAL writer mutex
-    (:func:`index_writer_lock_path`) is taken first unless the caller
+    (``index_fs.writer_lock_path``) is taken first unless the caller
     already holds it (``lock_held=True`` — the inline actuator path
     from :func:`ivf_append_bucketed`); the ``.recluster.lock`` sibling
     stays as the inner recovery-discipline lock, acquired after — a
@@ -1657,14 +1507,12 @@ def recluster_ivf(
     import contextlib
     import os
 
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
     fs = fs or LOCAL_FS
     writer_gate = (
         contextlib.nullcontext()
         if lock_held
         else fs.exclusive_lock(
-            index_writer_lock_path(path),
+            writer_lock_path(path),
             "recluster serializes with appends and verify-index on the "
             "index's single-writer mutex",
         )
@@ -2302,27 +2150,18 @@ def _pq_scan_topk(
     )
 
 
-PQ_INDEX_META = "_pq_meta.json"
-
-
-def pq_index_meta_path(path: str) -> str:
-    return f"{path.rstrip('/')}/{PQ_INDEX_META}"
-
-
 def read_pq_index_meta(path: str, fs=None) -> dict:
     """Load the at-rest PQ index's sidecar — the fitted codebooks (and,
     for the IVFADC layout, the coarse centroids) plus the parameters
     they were fitted under — with both arrays validated and converted
     to float64 (json float repr round-trips float64 exactly, the
-    ``_ivf_meta.json`` precedent). Raises FileNotFoundError for a
+    ``ivf`` sidecar precedent). Raises FileNotFoundError for a
     pre-sidecar (or foreign) directory and ValueError for a corrupt
     one: scoring codes against codebooks they were not ENCODED under
     returns confidently wrong distances — worse than the LSH/IVF
     failure modes (which lose recall), this one corrupts the ranking
     itself, so the guard is just as loud."""
-    from nginx_analytics_spark.operators.index_fs import read_json_sidecar
-
-    meta = read_json_sidecar(path, PQ_INDEX_META, fs=fs)
+    meta = read_sidecar(path, "pq", fs=fs)
     books = np.asarray(meta.get("codebooks"), dtype=np.float64)
     m, k, sub = meta.get("m"), meta.get("n_codes"), meta.get("sub")
     if books.ndim != 3 or books.shape != (m, k, sub):
@@ -2420,7 +2259,7 @@ def pq_write_index(
     ``rebuild_kwargs``), and ``jobs tune-ann`` re-measures the
     nprobe/recall point on the rebuilt index.
 
-    The ``_pq_meta.json`` sidecar carries the codebooks (and centroids,
+    The ``pq`` sidecar carries the codebooks (and centroids,
     when celled) bit-faithfully plus a ``row_count`` written LAST —
     the flip is the commit, exactly the :func:`ivf_write_bucketed`
     protocol, so a torn write is detectable by
@@ -2435,8 +2274,6 @@ def pq_write_index(
     r11 ADVICE): ``fs`` covers sidecar I/O only; row I/O is Spark
     parquet. Returns the fitted codebooks for callers that probe
     immediately."""
-    from nginx_analytics_spark.operators.index_fs import write_json_sidecar
-
     if residual and n_cells is None:
         raise ValueError(
             "residual=True needs a cell layout (n_cells) — residual "
@@ -2534,7 +2371,7 @@ def pq_write_index(
         "centroids": None if centroids is None else centroids.tolist(),
         "codebooks": books.tolist(),
     }
-    write_json_sidecar(path, PQ_INDEX_META, meta, fs=fs)
+    write_sidecar(path, "pq", meta, fs=fs)
     return books
 
 
@@ -2605,10 +2442,8 @@ def pq_append_index(
         # r13 ADVICE: appends serialize on the index's single-writer
         # mutex (the same sibling verify-index takes) so a verifier can
         # never observe the data-write→sidecar-flip window as TORN.
-        from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
         with (fs or LOCAL_FS).exclusive_lock(
-            index_writer_lock_path(path),
+            writer_lock_path(path),
             "PQ appends are single-writer: a concurrent writer or "
             "verifier racing the data-write→sidecar-flip window would "
             "read a transient false TORN",
@@ -2704,8 +2539,6 @@ def pq_append_index(
         assigned.write.mode("append").parquet(path)
     # THE COMMIT: flip the sidecar's row_count after the rows are down.
     # Codebooks/centroids/build-time distortion are append-invariant.
-    from nginx_analytics_spark.operators.index_fs import write_json_sidecar
-
     committed = {
         **{k: v for k, v in meta.items() if k not in ("codebooks", "centroids")},
         "row_count": int(check["actual"]) + int(n),
@@ -2715,7 +2548,7 @@ def pq_append_index(
             else meta["centroids"].tolist()
         ),
     }
-    write_json_sidecar(path, PQ_INDEX_META, committed, fs=fs)
+    write_sidecar(path, "pq", committed, fs=fs)
     ratio = (
         float(batch_mean) / max(float(expected), 1e-12)
         if batch_mean is not None and expected is not None
@@ -2861,7 +2694,7 @@ def rebuild_pq(
     at ~1 for in-distribution appends.
 
     Locking (r13 ADVICE): the GLOBAL writer mutex
-    (:func:`index_writer_lock_path`) is taken first unless the caller
+    (``index_fs.writer_lock_path``) is taken first unless the caller
     already holds it (``lock_held=True`` — the inline actuator path
     from :func:`pq_append_index`); the ``.rebuild.lock`` sibling stays
     as the inner recovery-discipline lock, acquired after — a fixed
@@ -2869,14 +2702,12 @@ def rebuild_pq(
     import contextlib
     import os
 
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
     fs = fs or LOCAL_FS
     writer_gate = (
         contextlib.nullcontext()
         if lock_held
         else fs.exclusive_lock(
-            index_writer_lock_path(path),
+            writer_lock_path(path),
             "rebuild-pq serializes with appends and verify-index on "
             "the index's single-writer mutex",
         )
@@ -3191,25 +3022,16 @@ def tune_ann_nprobe(
     batch — an offline advisor job, run per index build or after a
     rebuild, exactly like ``jobs recluster-ivf``/``rebuild-pq``
     (CLI: ``jobs tune-ann``)."""
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
-    fs = fs or LOCAL_FS
-    if fs.isfile(pq_index_meta_path(path)):
+    kind = index_kind(path, fs, ("pq", "ivf"))
+    if kind == "pq":
         meta = read_pq_index_meta(path, fs=fs)
         if meta.get("n_cells") is None:
             raise ValueError(
                 f"PQ index at {path!r} is flat — nprobe has nothing to "
                 "tune; rebuild with pq_write_index(n_cells=...)"
             )
-        kind = "pq"
-    elif fs.isfile(ivf_index_meta_path(path)):
-        meta = read_ivf_index_meta(path, fs=fs)
-        kind = "ivf"
     else:
-        raise ValueError(
-            f"no celled ANN index sidecar at {path!r} "
-            "(_pq_meta/_ivf_meta.json)"
-        )
+        meta = read_ivf_index_meta(path, fs=fs)
     if meta["id_col"] != id_col:
         raise ValueError(
             f"index at {path!r} stores ids in column "

@@ -37,6 +37,7 @@ from nginx_analytics_spark.operators import (
     temporal,
     text,
 )
+from nginx_analytics_spark.operators.index_fs import read_sidecar
 from nginx_analytics_spark.operators.sampling import portable_frac_sql
 from nginx_analytics_spark.registry import query
 from nginx_analytics_spark.sources import load_table
@@ -553,7 +554,7 @@ def _staged_lsh_index(
         # payload) must rebuild, not get probed into a loud meta error
         f"{sf_dir}|{kind}|n3|h{dedup.NUM_HASHES}|r{dedup.ROWS_PER_BAND}"
         f"|salt{_INCR_SALT}|nf{_INCR_NEW_FRAC}|{dedup.LSH_INDEX_FORMAT}",
-        dedup.read_lsh_index_meta,
+        lambda p: read_sidecar(p, "lsh"),
         build,
     )
 
@@ -692,7 +693,7 @@ def _staged_prefix_index(corpus: DataFrame, sf_dir: str) -> str:
         f"{sf_dir}|prefix-v3|t{JACCARD_THRESHOLD}|n3"
         f"|k{dedup.PREFIX_FREQ_TOP_K}|m{dedup.PREFIX_FREQ_MIN_DF}"
         f"|salt{_INCR_SALT}|nf{_INCR_NEW_FRAC}",
-        dedup.read_prefix_index_meta,
+        lambda p: read_sidecar(p, "prefix"),
         build,
     )
 
@@ -945,7 +946,7 @@ def _staged_paraseen_store(corpus: DataFrame, sf_dir: str) -> str:
         sf_dir,
         "documents",
         f"{sf_dir}|paraseen-v1|m1|salt{_INCR_SALT}|nf{_INCR_NEW_FRAC}",
-        dedup.read_paraseen_meta,
+        lambda p: read_sidecar(p, "paraseen"),
         build,
     )
 
@@ -1024,7 +1025,7 @@ def _staged_winseen_store(corpus: DataFrame, sf_dir: str) -> str:
         sf_dir,
         "documents",
         f"{sf_dir}|winseen-v1|w{_SUBSTR_W}|salt{_INCR_SALT}|nf{_INCR_NEW_FRAC}",
-        dedup.read_winseen_meta,
+        lambda p: read_sidecar(p, "winseen"),
         build,
     )
 
@@ -1154,8 +1155,8 @@ def embedding_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-deduped (bit-identical vectors), near-deduped within itself
     (SRP-LSH + Arrow cosine verify), probed against the at-rest SRP
     index (X84), and its admissions appended to corpus + index inside
-    foreachBatch (streaming/embedding_ingest.py — the X80 twin for the
-    embedding modality). Returns one row per batch (batch_id, n_in,
+    foreachBatch (streaming/dedup_ingest.py's one loop, run with the
+    EMBEDDING modality). Returns one row per batch (batch_id, n_in,
     n_novel) plus a final corpus-count row. The threshold is the X84
     fixture setting (0.4 — the fixture's near-dups live at cosine
     0.40-0.55), so the second batch's novel count is depressed exactly
@@ -1165,8 +1166,11 @@ def embedding_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        start_embedding_dedup_ingest,
+    from dataclasses import replace
+
+    from nginx_analytics_spark.streaming.dedup_ingest import (
+        EMBEDDING,
+        start_dedup_ingest,
     )
 
     work = tempfile.mkdtemp(prefix="nas_emb_ingest_")
@@ -1194,11 +1198,15 @@ def embedding_ingest_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = start_embedding_dedup_ingest(
+        modality = replace(
+            EMBEDDING,
+            sign={"n_planes": _SRP_PLANES, "bands": _SRP_BANDS,
+                  "dim": _SRP_DIM, "seed": _SRP_SEED},
+        )
+        q = start_dedup_ingest(
             stream, f"{work}/corpus", f"{work}/idx", f"{work}/ckpt",
+            modality=modality,
             threshold=COSINE_DUP_THRESHOLD,
-            n_planes=_SRP_PLANES, bands=_SRP_BANDS, dim=_SRP_DIM,
-            seed=_SRP_SEED,
             trigger={"availableNow": True},
             on_batch=lambda bid, n_in, n_novel, lock_wait: seen.append(
                 (bid, n_in, n_novel)
@@ -2157,7 +2165,7 @@ def _staged_srp_index(corpus_emb: DataFrame, sf_dir: str) -> str:
         "embeddings",
         f"{sf_dir}|srp-split|p{_SRP_PLANES}|b{_SRP_BANDS}"
         f"|d{_SRP_DIM}|s{_SRP_SEED}|salt{_INCR_SALT}|nf{_INCR_NEW_FRAC}",
-        similarity.read_srp_index_meta,
+        lambda p: read_sidecar(p, "srp"),
         build,
     )
 

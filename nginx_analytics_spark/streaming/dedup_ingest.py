@@ -1,31 +1,38 @@
-"""X80: streaming corpus ingest with INCREMENTAL near-dedup — the X69
-probe and the X79 index append composed inside ``foreachBatch``, turning
+"""X80/X85: streaming corpus ingest with INCREMENTAL near-dedup — the
+at-rest probe and index append composed inside ``foreachBatch``, turning
 the batch operators into the continuous pipeline a training corpus
-actually runs:
+actually runs. One loop serves both payload modalities; a
+:class:`Modality` record carries what differs between them — text
+documents under MinHash-LSH and Jaccard (:data:`TEXT`, the X80 loop) and
+embedding rows under SRP hyperplanes and cosine (:data:`EMBEDDING`, the
+X85 loop):
 
-  for each micro-batch of documents:
-    1. exact-dedup WITHIN the batch (normalized text, deterministic
-       min-id survivor — ``dedup.exact_dedup``);
-    2. near-dedup WITHIN the batch (MinHash-LSH pairs at the production
+  for each micro-batch:
+    1. exact-dedup WITHIN the batch (normalized text, or the
+       bit-identical vector itself, as the group key — deterministic
+       min-id survivor, ``dedup.exact_dedup``);
+    2. near-dedup WITHIN the batch (MinHash-LSH pairs, or SRP bucket
+       pairs with a blocked Arrow cosine verify, at the production
        threshold; the GREATER id of each passing pair is dropped — the
        standard greedy pass, so a chain A~B~C keeps only A);
-    3. near-dedup AGAINST THE CORPUS via the at-rest LSH index
-       (``dedup.incremental_near_dups``, exact_net=False — the pure
-       probe: sign the batch only, band-join the index, exact-verify
-       candidates with the corpus text scan semi-join-pruned to them);
-    4. append the surviving NOVEL docs to the corpus store and their
-       band keys to the index (``dedup.append_lsh_index``), so the NEXT
-       batch dedups against them too.
+    3. near-dedup AGAINST THE CORPUS via the modality's at-rest index
+       (``dedup.incremental_near_dups`` / ``similarity.
+       incremental_embedding_near_dups`` — the pure probe: sign the
+       batch only, band-join the index, exact-verify candidates with
+       the corpus scan semi-join-pruned to them);
+    4. append the surviving NOVEL rows to the corpus store and their
+       band keys to the index, so the NEXT batch dedups against them
+       too.
 
 Per-batch cost scales with the batch and its collision volume, never
 the corpus — the whole point of the at-rest index (SURVEY.md §2.9
-X69/X79/X80). The reference has no corpus pipeline at all; this is the
-engine extension a 100 TB training-data deployment needs.
+X69/X79/X80/X84/X85). The reference has no corpus pipeline at all; this
+is the engine extension a 100 TB training-data deployment needs.
 
 Delivery semantics: the default corpus append is at-least-once (a batch
 that fails with one of the two per-batch writes done — they run
 OVERLAPPED since r17, so either the corpus write or the index append
-may land first — replays and may re-append; its docs then band-match
+may land first — replays and may re-append; its rows then band-match
 THEMSELVES in the replayed probe — self-matches are excluded by id
 inequality, so replay does not self-suppress, but duplicates can land.
 An index-append-ahead crash additionally leaves orphan band keys whose
@@ -42,23 +49,24 @@ per-band compaction, below), never correctness. Read the batch-dir
 corpus back via :func:`read_corpus`.
 
 Index maintenance: every append adds one file per touched band, so a
-long-running loop passes ``compact_every=N`` to fold
-:func:`~nginx_analytics_spark.operators.dedup.compact_lsh_index` (X82)
-into the loop itself — every N batches, bands whose file count grew
-past the threshold are rewritten into sorted range-partitioned files,
-inside the same foreachBatch thread that owns the appends. That
-single-writer contract is enforced, not assumed (r8): each micro-batch
-holds the index's single-compactor mutex (a SIBLING lock file, so the
-bootstrap overwrite cannot unlink it) across heal + probe + append +
-bootstrap + compaction, and the ``jobs dedup-ingest`` CLI holds it for
-the stream's whole lifetime — an out-of-band ``jobs compact-index``
-always loses loudly against a live CLI loop instead of racing its band
-swaps with the loop's probes and appends.
+long-running loop passes ``compact_every=N`` to fold the X82 per-band
+compaction (``index_fs.banded_index_compact``) into the loop itself —
+every N batches, bands whose file count grew past the threshold are
+rewritten into sorted range-partitioned files, inside the same
+foreachBatch thread that owns the appends. That single-writer contract
+is enforced, not assumed (r8): each micro-batch holds the index's
+writer mutex (``index_fs.writer_lock_path``, a SIBLING lock file, so
+the bootstrap overwrite cannot unlink it) across heal + probe + append +
+bootstrap + compaction, and the ``jobs dedup-ingest`` /
+``jobs embedding-dedup-ingest`` CLI holds it for the stream's whole
+lifetime — an out-of-band ``jobs compact-index`` always loses loudly
+against a live CLI loop instead of racing its band swaps with the
+loop's probes and appends.
 
 The index bootstrap (first batch ever) writes the index instead of
-appending; both paths stamp/validate the ``_lsh_meta.json`` parameter
-sidecar, so a config change between deployments fails loudly instead
-of silently losing recall.
+appending; both paths stamp/validate the index's parameter sidecar, so
+a config change between deployments fails loudly instead of silently
+losing recall.
 
 The CORPUS STORE has its own maintenance half (X87,
 :func:`compact_corpus`): the loop appends one file (plain) or one
@@ -70,12 +78,25 @@ mutex, with the exactly-once replay caveat documented there.
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from nginx_analytics_spark.operators import dedup
+from nginx_analytics_spark.operators import dedup, similarity
+from nginx_analytics_spark.operators.index_fs import (
+    BANDED_KINDS,
+    COMPACT_MAX_FILES_PER_BAND,
+    LOCAL_FS,
+    banded_index_compact,
+    banded_index_read,
+    banded_index_recover,
+    index_kind,
+    read_sidecar,
+    sidecar_path,
+    writer_lock_path,
+)
 
 
 def read_corpus(spark: SparkSession, corpus_dir: str) -> DataFrame:
@@ -99,8 +120,8 @@ def dedup_batch_against_corpus(
     quality_fn: Callable[[DataFrame], DataFrame] | None = None,
     return_keys: bool = False,
 ) -> DataFrame:
-    """Steps 1-3 for one batch: returns the NOVEL docs (same schema as
-    ``batch``). Pure function over (batch, at-rest state) — the
+    """Text steps 1-3 for one batch: returns the NOVEL docs (same schema
+    as ``batch``). Pure function over (batch, at-rest state) — the
     foreachBatch handler below adds the writes. ``fs`` is the
     driver-side index-metadata seam (here and on the loop entries
     below) — local disk by default, see
@@ -130,8 +151,6 @@ def dedup_batch_against_corpus(
     wins by design: already-admitted corpus docs are not re-litigated
     (replacing at-rest survivors would mean corpus rewrites inside the
     ingest loop; run an offline `quality_survivors` pass for that)."""
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
     fs = fs or LOCAL_FS
     sc = spark.sparkContext
     sc.setJobDescription("X80: dedup+shingle batch")
@@ -191,7 +210,7 @@ def dedup_batch_against_corpus(
     # survivor frame on the stream side with no exchange (r17)
     b = b.join(F.broadcast(losers), id_col, "left_anti")
 
-    if fs.isfile(dedup.lsh_index_meta_path(index_path)):
+    if fs.isfile(sidecar_path(index_path, "lsh")):
         sc.setJobDescription("X80: probe at-rest index")
         corpus = read_corpus(spark, corpus_dir)
         hits = dedup.incremental_near_dups(
@@ -204,6 +223,126 @@ def dedup_batch_against_corpus(
         dup_ids = hits.select(F.col("new_id").alias(id_col))
         b = b.join(F.broadcast(dup_ids), id_col, "left_anti")
     return (b, keys) if return_keys else b
+
+
+def dedup_embedding_batch_against_corpus(
+    spark: SparkSession,
+    batch: DataFrame,
+    corpus_dir: str,
+    index_path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.85,
+    n_planes: int = 64,
+    bands: int = 8,
+    dim: int = 64,
+    seed: int = 42,
+    fs=None,
+    return_keys: bool = False,
+) -> DataFrame:
+    """Embedding steps 1-3 for one batch: returns the NOVEL rows (same
+    schema as ``batch``). The default threshold is 0.85, the regime
+    embedding dup detection actually operates in (hyperplane_lsh_pairs'
+    selectivity note) — near-identical vectors, not the fixture's hard
+    0.4 recall-stress setting; callers pass the production value for
+    their embedding space.
+
+    Sign once (r16, guide §1.2): the batch's SRP band keys are
+    materialized ONCE here and shared by the against-corpus probe;
+    ``return_keys=True`` returns ``(novel, keys)`` so the loop hands
+    the novel subset to the index append/bootstrap too. (The
+    within-batch pair pass keeps its own banding: it needs the vectors
+    alongside the keys for the in-bucket BLAS verify, a different row
+    shape.)"""
+    fs = fs or LOCAL_FS
+    sc = spark.sparkContext
+    sc.setJobDescription("X85: dedup batch")
+    b = dedup.exact_dedup(
+        batch, keys=[vec_col], order_col=id_col
+    ).localCheckpoint(eager=True)  # consumed by pairs + anti-joins
+
+    # the ONE signing of this batch: (id, band_idx, band_hash), shared
+    # by the probe's band join and the loop's index append
+    sc.setJobDescription("X85: sign batch")
+    keys = similarity.srp_band_keys(
+        b, id_col, vec_col, n_planes, bands, dim, seed
+    ).localCheckpoint(eager=True)
+    sc.setJobDescription(None)
+
+    # within-batch near-dups: drop the greater id of each passing pair
+    pairs = similarity.hyperplane_lsh_pairs(
+        b, threshold=threshold, id_col=id_col, vec_col=vec_col,
+        n_planes=n_planes, bands=bands, dim=dim, seed=seed,
+    )
+    # broadcast anti-join, no .distinct() — as in the text step (r17)
+    losers = pairs.select(F.col("id_b").alias(id_col))
+    b = b.join(F.broadcast(losers), id_col, "left_anti")
+
+    if fs.isfile(sidecar_path(index_path, "srp")):
+        sc.setJobDescription("X85: probe at-rest index")
+        corpus = read_corpus(spark, corpus_dir)
+        hits = similarity.incremental_embedding_near_dups(
+            spark, b, corpus, index_path,
+            threshold=threshold, id_col=id_col, vec_col=vec_col,
+            n_planes=n_planes, bands=bands, dim=dim, seed=seed, fs=fs,
+            new_keys=keys,
+        )
+        sc.setJobDescription(None)
+        dup_ids = hits.select(F.col("new_id").alias(id_col))
+        b = b.join(F.broadcast(dup_ids), id_col, "left_anti")
+    return (b, keys) if return_keys else b
+
+
+@dataclass(frozen=True)
+class Modality:
+    """What the ingest loop needs to know about one payload type.
+
+    ``against_corpus`` is the modality's steps 1-3, called as
+    ``(spark, batch, corpus_dir, index_path, id_col, payload_col,
+    threshold, fs=, return_keys=True, **sign)`` and returning
+    ``(novel, keys)``; ``write_index`` / ``append_index`` bootstrap and
+    extend the index, called as ``(novel, index_path, id_col,
+    payload_col, fs=, keys=, **sign)``. ``sign`` holds the signing
+    parameters the index sidecar pins (empty = the signer's module
+    defaults); ``dataclasses.replace`` derives a record with other
+    columns, threshold or signing parameters."""
+
+    label: str  # job-description prefix of every phase ("X80", "X85")
+    kind: str  # at-rest index kind, see index_fs.SIDECARS
+    id_col: str
+    payload_col: str
+    threshold: float  # default admission threshold
+    sign: dict
+    against_corpus: Callable
+    write_index: Callable
+    append_index: Callable
+
+
+# The steps are late-bound (looked up on their module at call time), so
+# a wrapper installed on the module attribute — a profiler's span —
+# sees every batch.
+TEXT = Modality(
+    label="X80",
+    kind="lsh",
+    id_col="doc_id",
+    payload_col="text",
+    threshold=0.6,
+    sign={},
+    against_corpus=lambda *a, **k: dedup_batch_against_corpus(*a, **k),
+    write_index=lambda *a, **k: dedup.write_lsh_index(*a, **k),
+    append_index=lambda *a, **k: dedup.append_lsh_index(*a, **k),
+)
+EMBEDDING = Modality(
+    label="X85",
+    kind="srp",
+    id_col="vec_id",
+    payload_col="embedding",
+    threshold=0.85,
+    sign={"n_planes": 64, "bands": 8, "dim": 64, "seed": 42},
+    against_corpus=lambda *a, **k: dedup_embedding_batch_against_corpus(*a, **k),
+    write_index=lambda *a, **k: similarity.write_srp_index(*a, **k),
+    append_index=lambda *a, **k: similarity.append_srp_index(*a, **k),
+)
 
 
 def compact_corpus(
@@ -275,11 +414,9 @@ def compact_corpus(
     import os
     import shutil
 
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
     fs = fs or LOCAL_FS
     with fs.exclusive_lock(
-        dedup._lsh_compact_lock_path(index_path),
+        writer_lock_path(index_path),
         "corpus compaction must not interleave with the ingest loop "
         "that writes this store; stop the loop (or let an embedded "
         "loop's current batch finish) first",
@@ -385,12 +522,12 @@ def reconcile_index(
         rows from every band it rewrites, no full rebuild needed; the
         returned count is the number an operator decides that with.
 
-    Kind is sidecar-detected — ALL FIVE at-rest index kinds (four since
-    r14 per r13 verdict item 5; the X94 exact prefix index joined in
-    r15): the banded dedup indexes (MinHash/LSH text, X94 hash-order
-    prefix, SRP embedding) and the ANN SERVING indexes (celled/flat
-    PQ, bucketed IVF), which pair with the same corpus store and
-    diverge the same two ways. For the serving kinds a missing row is a SILENT
+    Kind is read off the sidecar (``index_fs.index_kind``) — all five
+    index kinds: the banded dedup indexes (MinHash/LSH text, X94
+    hash-order prefix, SRP embedding) and the ANN SERVING indexes
+    (celled/flat PQ, bucketed IVF), which pair with the same corpus
+    store and diverge the same two ways. For the serving kinds a
+    missing row is a SILENT
     RECALL LOSS — the vector exists in the corpus but no probe can
     ever return it, invisible to ``pq_index_verify``/
     ``ivf_index_verify`` (those only check the row_count commit, which
@@ -415,40 +552,13 @@ def reconcile_index(
     rows are the ONLY corpus content touched, and only under
     ``repair``. Returns ``{"kind", "corpus_ids", "indexed_ids",
     "missing_from_index", "index_orphans", "repaired"}``."""
-    from pyspark.sql import functions as F
-
-    from nginx_analytics_spark.operators import similarity
-    from nginx_analytics_spark.operators.index_fs import (
-        LOCAL_FS,
-        banded_index_read,
-    )
-
     fs = fs or LOCAL_FS
-    if fs.isfile(dedup.lsh_index_meta_path(index_path)):
-        kind, meta = "lsh", dedup.read_lsh_index_meta(index_path, fs=fs)
-        payload_col = text_col
-    elif fs.isfile(dedup.prefix_index_meta_path(index_path)):
-        kind, meta = "prefix", dedup.read_prefix_index_meta(index_path, fs=fs)
-        payload_col = text_col
-    elif fs.isfile(similarity.srp_index_meta_path(index_path)):
-        kind, meta = "srp", similarity.read_srp_index_meta(index_path, fs=fs)
-        payload_col = vec_col
-    elif fs.isfile(similarity.pq_index_meta_path(index_path)):
-        kind, meta = "pq", similarity.read_pq_index_meta(index_path, fs=fs)
-        payload_col = vec_col
-    elif fs.isfile(similarity.ivf_index_meta_path(index_path)):
-        kind, meta = "ivf", similarity.read_ivf_index_meta(index_path, fs=fs)
-        payload_col = vec_col
-    else:
-        raise ValueError(
-            f"no at-rest index sidecar at {index_path!r} "
-            "(_lsh_meta/_srp_meta/_pq_meta/_ivf_meta.json) — reconcile "
-            "pairs a corpus store with its dedup or ANN serving index"
-        )
+    kind = index_kind(index_path, fs, (*BANDED_KINDS, "pq", "ivf"))
+    meta = read_sidecar(index_path, kind, fs=fs)
     id_col = meta["id_col"]
-    banded = kind in ("lsh", "prefix", "srp")
+    payload_col = text_col if kind in ("lsh", "prefix") else vec_col
     with fs.exclusive_lock(
-        dedup._lsh_compact_lock_path(index_path),
+        writer_lock_path(index_path),
         "reconcile counts (and repairs) only while no writer holds "
         "the index; stop the ingest loop first",
     ):
@@ -458,7 +568,7 @@ def reconcile_index(
         )
         index_rows = (
             banded_index_read(spark, index_path, fs=fs)
-            if banded
+            if kind in BANDED_KINDS
             else spark.read.parquet(index_path)
         )
         iids = (
@@ -495,10 +605,9 @@ def reconcile_index(
                     shingle_n=meta["shingle_n"], fs=fs,
                 )
             elif kind == "srp":
+                # signing parameters default to the sidecar's
                 similarity.append_srp_index(
-                    rows, index_path, id_col=id_col, vec_col=vec_col,
-                    n_planes=meta["n_planes"], bands=meta["bands"],
-                    dim=meta["dim"], seed=meta["seed"], fs=fs,
+                    rows, index_path, id_col=id_col, vec_col=vec_col, fs=fs
                 )
             elif kind == "pq":
                 # encodes under the SIDECAR's codebooks (never a refit)
@@ -524,28 +633,98 @@ def reconcile_index(
     }
 
 
-def _enter_index_mutex(
-    stack,
-    fs,
+def process_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    batch_id: int,
+    corpus_dir: str,
     index_path: str,
+    modality: Modality = TEXT,
+    threshold: float | None = None,
+    exactly_once: bool = False,
+    compact_every: int | None = None,
+    max_files_per_band: int = COMPACT_MAX_FILES_PER_BAND,
+    fs=None,
     lock_held: bool = False,
     lock_timeout_s: float = 0.0,
     telemetry: dict | None = None,
-) -> None:
-    """Acquire the index's single-writer mutex into ``stack`` with the
-    X80 batch discipline — fail-fast by default, verified delegation
-    under a caller's lifetime hold, bounded wait with ``lock_wait_s``
-    telemetry otherwise (the full rationale lives on
-    :func:`process_batch`, whose contract this implements). Shared with
-    the X85 embedding loop: the two modalities' indexes use the same
-    sibling ``<index>.compact.lock`` and the same single-writer rules,
-    so the enforcement is one function, not two kept identical by
-    discipline."""
+    quality_fn: Callable[[DataFrame], DataFrame] | None = None,
+) -> tuple[int, int]:
+    """One micro-batch of the loop (exposed for retry tests and batch
+    backfills): dedup, admit, append. Returns (n_in, n_novel).
+    ``modality`` picks the payload type (:data:`TEXT` or
+    :data:`EMBEDDING`); ``threshold`` defaults to the modality's.
+    ``quality_fn`` (text only) makes the within-batch drop
+    quality-aware — see :func:`dedup_batch_against_corpus`.
+    ``exactly_once`` lands the admissions under ``ingest_batch=<id>``
+    with overwrite semantics (X73) so a same-id retry replaces rather
+    than duplicates its corpus output — see the module docstring for why
+    the index append needs no such guard. ``compact_every=N`` runs the
+    X82 per-band compaction after every Nth batch (batch ids N-1,
+    2N-1, ...), bounding per-band file growth from inside the only
+    thread that writes the index — the cycle fires even when the batch
+    itself is empty (r7 review: compaction is index-state-driven, not
+    batch-content-driven; an idle feed must not starve it).
+
+    Concurrency (r8 review): the loop is the index's SINGLE writer, and
+    this function enforces it — it holds the writer mutex (the sibling
+    ``<index>.compact.lock``, acquirable before the index first exists)
+    for the WHOLE batch, so heal, probe, append, bootstrap, and the
+    in-loop compaction cycle all run under it. An out-of-band compactor
+    can then neither detach a band mid-probe (silently missed near-dups
+    admitted forever — dedup is a one-shot gate) nor sweep this batch's
+    fresh band-key appends into a ``.old`` it deletes. If someone else
+    holds the mutex, THIS batch fails loudly instead (foreachBatch
+    surfaces it and the retried batch re-runs whole): refusing to run
+    beats silently corrupting the index. ``lock_held=True`` declares
+    that the CALLER already holds the mutex for the stream's whole
+    lifetime (the ``jobs dedup-ingest`` CLI does), which also means an
+    offline ``jobs compact-index`` racing a live CLI loop loses even
+    BETWEEN micro-batches, so the production loop never dies to a
+    maintenance tool. The declaration is VERIFIED, not trusted (r8
+    review): the batch still attempts the acquisition — if the lock
+    turns out free it is simply held per-batch (a caller that lied gets
+    the guard anyway), and if the recorded holder is not THIS process
+    (compared via ``fs.holder_id()``, the seam-defined identity format
+    — r8 ADVICE) the batch fails loudly despite the flag. The stamp is
+    erased on release (index_fs r9), so the only way the record can
+    name this process is the caller genuinely holding it — the r8
+    TOCTOU (a foreign acquirer not yet stamped over OUR stale pid) now
+    reads an empty stamp and refuses. (A foreign thread inside this
+    process is indistinguishable from the caller — in-process writer
+    discipline stays the caller's own contract.)
+
+    Observability (r8 verdict item 6): ``lock_timeout_s > 0`` turns the
+    fail-fast refusal into a bounded wait — the batch polls the mutex
+    until the foreign holder (say, an offline compactor finishing up)
+    releases, and the seconds spent waiting land in
+    ``telemetry["lock_wait_s"]`` (an optional caller-supplied dict; the
+    loop forwards the field to ``on_batch``). Without the field a
+    stalled compactor holding the lock is indistinguishable from a slow
+    batch in the admission telemetry. The wait polls through the fs
+    seam's own non-blocking acquisition, so any seam implementation
+    gets it unchanged; the deadline is checked BEFORE each sleep so
+    ``lock_timeout_s=0`` still refuses on the first failed attempt.
+    Under a caller's LIFETIME hold (``lock_held=True``, the CLI) the
+    per-batch acquisition can never contend — lock_wait reads 0.0 by
+    construction, and the acquisition that can actually wait is the
+    caller's own startup one (the CLI routes ``--lock-timeout`` there
+    via :func:`~nginx_analytics_spark.operators.index_fs.acquire_lock_wait`,
+    r9 review); nonzero per-batch lock_wait is the LIBRARY-embedded
+    loop's signal."""
+    import os
     import time
+    from concurrent.futures import ThreadPoolExecutor
+    from contextlib import ExitStack
 
     from nginx_analytics_spark.operators.index_fs import LockHeldError
 
-    lock_path = dedup._lsh_compact_lock_path(index_path)
+    m = modality
+    fs = fs or LOCAL_FS
+    threshold = m.threshold if threshold is None else threshold
+    step_kw = {"quality_fn": quality_fn} if quality_fn is not None else {}
+    lock_path = writer_lock_path(index_path)
+    stack = ExitStack()
     t0 = time.monotonic()
     deadline = t0 + lock_timeout_s
     while True:
@@ -572,118 +751,31 @@ def _enter_index_mutex(
     if telemetry is not None:
         telemetry["lock_wait_s"] = round(time.monotonic() - t0, 3)
 
+    def indexed() -> bool:
+        return fs.isfile(sidecar_path(index_path, m.kind))
 
-def process_batch(
-    spark: SparkSession,
-    batch: DataFrame,
-    batch_id: int,
-    corpus_dir: str,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    exactly_once: bool = False,
-    compact_every: int | None = None,
-    max_files_per_band: int = dedup.COMPACT_MAX_FILES_PER_BAND,
-    fs=None,
-    lock_held: bool = False,
-    lock_timeout_s: float = 0.0,
-    telemetry: dict | None = None,
-    quality_fn: Callable[[DataFrame], DataFrame] | None = None,
-) -> tuple[int, int]:
-    """One micro-batch of the loop (exposed for retry tests and batch
-    backfills): dedup, admit, append. Returns (n_in, n_novel).
-    ``exactly_once`` lands the admissions under ``ingest_batch=<id>``
-    with overwrite semantics (X73) so a same-id retry replaces rather
-    than duplicates its corpus output — see the module docstring for why
-    the index append needs no such guard. ``compact_every=N`` runs the
-    X82 per-band compaction after every Nth batch (batch ids N-1,
-    2N-1, ...), bounding per-band file growth from inside the only
-    thread that writes the index — the cycle fires even when the batch
-    itself is empty (r7 review: compaction is index-state-driven, not
-    batch-content-driven; an idle feed must not starve it).
-
-    Concurrency (r8 review): the loop is the index's SINGLE writer, and
-    this function enforces it — it holds the single-compactor mutex
-    (the sibling ``<index>.compact.lock``, acquirable before the index
-    first exists) for the WHOLE batch, so heal, probe, append,
-    bootstrap, and the in-loop compaction cycle all run under it. An
-    out-of-band compactor can then neither detach a band mid-probe
-    (silently missed near-dups admitted forever — dedup is a one-shot
-    gate) nor sweep this batch's fresh band-key appends into a ``.old``
-    it deletes. If someone else holds the mutex, THIS batch fails
-    loudly instead (foreachBatch surfaces it and the retried batch
-    re-runs whole): refusing to run beats silently corrupting the
-    index. ``lock_held=True`` declares that the CALLER already holds
-    the mutex for the stream's whole lifetime (the ``jobs
-    dedup-ingest`` CLI does), which also means an offline ``jobs
-    compact-index`` racing a live CLI loop loses even BETWEEN
-    micro-batches, so the production loop never dies to a maintenance
-    tool. The declaration is VERIFIED, not trusted (r8 review): the
-    batch still attempts the acquisition — if the lock turns out free
-    it is simply held per-batch (a caller that lied gets the guard
-    anyway), and if the recorded holder is not THIS process (compared
-    via ``fs.holder_id()``, the seam-defined identity format — r8
-    ADVICE) the batch fails loudly despite the flag. The stamp is
-    erased on release (index_fs r9), so the only way the record can
-    name this process is the caller genuinely holding it — the r8
-    TOCTOU (a foreign acquirer not yet stamped over OUR stale pid) now
-    reads an empty stamp and refuses. (A foreign thread inside this
-    process is indistinguishable from the caller — in-process writer
-    discipline stays the caller's own contract.)
-
-    Observability (r8 verdict item 6): ``lock_timeout_s > 0`` turns the
-    fail-fast refusal into a bounded wait — the batch polls the mutex
-    until the foreign holder (say, an offline compactor finishing up)
-    releases, and the seconds spent waiting land in
-    ``telemetry["lock_wait_s"]`` (an optional caller-supplied dict; the
-    X80 loop forwards the field to ``on_batch``). Without the field a
-    stalled compactor holding the lock is indistinguishable from a slow
-    batch in the admission telemetry. The wait polls through the fs
-    seam's own non-blocking acquisition, so any seam implementation
-    gets it unchanged; the deadline is checked BEFORE each sleep so
-    ``lock_timeout_s=0`` still refuses on the first failed attempt.
-    Under a caller's LIFETIME hold (``lock_held=True``, the CLI) the
-    per-batch acquisition can never contend — lock_wait reads 0.0 by
-    construction, and the acquisition that can actually wait is the
-    caller's own startup one (the CLI routes ``--lock-timeout`` there
-    via :func:`~nginx_analytics_spark.operators.index_fs.acquire_lock_wait`,
-    r9 review); nonzero per-batch lock_wait is the LIBRARY-embedded
-    loop's signal."""
-    import os
-    from contextlib import ExitStack
-
-    from nginx_analytics_spark.operators.index_fs import LOCAL_FS
-
-    fs = fs or LOCAL_FS
-    stack = ExitStack()
-    _enter_index_mutex(
-        stack, fs, index_path,
-        lock_held=lock_held, lock_timeout_s=lock_timeout_s,
-        telemetry=telemetry,
-    )
     with stack:
-        if fs.isfile(dedup.lsh_index_meta_path(index_path)):
+        if indexed():
             # heal a compaction interrupted by a crash BEFORE probing
             # (r7): recovery rolls a half-swapped band back into place,
             # so a restarted loop never probes an index with a detached
             # band (bounded-recall window) while waiting for the next
             # compaction cycle. The mutex is already held above.
-            dedup._recover_lsh_compaction_locked(index_path, fs)
+            banded_index_recover(index_path, fs, lock_held=True)
         # one count() both empties-gates and feeds telemetry (the prior
         # head(1) + count() pair scanned the micro-batch source twice)
         sc = spark.sparkContext
-        sc.setJobDescription("X80: source count")
+        sc.setJobDescription(f"{m.label}: source count")
         n_in = batch.count()
         sc.setJobDescription(None)
         n_novel = 0
         if n_in:
-            novel, keys = dedup_batch_against_corpus(
-                spark, batch, corpus_dir, index_path,
-                id_col=id_col, text_col=text_col, threshold=threshold,
-                fs=fs, quality_fn=quality_fn, return_keys=True,
+            novel, keys = m.against_corpus(
+                spark, batch, corpus_dir, index_path, m.id_col,
+                m.payload_col, threshold, fs=fs, return_keys=True,
+                **m.sign, **step_kw,
             )
-            sc.setJobDescription("X80: novel materialize")
+            sc.setJobDescription(f"{m.label}: novel materialize")
             novel = novel.localCheckpoint(eager=True)  # write + append
             n_novel = novel.count()
             sc.setJobDescription(None)
@@ -701,7 +793,7 @@ def process_batch(
             # at-least-once either way; replay self-matches are excluded
             # by id inequality exactly as before.
             def _corpus_write() -> None:
-                sc.setJobDescription("X80: corpus write")  # thread-local
+                sc.setJobDescription(f"{m.label}: corpus write")  # thread-local
                 if exactly_once:
                     dest = os.path.join(
                         corpus_dir, f"ingest_batch={batch_id}"
@@ -711,27 +803,20 @@ def process_batch(
                     novel.write.mode("append").parquet(corpus_dir)
 
             def _index_append() -> None:
-                # the batch was signed exactly once (dedup_batch_
-                # against_corpus); the index append/bootstrap reuses the
-                # novel subset of those keys instead of a second/third
-                # signing. novel ids are batch-bounded: broadcast the
-                # semi-join so the key frame streams with no exchange.
-                sc.setJobDescription("X80: index append")
+                # the batch was signed exactly once (the against-corpus
+                # step); the index append/bootstrap reuses the novel
+                # subset of those keys instead of a second signing.
+                # novel ids are batch-bounded: broadcast the semi-join
+                # so the key frame streams with no exchange.
+                sc.setJobDescription(f"{m.label}: index append")
                 novel_keys = keys.join(
-                    F.broadcast(novel.select(id_col)), id_col, "left_semi"
+                    F.broadcast(novel.select(m.id_col)), m.id_col, "left_semi"
                 )
-                if fs.isfile(dedup.lsh_index_meta_path(index_path)):
-                    dedup.append_lsh_index(
-                        novel, index_path, id_col=id_col,
-                        text_col=text_col, fs=fs, keys=novel_keys,
-                    )
-                else:
-                    dedup.write_lsh_index(
-                        novel, index_path, id_col=id_col,
-                        text_col=text_col, fs=fs, keys=novel_keys,
-                    )
-
-            from concurrent.futures import ThreadPoolExecutor
+                write = m.append_index if indexed() else m.write_index
+                write(
+                    novel, index_path, m.id_col, m.payload_col,
+                    fs=fs, keys=novel_keys, **m.sign,
+                )
 
             with ThreadPoolExecutor(max_workers=2) as pool:
                 futs = [
@@ -740,14 +825,10 @@ def process_batch(
                 ]
                 for f in futs:
                     f.result()  # propagate either failure -> batch retry
-        if (
-            compact_every
-            and (batch_id + 1) % compact_every == 0
-            and fs.isfile(dedup.lsh_index_meta_path(index_path))
-        ):
-            dedup._compact_lsh_index_locked(
-                spark, index_path,
-                max_files_per_band=max_files_per_band, fs=fs,
+        if compact_every and (batch_id + 1) % compact_every == 0 and indexed():
+            banded_index_compact(
+                spark, index_path, max_files_per_band=max_files_per_band,
+                fs=fs, lock_held=True,
             )
     return (n_in, n_novel)
 
@@ -757,13 +838,12 @@ def start_dedup_ingest(
     corpus_dir: str,
     index_path: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
+    modality: Modality = TEXT,
+    threshold: float | None = None,
     trigger: dict | None = None,
     exactly_once: bool = False,
     compact_every: int | None = None,
-    max_files_per_band: int = dedup.COMPACT_MAX_FILES_PER_BAND,
+    max_files_per_band: int = COMPACT_MAX_FILES_PER_BAND,
     on_batch: Callable[[int, int, int, float], None] | None = None,
     fs=None,
     lock_held: bool = False,
@@ -771,7 +851,8 @@ def start_dedup_ingest(
     quality_fn: Callable[[DataFrame], DataFrame] | None = None,
 ) -> StreamingQuery:
     """Run the continuous dedup-ingest loop over a streaming DataFrame of
-    documents. ``on_batch(batch_id, n_in, n_novel, lock_wait_s)``
+    documents or embedding rows (``modality``, see :func:`process_batch`).
+    ``on_batch(batch_id, n_in, n_novel, lock_wait_s)``
     surfaces per-batch admission counts plus mutex wait (the
     observability a dedup gate needs: a sudden novel-rate collapse means
     upstream re-delivery; a 100% novel rate on a known-overlapping feed
@@ -787,7 +868,7 @@ def start_dedup_ingest(
         tele: dict = {}
         n_in, n_novel = process_batch(
             batch.sparkSession, batch, batch_id, corpus_dir, index_path,
-            id_col=id_col, text_col=text_col, threshold=threshold,
+            modality=modality, threshold=threshold,
             exactly_once=exactly_once, compact_every=compact_every,
             max_files_per_band=max_files_per_band, fs=fs,
             lock_held=lock_held, lock_timeout_s=lock_timeout_s,

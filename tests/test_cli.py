@@ -18,6 +18,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from nginx_analytics_spark import jobs
+from nginx_analytics_spark.operators.index_fs import (
+    read_sidecar,
+    writer_lock_path,
+)
 from nginx_analytics_spark.operators.logview import events_as_nginx_jsonl
 from nginx_analytics_spark.sources import load_table
 from nginx_analytics_spark.sources.warehouse import Warehouse
@@ -300,9 +304,8 @@ def test_cli_dedup_ingest(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(f"{tmp_path}/corpus").collect()
     )
     assert got == [1, 3]
-    from nginx_analytics_spark.operators import dedup
 
-    assert dedup.read_lsh_index_meta(f"{tmp_path}/idx")["num_hashes"] == 32
+    assert read_sidecar(f"{tmp_path}/idx", "lsh")["num_hashes"] == 32
 
 
 def test_cli_dedup_ingest_quality_survivor(spark, tmp_path):
@@ -378,9 +381,8 @@ def test_cli_embedding_dedup_ingest(spark, tmp_path):
         r.vec_id for r in spark.read.parquet(f"{tmp_path}/corpus").collect()
     )
     assert got == [1, 3]
-    from nginx_analytics_spark.operators import similarity
 
-    meta = similarity.read_srp_index_meta(f"{tmp_path}/idx")
+    meta = read_sidecar(f"{tmp_path}/idx", "srp")
     assert meta["n_planes"] == 64 and meta["bands"] == 8
 
 
@@ -544,7 +546,7 @@ def test_cli_compact_index(spark, tmp_path):
                      if f.endswith(".parquet")]
             assert len(files) == 1
 
-    fd = os.open(dedup._lsh_compact_lock_path(idx), os.O_CREAT | os.O_RDWR)
+    fd = os.open(writer_lock_path(idx), os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
         with pytest.raises(RuntimeError, match="single-compactor"):
@@ -556,8 +558,8 @@ def test_cli_compact_index(spark, tmp_path):
 
 def test_cli_compact_index_srp(spark, tmp_path):
     """r12: the same offline CLI compacts an SRP EMBEDDING index — the
-    modality is auto-detected from the sidecar (_srp_meta.json →
-    compact_srp_index), so a stopped embedding-dedup-ingest loop's
+    kind is read off the sidecar (srp → the shared banded-index
+    compactor), so a stopped embedding-dedup-ingest loop's
     index gets the identical maintenance surface as the text one.
     Content preserved, file floor applied, sidecar untouched."""
     import os
@@ -597,7 +599,7 @@ def test_cli_compact_index_srp(spark, tmp_path):
             assert len(files) == 1
     # sidecar untouched by compaction — carries the write default
     # (64 planes since the r14 at-rest default bump)
-    assert similarity.read_srp_index_meta(idx)["n_planes"] == 64
+    assert read_sidecar(idx, "srp")["n_planes"] == 64
 
 
 def test_cli_verify_index(spark, tmp_path):
@@ -786,12 +788,12 @@ def test_cli_verify_index_busy_exits_3(spark, tmp_path, capsys):
     torn (1)."""
     import fcntl
 
-    from nginx_analytics_spark.operators import dedup, similarity
+    from nginx_analytics_spark.operators import similarity
 
     emb = load_table(spark, SF, "embeddings").limit(30)
     idx = f"{tmp_path}/pq"
     similarity.pq_write_index(emb, idx, m=8, n_codes=16)
-    fd = os.open(dedup._lsh_compact_lock_path(idx), os.O_CREAT | os.O_RDWR)
+    fd = os.open(writer_lock_path(idx), os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
         rc = jobs.main(["verify-index", "--index", idx])
@@ -837,7 +839,7 @@ def test_ann_writers_serialize_on_the_verify_mutex(spark, tmp_path):
     }
     for idx, fns in writers.items():
         fd = os.open(
-            similarity.index_writer_lock_path(idx), os.O_CREAT | os.O_RDWR
+            writer_lock_path(idx), os.O_CREAT | os.O_RDWR
         )
         fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
         try:
@@ -856,7 +858,7 @@ def test_ann_writers_serialize_on_the_verify_mutex(spark, tmp_path):
     from nginx_analytics_spark.operators.index_fs import LOCAL_FS
 
     with LOCAL_FS.exclusive_lock(
-        similarity.index_writer_lock_path(pq), "test holds the mutex"
+        writer_lock_path(pq), "test holds the mutex"
     ):
         assert similarity.pq_append_index(more2, pq, lock_held=True)["n"] == 30
 

@@ -9,6 +9,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from nginx_analytics_spark.operators import dedup, multimodal, similarity, text
+from nginx_analytics_spark.operators.index_fs import (
+    banded_index_compact,
+    banded_index_read,
+    banded_index_recover,
+    read_sidecar,
+    sidecar_path,
+    writer_lock_path,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -490,10 +498,10 @@ def test_prefix_index_probe_exact_and_lifecycle(spark, tmp_path):
     dedup.append_prefix_index(old.filter(~half), split_idx)
     rows = lambda p: {
         (r.doc_id, r.band_idx, r.band_hash)
-        for r in dedup.read_lsh_index_rows(spark, p).collect()
+        for r in banded_index_read(spark, p).collect()
     }
     frozen = dedup._prefix_freq_frame(
-        spark, dedup.read_prefix_index_meta(split_idx)["freq"]
+        spark, read_sidecar(split_idx, "prefix")["freq"]
     )
     expected = {
         (r.doc_id, r.band_idx, r.band_hash)
@@ -520,7 +528,7 @@ def test_prefix_index_probe_exact_and_lifecycle(spark, tmp_path):
 
     # X82 compaction: rewrite every band, rows unchanged, probe parity
     before = rows(split_idx)
-    stats = dedup.compact_prefix_index(spark, split_idx, max_files_per_band=0)
+    stats = banded_index_compact(spark, split_idx, max_files_per_band=0)
     assert stats["bands_compacted"] > 0
     assert rows(split_idx) == before
 
@@ -1029,8 +1037,8 @@ def test_srp_index_append_equals_rebuild(spark, tmp_path):
     half = F.col("vec_id") % 2 == 0
     similarity.write_srp_index(emb.filter(half), split)
     similarity.append_srp_index(emb.filter(~half), split)
-    a = {tuple(r) for r in similarity.read_srp_index_rows(spark, once).collect()}
-    b = {tuple(r) for r in similarity.read_srp_index_rows(spark, split).collect()}
+    a = {tuple(r) for r in banded_index_read(spark, once).collect()}
+    b = {tuple(r) for r in banded_index_read(spark, split).collect()}
     assert a == b and len(a) == emb.count() * 8  # bands rows per vector
 
 
@@ -1061,7 +1069,7 @@ def test_srp_index_meta_validation(spark, tmp_path):
         (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
     )
     similarity.append_srp_index(clone, idx)  # no params: sidecar's 32
-    assert similarity.read_srp_index_meta(idx)["n_planes"] == 32
+    assert read_sidecar(idx, "srp")["n_planes"] == 32
     hits = similarity.incremental_embedding_near_dups(
         spark, one,
         emb.select("vec_id", "embedding").unionByName(clone),
@@ -1112,11 +1120,11 @@ def test_compact_srp_index_equals_rebuild(spark, tmp_path):
 
     # no-op pass: threshold above the file count — byte-identity, not
     # just name-identity, for every (healthy) band
-    noop = similarity.compact_srp_index(spark, inc, max_files_per_band=8)
+    noop = banded_index_compact(spark, inc, max_files_per_band=8)
     assert noop["bands_compacted"] == 0
     assert band_bytes(inc) == before
 
-    stats = similarity.compact_srp_index(spark, inc, max_files_per_band=1)
+    stats = banded_index_compact(spark, inc, max_files_per_band=1)
     assert stats["bands_seen"] == len(before)
     assert stats["bands_compacted"] == len(before)
     assert stats["files_after"] == len(before)
@@ -1126,12 +1134,12 @@ def test_compact_srp_index_equals_rebuild(spark, tmp_path):
     key = lambda df: sorted(  # noqa: E731
         (r.vec_id, r.band_idx, r.band_hash) for r in df.collect()
     )
-    assert key(similarity.read_srp_index_rows(spark, inc)) == key(
-        similarity.read_srp_index_rows(spark, full)
+    assert key(banded_index_read(spark, inc)) == key(
+        banded_index_read(spark, full)
     )
-    assert similarity.read_srp_index_meta(inc) == similarity.read_srp_index_meta(full)
+    assert read_sidecar(inc, "srp") == read_sidecar(full, "srp")
     with pytest.raises(FileNotFoundError):
-        similarity.compact_srp_index(spark, f"{tmp_path}/not_an_index")
+        banded_index_compact(spark, f"{tmp_path}/not_an_index")
 
 
 def test_compact_srp_index_manifest_layout(spark, tmp_path):
@@ -1150,15 +1158,15 @@ def test_compact_srp_index_manifest_layout(spark, tmp_path):
     for s in slices[1:]:
         similarity.append_srp_index(s, inc, fs=mfs)
     similarity.write_srp_index(emb, full, fs=mfs)
-    stats = similarity.compact_srp_index(
+    stats = banded_index_compact(
         spark, inc, max_files_per_band=1, fs=mfs
     )
     assert stats["bands_compacted"] > 0
     key = lambda df: sorted(  # noqa: E731
         (r.vec_id, r.band_idx, r.band_hash) for r in df.collect()
     )
-    assert key(similarity.read_srp_index_rows(spark, inc, fs=mfs)) == key(
-        similarity.read_srp_index_rows(spark, full, fs=mfs)
+    assert key(banded_index_read(spark, inc, fs=mfs)) == key(
+        banded_index_read(spark, full, fs=mfs)
     )
 
 
@@ -1800,6 +1808,34 @@ def test_clean_corpus_gates_and_dedup(spark):
     assert out[1].predicted_lang == "en"
 
 
+def test_hyperplane_pairs_bucket_spanning_arrow_batches(spark):
+    """The streaming bucket walk of hyperplane_lsh_pairs must give the
+    same pairs and bit-identical cosines when every bucket spans many
+    Arrow batches: 1-bit bands put ~half the corpus in each bucket, and
+    a 7-row batch cap splits each bucket across dozens of batches (the
+    open bucket's chunks are joined once, when it closes)."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+
+    def pairs():
+        return sorted(
+            (r.id_a, r.id_b, r.cosine)
+            for r in similarity.hyperplane_lsh_pairs(
+                emb, threshold=0.3, n_planes=8, bands=8
+            ).collect()
+        )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = pairs()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = pairs()
+    finally:
+        spark.conf.set(key, old)
+    assert default  # the fixture has pairs at this threshold
+    assert small == default
+
+
 def test_lsh_high_threshold_selectivity(spark):
     """The scale claim, asserted: in the regime SRP-LSH is designed for
     (true near-dups, cosine >= 0.9), 8-bit bands must generate FAR fewer
@@ -2022,7 +2058,7 @@ def test_lsh_index_meta_guard(spark, tmp_path):
     )
     idx = f"{tmp_path}/idx"
     dedup.write_lsh_index(docs, idx, rows_per_band=2)
-    meta = dedup.read_lsh_index_meta(idx)
+    meta = read_sidecar(idx, "lsh")
     assert meta["rows_per_band"] == 2 and meta["shingle_n"] == 3
 
     with pytest.raises(ValueError, match="parameter mismatch"):
@@ -2032,7 +2068,7 @@ def test_lsh_index_meta_guard(spark, tmp_path):
     with pytest.raises(ValueError, match="mismatch"):
         dedup.incremental_near_dups(spark, docs, docs, idx, shingle_n=5)
 
-    os.remove(dedup.lsh_index_meta_path(idx))
+    os.remove(sidecar_path(idx, "lsh"))
     with pytest.raises(ValueError, match="sidecar"):
         dedup.incremental_near_dups(spark, docs, docs, idx)
 
@@ -2048,11 +2084,11 @@ def test_staged_lsh_index_reuse_and_probe_query(spark):
 
     new_docs, corpus = rd._incr_split(spark, SF)
     p1 = rd._staged_lsh_index(corpus, SF)
-    assert os.path.exists(dedup.lsh_index_meta_path(p1))
-    mtime = os.path.getmtime(dedup.lsh_index_meta_path(p1))
+    assert os.path.exists(sidecar_path(p1, "lsh"))
+    mtime = os.path.getmtime(sidecar_path(p1, "lsh"))
     p2 = rd._staged_lsh_index(corpus, SF)
     assert p2 == p1
-    assert os.path.getmtime(dedup.lsh_index_meta_path(p1)) == mtime  # no rebuild
+    assert os.path.getmtime(sidecar_path(p1, "lsh")) == mtime  # no rebuild
 
     q = registry.queries()
     probe = {
@@ -2234,11 +2270,11 @@ def test_compact_lsh_index_equals_rebuild(spark, tmp_path):
 
     # a no-op pass first: every band is at 4 files, threshold 8 — no
     # band qualifies and no file is renamed or rewritten
-    noop = dedup.compact_lsh_index(spark, inc, max_files_per_band=8)
+    noop = banded_index_compact(spark, inc, max_files_per_band=8)
     assert noop["bands_compacted"] == 0
     assert band_files(inc) == before
 
-    stats = dedup.compact_lsh_index(spark, inc, max_files_per_band=1)
+    stats = banded_index_compact(spark, inc, max_files_per_band=1)
     assert stats["bands_seen"] == len(before)
     assert stats["bands_compacted"] == len(before)
     assert stats["files_before"] == 4 * len(before)
@@ -2251,10 +2287,10 @@ def test_compact_lsh_index_equals_rebuild(spark, tmp_path):
     )
     assert key(spark.read.parquet(inc)) == key(spark.read.parquet(full))
     # sidecar preserved => probes keep validating against the same params
-    assert dedup.read_lsh_index_meta(inc) == dedup.read_lsh_index_meta(full)
+    assert read_sidecar(inc, "lsh") == read_sidecar(full, "lsh")
 
     with pytest.raises(FileNotFoundError):
-        dedup.compact_lsh_index(spark, f"{tmp_path}/not_an_index")
+        banded_index_compact(spark, f"{tmp_path}/not_an_index")
 
 
 def test_compact_lsh_index_crash_recovery(spark, tmp_path):
@@ -2283,7 +2319,7 @@ def test_compact_lsh_index_crash_recovery(spark, tmp_path):
     b1 = os.path.join(idx, bands[1])
     shutil.copytree(b1, os.path.join(idx, f".old-{bands[1]}-99998"))
 
-    stats = dedup.compact_lsh_index(spark, idx, max_files_per_band=999)
+    stats = banded_index_compact(spark, idx, max_files_per_band=999)
     assert stats["bands_compacted"] == 0  # healthy: nothing to rewrite
     leftovers = [d for d in os.listdir(idx) if d.startswith((".old-", ".compact-"))]
     assert leftovers == []
@@ -2325,7 +2361,7 @@ def test_compact_lsh_recovery_newest_old_wins(spark, tmp_path):
     # rename #2: band dir detached under a NEWER sequence stamp
     os.rename(bdir, os.path.join(idx, f".old-{band}-2000-222"))
 
-    stats = dedup.compact_lsh_index(spark, idx, max_files_per_band=999)
+    stats = banded_index_compact(spark, idx, max_files_per_band=999)
     assert stats["bands_compacted"] == 0
     assert [d for d in os.listdir(idx) if d.startswith(".old-")] == []
     after = sorted(
@@ -2348,16 +2384,16 @@ def test_compact_lsh_index_rejects_concurrent_compactor(spark, tmp_path):
     idx = f"{tmp_path}/idx"
     dedup.write_lsh_index(docs, idx)
 
-    fd = os.open(dedup._lsh_compact_lock_path(idx), os.O_CREAT | os.O_RDWR)
+    fd = os.open(writer_lock_path(idx), os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
         with pytest.raises(RuntimeError, match="single-compactor"):
-            dedup.compact_lsh_index(spark, idx, max_files_per_band=999)
+            banded_index_compact(spark, idx, max_files_per_band=999)
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
     # released -> the same call succeeds
-    stats = dedup.compact_lsh_index(spark, idx, max_files_per_band=999)
+    stats = banded_index_compact(spark, idx, max_files_per_band=999)
     assert stats["bands_seen"] > 0
 
 
@@ -2399,7 +2435,7 @@ def test_probe_racing_compaction_documents_reader_race(spark, tmp_path):
     # ...but CAN drop them (the race this test documents). Not asserted
     # strictly `<`: the surviving bands may re-cover every true pair.
 
-    dedup._recover_lsh_compaction(idx)
+    banded_index_recover(idx)
     assert probe_pairs() == whole
 
 
@@ -2419,7 +2455,7 @@ def test_compact_lsh_index_multi_file_target(spark, tmp_path):
         (r.doc_id, r.band_idx, r.band_hash)
         for r in spark.read.parquet(idx).collect()
     )
-    stats = dedup.compact_lsh_index(
+    stats = banded_index_compact(
         spark, idx, max_files_per_band=1, target_files=2
     )
     assert stats["bands_compacted"] == stats["bands_seen"]
@@ -2495,7 +2531,7 @@ def test_compact_lsh_index_routes_through_fs_seam(spark, tmp_path):
     fs = RecordingFS()
     dedup.write_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), idx, fs=fs)
     dedup.append_lsh_index(docs.filter(F.col("doc_id") % 2 == 1), idx, fs=fs)
-    stats = dedup.compact_lsh_index(spark, idx, max_files_per_band=1, fs=fs)
+    stats = banded_index_compact(spark, idx, max_files_per_band=1, fs=fs)
     assert stats["bands_compacted"] == stats["bands_seen"] > 0
 
     kinds = {op[0] for op in fs.ops}
@@ -2517,13 +2553,13 @@ def test_compact_lsh_index_routes_through_fs_seam(spark, tmp_path):
         assert detach[0] < swap_in[0]
 
     # the compacted index is intact and still probe-able with defaults
-    assert dedup.read_lsh_index_meta(idx, fs=fs) == dedup.read_lsh_index_meta(idx)
+    assert read_sidecar(idx, "lsh", fs=fs) == read_sidecar(idx, "lsh")
 
 
 def test_recover_skips_while_compactor_live(spark, tmp_path):
     """r8 review: a heal racing a LIVE out-of-band compactor must not
     reap its in-progress scratch (the compactor would then swap a
-    silently truncated band in). _recover_lsh_compaction now takes the
+    silently truncated band in). banded_index_recover now takes the
     same single-compactor mutex non-blocking: lock held -> no-op,
     returns False, scratch untouched; lock free -> heals, returns
     True, stale scratch reaped."""
@@ -2537,16 +2573,16 @@ def test_recover_skips_while_compactor_live(spark, tmp_path):
     # a live compactor mid-write: lock held, scratch dir half-written
     scratch = os.path.join(idx, ".compact-band_idx=0-99999")
     os.makedirs(scratch)
-    fd = os.open(dedup._lsh_compact_lock_path(idx), os.O_CREAT | os.O_RDWR)
+    fd = os.open(writer_lock_path(idx), os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
-        assert dedup._recover_lsh_compaction(idx) is False
+        assert banded_index_recover(idx) is False
         assert os.path.isdir(scratch)  # live scratch survives the race
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
         os.close(fd)
     # holder gone -> the same scratch IS stale now; recovery reaps it
-    assert dedup._recover_lsh_compaction(idx) is True
+    assert banded_index_recover(idx) is True
     assert not os.path.isdir(scratch)
 
 

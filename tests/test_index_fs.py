@@ -19,9 +19,20 @@ from pyspark.sql import functions as F
 
 from nginx_analytics_spark.operators import dedup
 from nginx_analytics_spark.operators.index_fs import (
+    BANDED_KINDS,
+    SIDECARS,
     LocalIndexFS,
     LockHeldError,
     ManifestIndexFS,
+    MissingSidecarError,
+    banded_index_compact,
+    banded_index_read,
+    banded_index_recover,
+    banded_index_write,
+    check_sidecar,
+    index_kind,
+    write_sidecar,
+    writer_lock_path,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -35,7 +46,7 @@ def index_fs(request):
 def _rows(spark, idx, fs):
     return sorted(
         (r.doc_id, r.band_idx, r.band_hash)
-        for r in dedup.read_lsh_index_rows(spark, idx, fs=fs).collect()
+        for r in banded_index_read(spark, idx, fs=fs).collect()
     )
 
 
@@ -93,7 +104,7 @@ def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path, index_fs):
     dedup.append_lsh_index(docs.filter(F.col("doc_id") % 3 == 2), idx, fs=index_fs)
     before = _rows(spark, idx, index_fs)
 
-    stats = dedup.compact_lsh_index(
+    stats = banded_index_compact(
         spark, idx, max_files_per_band=1, fs=index_fs
     )
     assert stats["bands_compacted"] == stats["bands_seen"] > 0
@@ -102,7 +113,7 @@ def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path, index_fs):
 
     # idempotent at the floor: a second pass finds nothing oversized
     # (every band is now at its target file count)
-    again = dedup.compact_lsh_index(
+    again = banded_index_compact(
         spark, idx, max_files_per_band=1, fs=index_fs
     )
     assert again["bands_compacted"] == 0
@@ -138,7 +149,7 @@ def test_recovery_heals_layout_specific_crash_state(spark, tmp_path, index_fs):
     before = _rows(spark, idx, index_fs)
 
     _plant_crash(idx, index_fs)
-    assert dedup._recover_lsh_compaction(idx, fs=index_fs) is True
+    assert banded_index_recover(idx, fs=index_fs) is True
     assert _rows(spark, idx, index_fs) == before
     debris = [
         d
@@ -150,17 +161,17 @@ def test_recovery_heals_layout_specific_crash_state(spark, tmp_path, index_fs):
 
 def test_mutex_excludes_compaction_across_layouts(spark, tmp_path, index_fs):
     """The single-compactor mutex holds for either layout: a held lock
-    refuses compact_lsh_index with the dedicated LockHeldError."""
+    refuses banded_index_compact with the dedicated LockHeldError."""
     docs = _docs(spark)
     idx = str(tmp_path / "idx")
     dedup.write_lsh_index(docs, idx, fs=index_fs)
     with index_fs.exclusive_lock(
-        dedup._lsh_compact_lock_path(idx), "test holder"
+        writer_lock_path(idx), "test holder"
     ):
         with pytest.raises(LockHeldError, match="single-compactor"):
-            dedup.compact_lsh_index(spark, idx, fs=index_fs)
+            banded_index_compact(spark, idx, fs=index_fs)
     # released: compaction runs (no-op at default threshold)
-    stats = dedup.compact_lsh_index(spark, idx, fs=index_fs)
+    stats = banded_index_compact(spark, idx, fs=index_fs)
     assert stats["bands_seen"] > 0
 
 
@@ -303,7 +314,7 @@ def test_concurrent_compaction_matches_sequential(spark, tmp_path):
         idx = str(tmp_path / f"idx_{name}")
         dedup.write_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), idx)
         dedup.append_lsh_index(docs.filter(F.col("doc_id") % 2 == 1), idx)
-        stats = dedup.compact_lsh_index(
+        stats = banded_index_compact(
             spark, idx, max_files_per_band=1, target_files=2,
             max_concurrency=conc,
         )
@@ -380,7 +391,7 @@ def test_mid_compact_reader_view_per_layout(spark, tmp_path, index_fs):
         index_fs.rename = spy_rename
 
     try:
-        stats = dedup.compact_lsh_index(
+        stats = banded_index_compact(
             spark, idx, max_files_per_band=1, target_files=2,
             max_concurrency=1, fs=index_fs,
         )
@@ -407,3 +418,103 @@ def test_mid_compact_reader_view_per_layout(spark, tmp_path, index_fs):
 
     # after compaction: content invariant holds through either layout
     assert _rows(spark, idx, index_fs) == before
+
+
+# Synthetic sidecars in each kind's real key layout (what its writer
+# stamps), for the rule tests below — no Spark needed.
+_SIDECAR_CASES = {
+    "lsh": {"id_col": "doc_id", "shingle_n": 3, "num_hashes": 32,
+            "rows_per_band": 2, "format": "banded-v2"},
+    "prefix": {"id_col": "doc_id", "shingle_n": 3, "threshold": 0.6,
+               "order": "frozen-df-v2", "bands": 16, "freq": [[7, 9]]},
+    "srp": {"id_col": "vec_id", "n_planes": 64, "bands": 8, "dim": 64,
+            "seed": 42},
+    "paraseen": {"sep": "\n", "min_chars": 1},
+    "winseen": {"window_tokens": 50},
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_SIDECAR_CASES))
+def test_check_sidecar_rule(tmp_path, kind):
+    """The one sidecar rule, per kind: a missing sidecar is named, a
+    caller's ``None`` adopts the sidecar's value, a named value must
+    equal it, and the key sets must match."""
+    meta = _SIDECAR_CASES[kind]
+    path = str(tmp_path / kind)
+    os.makedirs(path)
+    with pytest.raises(ValueError, match=f"no _{kind}_meta.json"):
+        check_sidecar(path, kind, meta)
+    write_sidecar(path, kind, meta)
+
+    assert check_sidecar(path, kind, meta) == meta
+    assert check_sidecar(path, kind, dict.fromkeys(meta)) == meta
+    for key, value in meta.items():
+        other = [value] if not isinstance(value, list) else value + [[0, 0]]
+        with pytest.raises(ValueError, match=r"different\s+parameters"):
+            check_sidecar(path, kind, {**meta, key: other})
+    with pytest.raises(ValueError, match=r"different\s+parameters"):
+        check_sidecar(path, kind, {**meta, "extra": 1})
+    dropped = dict(list(meta.items())[1:])
+    with pytest.raises(ValueError, match=r"different\s+parameters"):
+        check_sidecar(path, kind, dropped)
+
+
+def test_index_kind_reads_every_sidecar(tmp_path):
+    """Each of the seven sidecars names its kind; an empty directory
+    (or a kind outside ``kinds``) raises, as both FileNotFoundError and
+    ValueError."""
+    assert sorted(SIDECARS.values()) == sorted(
+        ["lsh", "prefix", "srp", "paraseen", "winseen", "pq", "ivf"]
+    )
+    for name, kind in SIDECARS.items():
+        path = str(tmp_path / kind)
+        os.makedirs(path)
+        write_sidecar(path, kind, {})
+        assert os.listdir(path) == [name]
+        assert index_kind(path) == kind
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    for exc in (FileNotFoundError, ValueError):
+        with pytest.raises(exc, match="no at-rest store sidecar"):
+            index_kind(empty)
+    with pytest.raises(MissingSidecarError):
+        index_kind(str(tmp_path / "pq"), kinds=BANDED_KINDS)
+
+
+@pytest.mark.parametrize("bands", [16, None])
+def test_band_files_are_band_hash_sorted(spark, tmp_path, index_fs, bands):
+    """The layout ``banded_index_write`` promises, read back from the
+    parquet files themselves: every band file holds its rows in
+    ``band_hash`` order, and its row groups' footer min/max ranges
+    follow one another. (Spark's planned writes sort on the partition
+    column in front of ``partitionBy`` and drop a one-key
+    ``sortWithinPartitions("band_hash")``; the sort must lead with
+    ``band_idx``.)"""
+    import glob
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    keys = spark.range(40_000).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 16).cast("int").alias("band_idx"),
+        F.xxhash64("id").alias("band_hash"),
+    )
+    idx = str(tmp_path / "idx")
+    banded_index_write(keys, idx, fs=index_fs, bands=bands)
+    files = glob.glob(f"{idx}/**/band_idx=*/*.parquet", recursive=True)
+    assert len(files) == 16
+    for f in files:
+        h = pq.read_table(f, columns=["band_hash"]).column(0).to_numpy()
+        assert np.all(h[1:] >= h[:-1]), f
+        md = pq.read_metadata(f)
+        col = md.schema.names.index("band_hash")
+        ranges = [
+            (md.row_group(g).column(col).statistics.min,
+             md.row_group(g).column(col).statistics.max)
+            for g in range(md.num_row_groups)
+        ]
+        assert all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:])), f
+    assert _rows(spark, idx, index_fs) == sorted(
+        (r.doc_id, r.band_idx, r.band_hash) for r in keys.collect()
+    )

@@ -10,8 +10,17 @@ can't reach.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
+from nginx_analytics_spark.operators.index_fs import (
+    banded_index_compact,
+    banded_index_read,
+    banded_index_recover,
+    read_sidecar,
+    writer_lock_path,
+)
 from nginx_analytics_spark.sources.warehouse import Warehouse
+from nginx_analytics_spark.streaming.dedup_ingest import EMBEDDING, TEXT
 from nginx_analytics_spark.streaming.metrics import BatchMetricsListener
 from nginx_analytics_spark.streaming.windows import start_anomaly_job
 
@@ -262,7 +271,6 @@ def test_dedup_ingest_loop_across_micro_batches(spark, tmp_path):
     (maxFilesPerTrigger=1) prove each path."""
     import pandas as pd
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.streaming.dedup_ingest import start_dedup_ingest
 
     base_a = "the quick brown fox jumps over the lazy dog near the river"
@@ -307,111 +315,7 @@ def test_dedup_ingest_loop_across_micro_batches(spark, tmp_path):
     # the index covers exactly the admitted docs
     idx_ids = {r.doc_id for r in spark.read.parquet(index_path).collect()}
     assert idx_ids == {1, 2, 4}
-    assert dedup.read_lsh_index_meta(index_path)["shingle_n"] == 3
-
-
-def test_dedup_ingest_exactly_once_retry(spark, tmp_path):
-    """X80 + X73 composition: a retried micro-batch (same epoch id) must
-    REPLACE its own corpus output under exactly_once=True — and the
-    replayed index append must not change probe RESULTS (duplicate band
-    rows collapse in the candidate distinct), only index bytes. The
-    plain-append contrast duplicates, pinning why the flag exists."""
-    from nginx_analytics_spark.operators import dedup
-    from nginx_analytics_spark.streaming.dedup_ingest import (
-        process_batch,
-        read_corpus,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-         (2, "totally separate words about broadcast joins and bloom filters")],
-        "doc_id long, text string",
-    )
-    eo = str(tmp_path / "eo")
-    got1 = process_batch(spark, docs, 0, eo, str(tmp_path / "idx_eo"),
-                         exactly_once=True)
-    got2 = process_batch(spark, docs, 0, eo, str(tmp_path / "idx_eo"),
-                         exactly_once=True)  # same-id retry
-    assert got1 == (2, 2)
-    assert got2 == (2, 2)  # replay re-admits (self-matches excluded by id)
-    assert sorted(r.doc_id for r in read_corpus(spark, eo).collect()) == [1, 2]
-    # index holds duplicate band rows after replay — bytes, not results
-    idx = spark.read.parquet(str(tmp_path / "idx_eo"))
-    assert idx.count() == 2 * idx.distinct().count()
-
-    plain = str(tmp_path / "plain")
-    process_batch(spark, docs, 0, plain, str(tmp_path / "idx_p"))
-    process_batch(spark, docs, 0, plain, str(tmp_path / "idx_p"))
-    assert sorted(
-        r.doc_id for r in read_corpus(spark, plain).collect()
-    ) == [1, 1, 2, 2]  # at-least-once append duplicates on replay
-
-
-def test_dedup_ingest_with_in_loop_compaction(spark, tmp_path):
-    """X82 in the X80 loop: compact_every=1 + max_files_per_band=1
-    compacts the index inside the foreachBatch thread after every batch.
-    Admissions are IDENTICAL to the uncompacted loop (compaction is
-    layout-only), the final per-band file count is bounded at 1 + the
-    last batch's append, and the index content equals a one-shot rebuild
-    over the admitted corpus."""
-    import os
-
-    import pandas as pd
-
-    from nginx_analytics_spark.operators import dedup
-    from nginx_analytics_spark.streaming.dedup_ingest import start_dedup_ingest
-
-    base_a = "the quick brown fox jumps over the lazy dog near the river"
-    base_g = "completely different subject matter covering spark physical plans and shuffles today"
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write(name, rows):
-        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(src / name)
-
-    write("a.parquet", [(1, base_a), (2, "unrelated text about parquet row groups and min max statistics here")])
-    write("b.parquet", [(3, base_a + " extra"), (4, base_g)])
-    write("c.parquet", [(7, base_g + " trailer")])
-
-    corpus_dir = str(tmp_path / "corpus")
-    index_path = str(tmp_path / "idx")
-    seen = []
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q = start_dedup_ingest(
-        stream, corpus_dir, index_path, str(tmp_path / "ckpt"),
-        trigger={"availableNow": True},
-        compact_every=1,
-        on_batch=lambda bid, n_in, n_novel, lock_wait: seen.append((n_in, n_novel)),
-    )
-    q.awaitTermination()
-    # compact_every defaults max_files_per_band=8; force a final full
-    # compaction to the 1-file floor to check the invariant end-state
-    dedup.compact_lsh_index(spark, index_path, max_files_per_band=1)
-
-    assert seen == [(2, 2), (2, 1), (1, 0)]  # same admissions as uncompacted
-    admitted = spark.read.parquet(corpus_dir)
-    assert sorted(r.doc_id for r in admitted.collect()) == [1, 2, 4]
-
-    for band in os.listdir(index_path):
-        if band.startswith("band_idx="):
-            files = [
-                f
-                for f in os.listdir(os.path.join(index_path, band))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, band
-
-    rebuilt = str(tmp_path / "rebuilt")
-    dedup.write_lsh_index(admitted, rebuilt)
-    key = lambda p: sorted(  # noqa: E731
-        (r.doc_id, r.band_idx, r.band_hash)
-        for r in spark.read.parquet(p).collect()
-    )
-    assert key(index_path) == key(rebuilt)
+    assert read_sidecar(index_path, "lsh")["shingle_n"] == 3
 
 
 def test_empty_batch_still_fires_scheduled_compaction(spark, tmp_path):
@@ -509,7 +413,6 @@ def test_process_batch_refuses_foreign_mutex_holder(spark, tmp_path):
 
     import pytest
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.streaming.dedup_ingest import process_batch
 
     docs = spark.createDataFrame(
@@ -524,7 +427,7 @@ def test_process_batch_refuses_foreign_mutex_holder(spark, tmp_path):
         [(3, "third document with its own fresh vocabulary and tokens")],
         "doc_id long, text string",
     )
-    fd = os.open(dedup._lsh_compact_lock_path(idx), os.O_CREAT | os.O_RDWR)
+    fd = os.open(writer_lock_path(idx), os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
         with pytest.raises(RuntimeError, match="ingest loop"):
@@ -542,7 +445,7 @@ def test_process_batch_refuses_foreign_mutex_holder(spark, tmp_path):
 def test_lock_held_is_verified_not_trusted(spark, tmp_path):
     """r8 review: lock_held=True is a verified declaration. (a) With
     the lock actually held by this process (the CLI pattern), batches
-    run under it and an offline compact_lsh_index fails loudly for the
+    run under it and an offline banded_index_compact fails loudly for the
     whole stream lifetime, even between batches. (b) A caller that
     passes lock_held=True WITHOUT holding gets the per-batch guard
     anyway. (c) A FOREIGN process holding the lock refuses the batch
@@ -553,7 +456,6 @@ def test_lock_held_is_verified_not_trusted(spark, tmp_path):
 
     import pytest
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.operators.index_fs import LOCAL_FS
     from nginx_analytics_spark.streaming.dedup_ingest import process_batch
 
@@ -563,7 +465,7 @@ def test_lock_held_is_verified_not_trusted(spark, tmp_path):
         "doc_id long, text string",
     )
     corpus, idx = str(tmp_path / "corpus"), str(tmp_path / "idx")
-    lock = dedup._lsh_compact_lock_path(idx)
+    lock = writer_lock_path(idx)
 
     # (a) lifetime hold: batches run, offline compaction is refused
     # between them — the CLI semantics
@@ -572,7 +474,7 @@ def test_lock_held_is_verified_not_trusted(spark, tmp_path):
             spark, docs, 0, corpus, idx, lock_held=True
         ) == (2, 2)
         with pytest.raises(RuntimeError, match="single-compactor"):
-            dedup.compact_lsh_index(spark, idx)  # "between batches"
+            banded_index_compact(spark, idx)  # "between batches"
         assert process_batch(
             spark, docs.limit(0), 1, corpus, idx, lock_held=True
         ) == (0, 0)
@@ -647,7 +549,6 @@ def test_lock_held_refuses_unstamped_foreign_acquirer(spark, tmp_path):
 
     import pytest
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.operators.index_fs import LockHeldError
     from nginx_analytics_spark.streaming.dedup_ingest import process_batch
 
@@ -660,7 +561,7 @@ def test_lock_held_refuses_unstamped_foreign_acquirer(spark, tmp_path):
     # lock file, which is exactly what the TOCTOU fed on
     assert process_batch(spark, docs, 0, corpus, idx) == (1, 1)
 
-    lock = dedup._lsh_compact_lock_path(idx)
+    lock = writer_lock_path(idx)
     fd = os.open(lock, os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)  # acquired, NOT stamped
     try:
@@ -677,7 +578,7 @@ def test_lock_held_refuses_unstamped_foreign_acquirer(spark, tmp_path):
 
 
 def test_recovery_backs_off_only_on_lock_held_error(tmp_path):
-    """r8 ADVICE: _recover_lsh_compaction's 'live compactor, skip heal'
+    """r8 ADVICE: banded_index_recover's 'live compactor, skip heal'
     branch catches exactly LockHeldError — an unrelated RuntimeError
     from a custom fs seam propagates instead of silently suppressing
     recovery."""
@@ -685,7 +586,6 @@ def test_recovery_backs_off_only_on_lock_held_error(tmp_path):
 
     import pytest
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.operators.index_fs import LockHeldError
 
     class BoomFS:
@@ -701,8 +601,8 @@ def test_recovery_backs_off_only_on_lock_held_error(tmp_path):
             yield
 
     with pytest.raises(RuntimeError, match="unrelated reason"):
-        dedup._recover_lsh_compaction(str(tmp_path / "idx"), fs=BoomFS())
-    assert dedup._recover_lsh_compaction(str(tmp_path / "idx"), fs=HeldFS()) is False
+        banded_index_recover(str(tmp_path / "idx"), fs=BoomFS())
+    assert banded_index_recover(str(tmp_path / "idx"), fs=HeldFS()) is False
 
 
 def test_lock_wait_telemetry_surfaces_contention(spark, tmp_path):
@@ -719,7 +619,6 @@ def test_lock_wait_telemetry_surfaces_contention(spark, tmp_path):
 
     import pytest
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.operators.index_fs import LockHeldError
     from nginx_analytics_spark.streaming.dedup_ingest import process_batch
 
@@ -734,7 +633,7 @@ def test_lock_wait_telemetry_surfaces_contention(spark, tmp_path):
     ) == (1, 1)
     assert tele["lock_wait_s"] < 0.5  # uncontended
 
-    lock = dedup._lsh_compact_lock_path(idx)
+    lock = writer_lock_path(idx)
     fd = os.open(lock, os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
 
@@ -918,10 +817,7 @@ def test_embedding_ingest_loop_across_micro_batches(spark, tmp_path):
     (maxFilesPerTrigger=1) prove each path — the text loop's battery
     (test_dedup_ingest_loop_across_micro_batches) transposed to the
     embedding modality at the production 0.85 threshold."""
-    from nginx_analytics_spark.operators import similarity
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        start_embedding_dedup_ingest,
-    )
+    from nginx_analytics_spark.streaming.dedup_ingest import start_dedup_ingest
 
     v = _unit_vecs(11, 3)  # v[0], v[1] novel bases; v[2] a third base
     src = tmp_path / "src"
@@ -949,8 +845,9 @@ def test_embedding_ingest_loop_across_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    q = start_embedding_dedup_ingest(
+    q = start_dedup_ingest(
         stream, corpus_dir, index_path, str(tmp_path / "ckpt"),
+        modality=EMBEDDING,
         trigger={"availableNow": True},
         on_batch=lambda bid, n_in, n_novel, lock_wait: seen.append(
             (n_in, n_novel)
@@ -965,89 +862,195 @@ def test_embedding_ingest_loop_across_micro_batches(spark, tmp_path):
     idx_rows = spark.read.parquet(index_path).collect()
     assert {r.vec_id for r in idx_rows} == {1, 2, 4}
     assert len(idx_rows) == 3 * 8
-    assert similarity.read_srp_index_meta(index_path)["n_planes"] == 64
+    assert read_sidecar(index_path, "srp")["n_planes"] == 64
 
 
-def test_embedding_ingest_exactly_once_retry(spark, tmp_path):
-    """X85 + X73 composition (the text loop's retry semantics hold for
-    the embedding modality): a retried micro-batch REPLACES its own
-    corpus output under exactly_once=True; a replayed index append adds
-    duplicate band rows but cannot change probe results (replayed rows
-    self-match only on their own ids, which the probe's id inequality
-    excludes); plain append duplicates on replay."""
-    from nginx_analytics_spark.streaming.dedup_ingest import read_corpus
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        process_embedding_batch,
-    )
+_MODALITIES = {"text": TEXT, "embedding": EMBEDDING}
 
+
+def _two_distant_rows(spark, kind):
+    """Ids 1 and 2, far apart under the modality's similarity."""
+    if kind == "text":
+        return spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+             (2, "totally separate words about broadcast joins and bloom filters")],
+            "doc_id long, text string",
+        )
     v = _unit_vecs(31, 2)
-    emb = spark.createDataFrame(
+    return spark.createDataFrame(
         [(1, [float(x) for x in v[0]]), (2, [float(x) for x in v[1]])],
         "vec_id long, embedding array<float>",
     )
-    eo = str(tmp_path / "eo")
-    got1 = process_embedding_batch(
-        spark, emb, 0, eo, str(tmp_path / "idx_eo"), exactly_once=True
+
+
+@pytest.mark.parametrize("kind", ["text", "embedding"])
+def test_ingest_exactly_once_retry(spark, tmp_path, kind):
+    """X80/X85 + X73 composition: a retried micro-batch (same epoch id)
+    must REPLACE its own corpus output under exactly_once=True — and the
+    replayed index append must not change probe RESULTS (duplicate band
+    rows collapse in the candidate distinct; replayed rows self-match
+    only on their own ids, which the probe's id inequality excludes),
+    only index bytes. The plain-append contrast duplicates, pinning why
+    the flag exists."""
+    from nginx_analytics_spark.streaming.dedup_ingest import (
+        process_batch,
+        read_corpus,
     )
-    got2 = process_embedding_batch(
-        spark, emb, 0, eo, str(tmp_path / "idx_eo"), exactly_once=True
-    )  # same-id retry
+
+    m = _MODALITIES[kind]
+    rows = _two_distant_rows(spark, kind)
+
+    def ids(corpus):
+        return sorted(r[m.id_col] for r in read_corpus(spark, corpus).collect())
+
+    eo = str(tmp_path / "eo")
+    got1 = process_batch(spark, rows, 0, eo, str(tmp_path / "idx_eo"),
+                         modality=m, exactly_once=True)
+    got2 = process_batch(spark, rows, 0, eo, str(tmp_path / "idx_eo"),
+                         modality=m, exactly_once=True)  # same-id retry
     assert got1 == (2, 2)
     assert got2 == (2, 2)  # replay re-admits (self-matches excluded by id)
-    assert sorted(r.vec_id for r in read_corpus(spark, eo).collect()) == [1, 2]
+    assert ids(eo) == [1, 2]
     # index holds duplicate band rows after replay — bytes, not results
     idx = spark.read.parquet(str(tmp_path / "idx_eo"))
     assert idx.count() == 2 * idx.distinct().count()
 
     plain = str(tmp_path / "plain")
-    process_embedding_batch(spark, emb, 0, plain, str(tmp_path / "idx_p"))
-    process_embedding_batch(spark, emb, 0, plain, str(tmp_path / "idx_p"))
-    assert sorted(
-        r.vec_id for r in read_corpus(spark, plain).collect()
-    ) == [1, 1, 2, 2]  # at-least-once append duplicates on replay
+    process_batch(spark, rows, 0, plain, str(tmp_path / "idx_p"), modality=m)
+    process_batch(spark, rows, 0, plain, str(tmp_path / "idx_p"), modality=m)
+    assert ids(plain) == [1, 1, 2, 2]  # at-least-once append duplicates on replay
 
 
-def test_embedding_ingest_with_in_loop_compaction(spark, tmp_path):
-    """X85 + X82: compact_every folds the shared per-band compaction
-    into the embedding loop — after three appending batches with a
-    forcing threshold (max_files_per_band=1), every band's file count
-    is back at/below the compaction target while the index CONTENT
-    equals the union of the admitted batches' band keys."""
-    import os
-
-    from nginx_analytics_spark.operators import similarity
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        process_embedding_batch,
-    )
-
-    corpus_dir = str(tmp_path / "corpus")
-    index_path = str(tmp_path / "idx")
+def _compaction_case(spark, kind):
+    """Three micro-batches per modality plus the loop settings and the
+    expected admissions: (batches, compact_every, max_files_per_band,
+    per-batch (n_in, n_novel), admitted ids)."""
+    if kind == "text":
+        base_a = "the quick brown fox jumps over the lazy dog near the river"
+        base_g = ("completely different subject matter covering spark "
+                  "physical plans and shuffles today")
+        batches = [
+            [(1, base_a), (2, "unrelated text about parquet row groups and min max statistics here")],
+            [(3, base_a + " extra"), (4, base_g)],
+            [(7, base_g + " trailer")],
+        ]
+        frames = [
+            spark.createDataFrame(b, "doc_id long, text string") for b in batches
+        ]
+        # compact_every defaults max_files_per_band=8
+        return frames, 1, 8, [(2, 2), (2, 1), (1, 0)], [1, 2, 4]
     v = _unit_vecs(41, 9)
-    for b in range(3):
-        emb = spark.createDataFrame(
-            [
-                (b * 3 + i, [float(x) for x in v[b * 3 + i]])
-                for i in range(3)
-            ],
+    frames = [
+        spark.createDataFrame(
+            [(b * 3 + i, [float(x) for x in v[b * 3 + i]]) for i in range(3)],
             "vec_id long, embedding array<float>",
         )
-        process_embedding_batch(
-            spark, emb, b, corpus_dir, index_path,
-            compact_every=3, max_files_per_band=1,
+        for b in range(3)
+    ]
+    return frames, 3, 1, [(3, 3)] * 3, list(range(9))
+
+
+@pytest.mark.parametrize("kind", ["text", "embedding"])
+def test_ingest_with_in_loop_compaction(spark, tmp_path, kind):
+    """X82 in the X80/X85 loop: compact_every folds the shared per-band
+    compaction into the loop's own writer thread. Admissions are
+    IDENTICAL to the uncompacted loop (compaction is layout-only); when
+    the cycle fires with a forcing threshold (embedding: batch id 2,
+    (2+1) % 3 == 0, max_files_per_band=1) band dirs are rewritten into
+    range-partitioned files (<= default target), not the 2-3 append
+    files each band accumulated; a final forced compaction reaches the
+    1-file floor; and the index content equals a one-shot rebuild over
+    the admitted corpus."""
+    import os
+
+    from nginx_analytics_spark.streaming.dedup_ingest import process_batch
+
+    m = _MODALITIES[kind]
+    frames, every, max_files, want_counts, want_ids = _compaction_case(spark, kind)
+    corpus_dir = str(tmp_path / "corpus")
+    index_path = str(tmp_path / "idx")
+    counts = [
+        process_batch(
+            spark, b, i, corpus_dir, index_path, modality=m,
+            compact_every=every, max_files_per_band=max_files,
         )
-    rows = similarity.read_srp_index_rows(spark, index_path)
-    assert {r.vec_id for r in rows.collect()} == set(range(9))
-    # the cycle fired on batch id 2 ((2+1) % 3 == 0): band dirs were
-    # rewritten into range-partitioned files (<= default target), not
-    # the 2-3 append files each band accumulated
-    for d in os.listdir(index_path):
-        if d.startswith("band_idx="):
-            files = [
+        for i, b in enumerate(frames)
+    ]
+    assert counts == want_counts  # same admissions as uncompacted
+    admitted = spark.read.parquet(corpus_dir)
+    assert sorted(r[m.id_col] for r in admitted.collect()) == want_ids
+    rows = banded_index_read(spark, index_path)
+    assert {r[m.id_col] for r in rows.collect()} == set(want_ids)
+
+    def band_files():
+        return {
+            d: [
                 f
                 for f in os.listdir(os.path.join(index_path, d))
                 if f.endswith(".parquet")
             ]
-            assert len(files) <= 2, (d, files)
+            for d in os.listdir(index_path)
+            if d.startswith("band_idx=")
+        }
+
+    for d, files in band_files().items():
+        assert len(files) <= 2, (d, files)
+    # force a final full compaction to the 1-file floor to check the
+    # invariant end-state
+    banded_index_compact(spark, index_path, max_files_per_band=1)
+    for d, files in band_files().items():
+        assert len(files) == 1, d
+
+    rebuilt = str(tmp_path / "rebuilt")
+    m.write_index(admitted, rebuilt, m.id_col, m.payload_col, **m.sign)
+    key = lambda p: sorted(  # noqa: E731
+        (r[m.id_col], r.band_idx, r.band_hash)
+        for r in spark.read.parquet(p).collect()
+    )
+    assert key(index_path) == key(rebuilt)
+
+
+def _job_descriptions(spark) -> dict[int, str]:
+    """jobId -> description for every job the status store retains,
+    read the way perfbench/tracing.py reads it."""
+    import json
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jvm = spark._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala, "MODULE$"))
+    jobs = json.loads(
+        mapper.writeValueAsString(sc._jsc.sc().statusStore().jobsList(None))
+    )
+    return {j["jobId"]: j.get("description") or "" for j in jobs}
+
+
+@pytest.mark.parametrize("kind", ["text", "embedding"])
+def test_ingest_phase_labels(spark, tmp_path, kind):
+    """perfbench's corpus_dedup splits every batch's wall by these job
+    descriptions (its DEDUP_PHASES): one micro-batch that probes an
+    existing index and admits a row must fire each phase, under the
+    modality's label — X80 for text, X85 for embeddings."""
+    from nginx_analytics_spark.streaming.dedup_ingest import process_batch
+
+    m = _MODALITIES[kind]
+    rows = _two_distant_rows(spark, kind)
+    corpus, idx = str(tmp_path / "corpus"), str(tmp_path / "idx")
+    seed = rows.filter(f"{m.id_col} = 1")
+    seed.write.parquet(corpus)
+    m.write_index(seed, idx, m.id_col, m.payload_col, **m.sign)
+
+    start = max(_job_descriptions(spark), default=-1)
+    batch = rows.filter(f"{m.id_col} = 2")
+    assert process_batch(spark, batch, 1, corpus, idx, modality=m) == (1, 1)
+    seen = {d for j, d in _job_descriptions(spark).items() if j > start}
+    first = "dedup+shingle batch" if kind == "text" else "dedup batch"
+    phases = (first, "sign batch", "probe at-rest index",
+              "novel materialize", "corpus write", "index append")
+    missing = {f"{m.label}: {p}" for p in phases} - seen
+    assert not missing, (missing, seen)
 
 
 def test_compact_corpus_plain_layout(spark, tmp_path):
@@ -1147,7 +1150,6 @@ def test_compact_corpus_refuses_against_live_lock(spark, tmp_path):
 
     import pytest
 
-    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.operators.index_fs import LockHeldError
     from nginx_analytics_spark.streaming.dedup_ingest import (
         compact_corpus,
@@ -1160,7 +1162,7 @@ def test_compact_corpus_refuses_against_live_lock(spark, tmp_path):
         "doc_id long, text string",
     )
     process_batch(spark, docs, 0, corpus, idx)
-    fd = os.open(dedup._lsh_compact_lock_path(idx), os.O_CREAT | os.O_RDWR)
+    fd = os.open(writer_lock_path(idx), os.O_CREAT | os.O_RDWR)
     fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
     try:
         with pytest.raises(LockHeldError, match="ingest loop"):
@@ -1319,9 +1321,7 @@ def test_stop_compact_resume_embedding_lifecycle(spark, tmp_path):
         compact_corpus,
         read_corpus,
     )
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        start_embedding_dedup_ingest,
-    )
+    from nginx_analytics_spark.streaming.dedup_ingest import start_dedup_ingest
 
     v = _unit_vecs(29, 4)
     phase_a = [
@@ -1359,8 +1359,8 @@ def test_stop_compact_resume_embedding_lifecycle(spark, tmp_path):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(str(src))
             )
-            q = start_embedding_dedup_ingest(
-                stream, corpus, idx, str(root / "ckpt"),
+            q = start_dedup_ingest(
+                stream, corpus, idx, str(root / "ckpt"), modality=EMBEDDING,
                 trigger={"availableNow": True}, exactly_once=True,
                 on_batch=lambda bid, n_in, n_novel, lw: seen.append(
                     (n_in, n_novel)
@@ -1464,9 +1464,7 @@ def test_reconcile_index_embedding_modality(spark, tmp_path):
     repair signs missing vectors under the sidecar's own plane/band
     parameters (64-plane loop default)."""
     from nginx_analytics_spark.streaming.dedup_ingest import reconcile_index
-    from nginx_analytics_spark.streaming.embedding_ingest import (
-        process_embedding_batch,
-    )
+    from nginx_analytics_spark.streaming.dedup_ingest import process_batch
 
     corpus, idx = str(tmp_path / "corpus"), str(tmp_path / "idx")
     v = _unit_vecs(47, 3)
@@ -1474,7 +1472,7 @@ def test_reconcile_index_embedding_modality(spark, tmp_path):
         [(1, [float(x) for x in v[0]]), (2, [float(x) for x in v[1]])],
         "vec_id long, embedding array<float>",
     )
-    process_embedding_batch(spark, batch, 0, corpus, idx)
+    process_batch(spark, batch, 0, corpus, idx, modality=EMBEDDING)
     out = reconcile_index(spark, corpus, idx)
     assert out["kind"] == "srp" and out["missing_from_index"] == 0
 
@@ -1600,7 +1598,7 @@ def test_compact_index_prune_to_corpus_reclaims_orphans(spark, tmp_path):
     assert before["index_orphans"] > 0
     assert before["missing_from_index"] == 0
     # forced full rewrite with pruning: every band rewritten, orphans gone
-    stats = similarity.compact_srp_index(
+    stats = banded_index_compact(
         spark, idx, max_files_per_band=0,
         prune_ids=survivors.select("vec_id"),
     )
@@ -1612,14 +1610,14 @@ def test_compact_index_prune_to_corpus_reclaims_orphans(spark, tmp_path):
     # band keys => identical probe behavior by construction
     ctl = str(tmp_path / "ctl")
     similarity.write_srp_index(survivors, ctl)
-    a = {tuple(r) for r in similarity.read_srp_index_rows(spark, idx).collect()}
-    b = {tuple(r) for r in similarity.read_srp_index_rows(spark, ctl).collect()}
+    a = {tuple(r) for r in banded_index_read(spark, idx).collect()}
+    b = {tuple(r) for r in banded_index_read(spark, ctl).collect()}
     assert a == b
     # guard: prune_ids must be one column
     import pytest
 
     with pytest.raises(ValueError, match="ONE-column"):
-        similarity.compact_srp_index(
+        banded_index_compact(
             spark, idx, max_files_per_band=0,
             prune_ids=survivors.select("vec_id", "embedding"),
         )
@@ -1642,19 +1640,19 @@ def test_compact_index_prune_partial_pass_prunes_only_rewritten(
     dedup.write_lsh_index(docs, idx)
     # healthy: 1 file per band; nothing exceeds the default threshold
     survivors = docs.filter("doc_id % 2 = 0")
-    stats = dedup.compact_lsh_index(
+    stats = banded_index_compact(
         spark, idx, prune_ids=survivors.select("doc_id")
     )
     assert stats["bands_compacted"] == 0  # nothing rewritten...
-    rows = dedup.read_lsh_index_rows(spark, idx)
+    rows = banded_index_read(spark, idx)
     assert rows.filter("doc_id % 2 = 1").count() > 0  # ...nothing pruned
     # force the rewrite: orphans now gone from every band
-    stats = dedup.compact_lsh_index(
+    stats = banded_index_compact(
         spark, idx, max_files_per_band=0,
         prune_ids=survivors.select("doc_id"),
     )
     assert stats["bands_compacted"] == stats["bands_seen"] > 0
-    rows = dedup.read_lsh_index_rows(spark, idx)
+    rows = banded_index_read(spark, idx)
     assert rows.filter("doc_id % 2 = 1").count() == 0
     assert rows.filter("doc_id % 2 = 0").count() > 0
 
