@@ -28,13 +28,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nginx_analytics_spark.functions.rounding import half_up
 from nginx_analytics_spark.operators.index_fs import (
-    banded_index_read,
+    banded_index_probe,
     banded_index_write,
     check_sidecar,
     read_sidecar,
@@ -110,6 +113,86 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(F.split(t, " ")), build), 1)
 
 
+def _cand_threshold(threshold: float, round_to: int | None) -> float:
+    """The candidate-stage threshold. An output rounded half-up to
+    ``round_to`` places admits a true J down to ``t - 0.5·10^-round_to``,
+    so every candidate bound (prefix length, length and positional
+    filters) is cut there; the output filter still applies ``t``."""
+    t_cand = float(threshold)
+    if round_to is not None:
+        t_cand -= 0.5 * 10.0 ** (-round_to)
+    return t_cand
+
+
+def _length_bound(n_a: Column, n_b: Column, t_cand: float) -> Column:
+    """The Jaccard length bound on two set sizes: J >= t needs
+    ``t·max(|A|,|B|) <= min(|A|,|B|)``, since J <= min/max. It is a
+    necessary condition of the output filter, so applying it anywhere
+    before verify changes no result; the 1e-9 absorbs float slop."""
+    return (
+        F.least(n_a, n_b).cast("double")
+        >= F.lit(t_cand) * F.greatest(n_a, n_b).cast("double")
+        - F.lit(1e-9)
+    )
+
+
+def _positional_bound(
+    n_a: Column, pos_a: Column, n_b: Column, pos_b: Column, t_cand: float
+) -> Column:
+    """PPJoin positional filter (Xiao et al., WWW 2008) at a shared gram
+    sitting at ``pos_a``/``pos_b`` of the shared order. J >= t_cand
+    needs overlap >= alpha = ceil(t_cand·(|A|+|B|)/(1+t_cand)), and
+    every OTHER shared gram sorts at or after this one only when it is
+    the pair's rarest shared gram — there the overlap is bounded by
+    1 + min(remaining tokens). Filtering every generated occurrence by
+    that bound is exact: the rarest-shared-gram occurrence always
+    satisfies it (overlap itself is >= alpha there), so a qualifying
+    pair survives into the distinct; occurrences pruned are duplicates
+    or sub-alpha pairs verify would reject anyway. Measured at sf0.1:
+    candidate pairs 193k -> 69k (x2.8), wall x1.45, output identical.
+    Float slack inside ceil mirrors :func:`_prefix_length`: an ulp-high
+    product cannot raise alpha."""
+    alpha = F.ceil(
+        F.lit(t_cand) / (1.0 + t_cand) * (n_a + n_b).cast("double")
+        - F.lit(1e-9)
+    )
+    return F.lit(1) + F.least(n_a - pos_a, n_b - pos_b) >= alpha
+
+
+def _prefix_length(t_cand: float) -> Column:
+    """PPJoin prefix length of a set of size ``n``: ``n - ceil(t·n) + 1``,
+    with the float slack :func:`jaccard_pairs_prefix` explains (it can
+    only lengthen a prefix, never lose recall)."""
+    minreq = F.ceil(F.lit(t_cand) * F.col("n") - F.lit(1e-9))
+    return F.col("n") - minreq + F.lit(1)
+
+
+def _pair_cond(
+    keys: list[str],
+    id_col: str | None,
+    t_cand: float | None,
+    positional: bool = False,
+) -> Column:
+    """Condition of a pair join over frames aliased ``a`` and ``b``:
+    equal ``keys``; ``a.id < b.id`` when ``id_col`` is given (a
+    self-join emits each pair once; a cross join passes None); the
+    length bound on ``n`` when ``t_cand`` is given; the positional
+    bound on (``n``, ``pos``) when ``positional``."""
+    parts = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if id_col is not None:
+        parts.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    if t_cand is not None:
+        parts.append(_length_bound(F.col("a.n"), F.col("b.n"), t_cand))
+    if positional:
+        parts.append(
+            _positional_bound(
+                F.col("a.n"), F.col("a.pos"), F.col("b.n"), F.col("b.pos"),
+                t_cand,
+            )
+        )
+    return functools.reduce(operator.and_, parts)
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str,
@@ -120,58 +203,27 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded-LSH candidate pairs: ids sharing ≥1 band of their signature.
 
-    posexplode the signature into (band_idx, band_hash) keys and self-join on
-    them — the standard near-linear LSH plan. Returns distinct (id_a, id_b)
-    with id_a < id_b. Only (id, band) rides the shuffle.
+    Self-join the :func:`banded_signature_keys` rows on (band_idx,
+    band_hash) — the standard near-linear LSH plan. Returns distinct
+    (id_a, id_b) with id_a < id_b. Only (id, band) rides the shuffle.
 
     When ``sigs`` carries the shingle-set size ``n``
     (:func:`signatures_from_shingles` emits it) and ``threshold`` is
-    given, the Jaccard length bound — J >= t requires
-    t·max(|A|,|B|) <= min(|A|,|B|), widened to the half-up rounding band
-    like every exact path — rides the self-join condition (r16): a
+    given, the Jaccard length bound, widened to the half-up rounding
+    band like every exact path, rides the self-join condition (r16): a
     mismatched-size collision dies in the join instead of surviving to
     the distinct and the two shingle-array verify joins. Necessary
     condition of the verify filter ⇒ the final pair set is unchanged.
     """
-    n = rows_per_band
-    extra = (
-        ["n"]
+    t_cand = (
+        _cand_threshold(threshold, round_to)
         if threshold is not None and threshold > 0.0 and "n" in sigs.columns
-        else []
+        else None
     )
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                # band b = hash of signature rows [b*n, (b+1)*n)
-                F.sequence(F.lit(0), (F.size(sig_col) / n).cast("int") - 1),
-                lambda b: F.xxhash64(
-                    F.concat_ws(
-                        ",", F.slice(F.col(sig_col), b * n + 1, n).cast("array<string>")
-                    )
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
-        *extra,
-    )
+    banded = banded_signature_keys(sigs, id_col, sig_col, rows_per_band)
     a, b = banded.alias("a"), banded.alias("b")
-    cond = (
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    )
-    if extra:
-        t_cand = float(threshold)
-        if round_to is not None:
-            t_cand -= 0.5 * 10.0 ** (-round_to)
-        cond = cond & (
-            F.least(F.col("a.n"), F.col("b.n")).cast("double")
-            >= F.lit(t_cand)
-            * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-            - F.lit(1e-9)  # same float-slop guard as _relational_jaccard
-        )
     return (
-        a.join(b, cond)
+        a.join(b, _pair_cond(["band_idx", "band_hash"], id_col, t_cand))
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -290,33 +342,43 @@ def minhash_dedup_pairs(
         ).localCheckpoint(eager=True)  # two consumers below
         lsh_verified = cands.join(net, ["id_a", "id_b"])
         return lsh_verified.unionByName(net).distinct()
-    j = jaccard(F.col("sa.shingles"), F.col("sb.shingles"))
+    # broadcast_verify (batch-shaped callers only, the X80 within-batch
+    # pass, r17): docs is ONE micro-batch, so the SHINGLE frame is
+    # batch-bounded and both verify joins become broadcast builds of IT
+    # — zero exchanges instead of two shuffles per batch, with the
+    # candidate pairs always on the stream side (never broadcast: even
+    # within a batch their count is quadratic in collisions). NOT the
+    # corpus-wide default, where nothing here is small.
+    hint = F.broadcast if broadcast_verify else (lambda f: f)
+    return _verify_pairs(
+        cands, hint(sh.alias("sa")), hint(sh.alias("sb")), id_col,
+        "shingles", threshold, round_to,
+    )
+
+
+def _verify_pairs(
+    cands: DataFrame,
+    sa: DataFrame,
+    sb: DataFrame,
+    id_col: str,
+    sh_col: str,
+    threshold: float,
+    round_to: int | None,
+    ids: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs ``ids`` against
+    (id, shingle-array) frames aliased ``sa`` and ``sb`` (a batch-sized
+    side arrives wrapped in ``F.broadcast``): the per-pair
+    :func:`jaccard` of the banded and stop-gram paths. Emits
+    (ids, jaccard) with the (rounded) Jaccard >= threshold."""
+    ida, idb = ids
+    j = jaccard(F.col(f"sa.{sh_col}"), F.col(f"sb.{sh_col}"))
     if round_to is not None:
         j = half_up(j, round_to)
-    if broadcast_verify:
-        # Batch-shaped callers only (the X80 within-batch pass, r17):
-        # docs is ONE micro-batch, so the SHINGLE frame is batch-bounded
-        # and both verify joins become broadcast builds of IT — zero
-        # exchanges instead of two shuffles per batch, with the
-        # candidate pairs always on the stream side (never broadcast:
-        # even within a batch their count is quadratic in collisions).
-        # NOT the corpus-wide default, where nothing here is small.
-        return (
-            cands.join(
-                F.broadcast(sh.alias("sa")),
-                cands.id_a == F.col(f"sa.{id_col}"),
-            )
-            .join(
-                F.broadcast(sh.alias("sb")),
-                cands.id_b == F.col(f"sb.{id_col}"),
-            )
-            .select("id_a", "id_b", j.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
     return (
-        cands.join(sh.alias("sa"), cands.id_a == F.col(f"sa.{id_col}"))
-        .join(sh.alias("sb"), cands.id_b == F.col(f"sb.{id_col}"))
-        .select("id_a", "id_b", j.alias("jaccard"))
+        cands.join(sa, cands[ida] == F.col(f"sa.{id_col}"))
+        .join(sb, cands[idb] == F.col(f"sb.{id_col}"))
+        .select(ida, idb, j.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -327,56 +389,61 @@ def _relational_jaccard(
     sh_col: str,
     threshold: float,
     round_to: int | None,
+    sh_old: DataFrame | None = None,
 ) -> DataFrame:
     """Count-based exact Jaccard over a (id, distinct-shingle-array) frame:
     explode, self-join on shingle, count co-occurrences, derive the union
     arithmetically (|A∪B| = |A| + |B| - |A∩B|). All codegen'd hash
     operators with map-side combine — no per-pair array intersections.
-    Emits exactly the pairs with (rounded) Jaccard >= threshold.
+    Emits exactly the pairs (id_a < id_b) with (rounded) Jaccard >=
+    threshold; recall is 1 by construction, since any pair with Jaccard
+    > 0 shares a shingle.
 
-    The self-join carries each side's set size and applies the length
-    filter (J >= t needs ``t·max(|A|,|B|) <= min(|A|,|B|)`` — since
-    ``J <= min/max``) INSIDE the join condition, widened to the half-up
-    rounding band exactly like the prefix path's candidate threshold:
+    With ``sh_old`` it is the cross-set form: pairs new (``sh``) × old
+    (``sh_old``), emitted as (new_id, old_id, jaccard). Only the pair
+    condition and the output names change; the old side's size table
+    is corpus-sized, so it is not broadcast.
+
+    The gram join carries each side's set size and applies the length
+    bound INSIDE the join condition, widened to the half-up rounding
+    band exactly like the prefix path's candidate threshold:
     mismatched-length co-occurrences are dropped before they enter the
-    quadratic per-pair count aggregation (+8 bytes/row shuffled, measured
-    ×1.4 on the whole operator at sf0.1). The final rounded-Jaccard
-    filter is unchanged — the length filter is a necessary condition of
-    it, so the output is identical by construction."""
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
-    sizes = sh.select(F.col(id_col), F.size(sh_col).alias("n"))
-    grams = sh.select(F.col(id_col), F.size(sh_col).alias("n"), F.explode(sh_col).alias("g"))
-    a, b = grams.alias("a"), grams.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & (
-                F.least(F.col("a.n"), F.col("b.n")).cast("double")
-                >= F.lit(t_cand)
-                * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-                - F.lit(1e-9)
-            ),
+    quadratic per-pair count aggregation (+8 bytes/row shuffled,
+    measured ×1.4 on the whole operator at sf0.1). The final
+    rounded-Jaccard filter is unchanged — the length filter is a
+    necessary condition of it, so the output is identical by
+    construction."""
+    t_cand = _cand_threshold(threshold, round_to)
+    cross = sh_old is not None
+    old = sh_old if cross else sh
+    ida, idb = ("new_id", "old_id") if cross else ("id_a", "id_b")
+
+    def grams(s: DataFrame) -> DataFrame:
+        return s.select(
+            F.col(id_col), F.size(sh_col).alias("n"), F.explode(sh_col).alias("g")
         )
+
+    ga = grams(sh)
+    gb = grams(old) if cross else ga
+    inter = (
+        ga.alias("a")
+        .join(gb.alias("b"), _pair_cond(["g"], None if cross else id_col, t_cand))
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col(f"a.{id_col}").alias(ida), F.col(f"b.{id_col}").alias(idb)
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
+    na = sh.select(F.col(id_col).alias(ida), F.size(sh_col).alias("n_a"))
+    nb = old.select(F.col(id_col).alias(idb), F.size(sh_col).alias("n_b"))
     j = F.col("n_inter").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("n_inter")
     )
     if round_to is not None:
         j = half_up(j, round_to)
     return (
-        inter.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .select("id_a", "id_b", j.alias("jaccard"))
+        inter.join(F.broadcast(na), ida)
+        .join(nb if cross else F.broadcast(nb), idb)
+        .select(ida, idb, j.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -519,82 +586,106 @@ def jaccard_pairs_prefix_sets(
     callers with non-text sets can drive the prefix plan on exact
     fixtures (the knife-edge and stop-shingle regressions construct
     shingle arrays, not prose). Semantics documented on the wrapper."""
+    _check_prefix_args("jaccard_pairs_prefix_sets", threshold, max_df)
+    return _prefix_pairs(
+        [sh], id_col, sh_col, threshold, round_to, max_df, max_heavy
+    )
+
+
+def _check_prefix_args(who: str, threshold: float, max_df: int | None) -> None:
     if threshold <= 0.0:
         raise ValueError(
-            "prefix filtering needs threshold > 0 (at t=0 the prefix "
-            "is the whole set — use exact_jaccard_pairs)"
+            f"{who}: prefix filtering needs threshold > 0 (at t=0 the "
+            "prefix is the whole set — use the exhaustive co-occurrence "
+            "plan)"
         )
     if max_df is not None and max_df < 1:
-        raise ValueError("max_df caps document frequency; must be >= 1")
-    # Candidate-stage threshold: when the output rounds, a true J in
-    # the half-up band [t - 0.5*10^-r, t) still clears the OUTPUT
-    # filter, so candidates must be generated down there too.
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
+        raise ValueError(
+            f"{who}: max_df caps document frequency; must be >= 1"
+        )
+
+
+def _prefix_rows(
+    shs: list[DataFrame], id_col: str, sh_col: str, t_cand: float
+) -> DataFrame:
+    """Each set's PPJoin prefix under one shared total order (df
+    ascending, then gram): (id, g, n, df, pos) rows, with ``side``
+    ("new"/"old") first when ``shs`` holds two frames. One df count and
+    one ordering window over all rows."""
+    cross = len(shs) == 2
+    side = ["side"] if cross else []
+
+    def grams_of(sh: DataFrame, tag: str) -> DataFrame:
+        return sh.select(
+            F.col(id_col).alias("id"),
+            *([F.lit(tag).alias("side")] if cross else []),
+            F.size(sh_col).alias("n"),
+            F.explode(sh_col).alias("g"),
+        )
+
+    grams = grams_of(shs[0], "new")
+    if cross:
+        grams = grams.unionByName(grams_of(shs[1], "old"))
     # n rides along from the array size — one window pass (row_number),
     # not two (a count-over-partition would re-aggregate what the
-    # pre-explode array already knows)
-    grams = sh.select(
-        F.col(id_col).alias("id"),
-        F.size(sh_col).alias("n"),
-        F.explode(sh_col).alias("g"),
-    )
+    # pre-explode array already knows). In the cross form the df frame
+    # counts the UNION: the shared total order both sides' prefixes are
+    # cut under (a per-side df would break the rarest-shared-shingle
+    # argument across the join)
     df_counts = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("g").asc())
-    ordered = grams.join(df_counts, "g").select(
-        "id", "g", "n", "df", F.row_number().over(w).alias("pos")
+    w = Window.partitionBy(*side, "id").orderBy(
+        F.col("df").asc(), F.col("g").asc()
     )
-    minreq = F.ceil(F.lit(t_cand) * F.col("n") - F.lit(1e-9))
-    prefix = ordered.filter(
-        F.col("pos") <= F.col("n") - minreq + F.lit(1)
-    ).select("id", "g", "n", "df", "pos")
+    ordered = grams.join(df_counts, "g").select(
+        *side, "id", "g", "n", "df", F.row_number().over(w).alias("pos")
+    )
+    return ordered.filter(F.col("pos") <= _prefix_length(t_cand)).select(
+        *side, "id", "g", "n", "df", "pos"
+    )
 
-    def pair_join(p: DataFrame) -> DataFrame:
-        a, b = p.alias("a"), p.alias("b")
-        # PPJoin positional filter (Xiao et al., WWW 2008): J >= t_cand
-        # needs overlap >= alpha = ceil(t_cand*(|A|+|B|)/(1+t_cand)),
-        # and at a shared gram sitting at pos_a/pos_b of the df order,
-        # every OTHER shared gram sorts at or after it only when this
-        # is the pair's rarest shared gram — at that occurrence the
-        # overlap is bounded by 1 + min(remaining tokens). Filtering
-        # every generated occurrence by that bound is exact: the
-        # rarest-shared-gram occurrence always satisfies it (overlap
-        # itself is >= alpha there), so a qualifying pair survives into
-        # distinct() — occurrences pruned here are duplicates or
-        # sub-alpha pairs the verify stage would reject anyway.
-        # Measured at sf0.1: candidate pairs 193k -> 69k (x2.8), wall
-        # x1.45, output identical. Float slack inside ceil mirrors
-        # minreq: an ulp-high product cannot raise alpha.
-        alpha = F.ceil(
-            F.lit(t_cand)
-            / (1.0 + t_cand)
-            * (F.col("a.n") + F.col("b.n")).cast("double")
-            - F.lit(1e-9)
+
+def _prefix_pairs(
+    shs: list[DataFrame],
+    id_col: str,
+    sh_col: str,
+    threshold: float,
+    round_to: int | None,
+    max_df: int | None,
+    max_heavy: int | None,
+) -> DataFrame:
+    """The PPJoin body behind :func:`jaccard_pairs_prefix_sets` (one
+    (id, set) frame: pairs id_a < id_b) and
+    :func:`jaccard_pairs_prefix_cross` (frames [new, old]: pairs
+    new × old, emitted as new_id, old_id): the :func:`_prefix_rows`
+    cut, the positional pair join, the ``max_df`` heavy-id routing and
+    the ``array_intersect`` verify. Proofs are on
+    :func:`jaccard_pairs_prefix`."""
+    cross = len(shs) == 2
+    t_cand = _cand_threshold(threshold, round_to)
+    prefix = _prefix_rows(shs, id_col, sh_col, t_cand)
+    ida, idb = ("new_id", "old_id") if cross else ("id_a", "id_b")
+
+    def both(f):
+        """``f`` of each side; a self-join uses one frame for both."""
+        if not cross:
+            return (f(prefix),) * 2
+        return tuple(
+            f(prefix.filter(F.col("side") == tag).select(
+                "id", "g", "n", "df", "pos"
+            ))
+            for tag in ("new", "old")
         )
-        return a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.id") < F.col("b.id"))
-            # length filter: J >= t_cand needs t_cand * max(|A|,|B|) <= min
-            & (
-                F.least(F.col("a.n"), F.col("b.n")).cast("double")
-                >= F.lit(t_cand)
-                * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-                - F.lit(1e-9)
-            )
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("a.n") - F.col("a.pos"),
-                    F.col("b.n") - F.col("b.pos"),
-                )
-                >= alpha
-            ),
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+
+    def pairs(pa: DataFrame, pb: DataFrame, keys: list[str]) -> DataFrame:
+        # gram rows (keys ["g"]) carry pos for the positional bound;
+        # heavy-id rows (no keys) carry only (id, n)
+        return pa.alias("a").join(
+            pb.alias("b"),
+            _pair_cond(keys, None if cross else "id", t_cand, bool(keys)),
+        ).select(F.col("a.id").alias(ida), F.col("b.id").alias(idb))
 
     if max_df is None:
-        cands = pair_join(prefix).distinct()
+        cands = pairs(*both(lambda p: p), ["g"]).distinct()
     else:
         # Stop-shingle routing. Light: uncapped prefix occurrences of
         # ALL docs — finds every pair whose rarest shared shingle is
@@ -604,22 +695,22 @@ def jaccard_pairs_prefix_sets(
         # last; reaching one means the doc ran out of uncapped
         # shingles before its prefix did), and a pair whose EVERY
         # shared shingle is capped has BOTH docs in that set H — so H
-        # is routed to the verify stage directly, one C(|H|,2)
-        # length-filtered product instead of the Σ_g df_prefix(g)²
-        # join mass the capped shingles would otherwise generate
-        # (the win factor is ~ s_p²/T for s_p capped-prefix tokens
-        # per doc over T capped types — largest when H shares a few
-        # big identical blocks, the crawl-boilerplate shape). Union
-        # is exact; choose max_df from the df frame so H is the
-        # genuinely boilerplate-dominated tail, since the direct
-        # product pays |H|² candidates for exactness.
-        light = prefix.filter(F.col("df") <= max_df)
-        h_ids = (
-            prefix.filter(F.col("df") > max_df)
-            .select("id", "n")
-            .distinct()
-        )
-        if max_heavy is not None:
+        # is routed to the verify stage directly, one length-filtered
+        # product instead of the Σ_g df_prefix(g)² join mass the capped
+        # shingles would otherwise generate (the win factor is ~ s_p²/T
+        # for s_p capped-prefix tokens per doc over T capped types —
+        # largest when H shares a few big identical blocks, the
+        # crawl-boilerplate shape). Union is exact; choose max_df from
+        # the df frame so H is the genuinely boilerplate-dominated
+        # tail, since the direct product pays |H|² candidates for
+        # exactness.
+        who = "jaccard_pairs_prefix_cross" if cross else "jaccard_pairs_prefix"
+        product = "|H_new|·|H_old|" if cross else "C(|H|,2)"
+
+        def heavy_ids(p: DataFrame) -> DataFrame:
+            h = p.filter(F.col("df") > max_df).select("id", "n").distinct()
+            if max_heavy is None:
+                return h
             # Loud guard against the misconfiguration MEASURED in
             # SCALING.md r15: a cap below the corpus's ROUTINE df puts
             # nearly every doc in H and the direct product goes
@@ -627,15 +718,15 @@ def jaccard_pairs_prefix_sets(
             # 12.5M candidates, ×12 wall). Lazily evaluated per row
             # against the broadcast 1-row count — the happy path costs
             # one comparison (the quality_weighted_sample pattern).
-            h_tot = h_ids.agg(F.count(F.lit(1)).alias("__h"))
+            h_tot = h.agg(F.count(F.lit(1)).alias("__h"))
             checked_n = F.when(
                 F.col("__h") > max_heavy,
                 F.raise_error(
                     F.format_string(
-                        "jaccard_pairs_prefix: max_df=%s routes %s docs "
+                        f"{who}: max_df=%s routes %s docs "
                         "to the direct-verify product (max_heavy="
                         f"{max_heavy}) — the cap sits at or below the "
-                        "corpus's routine shingle df, so C(|H|,2) is "
+                        f"corpus's routine shingle df, so {product} is "
                         "quadratic in the corpus, not in the "
                         "boilerplate-dominated tail. Read the df frame "
                         "and raise max_df (or raise max_heavy "
@@ -645,34 +736,42 @@ def jaccard_pairs_prefix_sets(
                     )
                 ).cast("int"),
             ).otherwise(F.col("n"))
-            h_ids = h_ids.crossJoin(F.broadcast(h_tot)).select(
+            return h.crossJoin(F.broadcast(h_tot)).select(
                 "id", checked_n.alias("n")
             )
-        ha, hb = h_ids.alias("a"), h_ids.alias("b")
-        heavy_pairs = ha.join(
-            hb,
-            (F.col("a.id") < F.col("b.id"))
-            & (
-                F.least(F.col("a.n"), F.col("b.n")).cast("double")
-                >= F.lit(t_cand)
-                * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-                - F.lit(1e-9)
-            ),
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        cands = pair_join(light).unionByName(heavy_pairs).distinct()
-    sha = sh.select(F.col(id_col).alias("id_a"), F.col(sh_col).alias("sh_a"))
-    shb = sh.select(F.col(id_col).alias("id_b"), F.col(sh_col).alias("sh_b"))
+
+        light = pairs(*both(lambda p: p.filter(F.col("df") <= max_df)), ["g"])
+        cands = light.unionByName(pairs(*both(heavy_ids), [])).distinct()
+    sha = shs[0].select(F.col(id_col).alias(ida), F.col(sh_col).alias("sh_a"))
+    shb = shs[-1].select(F.col(id_col).alias(idb), F.col(sh_col).alias("sh_b"))
+    return _intersect_verify(cands, sha, shb, (ida, idb), threshold, round_to)
+
+
+def _intersect_verify(
+    cands: DataFrame,
+    sha: DataFrame,
+    shb: DataFrame,
+    ids: tuple[str, str],
+    threshold: float,
+    round_to: int | None,
+    pre: Column | None = None,
+) -> DataFrame:
+    """Exact verify of each candidate pair by ONE ``array_intersect``:
+    ``sha``/``shb`` are (id, sh_a)/(id, sh_b) frames keyed by the two
+    ``ids`` names; the union is derived arithmetically. ``pre`` is an
+    optional filter applied after the joins, before the intersect."""
+    ida, idb = ids
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     j = inter.cast("double") / (
         F.size("sh_a") + F.size("sh_b") - inter
     ).cast("double")
     if round_to is not None:
         j = half_up(j, round_to)
-    return (
-        cands.join(sha, "id_a")
-        .join(shb, "id_b")
-        .select("id_a", "id_b", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    joined = cands.join(sha, ida).join(shb, idb)
+    if pre is not None:
+        joined = joined.filter(pre)
+    return joined.select(ida, idb, j.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -691,10 +790,10 @@ def jaccard_pairs_prefix_cross(
     prefix filtering — the incremental-direction twin of
     :func:`jaccard_pairs_prefix`, completing the incremental dedup
     trilogy: :func:`incremental_near_dups` is the probabilistic banded
-    probe (recall = banding odds), :func:`_relational_jaccard_cross`
-    the exhaustive oracle twin (Σ df_new·df_old work), and this the
-    deterministic exact-threshold scale path (recall 1 by the prefix
-    theorem, candidate work confined to the rarest shingles).
+    probe (recall = banding odds), :func:`_relational_jaccard` with
+    ``sh_old`` the exhaustive oracle twin (Σ df_new·df_old work), and
+    this the deterministic exact-threshold scale path (recall 1 by the
+    prefix theorem, candidate work confined to the rarest shingles).
 
     The theorem needs ONE total order shared by both sides, so
     document frequency is counted over the UNION of the two shingle
@@ -718,139 +817,15 @@ def jaccard_pairs_prefix_cross(
     max_df on a skewed fixture) in tests/test_dataops.py; the
     registered query hash-matches the brute-force DuckDB cross
     oracle."""
-    if threshold <= 0.0:
-        raise ValueError(
-            "prefix filtering needs threshold > 0 (at t=0 the prefix "
-            "is the whole set — use the exhaustive cross plan)"
-        )
-    if max_df is not None and max_df < 1:
-        raise ValueError("max_df caps document frequency; must be >= 1")
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
-    sh_new = new_docs.select(
-        F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")
-    ).localCheckpoint(eager=True)
-    sh_old = old_docs.select(
-        F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")
-    ).localCheckpoint(eager=True)
-
-    def grams_of(sh: DataFrame, side: str) -> DataFrame:
-        return sh.select(
-            F.col(id_col).alias("id"),
-            F.lit(side).alias("side"),
-            F.size("sh").alias("n"),
-            F.explode("sh").alias("g"),
-        )
-
-    grams = grams_of(sh_new, "new").unionByName(grams_of(sh_old, "old"))
-    # ONE df frame over the union — the shared total order both sides'
-    # prefixes are cut under (a per-side df would break the
-    # rarest-shared-shingle argument across the join)
-    df_counts = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("side", "id").orderBy(
-        F.col("df").asc(), F.col("g").asc()
-    )
-    ordered = grams.join(df_counts, "g").select(
-        "side", "id", "g", "n", "df", F.row_number().over(w).alias("pos")
-    )
-    minreq = F.ceil(F.lit(t_cand) * F.col("n") - F.lit(1e-9))
-    prefix = ordered.filter(
-        F.col("pos") <= F.col("n") - minreq + F.lit(1)
-    ).select("side", "id", "g", "n", "df", "pos")
-
-    def cross_join(pn: DataFrame, po: DataFrame) -> DataFrame:
-        a, b = pn.alias("a"), po.alias("b")
-        # PPJoin positional filter — same exactness argument as the
-        # self-join twin (see jaccard_pairs_prefix_sets): the pair's
-        # rarest shared gram occurrence always passes the bound, so
-        # filtering per-occurrence before distinct() loses nothing.
-        alpha = F.ceil(
-            F.lit(t_cand)
-            / (1.0 + t_cand)
-            * (F.col("a.n") + F.col("b.n")).cast("double")
-            - F.lit(1e-9)
-        )
-        return a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (
-                F.least(F.col("a.n"), F.col("b.n")).cast("double")
-                >= F.lit(t_cand)
-                * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-                - F.lit(1e-9)
-            )
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("a.n") - F.col("a.pos"),
-                    F.col("b.n") - F.col("b.pos"),
-                )
-                >= alpha
-            ),
-        ).select(F.col("a.id").alias("new_id"), F.col("b.id").alias("old_id"))
-
-    p_new = prefix.filter(F.col("side") == "new").select(
-        "id", "g", "n", "df", "pos"
-    )
-    p_old = prefix.filter(F.col("side") == "old").select(
-        "id", "g", "n", "df", "pos"
-    )
-    if max_df is None:
-        cands = cross_join(p_new, p_old).distinct()
-    else:
-        light = cross_join(
-            p_new.filter(F.col("df") <= max_df),
-            p_old.filter(F.col("df") <= max_df),
-        )
-
-        def heavy_ids(p: DataFrame) -> DataFrame:
-            h = p.filter(F.col("df") > max_df).select("id", "n").distinct()
-            if max_heavy is None:
-                return h
-            h_tot = h.agg(F.count(F.lit(1)).alias("__h"))
-            checked_n = F.when(
-                F.col("__h") > max_heavy,
-                F.raise_error(
-                    F.format_string(
-                        "jaccard_pairs_prefix_cross: max_df=%s routes "
-                        "%s docs to the direct-verify product "
-                        f"(max_heavy={max_heavy}) — the cap sits at or "
-                        "below the corpus's routine shingle df; read "
-                        "the df frame and raise max_df (or max_heavy "
-                        "knowingly).",
-                        F.lit(str(max_df)),
-                        F.col("__h"),
-                    )
-                ).cast("int"),
-            ).otherwise(F.col("n"))
-            return h.crossJoin(F.broadcast(h_tot)).select(
-                "id", checked_n.alias("n")
-            )
-
-        ha = heavy_ids(p_new).alias("a")
-        hb = heavy_ids(p_old).alias("b")
-        heavy_pairs = ha.join(
-            hb,
-            F.least(F.col("a.n"), F.col("b.n")).cast("double")
-            >= F.lit(t_cand)
-            * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-            - F.lit(1e-9),
-        ).select(F.col("a.id").alias("new_id"), F.col("b.id").alias("old_id"))
-        cands = light.unionByName(heavy_pairs).distinct()
-    sha = sh_new.select(F.col(id_col).alias("new_id"), F.col("sh").alias("sh_a"))
-    shb = sh_old.select(F.col(id_col).alias("old_id"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    j = inter.cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - inter
-    ).cast("double")
-    if round_to is not None:
-        j = half_up(j, round_to)
-    return (
-        cands.join(sha, "new_id")
-        .join(shb, "old_id")
-        .select("new_id", "old_id", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    _check_prefix_args("jaccard_pairs_prefix_cross", threshold, max_df)
+    shs = [
+        d.select(
+            F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")
+        ).localCheckpoint(eager=True)
+        for d in (new_docs, old_docs)
+    ]
+    return _prefix_pairs(
+        shs, id_col, "sh", threshold, round_to, max_df, max_heavy
     )
 
 
@@ -952,34 +927,17 @@ def _prefix_freq_frame(spark: SparkSession, freq: list) -> DataFrame | None:
 
 
 def _prefix_keys(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    t_cand: float,
-    freq: DataFrame | None,
-) -> DataFrame:
-    """(id, band_idx, band_hash) prefix rows under the FROZEN order
-    (module note above): each doc's first ``n - ceil(t_cand·n) + 1``
-    distinct shingles by (frozen df0 asc — 0 for every shingle outside
-    the recorded frequent tail — then xxhash64(shingle) asc, then
-    shingle asc)."""
-    sh = docs.select(
-        F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")
-    )
-    return _prefix_keys_sets(sh, id_col, "sh", t_cand, freq)
-
-
-def _prefix_keys_sets(
     sh: DataFrame,
     id_col: str,
     sh_col: str,
     t_cand: float,
     freq: DataFrame | None,
 ) -> DataFrame:
-    """:func:`_prefix_keys` over an already-shingled (id, array) frame
-    — the probe signs its checkpointed batch arrays without
-    re-shingling."""
+    """(id, band_idx, band_hash, n, pos) prefix rows of an (id,
+    shingle-array) frame under the FROZEN order (module note above):
+    each doc's first ``n - ceil(t_cand·n) + 1`` distinct shingles by
+    (frozen df0 asc — 0 for every shingle outside the recorded frequent
+    tail — then xxhash64(shingle) asc, then shingle asc)."""
     grams = sh.select(
         F.col(id_col),
         F.size(sh_col).alias("n"),
@@ -993,7 +951,6 @@ def _prefix_keys_sets(
     w = Window.partitionBy(id_col).orderBy(
         df0.asc(), F.col("band_hash").asc(), F.col("g").asc()
     )
-    minreq = F.ceil(F.lit(float(t_cand)) * F.col("n") - F.lit(1e-9))
     # n and pos ride along (format frozen-df-v2, r16): 8 bytes/row that
     # let a probe run the Jaccard length bound AND the PPJoin positional
     # filter at the CANDIDATE stage — before the distinct, the corpus
@@ -1002,7 +959,7 @@ def _prefix_keys_sets(
     # write-then-append still equals rebuild row-for-row).
     return (
         grams.withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") <= F.col("n") - minreq + F.lit(1))
+        .filter(F.col("pos") <= _prefix_length(float(t_cand)))
         .select(
             id_col,
             F.pmod(F.col("band_hash"), F.lit(PREFIX_INDEX_BANDS))
@@ -1036,7 +993,8 @@ def write_prefix_index(
         raise ValueError("prefix index needs threshold > 0")
     freq = _prefix_freq_table(docs, id_col, text_col, shingle_n)
     keys = _prefix_keys(
-        docs, id_col, text_col, shingle_n, threshold - PREFIX_ROUND_SLACK,
+        docs.select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")),
+        id_col, "sh", threshold - PREFIX_ROUND_SLACK,
         _prefix_freq_frame(docs.sparkSession, freq),
     )
     banded_index_write(keys, path, fs=fs, bands=PREFIX_INDEX_BANDS)
@@ -1074,8 +1032,8 @@ def append_prefix_index(
         path, "prefix", _prefix_meta(id_col, shingle_n), fs=fs
     )
     keys = _prefix_keys(
-        docs, id_col, text_col, shingle_n,
-        float(have["threshold"]) - PREFIX_ROUND_SLACK,
+        docs.select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")),
+        id_col, "sh", float(have["threshold"]) - PREFIX_ROUND_SLACK,
         _prefix_freq_frame(docs.sparkSession, have["freq"]),
     )
     banded_index_write(
@@ -1119,9 +1077,7 @@ def incremental_jaccard_prefix_probe(
     have = check_sidecar(
         index_path, "prefix", _prefix_meta(id_col, shingle_n), fs=fs
     )
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
+    t_cand = _cand_threshold(threshold, round_to)
     t_build_cand = float(have["threshold"]) - PREFIX_ROUND_SLACK
     if t_cand < t_build_cand - 1e-12:
         raise ValueError(
@@ -1135,18 +1091,12 @@ def incremental_jaccard_prefix_probe(
         F.col(id_col).alias("new_id"),
         word_shingles(text_col, shingle_n).alias("sh_a"),
     ).localCheckpoint(eager=True)  # consumed by sign AND verify
-    batch_keys = _prefix_keys_sets(
+    batch_keys = _prefix_keys(
         new_sh, "new_id", "sh_a", t_cand,
         _prefix_freq_frame(spark, have["freq"]),
     ).select(
         "new_id", "band_idx", "band_hash",
         F.col("n").alias("n_new"), F.col("pos").alias("pos_new"),
-    )
-    idx = (
-        banded_index_read(spark, index_path, fs=fs)
-        .withColumnRenamed(have["id_col"], "old_id")
-        .withColumnRenamed("n", "n_old")
-        .withColumnRenamed("pos", "pos_old")
     )
     # Candidate-stage pruning off the v2 index payload (r16): the
     # Jaccard length bound and the PPJoin positional filter run ON THE
@@ -1155,71 +1105,30 @@ def incremental_jaccard_prefix_probe(
     # J >= t_cand at the pair's rarest shared shingle under the frozen
     # order (the exactness argument on jaccard_pairs_prefix_sets, which
     # holds for ANY shared total order), so recall stays 1.
-    alpha = F.ceil(
-        F.lit(t_cand)
-        / (1.0 + t_cand)
-        * (F.col("n_new") + F.col("n_old")).cast("double")
-        - F.lit(1e-9)
+    n_new, n_old = F.col("n_new"), F.col("n_old")
+    cands, old_rows = banded_index_probe(
+        spark, batch_keys, index_path,
+        {have["id_col"]: "old_id", "n": "n_old", "pos": "pos_old"},
+        corpus, id_col,
+        keep=_length_bound(n_new, n_old, t_cand)
+        & _positional_bound(
+            n_new, F.col("pos_new"), n_old, F.col("pos_old"), t_cand
+        ),
+        fs=fs,
     )
-    cands = (
-        # BROADCAST the batch keys (r17, guide §3.1): the index side is
-        # corpus-sized and was shuffled by this join on every probe; the
-        # batch-side prefix rows are batch-sized by contract, so the
-        # index now streams through its scan with no exchange.
-        F.broadcast(batch_keys).join(idx, ["band_idx", "band_hash"])
-        .filter(
-            (
-                F.least(F.col("n_new"), F.col("n_old")).cast("double")
-                >= F.lit(t_cand)
-                * F.greatest(F.col("n_new"), F.col("n_old")).cast("double")
-                - F.lit(1e-9)
-            )
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("n_new") - F.col("pos_new"),
-                    F.col("n_old") - F.col("pos_old"),
-                )
-                >= alpha
-            )
-        )
-        .select("new_id", "old_id")
-        .distinct()
-        # collision-volume-sized, consumed by the corpus prune AND the
-        # verify join — one probe, one band join (the X69 discipline)
-        .localCheckpoint(eager=True)
-    )
-    old_sh = corpus.join(
-        F.broadcast(cands.select(F.col("old_id").alias(id_col)).distinct()),
-        id_col,
-        "left_semi",
-    ).select(
+    old_sh = old_rows.select(
         F.col(id_col).alias("old_id"),
         word_shingles(text_col, shingle_n).alias("sh_b"),
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    j = inter.cast("double") / (
-        F.size("sh_a") + F.size("sh_b") - inter
-    ).cast("double")
-    if round_to is not None:
-        j = half_up(j, round_to)
-    return (
-        # the batch-shingle side broadcasts (batch-sized by contract);
-        # the join to the pruned corpus shingles stays planner-chosen —
-        # candidate volume scales with corpus x batch collision rates
-        # (r17, see incremental_near_dups)
-        cands.join(F.broadcast(new_sh), "new_id")
-        .join(old_sh, "old_id")
-        # the length filter, applied where both sizes are free — a
-        # necessary condition of J >= t, pruning before the intersect
-        .filter(
-            F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
-            >= F.lit(t_cand)
-            * F.greatest(F.size("sh_a"), F.size("sh_b")).cast("double")
-            - F.lit(1e-9)
-        )
-        .select("new_id", "old_id", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    # the batch-shingle side broadcasts (batch-sized by contract); the
+    # join to the pruned corpus shingles stays planner-chosen —
+    # candidate volume scales with corpus x batch collision rates (r17,
+    # see incremental_near_dups). The length filter applies where both
+    # sizes are free, pruning before the intersect.
+    return _intersect_verify(
+        cands, F.broadcast(new_sh), old_sh, ("new_id", "old_id"),
+        threshold, round_to,
+        pre=_length_bound(F.size("sh_a"), F.size("sh_b"), t_cand),
     )
 
 
@@ -1261,25 +1170,12 @@ def suggest_max_df(
         raise ValueError("caps must be a non-empty list of ints >= 1")
     if threshold <= 0.0:
         raise ValueError("prefix filtering needs threshold > 0")
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
+    t_cand = _cand_threshold(threshold, round_to)
     sh = docs.select(
         F.col(id_col), word_shingles(text_col, shingle_n).alias("sh")
     )
-    grams = sh.select(
-        F.col(id_col).alias("id"),
-        F.size("sh").alias("n"),
-        F.explode("sh").alias("g"),
-    )
-    df_counts = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("g").asc())
-    minreq = F.ceil(F.lit(t_cand) * F.col("n") - F.lit(1e-9))
     prefix = (
-        grams.join(df_counts, "g")
-        .select("id", "g", "df", F.row_number().over(w).alias("pos"),
-                (F.col("n") - minreq + F.lit(1)).alias("plen"))
-        .filter(F.col("pos") <= F.col("plen"))
+        _prefix_rows([sh], id_col, "sh", t_cand)
         .select("id", "g", "df")
         .localCheckpoint(eager=True)  # feeds both per-shingle and per-doc aggs
     )
@@ -2063,12 +1959,7 @@ def simhash_near_dup_pairs(
     )
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        a.join(b, _pair_cond(["band_idx", "band_val"], id_col, None))
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -2177,71 +2068,36 @@ def ngram_jaccard_pairs(
     sh = docs.select(
         F.col(id_col), char_shingles(text_col, n).alias("sh")
     ).localCheckpoint(eager=True)
-    sizes = sh.select(F.col(id_col), F.size("sh").alias("n"))
-    # Jaccard length bound inside the gram join (r16, the
-    # _relational_jaccard treatment): J >= t needs t*max(|A|,|B|) <=
-    # min(|A|,|B|) — widened to the half-up band when rounding — so
-    # size-incompatible co-occurrences die before the per-pair count
-    # aggregation (or the verify joins on the stopgram path). A
-    # necessary condition of the output filter: results identical.
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
+    if stopgram_df_ceiling is None:
+        return _relational_jaccard(sh, id_col, "sh", threshold, round_to)
     grams = sh.select(
         F.col(id_col), F.size("sh").alias("n"), F.explode("sh").alias("g")
     )
-    if stopgram_df_ceiling is not None:
-        # Stopgrams are few DISTINCT values by construction (each one
-        # appears in > ceiling docs), so the pruned-gram list is small:
-        # broadcast it as a left-anti filter on the join input. Shingles
-        # are distinct per doc, so count(*) per gram IS document frequency.
-        stopgrams = (
-            grams.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > stopgram_df_ceiling)
-            .select("g")
-        )
-        grams = grams.join(F.broadcast(stopgrams), "g", "left_anti")
+    # Stopgrams are few DISTINCT values by construction (each one
+    # appears in > ceiling docs), so the pruned-gram list is small:
+    # broadcast it as a left-anti filter on the join input. Shingles
+    # are distinct per doc, so count(*) per gram IS document frequency.
+    stopgrams = (
+        grams.groupBy("g")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > stopgram_df_ceiling)
+        .select("g")
+    )
+    grams = grams.join(F.broadcast(stopgrams), "g", "left_anti")
     a, b = grams.alias("a"), grams.alias("b")
-    cands = a.join(
-        b,
-        (F.col("a.g") == F.col("b.g"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (
-            F.least(F.col("a.n"), F.col("b.n")).cast("double")
-            >= F.lit(t_cand)
-            * F.greatest(F.col("a.n"), F.col("b.n")).cast("double")
-            - F.lit(1e-9)
-        ),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-    )
-    if stopgram_df_ceiling is not None:
-        # Pruned co-occurrence counts undercount |A∩B|; recover exactness
-        # by re-verifying each candidate against the full shingle sets.
-        pairs = cands.distinct()
-        j = jaccard(F.col("sa.sh"), F.col("sb.sh"))
-        if round_to is not None:
-            j = half_up(j, round_to)
-        return (
-            pairs.join(sh.alias("sa"), pairs.id_a == F.col(f"sa.{id_col}"))
-            .join(sh.alias("sb"), pairs.id_b == F.col(f"sb.{id_col}"))
-            .select("id_a", "id_b", j.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
+    # the length bound rides the gram join, as in _relational_jaccard
+    pairs = (
+        a.join(b, _pair_cond(["g"], id_col, _cand_threshold(threshold, round_to)))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
-    inter = cands.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter"))
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
-    j = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
+        .distinct()
     )
-    if round_to is not None:
-        j = half_up(j, round_to)
-    return (
-        inter.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .select("id_a", "id_b", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    # Pruned co-occurrence counts undercount |A∩B|; recover exactness
+    # by re-verifying each candidate against the full shingle sets.
+    return _verify_pairs(
+        pairs, sh.alias("sa"), sh.alias("sb"), id_col, "sh", threshold,
+        round_to,
     )
 
 
@@ -2301,8 +2157,8 @@ def banded_signature_keys(
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
     """(id, band_idx, band_hash[, n]) — the LSH bucket keys of each
-    signature (the same banding expression lsh_candidate_pairs
-    self-joins on). When ``sigs`` carries the shingle-set size ``n``
+    signature (the rows :func:`lsh_candidate_pairs` self-joins on).
+    When ``sigs`` carries the shingle-set size ``n``
     (:func:`signatures_from_shingles` emits it), every key row carries
     it too — the banded-v2 payload the probe's length bound reads."""
     n = rows_per_band
@@ -2311,6 +2167,7 @@ def banded_signature_keys(
         F.col(id_col),
         F.posexplode(
             F.transform(
+                # band b = hash of signature rows [b*n, (b+1)*n)
                 F.sequence(F.lit(0), (F.size(sig_col) / n).cast("int") - 1),
                 lambda b: F.xxhash64(
                     F.concat_ws(
@@ -2475,66 +2332,6 @@ def append_lsh_index(
     )
 
 
-def _relational_jaccard_cross(
-    sh_new: DataFrame,
-    sh_old: DataFrame,
-    id_col: str,
-    sh_col: str,
-    threshold: float,
-    round_to: int | None,
-) -> DataFrame:
-    """Cross-set exact Jaccard (new x old) via the same sparse
-    co-occurrence plan as _relational_jaccard: recall 1 by construction
-    (any pair with Jaccard > 0 shares a shingle). Output
-    (new_id, old_id, jaccard >= threshold)."""
-    na = sh_new.select(
-        F.col(id_col).alias("new_id"), F.size(sh_col).alias("n_a")
-    )
-    nb = sh_old.select(
-        F.col(id_col).alias("old_id"), F.size(sh_col).alias("n_b")
-    )
-    # Jaccard length bound inside the gram join (r16, mirroring the
-    # self-join twin): J >= t needs t*max(|A|,|B|) <= min(|A|,|B|) —
-    # widened to the half-up band when rounding — a necessary condition
-    # of the output filter, so size-incompatible co-occurrences die
-    # before the per-pair count aggregation without changing results.
-    t_cand = float(threshold)
-    if round_to is not None:
-        t_cand -= 0.5 * 10.0 ** (-round_to)
-    ga = sh_new.select(
-        F.col(id_col).alias("new_id"),
-        F.size(sh_col).alias("sa_n"),
-        F.explode(sh_col).alias("g"),
-    )
-    gb = sh_old.select(
-        F.col(id_col).alias("old_id"),
-        F.size(sh_col).alias("sb_n"),
-        F.explode(sh_col).alias("g"),
-    )
-    inter = (
-        ga.join(gb, "g")
-        .filter(
-            F.least(F.col("sa_n"), F.col("sb_n")).cast("double")
-            >= F.lit(t_cand)
-            * F.greatest(F.col("sa_n"), F.col("sb_n")).cast("double")
-            - F.lit(1e-9)
-        )
-        .groupBy("new_id", "old_id")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    j = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    if round_to is not None:
-        j = half_up(j, round_to)
-    return (
-        inter.join(F.broadcast(na), "new_id")
-        .join(nb, "old_id")
-        .select("new_id", "old_id", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def incremental_near_dups(
     spark,
     new_docs: DataFrame,
@@ -2601,79 +2398,41 @@ def incremental_near_dups(
     new_keys = new_keys.withColumnRenamed(id_col, "new_id").withColumnRenamed(
         "n", "new_n"
     )
-    idx = (
-        banded_index_read(spark, index_path, fs=fs)
-        .withColumnRenamed(id_col, "old_id")
-        .withColumnRenamed("n", "old_n")
-    )
-    # BROADCAST the batch keys (r17, guide §3.1): the index side is
-    # CORPUS-sized and was being shuffled by this join on every probe —
-    # the exact cost the at-rest index exists to avoid. The batch-side
-    # key frame is batch-sized by the loop's contract (the same
-    # declaration that broadcasts `cands` below), so the index now
-    # streams through its scan with no exchange.
-    pre = F.broadcast(new_keys).join(idx, ["band_idx", "band_hash"]).filter(
-        F.col("new_id") != F.col("old_id")
-    )
     # Jaccard length bound at the band join (banded-v2, r16): both sides
     # carry their shingle-set size, so a collision whose sizes already
     # preclude J >= t dies here — before the distinct and the exact
     # verify (the probe's dominant stage). Widened to the half-up
     # rounding band like every exact path; necessary condition of the
-    # final filter ⇒ hits unchanged. Conditional on the columns so a
-    # caller-supplied sizeless key frame still probes correctly.
-    if "new_n" in pre.columns and "old_n" in pre.columns and threshold > 0.0:
-        t_cand = float(threshold)
-        if round_to is not None:
-            t_cand -= 0.5 * 10.0 ** (-round_to)
-        pre = pre.filter(
-            F.least(F.col("new_n"), F.col("old_n")).cast("double")
-            >= F.lit(t_cand)
-            * F.greatest(F.col("new_n"), F.col("old_n")).cast("double")
-            - F.lit(1e-9)  # same float-slop guard as _relational_jaccard
+    # final filter ⇒ hits unchanged. Conditional on the batch keys'
+    # size column so a caller-supplied sizeless key frame still probes
+    # correctly (banded-v2 index rows always carry n).
+    keep = F.col("new_id") != F.col("old_id")
+    if "new_n" in new_keys.columns and threshold > 0.0:
+        keep = keep & _length_bound(
+            F.col("new_n"), F.col("old_n"), _cand_threshold(threshold, round_to)
         )
-    cands = (
-        pre.select("new_id", "old_id")
-        .distinct()
-        # collision-volume-sized and consumed TWICE (the semi-join prune
-        # below and the verify join) — checkpoint so the batch signing
-        # and the index band-join run once per probe (r11 review, found
-        # via the X84 embedding twin)
-        .localCheckpoint(eager=True)
+    cands, old_rows = banded_index_probe(
+        spark, new_keys, index_path, {id_col: "old_id", "n": "old_n"},
+        corpus_docs, id_col, keep=keep, fs=fs,
     )
-    # Candidate-id set is collision-volume-sized, so the corpus prune is
-    # a BROADCAST semi-join by declaration: the corpus side streams
-    # through one scan, never sorts/shuffles. (r11 plan audit: AQE left
-    # this join as a sort-merge without the hint — found while building
-    # the X84 embedding twin, fixed in both.)
-    old_sh = corpus_docs.join(
-        F.broadcast(cands.select(F.col("old_id").alias(id_col)).distinct()),
-        id_col,
-        "left_semi",
-    ).select(F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles"))
-    j = jaccard(F.col("sa.shingles"), F.col("sb.shingles"))
-    if round_to is not None:
-        j = half_up(j, round_to)
+    old_sh = old_rows.select(
+        F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles")
+    )
     # The first verify join broadcasts the BATCH shingles (batch-sized
     # by contract — one exchange gone); the join to the pruned corpus
     # shingles stays planner-chosen, because candidate volume scales
     # with corpus x batch collision rates and carries array payloads —
     # not a frame to force-broadcast (r17, measured on the SRP twin).
-    verified = (
-        cands.join(
-            F.broadcast(new_sh.alias("sa")),
-            cands.new_id == F.col(f"sa.{id_col}"),
-        )
-        .join(old_sh.alias("sb"), cands.old_id == F.col(f"sb.{id_col}"))
-        .select("new_id", "old_id", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    verified = _verify_pairs(
+        cands, F.broadcast(new_sh.alias("sa")), old_sh.alias("sb"), id_col,
+        "shingles", threshold, round_to, ids=("new_id", "old_id"),
     )
     if not exact_net:
         return verified
     full_old_sh = corpus_docs.select(
         F.col(id_col), word_shingles(text_col, shingle_n).alias("shingles")
     )
-    net = _relational_jaccard_cross(
-        new_sh, full_old_sh, id_col, "shingles", threshold, round_to
+    net = _relational_jaccard(
+        new_sh, id_col, "shingles", threshold, round_to, sh_old=full_old_sh
     )
     return verified.unionByName(net).distinct()

@@ -718,6 +718,48 @@ def banded_index_read(spark, path: str, fs=None):
     return spark.read.parquet(path)
 
 
+def banded_index_probe(
+    spark, batch_keys, path: str, renames: dict, corpus, id_col: str,
+    keep=None, fs=None,
+):
+    """The at-rest probe the three incremental near-dup probes share
+    (MinHash-LSH, X94 prefix, SRP); each keeps only its signing, its
+    verify and its payload column names.
+
+    ``batch_keys`` (new_id, band_idx, band_hash, payload...) is
+    BROADCAST into the join with the index rows (r17, guide §3.1): the
+    index side is corpus-sized and was shuffled by this join on every
+    probe, while the batch side is batch-sized by contract, so the
+    index streams through its scan with no exchange. ``renames`` maps
+    index columns to their probe names (the id column to ``old_id``,
+    plus payload columns); ``keep`` is an optional filter on the joined
+    rows (length / positional bounds, self-pair exclusion).
+
+    Returns ``(cands, pruned)``: the distinct (new_id, old_id) pairs,
+    eagerly checkpointed because they are collision-volume-sized and
+    consumed twice (the corpus prune and the verify join), so the batch
+    signing and the band join run once per probe; and ``corpus`` cut to
+    the candidate ids by a BROADCAST left-semi join — the candidate-id
+    set is collision-volume-sized, so the corpus streams through one
+    scan and never sorts or shuffles (r11 plan audit: AQE left this join
+    as a sort-merge without the hint)."""
+    from pyspark.sql import functions as F
+
+    idx = banded_index_read(spark, path, fs=fs)
+    for name, probe_name in renames.items():
+        idx = idx.withColumnRenamed(name, probe_name)
+    pre = F.broadcast(batch_keys).join(idx, ["band_idx", "band_hash"])
+    if keep is not None:
+        pre = pre.filter(keep)
+    cands = pre.select("new_id", "old_id").distinct().localCheckpoint(eager=True)
+    pruned = corpus.join(
+        F.broadcast(cands.select(F.col("old_id").alias(id_col)).distinct()),
+        id_col,
+        "left_semi",
+    )
+    return cands, pruned
+
+
 # X82 compaction defaults, shared by every entry that compacts (r8
 # review: duplicated literals in several signatures could silently
 # drift apart)

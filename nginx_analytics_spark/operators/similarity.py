@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 from nginx_analytics_spark.functions.rounding import half_up
 from nginx_analytics_spark.operators.index_fs import (
     LOCAL_FS,
-    banded_index_read,
+    banded_index_probe,
     banded_index_write,
     check_sidecar,
     index_kind,
@@ -819,33 +819,9 @@ def incremental_embedding_near_dups(
         )
     else:
         new_keys = new_keys.withColumnRenamed(id_col, "new_id")
-    idx = banded_index_read(spark, index_path, fs=fs).withColumnRenamed(
-        id_col, "old_id"
-    )
-    cands = (
-        # BROADCAST the batch keys (r17, guide §3.1): the index side is
-        # corpus-sized and was shuffled by this join on every probe; the
-        # batch-side keys are batch-sized by contract, so the index now
-        # streams through its scan with no exchange.
-        F.broadcast(new_keys).join(idx, ["band_idx", "band_hash"])
-        .filter(F.col("new_id") != F.col("old_id"))
-        .select("new_id", "old_id")
-        .distinct()
-        # collision-volume-sized and consumed TWICE (the semi-join prune
-        # below and the verify join) — checkpoint so the batch signing
-        # matmul and the index band-join run once per probe, as the
-        # docstring's step 1 promises (r11 review)
-        .localCheckpoint(eager=True)
-    )
-    # Candidate-id set is collision-volume-sized (the same contract that
-    # lets new_v broadcast below), so the corpus prune is a BROADCAST
-    # semi-join by declaration — the corpus side streams through one
-    # scan, never sorts/shuffles (plan-audited r11: AQE left this one
-    # as a sort-merge join without the hint).
-    pruned_old = corpus_emb.join(
-        F.broadcast(cands.select(F.col("old_id").alias(id_col)).distinct()),
-        id_col,
-        "left_semi",
+    cands, pruned_old = banded_index_probe(
+        spark, new_keys, index_path, {id_col: "old_id"}, corpus_emb, id_col,
+        keep=F.col("new_id") != F.col("old_id"), fs=fs,
     )
     # fan the pruned rows out when the corpus scan has fewer natural
     # splits than cores — the Arrow cosine verify otherwise serializes

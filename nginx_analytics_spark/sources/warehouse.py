@@ -12,8 +12,13 @@ Index translation (SURVEY.md §1.3): the reference's btree indexes on
 timestamp/endpoint/remote_addr become (a) daily partition pruning on
 log_date for every trailing-window predicate, and (b) Parquet min/max
 row-group stats — we sort within partitions by remote_addr so point/IP
-predicates prune row groups. ``DEFAULT CURRENT_TIMESTAMP`` columns
-(init.sql:57, :67, :76) are stamped at write.
+predicates prune row groups. Every raw_logs writer sorts on
+(log_date, remote_addr): Spark's planned writes sort on the partition
+column in front of ``partitionBy`` and drop a preceding sort that does
+not start with it, so a one-key sort leaves the files unsorted
+(tests/test_warehouse.py reads the order back from the files).
+``DEFAULT CURRENT_TIMESTAMP`` columns (init.sql:57, :67, :76) are
+stamped at write.
 
 Scale notes: daily partitions at 100 TB/year ≈ 280 GB/day — healthy
 partition size for pruning without small-file explosion; within a day the
@@ -53,11 +58,12 @@ class Warehouse:
         """Append enriched events, partitioned by log_date.
 
         ``sortWithinPartitions`` clusters each file by the hottest point-
-        lookup key so Parquet min/max stats act as the btree replacement.
+        lookup key so Parquet min/max stats act as the btree replacement
+        (led by ``log_date``; see the module note).
         """
         (
             enriched.withColumn("log_date", F.to_date("timestamp"))
-            .sortWithinPartitions(sort_by)
+            .sortWithinPartitions("log_date", sort_by)
             .write.mode("append")
             .partitionBy("log_date")
             .parquet(self.path(RAW_LOGS))
@@ -88,7 +94,7 @@ class Warehouse:
         dest = os.path.join(self.path(RAW_LOGS_EO), f"ingest_batch={batch_id}")
         (
             enriched.withColumn("log_date", F.to_date("timestamp"))
-            .sortWithinPartitions(sort_by)
+            .sortWithinPartitions("log_date", sort_by)
             .write.mode("overwrite")
             .partitionBy("log_date")
             .parquet(dest)
@@ -153,7 +159,7 @@ class Warehouse:
         (
             self.spark.read.parquet(src)
             .repartition(F.col("log_date"))
-            .sortWithinPartitions(sort_by)
+            .sortWithinPartitions("log_date", sort_by)
             .write.mode("overwrite")
             .partitionBy("log_date")
             .parquet(tmp)

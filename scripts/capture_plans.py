@@ -13,6 +13,16 @@ any BatchEvalPython/ArrowEvalPython nodes. Queries that embed eager
 ``Scan ExistingRDD`` leaves — the upstream plan ran during DataFrame
 construction, which the file states in a header note.
 
+Tokens that vary from run to run are normalized before writing:
+expression ids ``#N``, exchange ``[plan_id=N]``, checkpoint ``RDD[N]``
+ids with their JVM call sites (which change once reflection inflates
+after a few calls), and lambda variable names ``x_N`` (a process-wide
+counter). Two captures of one commit are then byte-identical, whatever
+queries ran before, and a ``diff -r`` of two capture directories shows
+only real plan changes. The worker count defaults to the host's CPU
+count (``SPARK_GRAFT_CPUS`` overrides it), as ``session.get_spark``
+does.
+
 Usage:
   python scripts/capture_plans.py <tag> <suffix> [query ...]
   # e.g. python scripts/capture_plans.py r16 before
@@ -23,11 +33,26 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+RUN_VARYING = (
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=]"),
+    (re.compile(r"RDD\[\d+\] at (\w+) at [^,\s]+"), r"RDD[] at \1"),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_"),
+)
+
+
+def normalize(plan: str) -> str:
+    """Strip the run-varying ids from a formatted plan."""
+    for pattern, repl in RUN_VARYING:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -35,7 +60,7 @@ def main() -> int:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
     import bench
     from nginx_analytics_spark import registry
@@ -64,7 +89,7 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            plan = buf.getvalue()
+            plan = normalize(buf.getvalue())
         except Exception as e:  # noqa: BLE001 — capture what we can
             plan = f"PLAN CAPTURE ERROR: {type(e).__name__}: {e}\n"
         header = (

@@ -6,7 +6,8 @@ the r17 broadcast change moves — is invisible. This script stubs
 ``DataFrame.localCheckpoint`` to identity (PLAN CAPTURE ONLY, nothing
 is executed), rebuilds each probe query, and dumps the one composed
 plan, where the band join against the at-rest index appears with its
-join strategy and build side.
+join strategy and build side. Output is normalized and the worker
+count defaulted as in ``capture_plans.py``.
 
 Usage: python scripts/capture_probe_fullplan.py <tag> <suffix> [query...]
 """
@@ -32,7 +33,7 @@ def main() -> int:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "after"
     names = sys.argv[3:] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
     # Spark 4: the concrete classic DataFrame OVERRIDES localCheckpoint,
     # so the stub must land on it, not on the abstract base.
@@ -40,6 +41,7 @@ def main() -> int:
 
     from nginx_analytics_spark import registry
     from nginx_analytics_spark.session import get_spark
+    from scripts.capture_plans import normalize
 
     spark = get_spark(
         app_name=f"capture_probe_fullplan_{tag}_{suffix}",
@@ -72,7 +74,7 @@ def main() -> int:
                     "# band join against the at-rest index is visible.\n"
                     "# INITIAL (pre-AQE) formatted plan; never executed.\n\n"
                 )
-                f.write(buf.getvalue())
+                f.write(normalize(buf.getvalue()))
             print(f"{name}: captured")
     finally:
         DataFrame.localCheckpoint = real_ckpt

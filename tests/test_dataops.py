@@ -375,8 +375,8 @@ def test_jaccard_pairs_prefix_cross_equals_exhaustive(spark):
         )
         return {
             (r.new_id, r.old_id, r.jaccard)
-            for r in dedup._relational_jaccard_cross(
-                sn, so, "doc_id", "sh", t, 6
+            for r in dedup._relational_jaccard(
+                sn, "doc_id", "sh", t, 6, sh_old=so
             ).collect()
         }
 
@@ -414,8 +414,8 @@ def test_jaccard_pairs_prefix_cross_max_df_exact_on_skewed(spark):
     for t in (0.3, 0.6):
         exact = {
             (r.new_id, r.old_id, r.jaccard)
-            for r in dedup._relational_jaccard_cross(
-                sn, so, "doc_id", "sh", t, 6
+            for r in dedup._relational_jaccard(
+                sn, "doc_id", "sh", t, 6, sh_old=so
             ).collect()
         }
         for cap in (2, 5, None):
@@ -463,8 +463,8 @@ def test_prefix_index_probe_exact_and_lifecycle(spark, tmp_path):
     for t in (0.6, 0.9):  # probe thresholds >= build threshold
         exact = {
             (r.new_id, r.old_id, r.jaccard)
-            for r in dedup._relational_jaccard_cross(
-                sn, so, "doc_id", "sh", t, 6
+            for r in dedup._relational_jaccard(
+                sn, "doc_id", "sh", t, 6, sh_old=so
             ).collect()
         }
         got = {
@@ -506,7 +506,8 @@ def test_prefix_index_probe_exact_and_lifecycle(spark, tmp_path):
     expected = {
         (r.doc_id, r.band_idx, r.band_hash)
         for r in dedup._prefix_keys(
-            old, "doc_id", "text", 3, 0.6 - dedup.PREFIX_ROUND_SLACK, frozen
+            old.select("doc_id", dedup.word_shingles("text", 3).alias("sh")),
+            "doc_id", "sh", 0.6 - dedup.PREFIX_ROUND_SLACK, frozen,
         ).collect()
     }
     assert rows(split_idx) == expected
@@ -514,8 +515,8 @@ def test_prefix_index_probe_exact_and_lifecycle(spark, tmp_path):
     # exact (any one frozen total order satisfies the theorem)
     exact06 = {
         (r.new_id, r.old_id, r.jaccard)
-        for r in dedup._relational_jaccard_cross(
-            sn, so, "doc_id", "sh", 0.6, 6
+        for r in dedup._relational_jaccard(
+            sn, "doc_id", "sh", 0.6, 6, sh_old=so
         ).collect()
     }
     got06 = {
@@ -2026,8 +2027,8 @@ def test_incremental_near_dups_at_rest_probe(spark, tmp_path):
     sh_old = corpus.select("doc_id", dedup.word_shingles("text").alias("sh"))
     exact = {
         (r.new_id, r.old_id)
-        for r in dedup._relational_jaccard_cross(
-            sh_new, sh_old, "doc_id", "sh", 0.6, 6
+        for r in dedup._relational_jaccard(
+            sh_new, "doc_id", "sh", 0.6, 6, sh_old=sh_old
         ).collect()
     }
     assert exact, "fixture must plant cross-set near-dups"

@@ -518,3 +518,51 @@ def test_band_files_are_band_hash_sorted(spark, tmp_path, index_fs, bands):
     assert _rows(spark, idx, index_fs) == sorted(
         (r.doc_id, r.band_idx, r.band_hash) for r in keys.collect()
     )
+
+
+# Jobs each probe fires while its DataFrame is BUILT (sf0.001, parity
+# split): the eager batch and candidate checkpoints plus the shuffle and
+# broadcast stages AQE runs as jobs under them. Shared by the three
+# probes through banded_index_probe, which must neither add nor drop one.
+PROBE_BUILD_JOBS = {"lsh": 6, "prefix": 6, "srp": 5}
+
+
+@pytest.mark.parametrize("kind", sorted(PROBE_BUILD_JOBS))
+def test_probe_build_job_count(spark, tmp_path, kind):
+    """The build-time job count of each incremental probe, read back
+    through a job group set around the probe call."""
+    import uuid
+
+    from nginx_analytics_spark.operators import similarity
+
+    idx = str(tmp_path / kind)
+    if kind == "srp":
+        rows = spark.read.parquet(f"{SF}/embeddings.parquet")
+        old = rows.filter(F.col("vec_id") % 2 == 0)
+        new = rows.filter(F.col("vec_id") % 2 == 1)
+        similarity.write_srp_index(old, idx)
+        build = lambda: similarity.incremental_embedding_near_dups(  # noqa: E731
+            spark, new, old, idx
+        )
+    else:
+        docs = _docs(spark)
+        old = docs.filter(F.col("doc_id") % 2 == 0)
+        new = docs.filter(F.col("doc_id") % 2 == 1)
+        if kind == "lsh":
+            dedup.write_lsh_index(old, idx)
+            probe = dedup.incremental_near_dups
+        else:
+            dedup.write_prefix_index(old, idx, threshold=0.5)
+            probe = dedup.incremental_jaccard_prefix_probe
+        build = lambda: probe(spark, new, old, idx, threshold=0.5)  # noqa: E731
+    sc = spark.sparkContext
+    group = f"probe-build-{kind}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{kind} probe build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == (
+        PROBE_BUILD_JOBS[kind]
+    )

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from nginx_analytics_spark.sources import load_table
@@ -94,6 +95,51 @@ def test_compact_rerunnable_after_crash_artifacts(spark, tmp_path):
     os.rename(src, src + "__compact_old")
     assert wh.compact_raw_logs() > 0
     assert wh.table("raw_logs").count() == n_before
+
+
+@pytest.mark.parametrize("writer", ["append", "exactly_once", "compact"])
+def test_raw_logs_files_are_sort_key_sorted(spark, tmp_path, writer):
+    """The layout every raw_logs writer promises, read back from the
+    parquet files themselves: each ``log_date`` file holds its rows in
+    ``remote_addr`` order, and its row groups' footer min/max ranges
+    follow one another — the row-group pruning point/IP predicates rely
+    on. (Spark's planned writes sort on ``log_date`` in front of
+    ``partitionBy`` and drop a one-key ``sortWithinPartitions``; the
+    sort must lead with ``log_date``.)"""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path))
+    src = spark.range(40_000).select(
+        F.timestamp_seconds(
+            F.lit(1_706_000_000) + F.pmod(F.xxhash64("id"), F.lit(4 * 86_400))
+        ).alias("timestamp"),
+        F.sha2(F.col("id").cast("string"), 256).substr(1, 12).alias("remote_addr"),
+        F.col("id").alias("event_id"),
+    ).repartition(4)
+    if writer == "exactly_once":
+        wh.append_raw_logs_exactly_once(src, batch_id=0)
+        root = wh.path("raw_logs_eo")
+    else:
+        wh.append_raw_logs(src)
+        root = wh.path("raw_logs")
+        if writer == "compact":
+            wh.append_raw_logs(src)
+            assert wh.compact_raw_logs() == len(_parquet_files_per_date(root))
+    files = glob.glob(f"{root}/**/log_date=*/*.parquet", recursive=True)
+    assert len({os.path.dirname(f) for f in files}) >= 4
+    for f in files:
+        addrs = pq.read_table(f, columns=["remote_addr"]).column(0).to_pylist()
+        assert addrs == sorted(addrs), f
+        md = pq.read_metadata(f)
+        col = md.schema.names.index("remote_addr")
+        ranges = [
+            (md.row_group(g).column(col).statistics.min,
+             md.row_group(g).column(col).statistics.max)
+            for g in range(md.num_row_groups)
+        ]
+        assert all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:])), f
 
 
 def test_bucketed_join_has_no_exchange(spark):
