@@ -682,8 +682,9 @@ def _build_parser():
         "reconcile-index",
         help=(
             "X91: store<->index consistency check for a corpus store "
-            "and ANY at-rest index over it — banded dedup (LSH/SRP) or "
-            "ANN serving (PQ/IVF), sidecar-detected. Corpus rows "
+            "and ANY at-rest store over it — banded dedup "
+            "(LSH/prefix/SRP), ANN serving (PQ/IVF) or seen-key "
+            "(paragraph/window), sidecar-detected. Corpus rows "
             "missing from a dedup index are PERMANENT dedup blind "
             "spots; missing from a serving index they are SILENT "
             "RECALL LOSSES invisible to verify-index (the row_count "
@@ -704,7 +705,7 @@ def _build_parser():
     rx.add_argument("--corpus", required=True, help="corpus store dir")
     rx.add_argument(
         "--index", required=True,
-        help="at-rest LSH/SRP/PQ/IVF index (sidecar-detected)",
+        help="at-rest index or seen-key store (sidecar-detected)",
     )
     rx.add_argument(
         "--repair", action="store_true",
@@ -841,11 +842,13 @@ def main(argv: list[str] | None = None) -> int:
         from nginx_analytics_spark.operators import similarity
         from nginx_analytics_spark.operators.index_fs import (
             BANDED_KINDS,
+            CELL_KINDS,
             LOCAL_FS,
             LockHeldError,
             MissingSidecarError,
             acquire_lock_wait,
             banded_index_read,
+            cell_index_verify,
             index_kind,
             read_sidecar,
             writer_lock_path,
@@ -887,7 +890,7 @@ def main(argv: list[str] | None = None) -> int:
             return 3
         try:
             try:
-                kind = index_kind(p, kinds=(*BANDED_KINDS, "pq", "ivf"))
+                kind = index_kind(p, kinds=(*BANDED_KINDS, *CELL_KINDS))
             except MissingSidecarError as e:
                 print(f"{e} — not an at-rest index")
                 return 1
@@ -905,12 +908,13 @@ def main(argv: list[str] | None = None) -> int:
                     f"rows across {bands} bands"
                 )
                 return 0
-            verify = (
-                similarity.pq_index_verify
+            # a sidecar whose fitted arrays are corrupt fails loudly here
+            (
+                similarity.read_pq_index_meta
                 if kind == "pq"
-                else similarity.ivf_index_verify
-            )
-            check = verify(spark, p)
+                else similarity.read_ivf_index_meta
+            )(p)
+            check = cell_index_verify(spark, p, kind)
             state = (
                 "UNKNOWN (pre-commit-protocol sidecar; next append upgrades it)"
                 if check["torn"] is None
@@ -975,20 +979,26 @@ def main(argv: list[str] | None = None) -> int:
             repair=args.repair,
         )
         serving = out["kind"] in ("pq", "ivf")
-        orphan_fix = (
-            "rebuild from the store to reclaim"
-            if serving
-            else "reclaim with compact-index --prune-to-corpus"
-        )
-        print(
-            f"{out['kind']} index vs corpus: {out['corpus_ids']} corpus "
-            f"ids, {out['indexed_ids']} indexed; "
-            f"{out['missing_from_index']} missing from index"
-            f"{' (' + str(out['repaired']) + ' repaired)' if out['repaired'] else ''}, "
-            f"{out['index_orphans']} index orphans "
-            f"({'scan waste' if serving else 'candidate-volume cost'} "
-            f"only; {orphan_fix})"
-        )
+        fixed = f" ({out['repaired']} repaired)" if out["repaired"] else ""
+        if "index_orphans" not in out:  # a seen-key store: keys, no ids
+            print(
+                f"{out['kind']} store vs corpus: "
+                f"{out['missing_from_index']} missing from index{fixed}"
+            )
+        else:
+            orphan_fix = (
+                "rebuild from the store to reclaim"
+                if serving
+                else "reclaim with compact-index --prune-to-corpus"
+            )
+            print(
+                f"{out['kind']} index vs corpus: {out['corpus_ids']} corpus "
+                f"ids, {out['indexed_ids']} indexed; "
+                f"{out['missing_from_index']} missing from index{fixed}, "
+                f"{out['index_orphans']} index orphans "
+                f"({'scan waste' if serving else 'candidate-volume cost'} "
+                f"only; {orphan_fix})"
+            )
         remaining = out["missing_from_index"] - out["repaired"]
         if remaining:
             print(

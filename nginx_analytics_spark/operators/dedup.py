@@ -37,9 +37,11 @@ from pyspark.sql.window import Window
 
 from nginx_analytics_spark.functions.rounding import half_up
 from nginx_analytics_spark.operators.index_fs import (
+    SEEN_KINDS,
     banded_index_probe,
     banded_index_write,
     check_sidecar,
+    index_kind,
     read_sidecar,
     write_sidecar,
 )
@@ -1285,13 +1287,32 @@ def paragraph_dedup(
     DuckDB oracles (the fixture's synthetic text has no newlines, so
     the registered queries segment on a frequent token; production
     uses the default ``sep="\\n"``)."""
-    import re as _re
-
     if mode not in ("first", "df"):
         raise ValueError(f"mode must be 'first' or 'df', got {mode!r}")
     if mode == "df" and (max_df is None or max_df < 1):
         raise ValueError("mode='df' needs max_df >= 1")
-    paras = (
+    paras = _paras_of(docs, id_col, text_col, sep, min_chars)
+    key = "__hp" if hash_keys else "para"
+    if hash_keys:
+        paras = paras.withColumn("__hp", F.xxhash64("para"))
+    if mode == "first":
+        kept = _keep_first(paras, key, id_col)[1]
+    else:
+        dfs = paras.groupBy(key).agg(
+            F.count_distinct(F.col(id_col)).alias("__df")
+        )
+        kept = paras.join(dfs, key).filter(F.col("__df") <= max_df)
+    return _reassemble(docs, paras, kept, id_col, sep)
+
+
+def _paras_of(
+    docs: DataFrame, id_col: str, text_col: str, sep: str, min_chars: int
+) -> DataFrame:
+    """(id, pos, para) segments — X95's decomposition, shared by the
+    batch operator and the incremental loop."""
+    import re as _re
+
+    return (
         docs.select(
             F.col(id_col),
             F.posexplode(
@@ -1301,21 +1322,30 @@ def paragraph_dedup(
         .select(F.col(id_col), "pos", F.trim(F.col("rawp")).alias("para"))
         .filter(F.length("para") >= min_chars)
     )
-    key = "__hp" if hash_keys else "para"
-    if hash_keys:
-        paras = paras.withColumn("__hp", F.xxhash64("para"))
-    if mode == "first":
-        firsts = paras.groupBy(key).agg(
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("__first")
-        )
-        kept = paras.join(firsts, key).filter(
-            F.struct(F.col(id_col), F.col("pos")) == F.col("__first")
-        )
-    else:
-        dfs = paras.groupBy(key).agg(
-            F.count_distinct(F.col(id_col)).alias("__df")
-        )
-        kept = paras.join(dfs, key).filter(F.col("__df") <= max_df)
+
+
+def _keep_first(
+    paras: DataFrame, key: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """X95's keep-first choice: ``(firsts, kept)`` — each paragraph
+    ``key``'s first (id, pos) occurrence by a combine-friendly
+    min-struct aggregate, and the segments that ARE that occurrence."""
+    firsts = paras.groupBy(key).agg(
+        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("__first")
+    )
+    kept = paras.join(firsts, key).filter(
+        F.struct(F.col(id_col), F.col("pos")) == F.col("__first")
+    )
+    return firsts, kept
+
+
+def _reassemble(
+    docs: DataFrame, paras: DataFrame, kept: DataFrame, id_col: str, sep: str
+) -> DataFrame:
+    """X95's row contract from the ``kept`` segments of ``paras``: one
+    (id, clean_text, n_kept, n_removed) row per input doc, surviving
+    segments rejoined in original order, a fully-cut doc keeping its
+    row with clean_text = ''."""
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -1342,23 +1372,23 @@ def paragraph_dedup(
     )
 
 
-def _paras_of(
-    docs: DataFrame, id_col: str, text_col: str, sep: str, min_chars: int
+def _seen_keys(
+    docs: DataFrame, kind: str, meta: dict, id_col: str, text_col: str
 ) -> DataFrame:
-    """(id, pos, para) segments — X95's decomposition, shared by the
-    batch operator and the incremental loop."""
-    import re as _re
-
-    return (
-        docs.select(
-            F.col(id_col),
-            F.posexplode(
-                F.split(F.col(text_col), _re.escape(sep))
-            ).alias("pos", "rawp"),
-        )
-        .select(F.col(id_col), "pos", F.trim(F.col("rawp")).alias("para"))
-        .filter(F.length("para") >= min_chars)
-    )
+    """(h) the distinct 8-byte keys a seen store of ``kind`` holds for
+    ``docs``, segmented under the store's sidecar ``meta``: xxhash64 of
+    each paragraph (``paraseen``) or of each stride-1 token window
+    (``winseen``)."""
+    if kind == "paraseen":
+        keys = _paras_of(
+            docs, id_col, text_col, meta["sep"], meta["min_chars"]
+        ).select(F.xxhash64("para").alias("h"))
+    else:
+        keys = _token_windows(
+            _tokens(docs, id_col, text_col), id_col,
+            int(meta["window_tokens"]), hash_keys=True,
+        ).select(F.col("win").alias("h"))
+    return keys.distinct()
 
 
 def write_paraseen_store(
@@ -1380,47 +1410,42 @@ def write_paraseen_store(
     distinct paragraphs before the first expected dup). A
     ``paraseen`` sidecar pins (sep, min_chars) — a store
     segmented differently would silently stop deduping."""
-    (
-        _paras_of(docs, id_col, text_col, sep, min_chars)
-        .select(F.xxhash64("para").alias("h"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    write_sidecar(
-        path, "paraseen", {"sep": sep, "min_chars": int(min_chars)}, fs=fs
-    )
+    meta = {"sep": sep, "min_chars": int(min_chars)}
+    _seen_keys(docs, "paraseen", meta, id_col, text_col).write.mode(
+        "overwrite"
+    ).parquet(path)
+    write_sidecar(path, "paraseen", meta, fs=fs)
 
 
-def reconcile_paraseen_store(
+def reconcile_seen_store(
     spark: SparkSession,
     corpus: DataFrame,
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
+    repair: bool = True,
     fs=None,
 ) -> dict:
-    """X91's discipline for the seen-paragraph store: a corpus
-    paragraph missing from the store is a PERMANENT dedup blind spot
-    (its future repeats pass the anti-join forever). One anti-join
-    detects; the missing keys append (cost scales with the missing
-    set). Returns {"missing", "appended"}. Orphan keys (paragraphs no
-    longer in any corpus doc) are harmless — they can only dedup text
-    that genuinely occurred before — and are left in place (the set is
+    """X91's discipline for a seen-key store of either kind (read off
+    its sidecar): a corpus paragraph or window missing from the store
+    is a PERMANENT dedup blind spot (its future repeats pass the
+    store's anti-/semi-join uncut forever). One anti-join detects;
+    ``repair`` appends the missing keys (cost scales with the missing
+    set). Returns {"missing", "appended"}. Orphan keys (text no longer
+    in any corpus doc) are harmless — they can only dedup text that
+    genuinely occurred before — and are left in place (the set is
     monotone by design, like the exact-dup ledger)."""
-    meta = read_sidecar(path, "paraseen", fs=fs)
-    have = spark.read.parquet(path)
+    kind = index_kind(path, fs, SEEN_KINDS)
     missing = (
-        _paras_of(corpus, id_col, text_col, meta["sep"], meta["min_chars"])
-        .select(F.xxhash64("para").alias("h"))
-        .distinct()
-        .join(have, "h", "left_anti")
+        _seen_keys(corpus, kind, read_sidecar(path, kind, fs=fs), id_col,
+                   text_col)
+        .join(spark.read.parquet(path), "h", "left_anti")
         .localCheckpoint(eager=True)
     )
     n = missing.count()
-    if n:
+    if repair and n:
         missing.write.mode("append").parquet(path)
-    return {"missing": int(n), "appended": int(n)}
+    return {"missing": int(n), "appended": int(n) if repair else 0}
 
 
 def incremental_paragraph_dedup(
@@ -1462,36 +1487,8 @@ def incremental_paragraph_dedup(
     # caller runs its action, and a lazy anti-join would then see the
     # batch's own keys as "seen" and cut every paragraph.
     unseen = paras.join(seen, "h", "left_anti").localCheckpoint(eager=True)
-    firsts = unseen.groupBy("h").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("__first")
-    )
-    kept = unseen.join(firsts, "h").filter(
-        F.struct(F.col(id_col), F.col("pos")) == F.col("__first")
-    )
-    rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda x: x["para"],
-            ),
-            sep,
-        ).alias("clean_text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    orig = paras.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n_orig"))
-    out = (
-        new_docs.select(id_col)
-        .join(rebuilt, id_col, "left")
-        .join(orig, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
-            (F.coalesce("__n_orig", F.lit(0)) - F.coalesce("n_kept", F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-        )
-    )
+    firsts, kept = _keep_first(unseen, "h", id_col)
+    out = _reassemble(new_docs, paras, kept, id_col, sep)
     if update_store:
         firsts.select("h").write.mode("append").parquet(path)
     return out
@@ -1547,12 +1544,10 @@ def exact_substring_dedup(
     selectivity knob (longer = fewer, more selective spans).
     Reference: none — the reference has no corpus pipeline; semantics
     follow the published ExactSubstr pass."""
-    W = int(window_tokens)
-    if W < 2:
-        raise ValueError("window_tokens must be >= 2")
-    toks = docs.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
-    ).localCheckpoint(eager=True)  # windows + reassembly + sizes
+    W = _window_size(window_tokens)
+    toks = _tokens(docs, id_col, text_col).localCheckpoint(
+        eager=True  # windows + reassembly + sizes
+    )
     # Materialized: `wins` feeds BOTH the repeated-count aggregation and
     # the hits semi-join below — unmaterialized, the O(tokens × W)
     # slice+concat+hash window projection executes twice (profiled as
@@ -1571,6 +1566,19 @@ def exact_substring_dedup(
     )
     hits = wins.join(repeated, "win", "left_semi")
     return _cut_spans(toks, hits, id_col, W)
+
+
+def _window_size(window_tokens: int) -> int:
+    W = int(window_tokens)
+    if W < 2:
+        raise ValueError("window_tokens must be >= 2")
+    return W
+
+
+def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, toks): each doc's whitespace-split token array — the one
+    tokenization every span operator windows and reassembles."""
+    return docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("toks"))
 
 
 def _token_windows(
@@ -1692,54 +1700,11 @@ def write_winseen_store(
     incremental dedup, and the same 64-bit-key trust X97's paragraph
     store carries. A ``winseen`` sidecar pins window_tokens
     — a store slid at a different W would silently stop cutting."""
-    W = int(window_tokens)
-    if W < 2:
-        raise ValueError("window_tokens must be >= 2")
-    toks = docs.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
-    )
-    (
-        _token_windows(toks, id_col, W, hash_keys=True)
-        .select(F.col("win").alias("h"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    write_sidecar(path, "winseen", {"window_tokens": W}, fs=fs)
-
-
-def reconcile_winseen_store(
-    spark: SparkSession,
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fs=None,
-) -> dict:
-    """X91's discipline for the seen-window store: a corpus window
-    missing from the store is a PERMANENT span-dedup blind spot (its
-    future repeats pass the semi-join uncut forever). One anti-join
-    detects; the missing keys append. Returns {"missing", "appended"}.
-    Orphan keys are harmless (they only cut text that genuinely
-    occurred before) and are left in place — the set is monotone by
-    design, like X97's."""
-    meta = read_sidecar(path, "winseen", fs=fs)
-    W = int(meta["window_tokens"])
-    have = spark.read.parquet(path)
-    toks = corpus.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
-    )
-    missing = (
-        _token_windows(toks, id_col, W, hash_keys=True)
-        .select(F.col("win").alias("h"))
-        .distinct()
-        .join(have, "h", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    n = missing.count()
-    if n:
-        missing.write.mode("append").parquet(path)
-    return {"missing": int(n), "appended": int(n)}
+    meta = {"window_tokens": _window_size(window_tokens)}
+    _seen_keys(docs, "winseen", meta, id_col, text_col).write.mode(
+        "overwrite"
+    ).parquet(path)
+    write_sidecar(path, "winseen", meta, fs=fs)
 
 
 def incremental_exact_substring_dedup(
@@ -1780,9 +1745,9 @@ def incremental_exact_substring_dedup(
     one row per batch doc."""
     W = int(window_tokens)
     check_sidecar(path, "winseen", {"window_tokens": W}, fs=fs)
-    toks = new_docs.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
-    ).localCheckpoint(eager=True)  # windows + reassembly + sizes
+    toks = _tokens(new_docs, id_col, text_col).localCheckpoint(
+        eager=True  # windows + reassembly + sizes
+    )
     wins = _token_windows(toks, id_col, W, hash_keys=True).localCheckpoint(
         eager=True
     )  # consumed by the hits semi-join AND the novel append
@@ -1837,19 +1802,11 @@ def exact_substring_decontaminate(
     fully-quoted doc keeping its row with clean_text = ''. Registered
     ``decontaminate_docs`` hash-matches the cross-set windowed/island
     DuckDB oracle on the X31 benchmark carve-out split."""
-    W = int(window_tokens)
-    if W < 2:
-        raise ValueError("window_tokens must be >= 2")
-    toks = train.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
-    ).localCheckpoint(eager=True)
+    W = _window_size(window_tokens)
+    toks = _tokens(train, id_col, text_col).localCheckpoint(eager=True)
     bench_wins = (
         _token_windows(
-            benchmark.select(
-                F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
-            ),
-            id_col,
-            W,
+            _tokens(benchmark, id_col, text_col), id_col, W,
             hash_keys=hash_keys,
         )
         .select("win")

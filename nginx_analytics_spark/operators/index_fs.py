@@ -1,5 +1,5 @@
-"""The at-rest store layer: one sidecar table, one writer mutex, and one
-banded-index lifecycle for every store kind.
+"""The at-rest store layer: one sidecar table, one writer mutex, one
+banded-index lifecycle and one cell-index lifecycle for every store kind.
 
 **Kinds.** Seven at-rest stores pair with a corpus: the banded dedup
 indexes (``lsh`` MinHash text, ``prefix`` X94 exact-Jaccard prefixes,
@@ -20,6 +20,14 @@ so write, read, per-band compaction (X82) and crash recovery are
 written once here (``banded_index_*``); the kind-specific modules only
 sign keys and stamp their sidecar. Every writer of every kind
 serializes on the sibling :func:`writer_lock_path` mutex.
+
+**Cell lifecycle.** The two ANN serving kinds share one commit protocol
+over rows partitioned by ``cell`` (``cell_index_*``): the build writes
+rows then the sidecar LAST with its ``row_count`` and drift means, every
+append flips ``row_count`` last, one verify compares rows against the
+sidecar, and one two-rename swap (healed on entry) cuts a rebuild over.
+``ivf`` supplies the cell assignment and its ``adist`` column, ``pq``
+the encoding and its ``qerr`` column, and each its sidecar payload.
 
 **Filesystem seam.** The maintenance algorithms below do a small
 amount of driver-side metadata I/O around the Spark jobs that
@@ -539,6 +547,9 @@ _SIDECAR_OF = {kind: name for name, kind in SIDECARS.items()}
 #: The kinds stored in the shared banded layout (``banded_index_*``).
 BANDED_KINDS = ("lsh", "prefix", "srp")
 
+#: The seen-key store kinds: one column of distinct 8-byte keys.
+SEEN_KINDS = ("paraseen", "winseen")
+
 
 class MissingSidecarError(FileNotFoundError, ValueError):
     """A directory carries no sidecar of the kind a caller needs. Both a
@@ -638,6 +649,16 @@ def writer_lock_path(path: str) -> str:
     in-dir file is inert afterwards (dot-prefixed, skipped by parquet
     readers and by every ``band_idx=``/``.old-``/``.compact-`` scan)."""
     return path.rstrip("/") + ".compact.lock"
+
+
+def writer_gate(path: str, purpose: str, fs=None, lock_held: bool = False):
+    """The store's :func:`writer_lock_path` mutex as an un-entered
+    context manager, or a no-op one when ``lock_held`` declares the
+    caller already owns it (an ingest loop's writer thread, or an
+    actuator running inside an append)."""
+    if lock_held:
+        return contextlib.nullcontext()
+    return (fs or LOCAL_FS).exclusive_lock(writer_lock_path(path), purpose)
 
 
 # ---------------------------------------------------------------------------
@@ -848,17 +869,14 @@ def banded_index_compact(
     "files_after"}`` for the caller's telemetry."""
     fs = fs or LOCAL_FS
     index_kind(path, fs, BANDED_KINDS)  # loud on a non-index dir
-    lock = (
-        contextlib.nullcontext()
-        if lock_held
-        else fs.exclusive_lock(
-            writer_lock_path(path),
-            "X82 is single-compactor by design (interleaved band swaps "
-            "would corrupt the two-rename discipline); run compaction "
-            "from the ingest loop's one writer thread",
-        )
-    )
-    with lock:
+    with writer_gate(
+        path,
+        "X82 is single-compactor by design (interleaved band swaps "
+        "would corrupt the two-rename discipline); run compaction "
+        "from the ingest loop's one writer thread",
+        fs,
+        lock_held,
+    ):
         return _compact_locked(
             spark, path, max_files_per_band, target_files,
             target_file_bytes, max_concurrency, fs, prune_ids,
@@ -1065,3 +1083,277 @@ def _recover_locked(path: str, fs) -> None:
     for d in entries:
         if d.startswith(".compact-"):
             fs.rmtree(os.path.join(path, d))
+
+
+# ---------------------------------------------------------------------------
+# The cell-partitioned lifecycle: build commit, append commit, verify and
+# swap rebuild — one body for the ivf and pq kinds
+# ---------------------------------------------------------------------------
+
+#: The kinds stored in the shared cell layout (``cell_index_*``): rows
+#: partitioned by ``cell`` (a flat PQ index carries no cell column), with
+#: the sidecar's ``row_count`` as the commit.
+CELL_KINDS = ("ivf", "pq")
+
+#: Per cell kind: the per-row column the drift monitor averages, and the
+#: sidecar keys of its build-time global and per-cell means. The key names
+#: differ by kind because indexes already on disk carry them.
+CELL_STATS = {
+    "ivf": ("adist", "mean_assign_dist", "cell_mean_assign_dist"),
+    "pq": ("qerr", "mean_quant_err", "cell_mean_quant_err"),
+}
+
+#: What rebuilds a torn index of each kind.
+_CELL_REBUILD = {
+    "ivf": "recluster_ivf(...) or ivf_write_bucketed",
+    "pq": "rebuild_pq(...) or pq_write_index",
+}
+
+#: Why a cell-index append takes the writer mutex (its LockHeldError text,
+#: after the kind's name).
+CELL_APPEND_PURPOSE = (
+    "appends are single-writer: a concurrent writer or verifier racing "
+    "the data-write→sidecar-flip window would read a transient false TORN"
+)
+
+#: The inner single-swap mutex of each kind's rebuild, a sibling of the
+#: index dir (names kept so a mixed-version deployment still excludes).
+_SWAP_LOCK = {"ivf": ".recluster.lock", "pq": ".rebuild.lock"}
+
+
+def _write_cells(rows, path: str, mode: str) -> None:
+    writer = rows.write.mode(mode)
+    if "cell" in rows.columns:
+        writer = writer.partitionBy("cell")
+    writer.parquet(path)
+
+
+def _cell_stats(rows, col: str) -> tuple[int, float | None, list]:
+    """``(n, mean, groups)`` of ``col`` over ``rows`` from ONE aggregate,
+    grouped by cell when the rows carry one (<= n_cells tiny rows). A
+    celled frame's mean is the count-weighted mean of its cells; a flat
+    frame's is its one average."""
+    from pyspark.sql import functions as F
+
+    celled = "cell" in rows.columns
+    groups = (rows.groupBy("cell") if celled else rows.groupBy()).agg(
+        F.count(F.lit(1)).alias("n"), F.avg(col).alias("m")
+    ).collect()
+    n = sum(r.n for r in groups)
+    if not n:
+        return 0, None, groups
+    mean = sum(r.n * r.m for r in groups) / n if celled else groups[0].m
+    return int(n), float(mean), groups
+
+
+def cell_index_write(rows, path: str, kind: str, params: dict, model: dict,
+                     fs=None) -> None:
+    """The build commit of a cell index: land ``rows`` (partitioned by
+    ``cell`` when they carry one), then compute the build-time row count
+    and the global and per-cell means of the kind's stat column from the
+    WRITTEN index (one column-pruned re-read grouped by cell — n_cells
+    tiny rows — not a second pass over the vectors), and write the
+    sidecar LAST: ``params``, then ``row_count`` and the two means, then
+    ``model`` (the fitted arrays). A complete sidecar therefore marks a
+    complete build, and every later append re-commits by flipping its
+    ``row_count`` (:func:`cell_index_append`).
+
+    Seam scope: the rows are always written and read with Spark's own
+    parquet machinery; ``fs`` covers the sidecar and the rebuild swap's
+    renames only. An object-store deployment therefore gets an atomic
+    sidecar flip (one PUT) but plain parquet data placement; the
+    ``row_count`` commit is exactly what makes that sufficient for
+    torn-write DETECTION without a manifest layer."""
+    _write_cells(rows, path, "overwrite")
+    col, mean_key, cell_key = CELL_STATS[kind]
+    written = rows.sparkSession.read.parquet(path)
+    n, mean, groups = _cell_stats(written, col)
+    cells = (  # sorted: the sidecar's bytes are reproducible
+        {str(int(r.cell)): float(r.m) for r in sorted(groups)}
+        if "cell" in written.columns
+        else None
+    )
+    meta = {**params, "row_count": n, mean_key: mean, cell_key: cells, **model}
+    write_sidecar(path, kind, meta, fs=fs)
+
+
+def cell_index_verify(spark, path: str, kind: str, fs=None) -> dict:
+    """THE rows-versus-sidecar check of a cell index: the parquet row
+    count equals the sidecar's ``row_count``. A mismatch means a writer
+    died between a data append and its sidecar flip (torn append — the
+    extra rows' batch was never acknowledged) or foreign files landed in
+    the index dir; either way probes would silently serve rows no commit
+    covers, so maintenance paths call this and fail loudly. Returns
+    ``{"expected", "actual", "torn"}`` — ``expected`` is None for a
+    sidecar written before the commit protocol (then ``torn`` is None
+    too: unknown, not healthy; the next successful append upgrades the
+    sidecar). The count is a column-pruned metadata-scale scan (parquet
+    row counts come from file footers), proportional to the index's FILE
+    population, never its bytes."""
+    expected = read_sidecar(path, kind, fs=fs).get("row_count")
+    actual = int(spark.read.parquet(path).count())
+    return {
+        "expected": expected,
+        "actual": actual,
+        "torn": None if expected is None else actual != int(expected),
+    }
+
+
+def raise_if_torn(spark, path: str, kind: str, fs=None) -> int:
+    """:func:`cell_index_verify`, raising on a torn index; returns the
+    on-disk row count."""
+    check = cell_index_verify(spark, path, kind, fs=fs)
+    if check["torn"]:
+        raise ValueError(
+            f"{kind.upper()} index at {path!r} is torn: sidecar commits "
+            f"{check['expected']} rows but {check['actual']} are on disk — "
+            "a prior append died between its data write and its sidecar "
+            f"flip. Rebuild with {_CELL_REBUILD[kind]} (the uncommitted "
+            "rows' batch was never acknowledged and must be re-sent)."
+        )
+    return check["actual"]
+
+
+def cell_index_append(spark, path: str, kind: str, id_col: str, read_meta,
+                      encode, fs=None) -> dict:
+    """The append commit of a cell index, for a caller holding the
+    :func:`writer_gate` mutex. ``read_meta(path, fs=fs)`` loads and
+    validates the kind's sidecar; ``encode(meta)`` builds the batch in
+    the index's row layout under the sidecar's fitted model — never a
+    refit, which would silently re-key the standing rows.
+
+    The parquet append alone is NOT atomic, so: the caller's ``id_col``
+    must be the index's; the standing index's row count is checked
+    against the sidecar and a torn predecessor raises
+    (:func:`raise_if_torn`); the encoded batch is checkpointed, so the
+    kind's kernel runs once for the stats AND the write; rows land (only
+    touched cells gain files); and the sidecar's ``row_count`` flips
+    LAST (one atomic replace through the ``fs`` seam) — the flip IS the
+    commit, so a crash anywhere leaves a DETECTABLE state, never a
+    silently-served one. A sidecar without the field skips the check
+    once and gains it on this flip. The rest of the sidecar (fitted
+    model, build-time means) is append-invariant.
+
+    Returns the committed ``row_count`` and the drift stats ``{"n",
+    "mean", "build_mean", "expected", "drift_ratio"}``: the batch's
+    mean of the kind's stat column (:data:`CELL_STATS`) against the
+    build-time means OF THE CELLS THE BATCH LANDS IN, batch-count-
+    weighted, falling back to the global build mean for cells empty at
+    build (and on the flat layout). Cells legitimately differ in
+    spread, so a corpus-wide reference would flag every batch from a
+    high-variance region forever, even one a rebuild just admitted.
+    ``drift_ratio`` is None ONLY when a reference is genuinely missing
+    (empty batch, or a sidecar without drift means); a ~0 reference
+    (vectors coinciding with the model — the expansion can even read
+    tiny-negative there) clamps instead, so an out-of-distribution batch
+    against a degenerate build still fires a huge ratio rather than
+    silently suppressing the signal."""
+    meta = read_meta(path, fs=fs)
+    if meta["id_col"] != id_col:
+        raise ValueError(
+            f"{kind.upper()} index at {path!r} was built with id_col="
+            f"{meta['id_col']!r}, not {id_col!r}"
+        )
+    actual = raise_if_torn(spark, path, kind, fs=fs)
+    rows = encode(meta).localCheckpoint(eager=True)
+    col, mean_key, cell_key = CELL_STATS[kind]
+    n, mean, groups = _cell_stats(rows, col)
+    _write_cells(rows, path, "append")
+    committed = read_sidecar(path, kind, fs=fs)
+    committed["row_count"] = actual + n
+    write_sidecar(path, kind, committed, fs=fs)  # THE COMMIT
+    build_mean = meta.get(mean_key)
+    cell_ref = meta.get(cell_key) or {}
+    if mean is None or (build_mean is None and not cell_ref):
+        expected = None
+    elif "cell" not in rows.columns:
+        expected = build_mean
+    else:
+        fallback = (
+            float(build_mean)
+            if build_mean is not None
+            else sum(cell_ref.values()) / len(cell_ref)
+        )
+        expected = sum(
+            r.n * float(cell_ref.get(str(int(r.cell)), fallback))
+            for r in groups
+        ) / n
+    return {
+        "row_count": committed["row_count"],
+        "n": n,
+        "mean": mean,
+        "build_mean": build_mean,
+        "expected": expected,
+        "drift_ratio": (
+            None if expected is None else mean / max(float(expected), 1e-12)
+        ),
+    }
+
+
+def _swap_names(path: str, kind: str) -> tuple[str, str, str]:
+    """(parent dir, leftover prefix for ``.{kind}-old-``, same for
+    ``.{kind}-scratch-``) of a cell index's rebuild swap."""
+    parent, name = os.path.split(path.rstrip("/"))
+    return parent or ".", f".{kind}-old-{name}-", f".{kind}-scratch-{name}-"
+
+
+def cell_index_recover(path: str, kind: str, fs=None) -> None:
+    """Heal a cell-index rebuild killed mid-swap, under the caller's
+    lock. The swap is the X82 two-rename discipline (index →
+    ``.{kind}-old-<name>-<pid>``, scratch → index), so a crash leaves
+    the committed index whole in exactly one place: index dir present →
+    any old/scratch leftovers are from a completed or never-started
+    swap, reap them; index dir missing with an old leftover present →
+    the crash hit between the renames, roll it back (the rebuild simply
+    didn't happen)."""
+    fs = fs or LOCAL_FS
+    parent, old_pfx, scratch_pfx = _swap_names(path, kind)
+    olds = sorted(d for d in fs.listdir(parent) if d.startswith(old_pfx))
+    if olds and not fs.isdir(path):
+        fs.rename(os.path.join(parent, olds[-1]), path)
+        olds = olds[:-1]
+    for d in olds:
+        fs.rmtree(os.path.join(parent, d))
+    for d in fs.listdir(parent):
+        if d.startswith(scratch_pfx):
+            fs.rmtree(os.path.join(parent, d))
+
+
+@contextlib.contextmanager
+def cell_index_swap(path: str, kind: str, fs=None, lock_held: bool = False):
+    """Rebuild a cell index into a scratch dir and swap it in
+    atomically: ``with cell_index_swap(path, kind) as scratch:`` — the
+    body writes the new index at ``scratch``; on a clean exit the X82
+    two-rename swap (index → ``.{kind}-old-…``, scratch → index) makes
+    the cutover one atomic rename on POSIX/HDFS, and the old layout is
+    reaped. A body that raises swaps nothing.
+
+    The GLOBAL writer mutex (:func:`writer_gate`) is taken first unless
+    the caller already holds it (``lock_held=True`` — an actuator
+    running inside an append), then the kind's inner single-swap mutex,
+    and :func:`cell_index_recover` heals a crashed predecessor on entry —
+    a fixed lock order across all writers, so no deadlock, and no crash
+    loses the committed index. The swap window is not atomic for
+    concurrent READERS (a probe racing the cutover can observe the
+    missing dir and fail loudly — never silently wrong); run rebuilds
+    from the ingest loop's writer thread like X82 compaction."""
+    fs = fs or LOCAL_FS
+    parent, old_pfx, scratch_pfx = _swap_names(path, kind)
+    with writer_gate(
+        path,
+        f"a {kind} rebuild serializes with appends and verify-index on "
+        "the index's single-writer mutex",
+        fs,
+        lock_held,
+    ), fs.exclusive_lock(
+        path.rstrip("/") + _SWAP_LOCK[kind],
+        f"{kind} rebuilds are single-writer by design (two concurrent "
+        "swaps would interleave renames on the same index dir)",
+    ):
+        cell_index_recover(path, kind, fs)
+        scratch = os.path.join(parent, f"{scratch_pfx}{os.getpid()}")
+        yield scratch
+        old = os.path.join(parent, f"{old_pfx}{os.getpid()}")
+        fs.rename(path, old)
+        fs.rename(scratch, path)
+        fs.rmtree(old)

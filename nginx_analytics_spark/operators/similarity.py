@@ -36,14 +36,18 @@ from pyspark.sql.window import Window
 
 from nginx_analytics_spark.functions.rounding import half_up
 from nginx_analytics_spark.operators.index_fs import (
-    LOCAL_FS,
+    CELL_APPEND_PURPOSE,
     banded_index_probe,
     banded_index_write,
+    cell_index_append,
+    cell_index_swap,
+    cell_index_write,
     check_sidecar,
     index_kind,
+    raise_if_torn,
     read_sidecar,
     write_sidecar,
-    writer_lock_path,
+    writer_gate,
 )
 
 
@@ -944,6 +948,27 @@ def ivf_centroids(
     return _lloyd(x, n_cells, seed, max_iter)
 
 
+def _nearest(x: np.ndarray, c: np.ndarray, cnorm: np.ndarray) -> tuple:
+    """The nearest-row step every IVF/PQ kernel shares: for each row of
+    ``x`` the index of its nearest row of ``c`` (squared L2) and that
+    squared distance. The argmin runs over ``|c|^2 - 2 x.c`` (``cnorm``
+    is ``|c|^2``): ``|x|^2`` is row-constant, so it is added to the
+    CHOSEN distance only. Adding it before the argmin could round two
+    distances to the same value and flip the pick — the tie the encode
+    paths once disagreed on (tests/test_pq.py)."""
+    part = cnorm - 2.0 * (x @ c.T)
+    idx = np.argmin(part, axis=1)
+    return idx, part[np.arange(len(x)), idx] + np.einsum("ij,ij->i", x, x)
+
+
+def _nearest_k(x: np.ndarray, c: np.ndarray, cnorm: np.ndarray,
+               k: int) -> np.ndarray:
+    """:func:`_nearest`'s rule for the ``k`` nearest rows of ``c`` per
+    row of ``x``: a stable argsort of ``|c|^2 - 2 x.c``, so ties break
+    by row id and the head is ``_nearest``'s pick."""
+    return np.argsort(cnorm - 2.0 * (x @ c.T), axis=1, kind="stable")[:, :k]
+
+
 def cell_assignment(vec: Column, centroids: np.ndarray) -> Column:
     """``struct<cell:int, adist:double>`` — the nearest centroid id plus
     the TRUE squared-L2 assignment distance. Same argmin decisions as
@@ -959,10 +984,7 @@ def cell_assignment(vec: Column, centroids: np.ndarray) -> Column:
         if len(xs) == 0:
             return pd.DataFrame({"cell": pd.Series([], dtype="int32"),
                                  "adist": pd.Series([], dtype="float64")})
-        x = np.stack(xs.to_numpy())
-        part = cnorm - 2.0 * (x @ cents.T)  # |c|^2 - 2 x.c
-        idx = np.argmin(part, axis=1)
-        dist = part[np.arange(len(x)), idx] + np.einsum("ij,ij->i", x, x)
+        idx, dist = _nearest(np.stack(xs.to_numpy()), cents, cnorm)
         return pd.DataFrame(
             {"cell": idx.astype(np.int32), "adist": dist}
         )
@@ -982,11 +1004,8 @@ def nearest_cells(vec: Column, centroids: np.ndarray, nprobe: int) -> Column:
     def _nc(xs: pd.Series) -> pd.Series:
         if len(xs) == 0:
             return pd.Series([], dtype="object")
-        x = np.stack(xs.to_numpy())
-        # argmin of |x-c|^2 = argmin(|c|^2 - 2 x.c); |x|^2 is row-constant
-        d = cnorm - 2.0 * (x @ cents.T)
-        idx = np.argsort(d, axis=1, kind="stable")[:, :probe].astype(np.int32)
-        return pd.Series(list(idx))
+        idx = _nearest_k(np.stack(xs.to_numpy()), cents, cnorm, probe)
+        return pd.Series(list(idx.astype(np.int32)))
 
     return _nc(vec)
 
@@ -1118,16 +1137,36 @@ def read_ivf_index_meta(path: str, fs=None) -> dict:
     erroring — the same failure mode the ``lsh`` sidecar guards against
     for the LSH index."""
     meta = read_sidecar(path, "ivf", fs=fs)
-    cents = np.asarray(meta.get("centroids"), dtype=np.float64)
-    if cents.ndim != 2 or cents.shape != (meta.get("n_cells"), meta.get("dim")):
-        raise ValueError(
-            f"IVF index at {path!r}: sidecar centroids shape "
-            f"{cents.shape} disagrees with its own (n_cells, dim) = "
-            f"({meta.get('n_cells')}, {meta.get('dim')}) — rebuild with "
-            "ivf_write_bucketed"
-        )
-    meta["centroids"] = cents
+    _sidecar_array(path, "ivf", meta, "centroids", ("n_cells", "dim"))
     return meta
+
+
+def _sidecar_array(path: str, kind: str, meta: dict, key: str,
+                   dims: tuple[str, ...]) -> None:
+    """Replace ``meta[key]`` by its float64 array, raising ValueError
+    unless its shape is the sidecar's own ``dims`` entries."""
+    arr = np.asarray(meta.get(key), dtype=np.float64)
+    want = tuple(meta.get(d) for d in dims)
+    if arr.shape != want:
+        builder = "ivf_write_bucketed" if kind == "ivf" else "pq_write_index"
+        raise ValueError(
+            f"{kind.upper()} index at {path!r}: sidecar {key} shape "
+            f"{arr.shape} disagrees with its own ({', '.join(dims)}) = "
+            f"{want} — rebuild with {builder}"
+        )
+    meta[key] = arr
+
+
+def _ivf_rows(vecs: DataFrame, id_col: str, vec_col: str,
+              centroids: np.ndarray) -> DataFrame:
+    """(id, cv, cell, adist): the IVF index's row layout, shared by the
+    build and the append."""
+    return (
+        vecs.select(F.col(id_col), as_double(vec_col).alias("cv"))
+        .withColumn("a", cell_assignment(F.col("cv"), centroids))
+        .select(id_col, "cv", F.col("a.cell").alias("cell"),
+                F.col("a.adist").alias("adist"))
+    )
 
 
 def ivf_write_bucketed(
@@ -1143,30 +1182,14 @@ def ivf_write_bucketed(
 ) -> np.ndarray:
     """Materialize the IVF index AT REST: the corpus written to Parquet
     partitioned by ``cell`` (one directory per inverted list), with the
-    fitted centroids in an ``ivf`` sidecar (they ARE the
-    index's metadata — ~n_cells x dim floats; json float repr
-    round-trips float64 exactly, so the sidecar is bit-faithful). The
-    sidecar is written atomically AFTER the data and carries the
-    index's ``row_count``, so a complete sidecar marks a complete
-    BUILD — and every :func:`ivf_append_bucketed` re-commits by
-    flipping the sidecar's count LAST, which keeps the invariant
-    honest across appends: a writer killed between the row append and
-    the sidecar flip leaves ``row_count`` behind the data, which the
-    next append (or :func:`ivf_index_verify`, or a ``verify=True``
-    probe) detects loudly instead of silently serving a torn index
-    (r11 ADVICE). Also returns the centroids for callers that probe
-    immediately.
-
-    Seam scope (r11 ADVICE): unlike the banded text/SRP indexes —
-    whose ROW I/O dispatches through ``index_fs``'s ``store_*`` family
-    wholesale — the IVF index's rows are always written and read with
-    Spark's own parquet machinery (``partitionBy("cell")`` /
-    partition-pruned reads); the ``fs`` seam here covers ONLY the
-    driver-side sidecar/metadata I/O and the recluster swap's renames.
-    A ManifestIndexFS-style object-store deployment therefore gets an
-    atomic sidecar flip (one PUT) but plain parquet data placement;
-    the ``row_count`` commit protocol above is exactly what makes that
-    sufficient for torn-write DETECTION without a manifest layer.
+    fitted centroids in an ``ivf`` sidecar (they ARE the index's
+    metadata — ~n_cells x dim floats; json float repr round-trips
+    float64 exactly, so the sidecar is bit-faithful). Each row stores
+    its squared-L2 assignment distance ``adist``, the drift monitor's
+    column. The write, the build-time stats and the sidecar-last commit
+    are the shared cell store's (:func:`index_fs.cell_index_write`), so
+    a torn later append is detected loudly instead of silently served.
+    Returns the centroids for callers that probe immediately.
 
     This is the storage layout the in-memory :func:`ivf_topk` docstring
     promises: a probe becomes PARTITION PRUNING, so a query's scan opens
@@ -1179,70 +1202,14 @@ def ivf_write_bucketed(
     centroids = ivf_centroids(
         corpus, n_cells, vec_col, seed, max_iter, id_col, sample_cap
     )
-    assigned = (
-        corpus.select(F.col(id_col), as_double(vec_col).alias("cv"))
-        .withColumn("a", cell_assignment(F.col("cv"), centroids))
-        .select(id_col, "cv", F.col("a.cell").alias("cell"),
-                F.col("a.adist").alias("adist"))
+    cell_index_write(
+        _ivf_rows(corpus, id_col, vec_col, centroids), path, "ivf",
+        {"id_col": id_col, "n_cells": int(n_cells),
+         "dim": int(centroids.shape[1]), "seed": int(seed)},
+        {"centroids": centroids.tolist()},
+        fs=fs,
     )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    # Build-time row count + PER-CELL mean assignment distances — the
-    # torn-append detector's and drift monitor's reference points —
-    # computed from the written index's adist column (one column-pruned
-    # re-read grouped by cell — n_cells tiny rows — not a second corpus
-    # pass over the vectors). The drift reference is per-cell, not one
-    # global mean, because cells legitimately differ in spread: a batch
-    # must be compared against the cells IT LANDS IN, or a
-    # high-variance region admitted by one re-cluster reads as "drift"
-    # against the corpus-wide mean forever (r12: found by the
-    # exactly-one-rebuild actuator test).
-    spark = corpus.sparkSession
-    per_cell = (
-        spark.read.parquet(path)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("adist").alias("m"))
-        .collect()
-    )
-    n_rows = sum(r.n for r in per_cell)
-    meta = {
-        "id_col": id_col,
-        "n_cells": int(n_cells),
-        "dim": int(centroids.shape[1]),
-        "seed": int(seed),
-        "row_count": int(n_rows),
-        "mean_assign_dist": float(
-            sum(r.n * r.m for r in per_cell) / n_rows
-        ),
-        "cell_mean_assign_dist": {
-            str(int(r.cell)): float(r.m) for r in per_cell
-        },
-        "centroids": centroids.tolist(),
-    }
-    write_sidecar(path, "ivf", meta, fs=fs)
     return centroids
-
-
-def ivf_index_verify(spark, path: str, fs=None) -> dict:
-    """Check the at-rest IVF index's commit invariant: the parquet row
-    count equals the sidecar's ``row_count``. A mismatch means a writer
-    died between a data append and its sidecar flip (torn append — the
-    extra rows' batch was never acknowledged) or foreign files landed
-    in the index dir; either way probes would silently serve rows no
-    commit covers, so maintenance paths call this and fail loudly.
-    Returns ``{"expected", "actual", "torn"}`` — ``expected`` is None
-    for a pre-r12 sidecar without the field (then ``torn`` is None
-    too: unknown, not healthy; the next successful append upgrades the
-    sidecar). The count is a column-pruned metadata-scale scan (parquet
-    row counts come from file footers), proportional to the index's
-    FILE population, never its bytes."""
-    meta = read_ivf_index_meta(path, fs=fs)
-    expected = meta.get("row_count")
-    actual = spark.read.parquet(path).count()
-    return {
-        "expected": expected,
-        "actual": int(actual),
-        "torn": None if expected is None else (int(actual) != int(expected)),
-    }
 
 
 def ivf_append_bucketed(
@@ -1265,179 +1232,59 @@ def ivf_append_bucketed(
     existing data never moves and concurrent probes stay correct.
     Raises loudly (via :func:`read_ivf_index_meta`) rather than
     appending under unknown centroids, which would scatter vectors
-    into cells probes won't look in.
-
-    Commit protocol (r11 ADVICE — the parquet append alone is NOT
-    atomic): the entry first verifies the standing index's row count
-    against the sidecar (:func:`ivf_index_verify`) and raises on a
-    mismatch — a torn append left by a writer killed between its data
-    write and its sidecar flip (rebuild with :func:`recluster_ivf` or
-    ``ivf_write_bucketed``). Then rows land, and the sidecar's
-    ``row_count`` flips LAST (one atomic replace through the ``fs``
-    seam) — the flip IS the commit, so a crash anywhere leaves a
-    DETECTABLE state, never a silently-served one. A pre-r12 sidecar
-    without the field skips the check once and gains it on this
-    append's flip.
+    into cells probes won't look in. The commit — torn-predecessor
+    check, row write, ``row_count`` flip LAST — is the shared cell
+    store's (:func:`index_fs.cell_index_append`); a torn index is
+    rebuilt with :func:`recluster_ivf` or ``ivf_write_bucketed``.
 
     Returns the DRIFT STATS the re-cluster decision needs: the batch's
     mean squared-L2 assignment distance against the build-time means
-    OF THE CELLS THE BATCH LANDS IN (batch-count-weighted, from the
-    sidecar's per-cell map — cells legitimately differ in spread, so a
-    corpus-wide reference would flag every batch from a high-variance
-    region forever, even one the last re-cluster deliberately
-    admitted). ``drift_ratio`` ~1 means the batch still fits the
-    quantizer; a ratio creeping upward across appends means the
-    distribution has moved off the fitted cells (recall decays because
-    true neighbors land in unprobed cells). The signal has an ACTUATOR
-    (r11 verdict item 3): pass ``recluster_threshold`` and any append
-    whose ratio crosses it triggers exactly one :func:`recluster_ivf`
-    — quantizer refit over the index's own rows (which now include
-    this batch) + atomic layout swap — before returning, with the
-    rebuild's stats under ``"recluster"`` in the result; after the
-    rebuild the new distribution is IN distribution, so subsequent
-    batches' ratios fall back toward 1 and the trigger self-arms only
-    on genuine further drift (tested with sustained OOD appends in
-    tests/test_dataops.py). ``None`` (default) keeps the monitor
-    signal-only for callers that schedule rebuilds themselves. The
-    batch is checkpointed so the assignment kernel runs once for the
-    stats AND the write.
+    OF THE CELLS THE BATCH LANDS IN. ``drift_ratio`` ~1 means the batch
+    still fits the quantizer; a ratio creeping upward across appends
+    means the distribution has moved off the fitted cells (recall
+    decays because true neighbors land in unprobed cells). The signal
+    has an ACTUATOR (r11 verdict item 3): pass ``recluster_threshold``
+    and any append whose ratio crosses it triggers exactly one
+    :func:`recluster_ivf` — quantizer refit over the index's own rows
+    (which now include this batch) + atomic layout swap — before
+    returning, with the rebuild's stats under ``"recluster"`` in the
+    result; after the rebuild the new distribution is IN distribution,
+    so subsequent batches' ratios fall back toward 1 and the trigger
+    self-arms only on genuine further drift (tested with sustained OOD
+    appends in tests/test_dataops.py). ``None`` (default) keeps the
+    monitor signal-only for callers that schedule rebuilds themselves.
 
-    Single-writer mutex (r13 ADVICE): the append runs under
-    ``index_fs.writer_lock_path`` — the sibling ``jobs verify-index``
-    and every other writer of this index serialize on — so a verify
-    can never observe the data-write→sidecar-flip window as a
-    transient false TORN. ``lock_held=True`` skips acquisition for a
-    caller that already owns the mutex (an ingest loop's writer
-    thread)."""
-    if not lock_held:
-        with (fs or LOCAL_FS).exclusive_lock(
-            writer_lock_path(path),
-            "IVF appends are single-writer: a concurrent writer or "
-            "verifier racing the data-write→sidecar-flip window would "
-            "read a transient false TORN",
+    The append runs under the index's single-writer mutex
+    (:func:`index_fs.writer_gate`, which ``jobs verify-index`` also
+    takes); ``lock_held=True`` skips acquisition for a caller that
+    already owns it (an ingest loop's writer thread)."""
+    with writer_gate(path, f"IVF {CELL_APPEND_PURPOSE}", fs, lock_held):
+        spark = new_vecs.sparkSession
+        stats = cell_index_append(
+            spark, path, "ivf", id_col, read_ivf_index_meta,
+            lambda meta: _ivf_rows(new_vecs, id_col, vec_col,
+                                   meta["centroids"]),
+            fs=fs,
+        )
+        ratio = stats["drift_ratio"]
+        out = {
+            "n": stats["n"],
+            "mean_assign_dist": stats["mean"],
+            "build_mean_assign_dist": stats["build_mean"],
+            "expected_assign_dist": stats["expected"],
+            "drift_ratio": ratio,
+            "reclustered": False,
+        }
+        if (
+            recluster_threshold is not None
+            and ratio is not None
+            and ratio > recluster_threshold
         ):
-            return ivf_append_bucketed(
-                new_vecs, path, id_col=id_col, vec_col=vec_col, fs=fs,
-                recluster_threshold=recluster_threshold,
-                recluster_kwargs=recluster_kwargs, lock_held=True,
+            out["recluster"] = recluster_ivf(
+                spark, path, fs=fs, lock_held=True, **(recluster_kwargs or {})
             )
-    meta = read_ivf_index_meta(path, fs=fs)
-    if meta["id_col"] != id_col:
-        raise ValueError(
-            f"IVF index at {path!r} was built with id_col="
-            f"{meta['id_col']!r}, not {id_col!r}"
-        )
-    spark = new_vecs.sparkSession
-    check = ivf_index_verify(spark, path, fs=fs)
-    if check["torn"]:
-        raise ValueError(
-            f"IVF index at {path!r} is torn: sidecar commits "
-            f"{check['expected']} rows but {check['actual']} are on disk "
-            "— a prior append died between its data write and its sidecar "
-            "flip. Rebuild with recluster_ivf(...) or ivf_write_bucketed "
-            "before appending (the uncommitted rows' batch was never "
-            "acknowledged and must be re-sent)."
-        )
-    assigned = (
-        new_vecs.select(F.col(id_col), as_double(vec_col).alias("cv"))
-        .withColumn("a", cell_assignment(F.col("cv"), meta["centroids"]))
-        .select(id_col, "cv", F.col("a.cell").alias("cell"),
-                F.col("a.adist").alias("adist"))
-        .localCheckpoint(eager=True)
-    )
-    per_cell = assigned.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("bn"), F.avg("adist").alias("bm")
-    ).collect()  # <= n_cells tiny rows
-    n = sum(r.bn for r in per_cell)
-    batch_mean = (
-        sum(r.bn * r.bm for r in per_cell) / n if n else None
-    )
-    assigned.write.mode("append").partitionBy("cell").parquet(path)
-    # THE COMMIT: flip the sidecar's row_count after the rows are all
-    # down. Everything else in the sidecar (centroids, build-time mean)
-    # is append-invariant by design.
-    committed = {
-        **{k: v for k, v in meta.items() if k != "centroids"},
-        "row_count": int(check["actual"]) + int(n),
-        "centroids": meta["centroids"].tolist(),
-    }
-    write_sidecar(path, "ivf", committed, fs=fs)
-    build_mean = meta.get("mean_assign_dist")
-    # The drift reference is the build-time mean OF THE CELLS THE BATCH
-    # LANDS IN (batch-count-weighted), falling back to the global build
-    # mean for cells empty at build or a pre-r12 sidecar without the
-    # per-cell map: cells legitimately differ in spread, and comparing
-    # a batch against the corpus-wide mean makes every batch from a
-    # high-variance region — even one a re-cluster just admitted — read
-    # as drifted forever (an actuator under that monitor would rebuild
-    # in a loop). ratio is None ONLY when a reference is genuinely
-    # missing (empty batch / pre-drift-monitor sidecar); a ~0 reference
-    # (vectors coinciding with centroids — the expansion can even read
-    # tiny-negative there) clamps instead, so an out-of-distribution
-    # batch against a degenerate build still fires a huge ratio rather
-    # than silently suppressing the signal (r11 review).
-    cell_ref = meta.get("cell_mean_assign_dist") or {}
-    if batch_mean is None or (build_mean is None and not cell_ref):
-        ratio = None
-        expected = None
-    else:
-        fallback = (
-            float(build_mean)
-            if build_mean is not None
-            else sum(cell_ref.values()) / len(cell_ref)
-        )
-        expected = (
-            sum(
-                r.bn * float(cell_ref.get(str(int(r.cell)), fallback))
-                for r in per_cell
-            )
-            / n
-        )
-        ratio = float(batch_mean) / max(float(expected), 1e-12)
-    out = {
-        "n": int(n),
-        "mean_assign_dist": float(batch_mean) if batch_mean is not None else None,
-        "build_mean_assign_dist": build_mean,
-        "expected_assign_dist": expected,
-        "drift_ratio": ratio,
-        "reclustered": False,
-    }
-    if (
-        recluster_threshold is not None
-        and ratio is not None
-        and ratio > recluster_threshold
-    ):
-        out["recluster"] = recluster_ivf(
-            spark, path, fs=fs, lock_held=True, **(recluster_kwargs or {})
-        )
-        out["reclustered"] = True
-    return out
-
-
-def _recover_ivf_recluster(path: str, fs) -> None:
-    """Heal a recluster killed mid-swap, under the caller's lock. The
-    swap is the X82 two-rename discipline (index → ``.old``, scratch →
-    index), so a crash leaves the committed index whole in exactly one
-    place: index dir present → any ``.old``/scratch leftovers are from
-    a completed or never-started swap, reap them; index dir missing
-    with an ``.old`` present → the crash hit between the renames, roll
-    the ``.old`` back (the recluster simply didn't happen)."""
-    import os
-
-    parent, name = os.path.split(path.rstrip("/"))
-    parent = parent or "."
-    olds = sorted(
-        d for d in fs.listdir(parent)
-        if d.startswith(f".ivf-old-{name}-")
-    )
-    if olds and not fs.isdir(path):
-        fs.rename(os.path.join(parent, olds[-1]), path)
-        olds = olds[:-1]
-    for d in olds:
-        fs.rmtree(os.path.join(parent, d))
-    for d in fs.listdir(parent):
-        if d.startswith(f".ivf-scratch-{name}-"):
-            fs.rmtree(os.path.join(parent, d))
+            out["reclustered"] = True
+        return out
 
 
 def recluster_ivf(
@@ -1457,66 +1304,28 @@ def recluster_ivf(
     vectors per row, so the rebuild needs no external corpus handle:
     read (id, cv) through the standing layout, fit fresh centroids on
     the portable-hash sample (which now includes the drifted rows),
-    and write the new cell layout to a SCRATCH dir; then the X82
-    two-rename swap (index → ``.ivf-old-…``, scratch → index) makes
-    the cutover one atomic rename on POSIX/HDFS, and
-    :func:`_recover_ivf_recluster` — run on entry under the same
-    single-recluster mutex (sibling ``<path>.recluster.lock``) — rolls
-    a crashed swap back, so no crash loses the committed index. The
-    swap window is not atomic for concurrent READERS (a probe racing
-    the cutover can observe the missing dir and fail loudly — never
-    silently wrong); run reclusters from the ingest loop's writer
-    thread like X82 compaction.
+    and write the new cell layout to a SCRATCH dir that the shared cell
+    store's two-rename swap cuts over (:func:`index_fs.cell_index_swap`
+    — locking, crash recovery on entry and the reader caveat are
+    documented there; ``lock_held=True`` is the inline actuator path
+    from :func:`ivf_append_bucketed`).
 
     ``n_cells``/``seed`` default to the standing sidecar's, so the
     routine rebuild changes geometry, not configuration. Returns
     ``{"n_rows", "n_cells", "old_mean_assign_dist",
     "new_mean_assign_dist"}`` — the new build mean becomes the drift
-    monitor's reference, which is what re-arms the trigger at ~1.
-
-    Locking (r13 ADVICE): the GLOBAL writer mutex
-    (``index_fs.writer_lock_path``) is taken first unless the caller
-    already holds it (``lock_held=True`` — the inline actuator path
-    from :func:`ivf_append_bucketed`); the ``.recluster.lock`` sibling
-    stays as the inner recovery-discipline lock, acquired after — a
-    fixed order across all writers, so no deadlock."""
-    import contextlib
-    import os
-
-    fs = fs or LOCAL_FS
-    writer_gate = (
-        contextlib.nullcontext()
-        if lock_held
-        else fs.exclusive_lock(
-            writer_lock_path(path),
-            "recluster serializes with appends and verify-index on the "
-            "index's single-writer mutex",
-        )
-    )
-    with writer_gate, fs.exclusive_lock(
-        path.rstrip("/") + ".recluster.lock",
-        "recluster is single-writer by design (two concurrent swaps "
-        "would interleave renames on the same index dir)",
-    ):
-        _recover_ivf_recluster(path, fs)
+    monitor's reference, which is what re-arms the trigger at ~1."""
+    with cell_index_swap(path, "ivf", fs, lock_held) as scratch:
         meta = read_ivf_index_meta(path, fs=fs)
         n_cells = int(n_cells if n_cells is not None else meta["n_cells"])
         seed = int(seed if seed is not None else meta["seed"])
         rows = spark.read.parquet(path).select(meta["id_col"], "cv")
-        parent, name = os.path.split(path.rstrip("/"))
-        parent = parent or "."
-        pid = os.getpid()
-        scratch = os.path.join(parent, f".ivf-scratch-{name}-{pid}")
         ivf_write_bucketed(
             rows, scratch, n_cells=n_cells, id_col=meta["id_col"],
             vec_col="cv", seed=seed, max_iter=max_iter,
             sample_cap=sample_cap, fs=fs,
         )
-        new_meta = read_ivf_index_meta(scratch, fs=fs)
-        old = os.path.join(parent, f".ivf-old-{name}-{pid}")
-        fs.rename(path, old)
-        fs.rename(scratch, path)
-        fs.rmtree(old)
+        new_meta = read_sidecar(scratch, "ivf", fs=fs)
         return {
             "n_rows": int(new_meta["row_count"]),
             "n_cells": n_cells,
@@ -1546,10 +1355,10 @@ def ivf_topk_bucketed(
     ``IN`` partition filter so only those cells' files are opened.
 
     ``verify=True`` additionally checks the sidecar's ``row_count``
-    commit against the on-disk rows first (:func:`ivf_index_verify`)
-    and raises on a torn append — one footer-scale count per probe
-    batch, for serving paths that must not read uncommitted rows. Off
-    by default: appends and maintenance already gate on it, and a torn
+    commit against the on-disk rows first
+    (:func:`index_fs.cell_index_verify`) and raises on a torn append —
+    one footer-scale count per probe batch, for serving paths that must
+    not read uncommitted rows. Off by default: appends and maintenance already gate on it, and a torn
     index only ever serves EXTRA (unacknowledged, correct-content)
     rows, never loses committed ones.
 
@@ -1565,13 +1374,7 @@ def ivf_topk_bucketed(
     """
     meta = read_ivf_index_meta(path, fs=fs)
     if verify:
-        check = ivf_index_verify(spark, path, fs=fs)
-        if check["torn"]:
-            raise ValueError(
-                f"IVF index at {path!r} is torn: sidecar commits "
-                f"{check['expected']} rows, disk holds {check['actual']} "
-                "— rebuild with recluster_ivf/ivf_write_bucketed"
-            )
+        raise_if_torn(spark, path, "ivf", fs=fs)
     if centroids is None:
         centroids = meta["centroids"]
     elif not np.array_equal(
@@ -1651,19 +1454,26 @@ def pq_codebooks(
     codebooks are tiny driver constants (m*k*sub_dim doubles) shipped to
     executors in UDF closures.
     """
+    return _fit_books_on_sample(
+        _vec_sample(corpus, vec_col, sample_cap), m, k, seed, max_iter
+    )
+
+
+def _vec_sample(corpus: DataFrame, vec_col: str, sample_cap: int) -> np.ndarray:
+    """The bounded driver-side sample (``limit(sample_cap)`` collect)
+    the codebook fits run on, as a (rows x dim) float64 matrix."""
     rows = corpus.select(as_double(vec_col).alias("v")).limit(sample_cap).collect()
     if not rows:
         raise ValueError("empty corpus")
-    x = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    return _fit_books_on_sample(x, m, k, seed, max_iter)
+    return np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
 
 
 def _fit_books_on_sample(
     x: np.ndarray, m: int, k: int, seed: int, max_iter: int
 ) -> np.ndarray:
     """The driver-side subspace fits shared by :func:`pq_codebooks`
-    (raw vectors) and :func:`pq_write_index`'s residual mode (the same
-    sample shifted by its cell centroids)."""
+    and :func:`pq_write_index` (raw vectors, or in residual mode the
+    same sample shifted by its cell centroids)."""
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1675,119 +1485,71 @@ def _fit_books_on_sample(
     return np.stack(books)  # (m, k, sub)
 
 
-def _pq_encode_udf(codebooks: np.ndarray):
-    """The PQ encoder as a reusable Arrow kernel: per subspace a
-    (batch x k) distance matrix via matmul, argmin per row. Exposed so
-    :func:`pq_write_index` can compute codes and cell assignment from
-    ONE pass over the vectors instead of scanning the corpus twice."""
-    books = np.ascontiguousarray(codebooks)
+def _pq_kernel(codebooks: np.ndarray, centroids: np.ndarray | None = None,
+               residual: bool = False):
+    """THE PQ encoder, one Arrow kernel for every path: per subspace a
+    (batch x k) distance matrix via matmul and the shared nearest-row
+    step (:func:`_nearest`), returning ``struct<[cell,] codes, qerr>``
+    in one pass. ``qerr`` is the row's reconstruction squared error
+    under these codebooks — what the at-rest index stores per row (the
+    IVF ``adist`` precedent), so the drift monitor's reference is a
+    column scan of the index itself, never a second corpus pass.
+    Distortion is THE health number for PQ — when the ingested
+    distribution drifts off the fitted codebooks, qerr inflates and ADC
+    distances degrade from 'quantization-noisy' to 'wrong', silently.
+
+    ``centroids`` adds the IVFADC ``cell`` (the :func:`cell_assignment`
+    decision, from the same vectors in the same pass). ``residual``
+    (classic IVFADC, Jégou et al. 2011 §V.A) encodes ``v -
+    centroid[cell]`` instead of ``v``: the residual DEPENDS on the
+    assignment, so one kernel ships each vector through one Python
+    worker instead of two (why residual codes recover recall:
+    :func:`pq_write_index`). The in-memory :func:`pq_encode` and the at-rest writer
+    and append run this same kernel, so their codes agree by
+    construction, ties included."""
+    books = np.ascontiguousarray(codebooks, dtype=np.float64)
     m_, k_, sub = books.shape
+    bnorm = [np.einsum("ij,ij->i", c, c) for c in books]
+    celled = centroids is not None
+    if celled:
+        cents = np.ascontiguousarray(centroids, dtype=np.float64)
+        cnorm = np.einsum("ij,ij->i", cents, cents)
 
-    @F.pandas_udf("array<int>")
-    def _enc(xs: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="object")
-        x = np.stack(xs.to_numpy())  # (n, dim)
-        codes = np.empty((x.shape[0], m_), dtype=np.int32)
-        for j in range(m_):
-            xj = x[:, j * sub : (j + 1) * sub]
-            c = books[j]
-            d = np.einsum("ij,ij->i", c, c) - 2.0 * (xj @ c.T)
-            codes[:, j] = np.argmin(d, axis=1)
-        return pd.Series(list(codes))
-
-    return _enc
-
-
-def _pq_encode_err_udf(codebooks: np.ndarray):
-    """The encoder plus the per-row RECONSTRUCTION squared error under
-    these codebooks — ``struct<codes, qerr>`` in one Arrow pass. qerr
-    is what the at-rest index stores per row (the IVF index's ``adist``
-    precedent): the drift monitor's reference is then a column scan of
-    the index itself, never a second corpus pass. Distortion is THE
-    health number for PQ — when the ingested distribution drifts off
-    the fitted codebooks, qerr inflates and ADC distances degrade from
-    'quantization-noisy' to 'wrong', silently."""
-    books = np.ascontiguousarray(codebooks)
-    m_, k_, sub = books.shape
-
-    @F.pandas_udf("struct<codes:array<int>, qerr:double>")
+    @F.pandas_udf(
+        f"struct<{'cell:int, ' if celled else ''}"
+        "codes:array<int>, qerr:double>"
+    )
     def _enc(xs: pd.Series) -> pd.DataFrame:
-        if len(xs) == 0:
-            return pd.DataFrame(
-                {"codes": pd.Series([], dtype="object"),
-                 "qerr": pd.Series([], dtype="float64")}
-            )
-        x = np.stack(xs.to_numpy())  # (n, dim)
+        x = np.stack(xs.to_numpy()) if len(xs) else np.zeros((0, m_ * sub))
+        out = {}
+        if celled:
+            cell = _nearest(x, cents, cnorm)[0]
+            out["cell"] = cell.astype(np.int32)
+            if residual:
+                x = x - cents[cell]  # the residuals the codes reconstruct
         codes = np.empty((x.shape[0], m_), dtype=np.int32)
         err = np.zeros(x.shape[0], dtype=np.float64)
         for j in range(m_):
-            xj = x[:, j * sub : (j + 1) * sub]
-            c = books[j]
-            # full |x_j - c|^2 (the encode argmin can drop the
-            # row-constant |x_j|^2 term; the ERROR cannot)
-            d = (
-                np.einsum("ij,ij->i", c, c)[None, :]
-                - 2.0 * (xj @ c.T)
-                + np.einsum("ij,ij->i", xj, xj)[:, None]
-            )
-            idx = np.argmin(d, axis=1)
-            codes[:, j] = idx
-            err += d[np.arange(len(x)), idx]
-        return pd.DataFrame({"codes": list(codes), "qerr": err})
+            codes[:, j], d = _nearest(x[:, j * sub : (j + 1) * sub],
+                                      books[j], bnorm[j])
+            err += d
+        return pd.DataFrame({**out, "codes": list(codes), "qerr": err})
 
     return _enc
 
 
-def _pq_encode_residual_err_udf(codebooks: np.ndarray, centroids: np.ndarray):
-    """The residual-mode encoder (classic IVFADC, Jégou et al. 2011
-    §V.A): assign the nearest coarse cell, subtract its centroid, PQ-
-    encode the RESIDUAL, and report the residual's reconstruction
-    squared error — ``struct<cell, codes, qerr>`` in one Arrow pass.
-    One kernel instead of composing :func:`cell_assignment` with
-    :func:`_pq_encode_err_udf` because the residual DEPENDS on the
-    assignment: splitting them would either ship the vector through two
-    Python workers or recompute the centroid argmin. Residual encoding
-    is what recovers recall at scale — residuals are smaller and more
-    isotropic than raw vectors, so the same m×k codebook budget spends
-    its resolution near the data instead of spanning the whole space
-    (the r12 verdict's measured gap: raw-code indexed recall@5 fell
-    0.56→0.48 at ×10 corpus while in-memory PQ held 0.58)."""
-    books = np.ascontiguousarray(codebooks)
-    cents = np.ascontiguousarray(centroids, dtype=np.float64)
-    cnorm = np.einsum("ij,ij->i", cents, cents)
-    m_, k_, sub = books.shape
-
-    @F.pandas_udf("struct<cell:int, codes:array<int>, qerr:double>")
-    def _enc(xs: pd.Series) -> pd.DataFrame:
-        if len(xs) == 0:
-            return pd.DataFrame(
-                {"cell": pd.Series([], dtype="int32"),
-                 "codes": pd.Series([], dtype="object"),
-                 "qerr": pd.Series([], dtype="float64")}
-            )
-        x = np.stack(xs.to_numpy())  # (n, dim)
-        part = cnorm - 2.0 * (x @ cents.T)  # |c|^2 - 2 x.c
-        cell = np.argmin(part, axis=1)
-        r = x - cents[cell]  # the residuals the codes reconstruct
-        codes = np.empty((x.shape[0], m_), dtype=np.int32)
-        err = np.zeros(x.shape[0], dtype=np.float64)
-        for j in range(m_):
-            rj = r[:, j * sub : (j + 1) * sub]
-            c = books[j]
-            d = (
-                np.einsum("ij,ij->i", c, c)[None, :]
-                - 2.0 * (rj @ c.T)
-                + np.einsum("ij,ij->i", rj, rj)[:, None]
-            )
-            idx = np.argmin(d, axis=1)
-            codes[:, j] = idx
-            err += d[np.arange(len(x)), idx]
-        return pd.DataFrame(
-            {"cell": cell.astype(np.int32), "codes": list(codes), "qerr": err}
-        )
-
-    return _enc
+def _pq_rows(vecs: DataFrame, id_col: str, vec_col: str, books: np.ndarray,
+             centroids: np.ndarray | None = None,
+             residual: bool = False) -> DataFrame:
+    """(id, codes, qerr[, cell]): the PQ index's row layout, shared by
+    the build and the append."""
+    enc = _pq_kernel(books, centroids, residual)
+    return vecs.select(
+        F.col(id_col), enc(as_double(vec_col)).alias("e")
+    ).select(
+        id_col, "e.codes", "e.qerr",
+        *(["e.cell"] if centroids is not None else []),
+    )
 
 
 def pq_encode(
@@ -1798,13 +1560,15 @@ def pq_encode(
 ) -> DataFrame:
     """(id, codes array<int>) — each vector compressed to m codebook
     indices (m bytes at k<=256). One Arrow-batched pass
-    (:func:`_pq_encode_udf`). The encoded corpus is ~dim*4/m
+    (:func:`_pq_kernel`). The encoded corpus is ~dim*4/m
     bytes-per-vector smaller — the representation the 100 TB corpus is
     STORED in; raw vectors are only needed at encode time and for
     optional exact re-rank of the short list.
     """
-    _enc = _pq_encode_udf(codebooks)
-    return corpus.select(F.col(id_col), _enc(as_double(vec_col)).alias("codes"))
+    return corpus.select(
+        F.col(id_col),
+        _pq_kernel(codebooks)(as_double(vec_col))["codes"].alias("codes"),
+    )
 
 
 def pq_topk(
@@ -2138,30 +1902,15 @@ def read_pq_index_meta(path: str, fs=None) -> dict:
     failure modes (which lose recall), this one corrupts the ranking
     itself, so the guard is just as loud."""
     meta = read_sidecar(path, "pq", fs=fs)
-    books = np.asarray(meta.get("codebooks"), dtype=np.float64)
-    m, k, sub = meta.get("m"), meta.get("n_codes"), meta.get("sub")
-    if books.ndim != 3 or books.shape != (m, k, sub):
-        raise ValueError(
-            f"PQ index at {path!r}: sidecar codebooks shape {books.shape} "
-            f"disagrees with its own (m, n_codes, sub) = ({m}, {k}, {sub}) "
-            "— rebuild with pq_write_index"
-        )
+    _sidecar_array(path, "pq", meta, "codebooks", ("m", "n_codes", "sub"))
+    m, sub = meta["m"], meta["sub"]
     if meta.get("dim") != m * sub:
         raise ValueError(
             f"PQ index at {path!r}: sidecar dim {meta.get('dim')} != "
             f"m*sub = {m * sub} — rebuild with pq_write_index"
         )
-    meta["codebooks"] = books
     if meta.get("n_cells") is not None:
-        cents = np.asarray(meta.get("centroids"), dtype=np.float64)
-        if cents.ndim != 2 or cents.shape != (meta["n_cells"], meta["dim"]):
-            raise ValueError(
-                f"PQ index at {path!r}: sidecar centroids shape "
-                f"{cents.shape} disagrees with its own (n_cells, dim) = "
-                f"({meta.get('n_cells')}, {meta.get('dim')}) — rebuild "
-                "with pq_write_index"
-            )
-        meta["centroids"] = cents
+        _sidecar_array(path, "pq", meta, "centroids", ("n_cells", "dim"))
     return meta
 
 
@@ -2199,9 +1948,9 @@ def pq_write_index(
         touches nprobe/n_cells of the files at 1/(dim*4/m)-th the
         bytes. By default codes quantize the RAW vectors, not cell
         residuals: that keeps codes cell-independent, so the flat and
-        celled layouts share one encoder, one query LUT (computed once
-        per query, not once per probed cell), and the row-identity
-        contract with :func:`pq_topk`.
+        celled layouts share one per-query LUT (computed once per
+        query, not once per probed cell) and the row-identity contract
+        with :func:`pq_topk`.
 
     ``residual=True`` (celled layout only — it raises on flat, there
     is no cell to take a residual against) opts into TRUE IVFADC
@@ -2235,21 +1984,18 @@ def pq_write_index(
     ``rebuild_kwargs``), and ``jobs tune-ann`` re-measures the
     nprobe/recall point on the rebuilt index.
 
-    The ``pq`` sidecar carries the codebooks (and centroids,
-    when celled) bit-faithfully plus a ``row_count`` written LAST —
-    the flip is the commit, exactly the :func:`ivf_write_bucketed`
-    protocol, so a torn write is detectable by
-    :func:`pq_index_verify` / a ``verify=True`` probe. Each row also
-    stores its reconstruction squared error ``qerr`` under the fitted
-    codebooks (the IVF ``adist`` precedent), and the sidecar records
-    the build-time mean distortion (per cell when celled — cells
-    legitimately differ in spread) — :func:`pq_append_index`'s drift
-    monitor compares incoming batches against it. Probes never read
-    the column (explicit column selection keeps the scan at
-    (id, codes)). Seam scope matches the IVF index (documented there,
-    r11 ADVICE): ``fs`` covers sidecar I/O only; row I/O is Spark
-    parquet. Returns the fitted codebooks for callers that probe
-    immediately."""
+    Every path encodes with the one kernel :func:`_pq_kernel`, and each
+    row also stores its reconstruction squared error ``qerr`` (the IVF
+    ``adist`` precedent). The write, the build-time distortion
+    reference (per cell when celled — cells legitimately differ in
+    spread) and the sidecar-last ``row_count`` commit are the shared
+    cell store's (:func:`index_fs.cell_index_write`): the ``pq``
+    sidecar carries the codebooks (and centroids, when celled)
+    bit-faithfully, and a torn write is detectable by
+    :func:`index_fs.cell_index_verify` / a ``verify=True`` probe.
+    Probes never read ``qerr`` (explicit column selection keeps the
+    scan at (id, codes)). Returns the fitted codebooks for callers that
+    probe immediately."""
     if residual and n_cells is None:
         raise ValueError(
             "residual=True needs a cell layout (n_cells) — residual "
@@ -2257,97 +2003,30 @@ def pq_write_index(
             "nothing to take the residual against"
         )
     centroids = None
-    v = corpus.select(F.col(id_col), as_double(vec_col).alias("v"))
-    if n_cells is None:
-        books = pq_codebooks(
-            corpus, vec_col, m, n_codes, seed, max_iter, sample_cap
-        )
-        enc = _pq_encode_err_udf(books)
-        v.select(
-            id_col,
-            enc(F.col("v")).alias("e"),
-        ).select(
-            id_col, F.col("e.codes").alias("codes"),
-            F.col("e.qerr").alias("qerr"),
-        ).write.mode("overwrite").parquet(path)
-    else:
+    if n_cells is not None:
         centroids = ivf_centroids(
             corpus, n_cells, vec_col, seed, ivf_max_iter, id_col,
             ivf_sample_cap,
         )
-        if residual:
-            # fit the codebooks on the SAMPLE'S residuals — one bounded
-            # collect (the pq_codebooks contract), shifted driver-side
-            # by each row's nearest centroid before the subspace fits
-            rows = (
-                v.select("v").limit(sample_cap).collect()
-            )
-            if not rows:
-                raise ValueError("empty corpus")
-            x = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-            part = (
-                np.einsum("ij,ij->i", centroids, centroids)
-                - 2.0 * (x @ centroids.T)
-            )
-            x = x - centroids[np.argmin(part, axis=1)]
-            books = _fit_books_on_sample(x, m, n_codes, seed, max_iter)
-            enc = _pq_encode_residual_err_udf(books, centroids)
-            v.select(
-                id_col,
-                enc(F.col("v")).alias("e"),
-            ).select(
-                id_col, F.col("e.codes").alias("codes"),
-                F.col("e.qerr").alias("qerr"),
-                F.col("e.cell").alias("cell"),
-            ).write.mode("overwrite").partitionBy("cell").parquet(path)
-        else:
-            books = pq_codebooks(
-                corpus, vec_col, m, n_codes, seed, max_iter, sample_cap
-            )
-            enc = _pq_encode_err_udf(books)
-            v.select(
-                id_col,
-                enc(F.col("v")).alias("e"),
-                cell_assignment(F.col("v"), centroids)["cell"].alias("cell"),
-            ).select(
-                id_col, F.col("e.codes").alias("codes"),
-                F.col("e.qerr").alias("qerr"), "cell",
-            ).write.mode("overwrite").partitionBy("cell").parquet(path)
-    # Build-time distortion reference from the written index's qerr
-    # column — a column-pruned re-read (per cell when celled), not a
-    # second pass over the vectors (the ivf_write_bucketed pattern).
-    spark = corpus.sparkSession
-    written = spark.read.parquet(path)
-    if n_cells is None:
-        agg = written.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("qerr").alias("q")
-        ).collect()[0]
-        n_rows, mean_q, cell_q = int(agg.n), float(agg.q), None
-    else:
-        per_cell = (
-            written.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("qerr").alias("q"))
-            .collect()
-        )
-        n_rows = sum(r.n for r in per_cell)
-        mean_q = float(sum(r.n * r.q for r in per_cell) / n_rows)
-        cell_q = {str(int(r.cell)): float(r.q) for r in per_cell}
-    meta = {
-        "id_col": id_col,
-        "m": int(m),
-        "n_codes": int(n_codes),
-        "dim": int(books.shape[0] * books.shape[2]),
-        "sub": int(books.shape[2]),
-        "seed": int(seed),
-        "row_count": int(n_rows),
-        "mean_quant_err": mean_q,
-        "cell_mean_quant_err": cell_q,
-        "n_cells": None if n_cells is None else int(n_cells),
-        "residual": bool(residual),
-        "centroids": None if centroids is None else centroids.tolist(),
-        "codebooks": books.tolist(),
-    }
-    write_sidecar(path, "pq", meta, fs=fs)
+    x = _vec_sample(corpus, vec_col, sample_cap)
+    if residual:
+        # fit the codebooks on the SAMPLE'S residuals: each sampled row
+        # shifted by its nearest centroid before the subspace fits
+        cnorm = np.einsum("ij,ij->i", centroids, centroids)
+        x = x - centroids[_nearest(x, centroids, cnorm)[0]]
+    books = _fit_books_on_sample(x, m, n_codes, seed, max_iter)
+    cell_index_write(
+        _pq_rows(corpus, id_col, vec_col, books, centroids, residual),
+        path, "pq",
+        {"id_col": id_col, "m": int(m), "n_codes": int(n_codes),
+         "dim": int(books.shape[0] * books.shape[2]),
+         "sub": int(books.shape[2]), "seed": int(seed)},
+        {"n_cells": None if n_cells is None else int(n_cells),
+         "residual": bool(residual),
+         "centroids": None if centroids is None else centroids.tolist(),
+         "codebooks": books.tolist()},
+        fs=fs,
+    )
     return books
 
 
@@ -2367,12 +2046,15 @@ def pq_append_index(
     for the compressed-domain index (the ``ivf_append_bucketed`` /
     ``append_srp_index`` analogue): each new vector is encoded under
     the SIDECAR's codebooks (never a refit — refitting would silently
-    re-key the standing corpus's codes) and, on the IVFADC layout,
-    assigned to its nearest sidecar centroid, then appended into the
-    matching partitions. Same commit protocol as the IVF append (r11
-    ADVICE lineage): the entry verifies the standing ``row_count``
-    first and raises on a torn predecessor; rows land; the sidecar's
-    count flips LAST — the flip is the commit.
+    re-key the standing corpus's codes) by the same kernel as the
+    build and :func:`pq_encode` — residual codes on a residual index,
+    since encoding a RAW vector against residual-fitted codebooks would
+    silently poison its distances (and inflate its qerr into a phantom
+    drift signal) — and, on the IVFADC layout, assigned to its nearest
+    sidecar centroid, then appended into the matching partitions. The
+    commit — writer mutex (``lock_held=True`` for a caller that owns
+    it), torn-predecessor check, row write, ``row_count`` flip LAST —
+    is the shared cell store's (:func:`index_fs.cell_index_append`).
 
     Returns DRIFT STATS in distortion space — the PQ-native health
     signal: the batch's mean reconstruction squared error under the
@@ -2380,16 +2062,12 @@ def pq_append_index(
     batch lands in (count-weighted; global mean on the flat layout).
     ``drift_ratio`` ~1 means the codebooks still describe the incoming
     distribution; a ratio creeping upward means ADC distances are
-    degrading from quantization-noisy to WRONG for new rows. Unlike
-    the IVF monitor this one has no IN-PLACE actuator BY CONSTRUCTION:
-    a codebook refit needs raw vectors, and the PQ index deliberately
-    stores only m-byte codes — an index that stored its own raw
-    vectors to enable self-rebuild would forfeit the 8x compression
-    that is its entire point. The actuator the ratio points at is
-    :func:`rebuild_pq` (CLI ``jobs rebuild-pq``, r13): refit from the
-    RAW corpus store the caller owns and swap atomically under the
-    recluster crash discipline — after it, in-distribution appends
-    read ~1 again.
+    degrading from quantization-noisy to WRONG for new rows. The
+    actuator the ratio points at is :func:`rebuild_pq` (CLI ``jobs
+    rebuild-pq``): a refit from the RAW corpus store the caller owns —
+    the index stores only m-byte codes, so unlike the IVF monitor this
+    one has no in-place actuator by construction (see there). After
+    it, in-distribution appends read ~1 again.
 
     The signal can also drive the actuator INLINE, completing the IVF
     append's ``recluster_threshold`` symmetry: pass
@@ -2414,216 +2092,71 @@ def pq_append_index(
             "stores only m-byte codes, so the inline rebuild must be "
             "handed the raw corpus frame (including this batch's rows)"
         )
-    if not lock_held:
-        # r13 ADVICE: appends serialize on the index's single-writer
-        # mutex (the same sibling verify-index takes) so a verifier can
-        # never observe the data-write→sidecar-flip window as TORN.
-        with (fs or LOCAL_FS).exclusive_lock(
-            writer_lock_path(path),
-            "PQ appends are single-writer: a concurrent writer or "
-            "verifier racing the data-write→sidecar-flip window would "
-            "read a transient false TORN",
+    with writer_gate(path, f"PQ {CELL_APPEND_PURPOSE}", fs, lock_held):
+        stats = cell_index_append(
+            new_vecs.sparkSession, path, "pq", id_col, read_pq_index_meta,
+            lambda meta: _pq_rows(
+                new_vecs, id_col, vec_col, meta["codebooks"],
+                meta.get("centroids"), bool(meta.get("residual")),
+            ),
+            fs=fs,
+        )
+        ratio = stats["drift_ratio"]
+        out = {
+            "n": stats["n"],
+            "mean_quant_err": stats["mean"],
+            "expected_quant_err": stats["expected"],
+            "drift_ratio": ratio,
+            "rebuilt": False,
+        }
+        if (
+            rebuild_threshold is not None
+            and ratio is not None
+            and ratio > rebuild_threshold
         ):
-            return pq_append_index(
-                new_vecs, path, id_col=id_col, vec_col=vec_col,
-                rebuild_threshold=rebuild_threshold,
-                rebuild_corpus=rebuild_corpus,
-                rebuild_kwargs=rebuild_kwargs, fs=fs, lock_held=True,
-            )
-    meta = read_pq_index_meta(path, fs=fs)
-    if meta["id_col"] != id_col:
-        raise ValueError(
-            f"PQ index at {path!r} was built with id_col="
-            f"{meta['id_col']!r}, not {id_col!r}"
-        )
-    spark = new_vecs.sparkSession
-    check = pq_index_verify(spark, path, fs=fs)
-    if check["torn"]:
-        raise ValueError(
-            f"PQ index at {path!r} is torn: sidecar commits "
-            f"{check['expected']} rows but {check['actual']} are on disk "
-            "— a prior append died between its data write and its "
-            "sidecar flip. Rebuild with pq_write_index before appending "
-            "(the uncommitted rows' batch was never acknowledged and "
-            "must be re-sent)."
-        )
-    v = new_vecs.select(F.col(id_col), as_double(vec_col).alias("v"))
-    celled = meta.get("n_cells") is not None
-    if celled:
-        if meta.get("residual"):
-            # a residual index appends residual codes — encoding a new
-            # row's RAW vector against residual-fitted codebooks would
-            # silently poison its distances (and inflate its qerr into
-            # a phantom drift signal)
-            enc = _pq_encode_residual_err_udf(
-                meta["codebooks"], meta["centroids"]
-            )
-            assigned = v.select(
-                id_col, enc(F.col("v")).alias("e")
-            ).select(
-                id_col, F.col("e.codes").alias("codes"),
-                F.col("e.qerr").alias("qerr"),
-                F.col("e.cell").alias("cell"),
-            ).localCheckpoint(eager=True)
-        else:
-            enc = _pq_encode_err_udf(meta["codebooks"])
-            assigned = v.select(
-                id_col,
-                enc(F.col("v")).alias("e"),
-                cell_assignment(F.col("v"), meta["centroids"])["cell"].alias(
-                    "cell"
-                ),
-            ).select(
-                id_col, F.col("e.codes").alias("codes"),
-                F.col("e.qerr").alias("qerr"), "cell",
-            ).localCheckpoint(eager=True)  # stats agg + write, one encode
-        per_cell = assigned.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("bn"), F.avg("qerr").alias("bq")
-        ).collect()
-        n = sum(r.bn for r in per_cell)
-        batch_mean = (
-            float(sum(r.bn * r.bq for r in per_cell) / n) if n else None
-        )
-        cell_ref = meta.get("cell_mean_quant_err") or {}
-        fallback = meta.get("mean_quant_err")
-        expected = (
-            float(
-                sum(
-                    r.bn * float(cell_ref.get(str(int(r.cell)), fallback))
-                    for r in per_cell
+            # r13 ADVICE: "rebuild_corpus already includes this batch's
+            # rows" was a docs-only contract — a caller handing a STALE
+            # corpus frame silently dropped the just-committed batch from
+            # the rebuilt index. r14 ADVICE tightened WHERE the guard
+            # fires: counting after the rebuild raised loudly but only
+            # AFTER the shrunken index had been atomically swapped in —
+            # the on-disk index was already missing acknowledged rows the
+            # moment the exception surfaced. So the corpus is counted
+            # FIRST (one footer-scale count of the frame the rebuild is
+            # about to scan anyway) and a stale frame is refused while the
+            # complete, just-committed index is still in place.
+            pre = int(stats["row_count"])
+            corpus_n = int(rebuild_corpus.count())
+            if corpus_n < pre:
+                raise ValueError(
+                    f"refusing inline rebuild of the PQ index at {path!r}: "
+                    f"the append just committed {pre} rows but "
+                    f"rebuild_corpus holds only {corpus_n} — the corpus "
+                    "frame is stale (it must already include this batch's "
+                    "rows; both ingest loops append to their corpus store "
+                    "before or alongside the index). The committed index "
+                    "is intact; re-run the rebuild from the complete "
+                    "corpus store."
                 )
-                / n
+            out["rebuild"] = rebuild_pq(
+                new_vecs.sparkSession, rebuild_corpus, path,
+                vec_col=vec_col, fs=fs, lock_held=True,
+                **(rebuild_kwargs or {}),
             )
-            if n and fallback is not None
-            else None
-        )
-        assigned.write.mode("append").partitionBy("cell").parquet(path)
-    else:
-        enc = _pq_encode_err_udf(meta["codebooks"])
-        assigned = v.select(
-            id_col, enc(F.col("v")).alias("e")
-        ).select(
-            id_col, F.col("e.codes").alias("codes"),
-            F.col("e.qerr").alias("qerr"),
-        ).localCheckpoint(eager=True)
-        agg = assigned.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("qerr").alias("q")
-        ).collect()[0]
-        n = int(agg.n)
-        batch_mean = float(agg.q) if n else None
-        expected = meta.get("mean_quant_err") if n else None
-        assigned.write.mode("append").parquet(path)
-    # THE COMMIT: flip the sidecar's row_count after the rows are down.
-    # Codebooks/centroids/build-time distortion are append-invariant.
-    committed = {
-        **{k: v for k, v in meta.items() if k not in ("codebooks", "centroids")},
-        "row_count": int(check["actual"]) + int(n),
-        "codebooks": meta["codebooks"].tolist(),
-        "centroids": (
-            None if meta.get("n_cells") is None
-            else meta["centroids"].tolist()
-        ),
-    }
-    write_sidecar(path, "pq", committed, fs=fs)
-    ratio = (
-        float(batch_mean) / max(float(expected), 1e-12)
-        if batch_mean is not None and expected is not None
-        else None
-    )
-    out = {
-        "n": int(n),
-        "mean_quant_err": batch_mean,
-        "expected_quant_err": expected,
-        "drift_ratio": ratio,
-        "rebuilt": False,
-    }
-    if (
-        rebuild_threshold is not None
-        and ratio is not None
-        and ratio > rebuild_threshold
-    ):
-        # r13 ADVICE: "rebuild_corpus already includes this batch's
-        # rows" was a docs-only contract — a caller handing a STALE
-        # corpus frame silently dropped the just-committed batch from
-        # the rebuilt index. r14 ADVICE tightened WHERE the guard
-        # fires: counting after the rebuild raised loudly but only
-        # AFTER the shrunken index had been atomically swapped in —
-        # the on-disk index was already missing acknowledged rows the
-        # moment the exception surfaced. So the corpus is counted
-        # FIRST (one footer-scale count of the frame the rebuild is
-        # about to scan anyway) and a stale frame is refused while the
-        # complete, just-committed index is still in place.
-        pre = int(committed["row_count"])
-        corpus_n = int(rebuild_corpus.count())
-        if corpus_n < pre:
-            raise ValueError(
-                f"refusing inline rebuild of the PQ index at {path!r}: "
-                f"the append just committed {pre} rows but "
-                f"rebuild_corpus holds only {corpus_n} — the corpus "
-                "frame is stale (it must already include this batch's "
-                "rows; both ingest loops append to their corpus store "
-                "before or alongside the index). The committed index "
-                "is intact; re-run the rebuild from the complete "
-                "corpus store."
-            )
-        out["rebuild"] = rebuild_pq(
-            new_vecs.sparkSession, rebuild_corpus, path,
-            vec_col=vec_col, fs=fs, lock_held=True,
-            **(rebuild_kwargs or {}),
-        )
-        out["rebuilt"] = True
-        # Backstop (should be unreachable given the pre-count): if the
-        # build itself dropped rows, still fail loudly rather than
-        # hand back a silently-shrunken index.
-        post = int(out["rebuild"]["n_rows"])
-        if post < pre:
-            raise ValueError(
-                f"inline rebuild of the PQ index at {path!r} SHRANK it: "
-                f"the append committed {pre} rows but the rebuild wrote "
-                f"only {post} — the rebuilt index is missing "
-                "acknowledged rows; re-rebuild from the complete corpus "
-                "store."
-            )
-    return out
-
-
-def pq_index_verify(spark, path: str, fs=None) -> dict:
-    """The :func:`ivf_index_verify` twin for the PQ index: parquet row
-    count vs the sidecar's ``row_count`` commit. Returns
-    ``{"expected", "actual", "torn"}`` (footer-scale scan)."""
-    meta = read_pq_index_meta(path, fs=fs)
-    expected = meta.get("row_count")
-    actual = spark.read.parquet(path).count()
-    return {
-        "expected": expected,
-        "actual": int(actual),
-        "torn": None if expected is None else (int(actual) != int(expected)),
-    }
-
-
-def _recover_pq_rebuild(path: str, fs) -> None:
-    """Heal a :func:`rebuild_pq` killed mid-swap, under the caller's
-    lock — the :func:`_recover_ivf_recluster` discipline verbatim with
-    the PQ scratch/old prefixes: index dir present → leftovers are from
-    a completed or never-started swap, reap them; index dir missing
-    with an ``.old`` present → the crash hit between the two renames,
-    roll the ``.old`` back (the rebuild simply didn't happen)."""
-    import os
-
-    parent, name = os.path.split(path.rstrip("/"))
-    parent = parent or "."
-    olds = sorted(
-        d for d in fs.listdir(parent)
-        if d.startswith(f".pq-old-{name}-")
-    )
-    if olds and not fs.isdir(path):
-        fs.rename(os.path.join(parent, olds[-1]), path)
-        olds = olds[:-1]
-    for d in olds:
-        fs.rmtree(os.path.join(parent, d))
-    for d in fs.listdir(parent):
-        if d.startswith(f".pq-scratch-{name}-"):
-            fs.rmtree(os.path.join(parent, d))
+            out["rebuilt"] = True
+            # Backstop (should be unreachable given the pre-count): if the
+            # build itself dropped rows, still fail loudly rather than
+            # hand back a silently-shrunken index.
+            post = int(out["rebuild"]["n_rows"])
+            if post < pre:
+                raise ValueError(
+                    f"inline rebuild of the PQ index at {path!r} SHRANK it: "
+                    f"the append committed {pre} rows but the rebuild wrote "
+                    f"only {post} — the rebuilt index is missing "
+                    "acknowledged rows; re-rebuild from the complete corpus "
+                    "store."
+                )
+        return out
 
 
 def rebuild_pq(
@@ -2659,65 +2192,30 @@ def rebuild_pq(
     Configuration (``m``/``n_codes``/``seed``/``n_cells``/``residual``)
     defaults to the standing sidecar's, so the routine rebuild changes
     codebooks, not geometry; ``id_col`` always carries over (the probe
-    contract). The swap is the X82 two-rename discipline under the
-    sibling ``<path>.rebuild.lock`` single-rebuilder mutex, healed on
-    entry by :func:`_recover_pq_rebuild` — a crash never loses the
-    committed index, and a probe racing the cutover fails loudly,
-    never silently wrong (the :func:`recluster_ivf` caveat verbatim).
-    Returns ``{"n_rows", "n_cells", "residual",
-    "old_mean_quant_err", "new_mean_quant_err"}`` — the new build mean
-    becomes the drift monitor's reference, which re-arms the trigger
-    at ~1 for in-distribution appends.
-
-    Locking (r13 ADVICE): the GLOBAL writer mutex
-    (``index_fs.writer_lock_path``) is taken first unless the caller
-    already holds it (``lock_held=True`` — the inline actuator path
-    from :func:`pq_append_index`); the ``.rebuild.lock`` sibling stays
-    as the inner recovery-discipline lock, acquired after — a fixed
-    order across all writers, so no deadlock."""
-    import contextlib
-    import os
-
-    fs = fs or LOCAL_FS
-    writer_gate = (
-        contextlib.nullcontext()
-        if lock_held
-        else fs.exclusive_lock(
-            writer_lock_path(path),
-            "rebuild-pq serializes with appends and verify-index on "
-            "the index's single-writer mutex",
-        )
-    )
-    with writer_gate, fs.exclusive_lock(
-        path.rstrip("/") + ".rebuild.lock",
-        "rebuild-pq is single-writer by design (two concurrent swaps "
-        "would interleave renames on the same index dir)",
-    ):
-        _recover_pq_rebuild(path, fs)
+    contract). The swap is the shared cell store's
+    (:func:`index_fs.cell_index_swap` — locking, crash recovery on
+    entry and the reader caveat are documented there; ``lock_held=True``
+    is the inline actuator path from :func:`pq_append_index`). Returns
+    ``{"n_rows", "n_cells", "residual", "old_mean_quant_err",
+    "new_mean_quant_err"}`` — the new build mean becomes the drift
+    monitor's reference, which re-arms the trigger at ~1 for
+    in-distribution appends."""
+    with cell_index_swap(path, "pq", fs, lock_held) as scratch:
         meta = read_pq_index_meta(path, fs=fs)
-        m = int(m if m is not None else meta["m"])
-        n_codes = int(n_codes if n_codes is not None else meta["n_codes"])
-        seed = int(seed if seed is not None else meta["seed"])
         if n_cells is None:
             n_cells = meta.get("n_cells")
         if residual is None:
             residual = bool(meta.get("residual"))
-        parent, name = os.path.split(path.rstrip("/"))
-        parent = parent or "."
-        pid = os.getpid()
-        scratch = os.path.join(parent, f".pq-scratch-{name}-{pid}")
         pq_write_index(
             corpus, scratch, id_col=meta["id_col"], vec_col=vec_col,
-            m=m, n_codes=n_codes, seed=seed, max_iter=max_iter,
-            sample_cap=sample_cap, n_cells=n_cells,
+            m=int(m if m is not None else meta["m"]),
+            n_codes=int(n_codes if n_codes is not None else meta["n_codes"]),
+            seed=int(seed if seed is not None else meta["seed"]),
+            max_iter=max_iter, sample_cap=sample_cap, n_cells=n_cells,
             ivf_max_iter=ivf_max_iter, ivf_sample_cap=ivf_sample_cap,
             residual=residual, fs=fs,
         )
-        new_meta = read_pq_index_meta(scratch, fs=fs)
-        old = os.path.join(parent, f".pq-old-{name}-{pid}")
-        fs.rename(path, old)
-        fs.rename(scratch, path)
-        fs.rmtree(old)
+        new_meta = read_sidecar(scratch, "pq", fs=fs)
         return {
             "n_rows": int(new_meta["row_count"]),
             "n_cells": new_meta.get("n_cells"),
@@ -2767,8 +2265,8 @@ def pq_topk_indexed(
     (IVFADC+R — the shortlist join; pass ``refine_frac=None`` for pure
     ADC and the corpus frame goes untouched). The refine depth uses the
     sidecar's committed ``row_count``, so the serving path runs zero
-    count jobs. ``verify=True`` gates on :func:`pq_index_verify` first
-    and raises on a torn write.
+    count jobs. ``verify=True`` gates on
+    :func:`index_fs.cell_index_verify` first and raises on a torn write.
 
     The query frame is collected exactly ONCE (r12 ADVICE): the probed
     cells are computed driver-side from the same collected rows the
@@ -2787,13 +2285,7 @@ def pq_topk_indexed(
             "index's id_col or rebuild"
         )
     if verify:
-        check = pq_index_verify(spark, path, fs=fs)
-        if check["torn"]:
-            raise ValueError(
-                f"PQ index at {path!r} is torn: sidecar commits "
-                f"{check['expected']} rows, disk holds {check['actual']} "
-                "— rebuild with pq_write_index"
-            )
+        raise_if_torn(spark, path, "pq", fs=fs)
     books = meta["codebooks"]
     residual = bool(meta.get("residual"))
     encoded = spark.read.parquet(path)
@@ -2812,16 +2304,15 @@ def pq_topk_indexed(
                 "pq_write_index(n_cells=...) for IVFADC probing"
             )
         if q_rows:
-            # same argmin decisions as nearest_cells (stable argsort of
-            # |c|^2 - 2 x.c — the |x|^2 term is row-constant), run on
-            # the already-collected rows instead of a second Spark job
+            # nearest_cells' decisions, run on the already-collected
+            # rows instead of a second Spark job
             cents = meta["centroids"]
-            cnorm = np.einsum("ij,ij->i", cents, cents)
             x = np.stack(
                 [np.asarray(r[1], dtype=np.float64) for r in q_rows]
             )
-            dcell = cnorm - 2.0 * (x @ cents.T)
-            order = np.argsort(dcell, axis=1, kind="stable")[:, : int(nprobe)]
+            order = _nearest_k(
+                x, cents, np.einsum("ij,ij->i", cents, cents), int(nprobe)
+            )
             qcells = {
                 int(r[0]): frozenset(int(c) for c in order[i])
                 for i, r in enumerate(q_rows)

@@ -2326,28 +2326,46 @@ _PQ_CELLS = 16
 _PQ_NPROBE = 6
 
 
-def _staged_pq_index(emb: DataFrame, sf_dir: str) -> str:
-    """Stage (or reuse) the at-rest IVFADC index for ``ann_pq_indexed``
-    (mechanics: :func:`_staged_index`): PQ codes cell-partitioned with
-    codebooks + coarse centroids in the validated ``_pq_meta.json``
-    sidecar (similarity.pq_write_index). The one-time fit+encode is
-    exactly the cost the index amortizes: every later probe loads codes
-    and codebooks, fits nothing, encodes nothing."""
+def _staged_pq_index(
+    emb: DataFrame, sf_dir: str, layout: str = "ivfadc"
+) -> str:
+    """Stage (or reuse) an at-rest PQ index for the ``ann_pq_indexed*``
+    queries (mechanics: :func:`_staged_index`; similarity.pq_write_index
+    with its validated ``_pq_meta.json`` sidecar), every layout at the
+    same m/n_codes/seed (and cells) so the probes differ in exactly one
+    axis. The one-time fit+encode is exactly the cost the index
+    amortizes: every later probe loads codes and codebooks, fits
+    nothing, encodes nothing. ``layout``:
+
+      * ``"ivfadc"`` — codes cell-partitioned with codebooks + coarse
+        centroids (``ann_pq_indexed``);
+      * ``"flat"`` — no cell layout (``ann_pq_indexed_refined``): the
+        exactness tier scans every code by design, so partition pruning
+        has nothing to prune;
+      * ``"residual"`` — the IVFADC layout with codes that reconstruct
+        cell residuals instead of raw vectors
+        (``ann_pq_indexed_residual*``).
+
+    v2 families: the index rows gained the qerr column and the sidecar
+    the build-time distortion reference (drift monitor) — older cached
+    layouts must miss."""
+    family, n_cells, residual = {
+        "ivfadc": ("pq-ivfadc-v2", _PQ_CELLS, False),
+        "flat": ("pq-flat-v2", None, False),
+        "residual": ("pq-ivfadc-res-v1", _PQ_CELLS, True),
+    }[layout]
 
     def build(idx: str) -> None:
         similarity.pq_write_index(
             emb, idx, m=_PQ_M, n_codes=_PQ_CODES, seed=_PQ_SEED,
-            n_cells=_PQ_CELLS,
+            n_cells=n_cells, residual=residual,
         )
 
-    # v2: the index rows gained the qerr column and the sidecar the
-    # build-time distortion reference (drift monitor) — older cached
-    # layouts must miss.
+    cells = "" if n_cells is None else f"|c{n_cells}"
     return _staged_index(
         sf_dir,
         "embeddings",
-        f"{sf_dir}|pq-ivfadc-v2|m{_PQ_M}|k{_PQ_CODES}|s{_PQ_SEED}"
-        f"|c{_PQ_CELLS}",
+        f"{sf_dir}|{family}|m{_PQ_M}|k{_PQ_CODES}|s{_PQ_SEED}{cells}",
         similarity.read_pq_index_meta,
         build,
     )
@@ -2453,26 +2471,6 @@ def ann_pq_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 
 
-def _staged_pq_flat_index(emb: DataFrame, sf_dir: str) -> str:
-    """Stage (or reuse) the FLAT at-rest PQ index for
-    ``ann_pq_indexed_refined`` (same m/n_codes/seed as the IVFADC
-    staging, no cell layout — the exactness tier scans every code by
-    design, so partition pruning has nothing to prune)."""
-
-    def build(idx: str) -> None:
-        similarity.pq_write_index(
-            emb, idx, m=_PQ_M, n_codes=_PQ_CODES, seed=_PQ_SEED,
-        )
-
-    return _staged_index(
-        sf_dir,
-        "embeddings",
-        f"{sf_dir}|pq-flat-v2|m{_PQ_M}|k{_PQ_CODES}|s{_PQ_SEED}",
-        similarity.read_pq_index_meta,
-        build,
-    )
-
-
 @query("ann_pq_indexed_refined", _PQ_EXACT_TOPK_SQL)
 def ann_pq_indexed_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X86 oracle tier: the AT-REST PQ probe driven to an EXACT top-k —
@@ -2493,7 +2491,7 @@ def ann_pq_indexed_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < ANN_QUERY_COUNT).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    idx = _staged_pq_flat_index(emb, sf_dir)
+    idx = _staged_pq_index(emb, sf_dir, "flat")
     out = similarity.pq_topk_indexed(
         spark, emb, queries, idx,
         k=ANN_K,
@@ -2501,28 +2499,6 @@ def ann_pq_indexed_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
         refine_exact_fold=True,
     )
     return out.withColumn("rank", F.col("rank").cast("bigint"))
-
-
-def _staged_pq_residual_index(emb: DataFrame, sf_dir: str) -> str:
-    """Stage (or reuse) the RESIDUAL-encoded IVFADC index for the
-    ``ann_pq_indexed_residual*`` queries — same m/n_codes/cells/seed as
-    the raw-code IVFADC staging so the two probes differ in exactly one
-    axis (what the codes reconstruct: raw vectors vs cell residuals)."""
-
-    def build(idx: str) -> None:
-        similarity.pq_write_index(
-            emb, idx, m=_PQ_M, n_codes=_PQ_CODES, seed=_PQ_SEED,
-            n_cells=_PQ_CELLS, residual=True,
-        )
-
-    return _staged_index(
-        sf_dir,
-        "embeddings",
-        f"{sf_dir}|pq-ivfadc-res-v1|m{_PQ_M}|k{_PQ_CODES}|s{_PQ_SEED}"
-        f"|c{_PQ_CELLS}",
-        similarity.read_pq_index_meta,
-        build,
-    )
 
 
 @query("ann_pq_indexed_residual")  # approximate — recall pinned in tests
@@ -2544,7 +2520,7 @@ def ann_pq_indexed_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < ANN_QUERY_COUNT).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    idx = _staged_pq_residual_index(emb, sf_dir)
+    idx = _staged_pq_index(emb, sf_dir, "residual")
     return similarity.pq_topk_indexed(
         spark, emb, queries, idx, k=ANN_K, nprobe=_PQ_NPROBE
     )
@@ -2564,7 +2540,7 @@ def ann_pq_indexed_residual_refined(spark: SparkSession, sf_dir: str) -> DataFra
     queries = emb.filter(F.col("vec_id") < ANN_QUERY_COUNT).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    idx = _staged_pq_residual_index(emb, sf_dir)
+    idx = _staged_pq_index(emb, sf_dir, "residual")
     out = similarity.pq_topk_indexed(
         spark, emb, queries, idx,
         k=ANN_K,

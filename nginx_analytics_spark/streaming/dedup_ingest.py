@@ -42,11 +42,16 @@ the X73 per-batch-directory overwrite trick: each batch's admissions
 land under ``ingest_batch=<id>`` with OVERWRITE semantics, so a retried
 batch (same epoch id — the foreachBatch contract) REPLACES its own
 corpus output instead of duplicating it. The INDEX append is not made
-idempotent the same way, deliberately: a replayed append only adds
-duplicate band-key rows, and the probe's candidate ``distinct()``
-already collapses them — replay costs index bytes (reclaimed by
-per-band compaction, below), never correctness. Read the batch-dir
-corpus back via :func:`read_corpus`.
+idempotent the same way: a replayed append adds duplicate band-key
+rows, and the probe's candidate ``distinct()`` collapses them, so
+replay never costs correctness. It does cost index bytes that nothing
+reclaims today: per-band compaction preserves the row multiset exactly,
+duplicates included (:func:`index_fs.banded_index_compact`, property-
+tested in tests/test_index_fs.py), and :func:`reconcile_index` counts
+distinct ids, so it does not see them either; only a rebuild from the
+corpus store drops them. Replay-idempotent index appends are the open
+half of ROADMAP.md's at-rest-store item. Read the batch-dir corpus back
+via :func:`read_corpus`.
 
 Index maintenance: every append adds one file per touched band, so a
 long-running loop passes ``compact_every=N`` to fold the X82 per-band
@@ -88,6 +93,7 @@ from nginx_analytics_spark.operators import dedup, similarity
 from nginx_analytics_spark.operators.index_fs import (
     BANDED_KINDS,
     COMPACT_MAX_FILES_PER_BAND,
+    SEEN_KINDS,
     LOCAL_FS,
     banded_index_compact,
     banded_index_read,
@@ -522,16 +528,22 @@ def reconcile_index(
         rows from every band it rewrites, no full rebuild needed; the
         returned count is the number an operator decides that with.
 
-    Kind is read off the sidecar (``index_fs.index_kind``) — all five
-    index kinds: the banded dedup indexes (MinHash/LSH text, X94
+    Kind is read off the sidecar (``index_fs.index_kind``) — all seven
+    store kinds: the banded dedup indexes (MinHash/LSH text, X94
     hash-order prefix, SRP embedding) and the ANN SERVING indexes
     (celled/flat PQ, bucketed IVF), which pair with the same corpus
-    store and diverge the same two ways. For the serving kinds a
+    store and diverge the same two ways, plus the seen-key stores
+    (X97 paragraphs, X101 token windows), which hold text keys, not
+    ids: they dispatch to ``dedup.reconcile_seen_store`` and return
+    only ``{"kind", "missing_from_index", "repaired"}`` (missing keys
+    are blind spots, appended under ``repair``; orphan keys are
+    harmless and kept).
+    For the serving kinds a
     missing row is a SILENT
     RECALL LOSS — the vector exists in the corpus but no probe can
-    ever return it, invisible to ``pq_index_verify``/
-    ``ivf_index_verify`` (those only check the row_count commit, which
-    balances because the row was never appended) — and ``repair=True``
+    ever return it, invisible to ``index_fs.cell_index_verify`` (it
+    only checks the row_count commit, which balances because the row
+    was never appended) — and ``repair=True``
     appends exactly the missing vectors under the SIDECAR's own
     codebooks/centroids (``pq_append_index``/``ivf_append_bucketed``
     with the writer mutex already held, so the appends' torn-check and
@@ -553,16 +565,26 @@ def reconcile_index(
     ``repair``. Returns ``{"kind", "corpus_ids", "indexed_ids",
     "missing_from_index", "index_orphans", "repaired"}``."""
     fs = fs or LOCAL_FS
-    kind = index_kind(index_path, fs, (*BANDED_KINDS, "pq", "ivf"))
-    meta = read_sidecar(index_path, kind, fs=fs)
-    id_col = meta["id_col"]
-    payload_col = text_col if kind in ("lsh", "prefix") else vec_col
+    kind = index_kind(index_path, fs)
     with fs.exclusive_lock(
         writer_lock_path(index_path),
         "reconcile counts (and repairs) only while no writer holds "
         "the index; stop the ingest loop first",
     ):
         corpus = read_corpus(spark, corpus_dir)
+        if kind in SEEN_KINDS:
+            rep = dedup.reconcile_seen_store(
+                spark, corpus, index_path, text_col=text_col, repair=repair,
+                fs=fs,
+            )
+            return {
+                "kind": kind,
+                "missing_from_index": rep["missing"],
+                "repaired": rep["appended"],
+            }
+        meta = read_sidecar(index_path, kind, fs=fs)
+        id_col = meta["id_col"]
+        payload_col = text_col if kind in ("lsh", "prefix") else vec_col
         cids = corpus.select(F.col(id_col)).distinct().localCheckpoint(
             eager=True  # consumed by both anti-joins + the repair semi
         )
@@ -609,16 +631,15 @@ def reconcile_index(
                 similarity.append_srp_index(
                     rows, index_path, id_col=id_col, vec_col=vec_col, fs=fs
                 )
-            elif kind == "pq":
-                # encodes under the SIDECAR's codebooks (never a refit)
-                # and flips the row_count commit; lock_held — this
-                # mutex IS the writers' since r14
-                similarity.pq_append_index(
-                    rows, index_path, id_col=id_col, vec_col=vec_col,
-                    fs=fs, lock_held=True,
-                )
             else:
-                similarity.ivf_append_bucketed(
+                # encodes/assigns under the SIDECAR's codebooks or
+                # centroids (never a refit) and flips the row_count
+                # commit; lock_held — this mutex IS the writers' since r14
+                (
+                    similarity.pq_append_index
+                    if kind == "pq"
+                    else similarity.ivf_append_bucketed
+                )(
                     rows, index_path, id_col=id_col, vec_col=vec_col,
                     fs=fs, lock_held=True,
                 )
@@ -658,13 +679,15 @@ def process_batch(
     quality-aware — see :func:`dedup_batch_against_corpus`.
     ``exactly_once`` lands the admissions under ``ingest_batch=<id>``
     with overwrite semantics (X73) so a same-id retry replaces rather
-    than duplicates its corpus output — see the module docstring for why
-    the index append needs no such guard. ``compact_every=N`` runs the
-    X82 per-band compaction after every Nth batch (batch ids N-1,
-    2N-1, ...), bounding per-band file growth from inside the only
-    thread that writes the index — the cycle fires even when the batch
-    itself is empty (r7 review: compaction is index-state-driven, not
-    batch-content-driven; an idle feed must not starve it).
+    than duplicates its corpus output; the index append has no such
+    guard, so a replay duplicates its band keys — harmless to the
+    probe, but nothing reclaims them (see the module docstring).
+    ``compact_every=N`` runs the X82 per-band compaction after every
+    Nth batch (batch ids N-1, 2N-1, ...), bounding per-band file
+    growth from inside the only thread that writes the index — the
+    cycle fires even when the batch itself is empty (r7 review:
+    compaction is index-state-driven, not batch-content-driven; an idle
+    feed must not starve it).
 
     Concurrency (r8 review): the loop is the index's SINGLE writer, and
     this function enforces it — it holds the writer mutex (the sibling

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from nginx_analytics_spark import jobs
 from nginx_analytics_spark.operators.index_fs import (
+    cell_index_verify,
     read_sidecar,
     writer_lock_path,
 )
@@ -699,7 +700,7 @@ def test_cli_recluster_ivf(spark, tmp_path):
     assert after == before
     meta = similarity.read_ivf_index_meta(idx)
     assert meta["n_cells"] == 8
-    assert similarity.ivf_index_verify(spark, idx)["torn"] is False
+    assert cell_index_verify(spark, idx, "ivf")["torn"] is False
 
 
 def test_cli_rebuild_pq(spark, tmp_path, capsys):
@@ -895,9 +896,12 @@ def test_cli_tune_ann(spark, tmp_path, capsys):
     assert rc == 1 and "target unreachable" in out
 
 
-def test_cli_reconcile_index(spark, tmp_path, capsys):
+@pytest.mark.parametrize("store", ["lsh", "paraseen"])
+def test_cli_reconcile_index(spark, tmp_path, capsys, store):
     """X91 CLI: blind spots exit 1 with the repair hint; --repair
-    closes them and exits 0; orphans alone exit 0 (report only)."""
+    closes them and exits 0; orphans alone exit 0 (report only). The
+    same command reconciles a seen-key store (keys, not ids)."""
+    from nginx_analytics_spark.operators import dedup
     from nginx_analytics_spark.streaming.dedup_ingest import process_batch
 
     corpus, idx = f"{tmp_path}/corpus", f"{tmp_path}/idx"
@@ -905,7 +909,11 @@ def test_cli_reconcile_index(spark, tmp_path, capsys):
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
     )
-    process_batch(spark, docs, 0, corpus, idx)
+    if store == "lsh":
+        process_batch(spark, docs, 0, corpus, idx)
+    else:
+        docs.write.parquet(corpus)
+        dedup.write_paraseen_store(docs, idx)
     spark.createDataFrame(
         [(9, "manually imported words about bloom filters and codegen")],
         "doc_id long, text string",

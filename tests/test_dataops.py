@@ -13,6 +13,8 @@ from nginx_analytics_spark.operators.index_fs import (
     banded_index_compact,
     banded_index_read,
     banded_index_recover,
+    cell_index_recover,
+    cell_index_verify,
     read_sidecar,
     sidecar_path,
     writer_lock_path,
@@ -789,7 +791,7 @@ def test_incremental_paragraph_dedup_lifecycle(spark, tmp_path):
             [(3, "late arrival")], "doc_id long, text string"
         )
     )
-    rep = dedup.reconcile_paraseen_store(spark, grown, store)
+    rep = dedup.reconcile_seen_store(spark, grown, store)
     assert rep["missing"] == 1 and rep["appended"] == 1
     b4 = spark.createDataFrame(
         [(40, "late arrival\nsurvivor")], "doc_id long, text string"
@@ -798,7 +800,7 @@ def test_incremental_paragraph_dedup_lifecycle(spark, tmp_path):
         spark, b4, store, update_store=False
     ).collect()[0]
     assert (r.clean_text, r.n_kept, r.n_removed) == ("survivor", 1, 1)
-    assert dedup.reconcile_paraseen_store(spark, grown, store)["missing"] == 0
+    assert dedup.reconcile_seen_store(spark, grown, store)["missing"] == 0
 
 
 def test_exact_substring_decontaminate_semantics(spark):
@@ -1505,7 +1507,7 @@ def test_ivf_torn_append_detected(spark, tmp_path):
     the sidecar now carries a row_count flipped LAST — the commit.
     Simulate a writer killed between its data write and its sidecar
     flip (raw rows landed, count not flipped): the next append must
-    refuse loudly, ivf_index_verify must report torn, and a
+    refuse loudly, cell_index_verify must report torn, and a
     verify=True probe must refuse — while healthy appends keep
     expected == actual."""
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -1515,7 +1517,7 @@ def test_ivf_torn_append_detected(spark, tmp_path):
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
     similarity.ivf_append_bucketed(batch, idx)
-    check = similarity.ivf_index_verify(spark, idx)
+    check = cell_index_verify(spark, idx, "ivf")
     assert check["torn"] is False and check["expected"] == check["actual"]
 
     # torn write: rows through the raw writer, no sidecar flip
@@ -1529,7 +1531,7 @@ def test_ivf_torn_append_detected(spark, tmp_path):
         F.col("a.adist").alias("adist"),
     ).write.mode("append").partitionBy("cell").parquet(idx)
 
-    assert similarity.ivf_index_verify(spark, idx)["torn"] is True
+    assert cell_index_verify(spark, idx, "ivf")["torn"] is True
     with pytest.raises(ValueError, match="torn"):
         similarity.ivf_append_bucketed(batch, idx)
     queries = emb.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
@@ -1541,7 +1543,7 @@ def test_ivf_torn_append_detected(spark, tmp_path):
     # orphans, which is correct: their CONTENT is valid, only their
     # commit was lost) heals the invariant and re-arms appends
     similarity.recluster_ivf(spark, idx)
-    assert similarity.ivf_index_verify(spark, idx)["torn"] is False
+    assert cell_index_verify(spark, idx, "ivf")["torn"] is False
     similarity.ivf_append_bucketed(batch.limit(3), idx)
 
 
@@ -1621,7 +1623,7 @@ def test_ivf_recluster_crash_recovery(spark, tmp_path):
     # crash state A: between the renames — index detached, scratch present
     os.rename(idx, f"{tmp_path}/.ivf-old-ivf-99999")
     shutil.copytree(f"{tmp_path}/.ivf-old-ivf-99999", f"{tmp_path}/.ivf-scratch-ivf-99999")
-    similarity._recover_ivf_recluster(idx, LOCAL_FS)
+    cell_index_recover(idx, "ivf", LOCAL_FS)
     assert os.path.isdir(idx)
     assert not os.path.exists(f"{tmp_path}/.ivf-old-ivf-99999")
     assert not os.path.exists(f"{tmp_path}/.ivf-scratch-ivf-99999")
@@ -1632,7 +1634,7 @@ def test_ivf_recluster_crash_recovery(spark, tmp_path):
     # crash state B: after cutover, old not reaped — leftover is reaped,
     # index untouched
     shutil.copytree(idx, f"{tmp_path}/.ivf-old-ivf-11111")
-    similarity._recover_ivf_recluster(idx, LOCAL_FS)
+    cell_index_recover(idx, "ivf", LOCAL_FS)
     assert os.path.isdir(idx)
     assert not os.path.exists(f"{tmp_path}/.ivf-old-ivf-11111")
     # and a normal recluster on the healed index works end-to-end
@@ -2709,7 +2711,7 @@ def test_incremental_exact_substring_lifecycle(spark, tmp_path):
             [(3, f"g0 {late} g1")], "doc_id long, text string"
         )
     )
-    rep = dedup.reconcile_winseen_store(spark, grown, store)
+    rep = dedup.reconcile_seen_store(spark, grown, store)
     assert rep["missing"] > 0 and rep["appended"] == rep["missing"]
     b4 = spark.createDataFrame(
         [(40, f"q0 {late} q1")], "doc_id long, text string"
@@ -2718,4 +2720,4 @@ def test_incremental_exact_substring_lifecycle(spark, tmp_path):
         spark, b4, store, window_tokens=10, update_store=False
     ).collect()[0]
     assert (r.clean_text, r.n_tokens_removed) == ("q0 q1", 15)
-    assert dedup.reconcile_winseen_store(spark, grown, store)["missing"] == 0
+    assert dedup.reconcile_seen_store(spark, grown, store)["missing"] == 0

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nginx_analytics_spark.operators import similarity
+from nginx_analytics_spark.operators.index_fs import cell_index_verify
 from nginx_analytics_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -159,6 +160,36 @@ def test_pq_index_flat_probe_identity(spark, emb, tmp_path):
     assert got == mem and len(got) == 10 * 5
 
 
+def test_pq_index_codes_equal_pq_encode_on_rounding_tie(spark, tmp_path):
+    """The at-rest codes are pq_encode's codes BY CONSTRUCTION, ties
+    included: both run one kernel whose argmin drops the row-constant
+    |x|^2. Planted tie: against codebook rows 0.0 and 1e-9 the vector
+    1e8 is nearer 1e-9 (|c|^2 - 2x.c = 0 vs -0.2), but adding
+    |x|^2 = 1e16 first rounds both distances to 1e16, where an argmin
+    would pick code 0."""
+    from nginx_analytics_spark.operators.index_fs import (
+        read_sidecar,
+        write_sidecar,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    idx = str(tmp_path / "pq_tie")
+    similarity.pq_write_index(
+        spark.createDataFrame([(0, [0.0]), (1, [1.0]), (2, [2.0])], schema),
+        idx, m=1, n_codes=2,
+    )
+    meta = read_sidecar(idx, "pq")
+    meta["codebooks"] = [[[0.0], [1e-9]]]
+    write_sidecar(idx, "pq", meta)
+    new = spark.createDataFrame([(99, [1e8])], schema)
+    similarity.pq_append_index(new, idx)
+    stored = spark.read.parquet(idx).filter("vec_id = 99").first()["codes"]
+    encoded = similarity.pq_encode(
+        new, np.asarray(meta["codebooks"])
+    ).first()["codes"]
+    assert list(stored) == list(encoded) == [1]
+
+
 def test_pq_index_ivfadc_prunes_files_and_masks_cells(spark, emb, tmp_path):
     """The IVFADC layout: (1) the probe plan carries a partition filter
     on cell; (2) PHYSICAL proof — deleting every unprobed cell's files
@@ -268,13 +299,13 @@ def test_pq_index_torn_commit_detected(spark, emb, tmp_path):
         emb.vec_id.alias("query_id"), "embedding"
     )
     books = similarity.pq_write_index(emb, idx, m=8, n_codes=16)
-    assert similarity.pq_index_verify(spark, idx)["torn"] is False
+    assert cell_index_verify(spark, idx, "pq")["torn"] is False
 
     extra = emb.filter(emb.vec_id < 2).select(
         (emb.vec_id + 100000).alias("vec_id"), "embedding"
     )
     similarity.pq_encode(extra, books).write.mode("append").parquet(idx)
-    check = similarity.pq_index_verify(spark, idx)
+    check = cell_index_verify(spark, idx, "pq")
     assert check["torn"] is True and check["actual"] == check["expected"] + 2
     with pytest.raises(ValueError, match="torn"):
         similarity.pq_topk_indexed(
@@ -614,7 +645,7 @@ def test_rebuild_pq_heals_drift_and_survives_crash(spark, emb, tmp_path):
     os.rename(idx, str(tmp_path / ".pq-old-idx-99999"))
     out2 = similarity.rebuild_pq(spark, corpus, idx)
     assert out2["n_rows"] == out["n_rows"]
-    assert similarity.pq_index_verify(spark, idx)["torn"] is False
+    assert cell_index_verify(spark, idx, "pq")["torn"] is False
 
 
 def test_pq_topk_indexed_collects_queries_exactly_once(spark, emb, tmp_path, monkeypatch):
@@ -689,7 +720,7 @@ def test_pq_append_rebuild_threshold_inline_actuator(spark, emb, tmp_path):
     # re-armed: the same shifted distribution now appends near ~1
     more = shifted.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
     assert similarity.pq_append_index(more, idx)["drift_ratio"] < 2.0
-    assert similarity.pq_index_verify(spark, idx)["torn"] is False
+    assert cell_index_verify(spark, idx, "pq")["torn"] is False
     # r13 ADVICE: a STALE rebuild_corpus (missing the just-committed
     # batch) must raise loudly instead of silently dropping the
     # acknowledged rows from the rebuilt index — the rebuilt sidecar's
@@ -706,7 +737,7 @@ def test_pq_append_rebuild_threshold_inline_actuator(spark, emb, tmp_path):
     # r14 ADVICE: the refusal must fire BEFORE the swap — the complete
     # just-committed index (this append's 100 rows included) is still
     # on disk, not a 30-row rebuild that raised only after replacing it
-    check = similarity.pq_index_verify(spark, idx)
+    check = cell_index_verify(spark, idx, "pq")
     assert check["torn"] is False
     assert check["actual"] == emb.count() + 120 + 100 + 100
 

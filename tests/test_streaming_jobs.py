@@ -16,6 +16,7 @@ from nginx_analytics_spark.operators.index_fs import (
     banded_index_compact,
     banded_index_read,
     banded_index_recover,
+    cell_index_verify,
     read_sidecar,
     writer_lock_path,
 )
@@ -1495,7 +1496,7 @@ def test_reconcile_index_ann_serving_kinds(spark, tmp_path):
     same corpus store and diverge the same two ways. The stakes,
     demonstrated: a corpus vector absent from the index is a SILENT
     RECALL LOSS — the exact-nearest query for it cannot return it, and
-    pq_index_verify/ivf_index_verify stay green because the row_count
+    cell_index_verify stays green for both kinds because the row_count
     commit balances (the row was never appended). repair=True appends
     exactly the missing vector under the sidecar's own codebooks/
     centroids; the same query then returns it at rank 1. Orphans
@@ -1529,13 +1530,13 @@ def test_reconcile_index_ann_serving_kinds(spark, tmp_path):
         spark, emb, queries, pq, k=5, nprobe=None
     ).collect()
     assert hole_id not in {int(r.neighbor_id) for r in got}  # recall hole
-    assert similarity.pq_index_verify(spark, pq)["torn"] is False  # invisible
+    assert cell_index_verify(spark, pq, "pq")["torn"] is False  # invisible
     out = reconcile_index(spark, corpus, pq)
     assert out["kind"] == "pq" and out["missing_from_index"] == 1
     assert out["index_orphans"] == 0
     out = reconcile_index(spark, corpus, pq, repair=True)
     assert out["repaired"] == 1
-    assert similarity.pq_index_verify(spark, pq)["torn"] is False
+    assert cell_index_verify(spark, pq, "pq")["torn"] is False
     got = similarity.pq_topk_indexed(
         spark, emb, queries, pq, k=5, nprobe=None
     ).collect()
@@ -1551,7 +1552,7 @@ def test_reconcile_index_ann_serving_kinds(spark, tmp_path):
     assert hole_id not in {int(r.neighbor_id) for r in got}
     out = reconcile_index(spark, corpus, ivf, repair=True)
     assert out["kind"] == "ivf" and out["repaired"] == 1
-    assert similarity.ivf_index_verify(spark, ivf)["torn"] is False
+    assert cell_index_verify(spark, ivf, "ivf")["torn"] is False
     got = similarity.ivf_topk_bucketed(
         spark, ivf, None, queries, k=5, nprobe=8
     ).collect()
